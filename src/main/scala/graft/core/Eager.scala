@@ -49,17 +49,25 @@ object Eager {
       * any corpus worth three passes). Leaf stats, not output-size
       * estimates: filter/aggregate selectivity estimates are
       * unreliable, input bytes are known exactly, and what the gate
-      * must predict is the cost of RE-READING the input per replan. */
+      * must predict is the cost of RE-READING the input per replan.
+      *
+      * A leaf without real statistics reports
+      * `spark.sql.defaultSizeInBytes` (a partitioned catalog table with
+      * no computed stats, an RDD-backed frame, a checkpoint without
+      * origin stats). Its size is UNKNOWN, not huge: it adds nothing to
+      * the sum, so such a leaf cannot force a checkpoint by itself. */
     def eagerCheckpointAtScale(): Dataset[T] = {
       val minBytes = BigInt(ds.sparkSession.conf
         .get("spark.graft.checkpoint.minInputBytes", (8L << 30).toString)
         .toLong)
+      val unknown = BigInt(ds.sparkSession.sessionState.conf
+        .defaultSizeInBytes)
       // leaf stats off the ANALYZED plan: forcing optimizedPlan here
       // would run a full optimizer pass on a throwaway QueryExecution
       // (downstream consumers plan from ds.logicalPlan, not this QE) —
       // measurable driver latency per call at fixture scale
       val inputBytes = ds.queryExecution.analyzed.collectLeaves()
-        .map(_.stats.sizeInBytes).sum
+        .map(_.stats.sizeInBytes).filter(_ != unknown).sum
       if (inputBytes >= minBytes) eagerCheckpoint() else ds
     }
   }

@@ -33,10 +33,6 @@ object Decontam {
   private val EvalMod = 53
   private val NGram = 3
 
-  /** Tokens; mirror of `list_filter(string_split_regex(...))` (see
-    * TextAnalysis.toks). */
-  private def toksCol = filter(split(col("text"), "\\s+"), t => t =!= "")
-
   private val toksSql =
     """list_filter(string_split_regex(text, '\s+'), t -> t <> '')"""
 

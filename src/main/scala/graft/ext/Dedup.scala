@@ -960,8 +960,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Containment threshold: |Sa n Sb| >= 0.8 |Sa|. */
-  private val ContainTau = 0.8
   /** Prefix-shingle document-frequency cap (the candidate fan-out bound;
     * mirrored in the oracle — see scaladoc). */
   private val ContainDfCap = 64

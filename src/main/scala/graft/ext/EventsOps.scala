@@ -4,7 +4,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Determinism, Q, Tables}
-import graft.core.Eager.EagerCheckpoint
 import Determinism.dsum
 
 /** [EXT] event-stream analytics over the `events` fixture (SURVEY §2.9):

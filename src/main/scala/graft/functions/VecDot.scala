@@ -23,7 +23,6 @@ case class VecDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  private val arrD = ArrayType(DoubleType)
   private def okType(t: DataType): Boolean = t match {
     case ArrayType(DoubleType, _) => true
     case _ => false

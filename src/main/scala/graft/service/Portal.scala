@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.store.{Catalog, Schemas}
+import graft.store.Catalog
 
 /** Reference-parity service API — one method per db.py function
   * (db.py:200-468), with the §0.1 defects resolved:
@@ -131,12 +131,17 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * unconditionally (db.py:459-463), so a FAILED payment marks the
     * registration paid — here the registration mirrors the payment's
     * actual status, so a failed attempt records the payment row but never
-    * upgrades the registration. */
+    * upgrades the registration.
+    *
+    * The body only stages rows built from its arguments, so it is safe
+    * to re-run: a conflict with a concurrent payment (both allocated
+    * payment ids in a two-table transaction) re-runs it against the new
+    * snapshot ([[Catalog.retried]]) instead of failing the call. */
   def recordPayment(userId: Long, registrationId: Long,
       cardId: Option[Long] = None, amount: BigDecimal = 0,
       paymentType: String = "Free",
       paymentStatus: String = "Success"): Long =
-    cat.transaction { tx =>
+    cat.retried { tx =>
       val row = Seq((userId, registrationId, cardId.map(Long.box).orNull,
         amount, paymentType, paymentStatus, now()))
         .toDF("user_id", "registration_id", "card_id", "amount",
@@ -148,8 +153,8 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
         tx.update("registrations",
           col("registration_id") === registrationId,
           Map("payment_status" -> lit("Success")))
-      paymentId
-    }
+      () => paymentId + tx.shiftOf("payments")
+    }()
 
   /** event_stats for ALL events in one grouped plan (fixes J5's 1+2N
     * loop, app.py:154-166 / db.py:352-372): registrations count + revenue

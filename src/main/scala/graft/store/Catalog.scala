@@ -7,10 +7,13 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, EqualTo, Expression, InterpretedOrdering, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType, TimestampType}
 
 /** Copy-on-write table store over parquet with a single atomic manifest
   * (SURVEY §7.3).
@@ -38,8 +41,10 @@ import org.apache.spark.sql.functions._
   *  - '''Partition-safe id assignment.''' Appends assign dense ids via a
   *    range-partitioned sort + `zipWithIndex` (per-partition counts, one
   *    small extra job) — never a global single-partition window, which
-  *    funnels every bulk load through one task. Dense `lastrowid` parity
-  *    is preserved (SURVEY §7.4).
+  *    funnels every bulk load through one task. An in-memory batch (a
+  *    point write) is sorted and staged on the driver instead, with no
+  *    job at all ([[Tx.append]]). Dense `lastrowid` parity is preserved
+  *    (SURVEY §7.4).
   *  - '''Multi-process safety, optimistic concurrency.''' A transaction
   *    body runs against a snapshot with NO lock held; the commit's
   *    validate-and-swap alone runs under the [[CommitLock]] SPI
@@ -1592,9 +1597,26 @@ final class Catalog(val spark: SparkSession, val root: String,
   // ---- writes ------------------------------------------------------------
 
   /** Write df as a new file group under the table dir and return its file
-    * entries with per-file id stats (one metadata-light job: group rows by
-    * their output file). The group name carries a UUID — two writers (even
-    * in different processes) must never collide on a directory. */
+    * entries with per-file stats: id min/max, row count, value stats of
+    * the designated stats columns, bounded string stats, and a null
+    * count for every column. The group name carries a UUID — two writers
+    * (even in different processes) must never collide on a directory.
+    *
+    * Two routes, chosen by the shape of `df`'s plan (no threshold, no
+    * conf):
+    *  - '''driver''': `df` is an in-memory `LocalRelation` after
+    *    optimization (`Seq(...).toDF`, `createDataFrame(List[Row], ..)`,
+    *    an append's id-assigned batch, a pinned update's collected
+    *    images). Its rows are already on the driver: ONE file is written
+    *    there through Spark's own parquet writer ([[DriverParquet]]) and
+    *    the stats come from the same rows. No Spark job runs. An empty
+    *    batch stages no file.
+    *  - '''job''': anything else. `df.write.parquet` writes one file per
+    *    partition, and one job re-reads the group to collect the stats
+    *    per file.
+    *
+    * Invariant: for the same rows both routes record identical
+    * [[FileEntry]] stats (every field but the path). */
   private def stageFiles(table: String, df: DataFrame,
       idCol: String,
       /** The EFFECTIVE stats-column list for this write — callers
@@ -1608,6 +1630,107 @@ final class Catalog(val spark: SparkSession, val root: String,
     val snap = s"snap-${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$root/$table/$snap"
+    localRows(df) match {
+      case Some(rows) => stageRows(dir, df.schema, rows, idCol, statsCols)
+      case None => stageByJob(dir, df, idCol, statsCols)
+    }
+  }
+
+  /** `df`'s rows when its plan is an in-memory `LocalRelation` after
+    * optimization and every column is parquet-writable; None routes the
+    * write through a Spark job. A plan with any other leaf is refused
+    * from the analyzed plan, without an optimizer pass. */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) ||
+        !DriverParquet.supports(df.schema)) None
+    else qe.optimizedPlan match {
+      case l: LocalRelation => Some(l.data)
+      case _ => None
+    }
+  }
+
+  /** The driver route of [[stageFiles]]: one parquet file holding `rows`
+    * (laid out as `schema`); its entry's stats are computed from the
+    * same rows exactly as [[stageByJob]]'s aggregate computes them. */
+  private def stageRows(dir: String, schema: StructType,
+      rows: Seq[InternalRow], idCol: String,
+      statsCols: Seq[String]): Vector[FileEntry] = {
+    if (rows.isEmpty) return Vector.empty
+    val file = DriverParquet.write(io.hadoopConf, spark.sessionState.conf,
+      dir, schema, rows.iterator)
+    val idx = schema.fieldNames.zipWithIndex.toMap
+    def present(i: Int): Seq[InternalRow] = rows.filterNot(_.isNullAt(i))
+    def range(i: Int, get: InternalRow => Long): Option[(Long, Long)] = {
+      val vs = present(i).map(get)
+      if (vs.isEmpty) None else Some((vs.min, vs.max))
+    }
+    val designated = statsCols.filter(idx.contains)
+    val cols = designated.flatMap { c =>
+      val i = idx(c)
+      (schema(c).dataType match {
+        case TimestampType | LongType => range(i, _.getLong(i))
+        case IntegerType => range(i, _.getInt(i).toLong)
+        case _ => None
+      }).map(c -> _)
+    }.toMap
+    val scols = designated.filter(c => schema(c).dataType == StringType)
+      .flatMap { c =>
+        val vs = present(idx(c)).map(_.getUTF8String(idx(c)))
+        if (vs.isEmpty) None
+        else Catalog.strStatBounds(vs.min.toString, vs.max.toString)
+          .map(c -> _)
+      }.toMap
+    val nulls = schema.fieldNames.toSeq
+      .map(c => c -> rows.count(_.isNullAt(idx(c))).toLong).toMap
+    val (mn, mx) = range(idx(idCol), _.getLong(idx(idCol))).getOrElse(
+      throw new IllegalStateException(
+        s"staged rows carry no '$idCol' surrogate id"))
+    Vector(FileEntry(io.relativize(root, file), mn, mx, cols, scols, None,
+      rows.size.toLong, nulls))
+  }
+
+  /** The driver route of [[Tx.append]]: `rows` as an in-memory batch of
+    * the table's `schema`, sorted by `orderBy` with Spark's own
+    * `InterpretedOrdering` (ascending, NULLs first — `orderBy`'s
+    * default) and given dense ids from `baseId + 1`. None when `rows`
+    * is not an in-memory batch, carries a column of another type than
+    * the table's, or cannot be ordered by `orderBy` on the driver. */
+  private def localWithIds(table: String, rows: DataFrame,
+      orderBy: Seq[String], schema: StructType, idCol: String,
+      baseId: Long): Option[DataFrame] = localRows(rows).flatMap { data =>
+    val in = rows.schema
+    val pos = in.fieldNames.zipWithIndex.toMap
+    val ordPos =
+      orderBy.map(n => in.fieldNames.indexWhere(_.equalsIgnoreCase(n)))
+    val typed = schema.fields.forall(f =>
+      f.name == idCol || pos.get(f.name).forall(in(_).dataType == f.dataType))
+    if (!typed || !ordPos.forall(i =>
+        i >= 0 && RowOrdering.isOrderable(in(i).dataType))) None
+    else {
+      val ordering = new InterpretedOrdering(ordPos.map(i =>
+        SortOrder(BoundReference(i, in(i).dataType, in(i).nullable),
+          Ascending)))
+      val out = data.sorted(ordering).zipWithIndex.map { case (r, i) =>
+        InternalRow.fromSeq(schema.fields.toSeq.map { f =>
+          if (f.name == idCol) baseId + i + 1
+          else pos.get(f.name).map(r.get(_, f.dataType)).orNull
+        })
+      }
+      schema.fields.zipWithIndex.filterNot(_._1.nullable).foreach {
+        case (f, j) => require(!out.exists(_.isNullAt(j)),
+          s"append to '$table' has NULL in non-nullable column '${f.name}'")
+      }
+      Some(GraftSqlShim.ofRows(spark,
+        LocalRelation(DataTypeUtils.toAttributes(schema), out)))
+    }
+  }
+
+  /** The job route of [[stageFiles]]: `df.write.parquet` into `dir`,
+    * then one metadata-light job groups the written rows by their file
+    * to collect every file's stats. */
+  private def stageByJob(dir: String, df: DataFrame, idCol: String,
+      statsCols: Seq[String]): Vector[FileEntry] = {
     df.write.mode("overwrite").parquet(dir)
     // stats re-read through df's own schema (the table's EFFECTIVE —
     // possibly evolved — schema at this point in the transaction)
@@ -1832,9 +1955,10 @@ final class Catalog(val spark: SparkSession, val root: String,
       * [[Catalog!.transaction]]): ids returned DURING the body are
       * provisional; `shiftOf` after commit yields the delta to the
       * final ids. The single-statement conveniences apply it for their
-      * return values. */
+      * return values, as do callers of [[Catalog!.retried]] that return
+      * staged ids. */
     private[Catalog] var idShifts: Map[String, Long] = Map.empty
-    private[Catalog] def shiftOf(table: String): Long =
+    def shiftOf(table: String): Long =
       idShifts.getOrElse(table, 0L)
 
     /** Writer lease: a marker file under `_leases/` created before the
@@ -1932,20 +2056,28 @@ final class Catalog(val spark: SparkSession, val root: String,
     }
 
     /** Validate `df` (rows about to be written) against the table's
-      * effective CHECK set — ONE aggregate pass computing every check's
-      * violation count together. */
+      * effective CHECK set in ONE pass computing every check's violation
+      * count together: on the driver for an in-memory batch (the
+      * optimizer folds the projection into the `LocalRelation`), else
+      * one aggregate job. */
     private def enforceChecks(table: String, df: DataFrame): Unit = {
-      val checks = curState(table).checks
+      val checks = curState(table).checks.toSeq.sortBy(_._1)
       if (checks.isEmpty) return
-      val aggs = checks.toSeq.sortBy(_._1).map { case (n, e) =>
-        count(when(!coalesce(expr(e), lit(true)), 1)).as(n)
+      val violated = checks.map { case (_, e) =>
+        !coalesce(expr(e), lit(true))
       }
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      checks.keys.toSeq.sorted.foreach { n =>
-        val bad = row.getAs[Long](n)
-        require(bad == 0L,
-          s"check '$n' on '$table' violated by $bad incoming rows " +
-            s"(${checks(n)})")
+      val bad: Seq[Long] = localRows(df) match {
+        case Some(_) =>
+          val flags = df.select(violated: _*).collect()
+          checks.indices.map(i => flags.count(_.getBoolean(i)).toLong)
+        case None =>
+          val counts = violated.map(v => count(when(v, 1)))
+          val row = df.agg(counts.head, counts.tail: _*).collect()(0)
+          checks.indices.map(row.getLong)
+      }
+      checks.zip(bad).foreach { case ((n, e), k) =>
+        require(k == 0L,
+          s"check '$n' on '$table' violated by $k incoming rows ($e)")
       }
     }
 
@@ -2059,11 +2191,21 @@ final class Catalog(val spark: SparkSession, val root: String,
 
     /** Append rows, assigning dense surrogate ids; returns the LAST id
       * (lastrowid parity, db.py:213/345/466). `orderBy` fixes the id
-      * order for multi-row appends. Ids are assigned with a parallel
-      * range-partitioned sort + zipWithIndex — no global window.
-      * Columns the batch does not carry (e.g. a later-added column when
-      * an old-shape producer writes) must be nullable and backfill
-      * NULL. */
+      * order for multi-row appends (default: every column of the
+      * batch). Columns the batch does not carry (e.g. a later-added
+      * column when an old-shape producer writes) must be nullable and
+      * backfill NULL.
+      *
+      * Two routes, the same two as [[stageFiles]], giving the same ids
+      * and the same stats:
+      *  - an in-memory batch (a `LocalRelation` after optimization,
+      *    carrying the table's column types) is sorted on the driver
+      *    with Spark's own `InterpretedOrdering`, checked there, and
+      *    staged by the driver route: the append runs no Spark job;
+      *  - any other batch gets its ids from a parallel range-partitioned
+      *    sort + zipWithIndex (no global window) and takes the job
+      *    route.
+      * An empty batch stages no file and returns the current last id. */
     def append(table: String, rows: DataFrame,
         orderBy: Seq[String] = Nil): Long = {
       ensureLease()
@@ -2074,18 +2216,20 @@ final class Catalog(val spark: SparkSession, val root: String,
       schema.fields.filterNot(f => f.name == idCol || have(f.name))
         .foreach(f => require(f.nullable,
           s"append to '$table' is missing non-nullable column '${f.name}'"))
-      val ord = if (orderBy.nonEmpty) orderBy.map(col)
-        else rows.columns.map(col).toSeq
-      val fields = schema.fieldNames
-      val indexed = rows.orderBy(ord: _*).rdd.zipWithIndex().map {
-        case (r, i) =>
-          Row.fromSeq(fields.toIndexedSeq.map { f =>
-            if (f == idCol) baseId + i + 1
-            else if (!have(f)) null
-            else r.getAs[Any](f)
-          })
+      val ordNames = if (orderBy.nonEmpty) orderBy else rows.columns.toSeq
+      val withIds = localWithIds(table, rows, ordNames, schema, idCol,
+          baseId).getOrElse {
+        val fields = schema.fieldNames
+        val indexed = rows.orderBy(ordNames.map(col): _*).rdd
+          .zipWithIndex().map { case (r, i) =>
+            Row.fromSeq(fields.toIndexedSeq.map { f =>
+              if (f == idCol) baseId + i + 1
+              else if (!have(f)) null
+              else r.getAs[Any](f)
+            })
+          }
+        spark.createDataFrame(indexed, schema)
       }
-      val withIds = spark.createDataFrame(indexed, schema)
       enforceChecks(table, withIds)
       val newFiles = stageFiles(table, withIds, idCol, effStatsCols(table))
       val n = newFiles.map(f => f.maxId).maxOption.getOrElse(baseId)
@@ -2273,14 +2417,23 @@ final class Catalog(val spark: SparkSession, val root: String,
       if (hit.isEmpty) return // pinned id outside every file's range
       val cur = readFiles(table, hit, schema, idCol)
       if (pinned.isDefined && mergeOnRead) {
-        val matched = cur.filter(predicate)
-        val images = assignments.foldLeft(matched) { case (df, (c, v)) =>
-          df.withColumn(c, v)
+        val images = assignments.foldLeft(cur.filter(predicate)) {
+          case (df, (c, v)) => df.withColumn(c, v)
         }
-        enforceChecks(table, images)
-        val deadByFile = collectDeadByFile(matched, idCol, hit)
-        if (deadByFile.isEmpty) return // predicate matched nothing
-        val patch = stageFiles(table, images, idCol, effStatsCols(table))
+        // ONE job: the changed rows' new images with the key of the file
+        // each came from; the dead-id map and the (driver-staged) patch
+        // both come from these rows
+        val rows = images.withColumn("__graft_src_file", srcFileKey)
+          .collect()
+        if (rows.isEmpty) return // predicate matched nothing
+        val width = images.schema.length
+        val deadByFile = attributeDead(
+          rows.map(r => (r.getString(width), r.getAs[Long](idCol))), hit)
+        val local = spark.createDataFrame(
+          rows.map(r => Row.fromSeq(r.toSeq.take(width))).toSeq.asJava,
+          images.schema)
+        enforceChecks(table, local)
+        val patch = stageFiles(table, local, idCol, effStatsCols(table))
         staged :+= Staged(table, prev.copy(files =
           carried ++ dvMarked(hit, deadByFile) ++ patch))
       } else {
@@ -2300,19 +2453,22 @@ final class Catalog(val spark: SparkSession, val root: String,
       * the HIT entries and fails loudly on a miss — a path-encoding
       * divergence must never become a silent no-op mask. */
     private def collectDeadByFile(matched: DataFrame, idCol: String,
+        hit: Vector[FileEntry]): Map[String, Vector[Long]] =
+      attributeDead(matched.select(srcFileKey, col(idCol)).collect()
+        .map(r => (r.getString(0), r.getLong(1))), hit)
+
+    /** (manifest file path -> dead ids) of scanned (file key, id) pairs,
+      * failing loudly on a key that matches no hit entry. */
+    private def attributeDead(keyed: Seq[(String, Long)],
         hit: Vector[FileEntry]): Map[String, Vector[Long]] = {
       val byKey = hit.map(f => fileKey(f.path) -> f.path).toMap
-      matched.select(col(idCol), srcFileKey.as("__f"))
-        .collect()
-        .map { r =>
-          val key = r.getString(1)
-          val rel = byKey.getOrElse(key, throw new IllegalStateException(
-            s"merge-on-read file attribution failed: scanned row of " +
-              s"'$key' matches no hit manifest entry " +
-              "(path-encoding divergence?)"))
-          (rel, r.getLong(0))
-        }
-        .groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
+      keyed.map { case (key, id) =>
+        val rel = byKey.getOrElse(key, throw new IllegalStateException(
+          s"merge-on-read file attribution failed: scanned row of " +
+            s"'$key' matches no hit manifest entry " +
+            "(path-encoding divergence?)"))
+        (rel, id)
+      }.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
     }
 
     /** Hit entries with `deadByFile` folded into their deletion
@@ -3102,7 +3258,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * conveniences below retry a bounded number of times because
     * re-running their one-op body against the fresh snapshot is always
     * safe, while multi-statement `transaction` callers own their retry
-    * (re-running an arbitrary body is theirs to reason about).
+    * (re-running an arbitrary body is theirs to reason about): a body
+    * its caller knows to be safe to re-run goes through [[retried]].
     *
     * Conflict detection is FILE-level (round 11): a concurrent commit
     * to a staged table aborts only when the two commits fail to
@@ -3354,10 +3511,18 @@ final class Catalog(val spark: SparkSession, val root: String,
       c.schema, c.checks, c.idCol, c.statsCols, c.renames, c.priorDirs)
   }
 
-  /** Bounded conflict retry for the one-op conveniences: the body is
-    * self-contained, so re-staging against the fresh snapshot is safe;
-    * the failed attempt's files are unreferenced (vacuum reclaims). */
-  private def retried[A](body: Tx => A): A = {
+  /** [[transaction]] with a bounded retry on
+    * [[Catalog.ConcurrentWriteException]] (8 attempts), for a body that
+    * is SAFE TO RE-RUN: it derives everything it stages from the
+    * snapshot its `Tx` reads and from its own arguments, and has no
+    * effect outside the transaction. Each attempt re-runs the body
+    * against the fresh snapshot; a failed attempt's files are
+    * unreferenced (vacuum reclaims them). The one-op conveniences below
+    * use it; so does a multi-statement body such as a payment, whose
+    * conflict on concurrent id allocation needs a re-run. A body that
+    * returns ids it staged should return them as a thunk adding
+    * `tx.shiftOf(table)` (see [[append]]). */
+  def retried[A](body: Tx => A): A = {
     val maxAttempts = 8
     var attempt = 1
     while (attempt < maxAttempts) {

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._

@@ -121,13 +121,6 @@ final class GraftTableCatalog extends TableCatalog {
     }
   }
 
-  private def readOnly(op: String): Nothing =
-    throw new UnsupportedOperationException(
-      s"graft SQL catalog '$catName' serves queries, DML " +
-        s"(SELECT/INSERT/UPDATE/DELETE/MERGE) and CREATE/DROP TABLE; " +
-        s"$op goes through the transactional Scala API " +
-        "(graft.store.Catalog)")
-
   /** SQL `CREATE TABLE <cat>.<t> (...)` → [[Catalog.createTable]]: a
     * dynamic manifest-identity table. The surrogate-id column is named
     * by `TBLPROPERTIES('id_column'='<col>')` and must appear in the

@@ -1,6 +1,5 @@
 package graft.store.sql
 
-import java.util.Locale
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Row, SparkSession}

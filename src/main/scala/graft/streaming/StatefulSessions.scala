@@ -1,15 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.util.UUID
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.{Q, Tables}
+import graft.core.Q
 
 /** [EXT] stateful streaming sessionization:
   * `KeyValueGroupedDataset.flatMapGroupsWithState` with event-time timeout —

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: runs a caller-chosen sequence of registered queries
   * (by name, comma-separated in SPARK_GRAFT_PROBE, each name optionally
   * suffixed #N to repeat, e.g. "ext_dedup_minhash#3") with per-query wall

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -19,7 +19,6 @@ object ProfileDedup {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local()
-    import spark.implicits._
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 class CollocationsSpec extends SparkSuite {
 
   private def docTokens: Seq[(Long, Seq[String])] =

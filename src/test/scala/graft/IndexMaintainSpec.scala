@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.IndexMaintain
 
 /** Incremental-equals-rebuild pins for the store-maintained LSH index:

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.functions._
-
 import graft.plans.{AsOf, IntervalJoin}
 
 /** Randomized differential tests for the custom join operators: every

@@ -94,6 +94,36 @@ class PortalSpec extends SparkSuite {
     assert(after(regPaid) == "Success")
   }
 
+  test("two clients paying concurrently: every payment lands once, with " +
+    "dense unique ids (recordPayment re-runs on a conflict)") {
+    val root = Files.createTempDirectory("graft_portal").toString
+    val p = Portal(spark, root)
+    val org = p.createUser("O", "O", "", "o@x.com", "s3cret1", "organizer")
+    val e = p.addEvent("Gala", "d", ts, 0, "Hall", "Music", org,
+      BigDecimal(10))
+    val perClient = 4
+    val clients = (1 to 2).map { i =>
+      val u = p.createUser(s"U$i", "L", "", s"u$i@x.com", "s3cret1")
+      (u, (1 to perClient).map(_ => p.registerUserForEvent(u, e)))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val paid = try {
+      clients.map { case (u, regs) =>
+        val client = Portal(spark, root) // one service instance per client
+        pool.submit(() => regs.map(r => r -> client.recordPayment(u, r,
+          amount = BigDecimal(10), paymentType = "OneTime")))
+      }.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val n = 2 * perClient
+    assert(paid.map(_._2).sorted == (1L to n.toLong))
+    val cat = new graft.store.Catalog(spark, root)
+    val stored = cat.read("payments").collect()
+      .map(r => r.getAs[Long]("registration_id") -> r.getAs[Long]("payment_id"))
+    assert(stored.toMap == paid.toMap && stored.length == n)
+    assert(cat.read("registrations").filter("payment_status = 'Success'")
+      .count() == n.toLong)
+  }
+
   test("J4: multiple registrations for one (user,event) dedup to newest") {
     val p = freshPortal()
     val org = p.createUser("O", "O", "", "o@x.com", "s3cret1", "organizer")

@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.ext.{InvertedIndex, Profiling}
 
 /** Specs for the profiling/split ops and the positional inverted index —

@@ -47,6 +47,31 @@ class RawLocalCheckpointSpec extends SparkSuite {
     assert(Files.list(java.nio.file.Paths.get(dir)).count() == 0)
   }
 
+  test("a scheme with no AbstractFileSystem binding falls back to the " +
+    "FileSystem-based manager instead of failing") {
+    val dir = newDir()
+    // the session's Hadoop conf carries the manager class itself, so this
+    // also proves the delegation does not construct the class again
+    val conf = spark.sessionState.newHadoopConf()
+    assert(conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      classOf[RawLocalCheckpointFileManager].getName)
+    conf.set("fs.unboundtest.impl", classOf[UnboundSchemeFs].getName)
+    conf.setBoolean("fs.unboundtest.impl.disable.cache", true)
+    assert(conf.get("fs.AbstractFileSystem.unboundtest.impl") == null)
+    val base = new Path(s"unboundtest://$dir")
+    val fm = new RawLocalCheckpointFileManager(base, conf)
+    val target = new Path(base, "offsets-0")
+    val out = fm.createAtomic(target, overwriteIfPossible = false)
+    out.write("v1".getBytes("UTF-8"))
+    out.close()
+    assert(fm.exists(target))
+    val in = fm.open(target)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "v1")
+    finally in.close()
+    assert(Files.exists(java.nio.file.Paths.get(dir, "offsets-0")))
+    assert(fm.list(base).map(_.getPath.getName).toSeq == Seq("offsets-0"))
+  }
+
   test("session conf selects the raw-local manager for streaming checkpoints") {
     assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
       == "graft.core.RawLocalCheckpointFileManager")
@@ -76,4 +101,12 @@ class RawLocalCheckpointSpec extends SparkSuite {
     assert(hadoopMirrors.isEmpty,
       s"ChecksumFs mirrors found: ${hadoopMirrors.mkString(", ")}")
   }
+}
+
+/** A local filesystem under a scheme that has a FileSystem binding but
+  * no AbstractFileSystem (FileContext) binding — the shape of s3a/gs in
+  * many deployments. */
+class UnboundSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("unboundtest:///")
+  override def getScheme: String = "unboundtest"
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Relational, TpchStyle}
@@ -10,7 +9,6 @@ import graft.ops.{Relational, TpchStyle}
   * *decisions* (left-preservation, zero-vs-NULL, determinism of "newest").
   */
 class RelationalSpec extends SparkSuite {
-  import spark.implicits._
 
   test("J3 latest-per-group is left-preserving: parents without children " +
     "survive with NULLs (db.py:386-390 semantics)") {

@@ -20,7 +20,6 @@ object SkewBenchDrive {
     val salt = if (args.length > 3) args(3).toInt else 16
     val reps = if (args.length > 4) args(4).toInt else 3
     val spark = graft.core.Sessions.local()
-    import spark.implicits._
 
     // left: nHot rows on key 0 (the planted skew) + nHot/4 uniform tail
     val left = spark.range(nHot)

@@ -59,7 +59,7 @@ class StoreFuzzSpec extends SparkSuite {
     cat.addCheck("users", "email_at", "email LIKE '%@%'")
     val tables = mutable.LinkedHashMap[String, Model](
       "users" -> mutable.LinkedHashMap.empty)
-    var maxId = mutable.Map[String, Long]("users" -> 0L)
+    val maxId = mutable.Map[String, Long]("users" -> 0L)
     val opLog = mutable.ArrayBuffer[String]()
     // version -> full model snapshot, for time-travel replay
     val history = mutable.ArrayBuffer[(Long, Map[String, Map[Long, (String, String)]])]()

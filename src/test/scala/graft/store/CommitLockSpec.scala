@@ -235,7 +235,6 @@ class CommitLockSpec extends SparkSuite {
   test("store-side publish fence (round 18): a writer whose version " +
     "file lands concurrently collides on the publish instead of " +
     "clobbering, and the retried convenience re-runs cleanly") {
-    import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft-fence").toString
     val collided = new java.util.concurrent.atomic.AtomicInteger(0)
     // fault injection: just before OUR publish of v2, a "concurrent

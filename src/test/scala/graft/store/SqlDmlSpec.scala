@@ -2,7 +2,6 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
