@@ -357,14 +357,13 @@ object Bench {
         case None => SparkEntry.benchQueries
       }
     }
-    // SPARK_GRAFT_BENCH_WARMQ=0 disables the per-query untimed warm-up
-    // execution. With per-family JVM isolation each family starts cold:
-    // its first timed runs would otherwise be charged the one-time janino
-    // build + C2 compilation of ITS generated classes (measured: minhash
-    // 7.3 s cold vs 4.3 s on the second run vs ~3 s steady) — cost a real
+    // Every query runs once untimed before its timed runs. With
+    // per-family JVM isolation each family starts cold: its first timed
+    // runs would otherwise be charged the one-time janino build + C2
+    // compilation of ITS generated classes (measured: minhash 7.3 s cold
+    // vs 4.3 s on the second run vs ~3 s steady) — cost a real
     // deployment pays once per application, then amortizes over hours of
     // data. JMH-style warm-up + min-of-N reports the steady state.
-    val warmQ = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMQ", "1") == "1"
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val results = selected.map { q =>
       // amortized prep (ingest-time work) runs outside the timed window
@@ -374,18 +373,16 @@ object Bench {
           failed += q.name
           System.err.println(s"[bench] ${q.name} setup failed: ${e.getMessage}")
       }
-      if (warmQ) {
-        dropAllPersisted()
-        val t0 = System.nanoTime()
-        try { q.fn(spark, sfDir).count() }
-        catch {
-          case e: Throwable =>
-            failed += q.name
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-        }
-        System.err.println(
-          f"[bench]   warm ${(System.nanoTime() - t0) / 1e9}%6.2f s (untimed)")
+      dropAllPersisted()
+      val w0 = System.nanoTime()
+      try { q.fn(spark, sfDir).count() }
+      catch {
+        case e: Throwable =>
+          failed += q.name
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
       }
+      System.err.println(
+        f"[bench]   warm ${(System.nanoTime() - w0) / 1e9}%6.2f s (untimed)")
       val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       def gcMs: Long = { var t = 0L; gcBeans.forEach(b => t += b.getCollectionTime); t }
       val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean

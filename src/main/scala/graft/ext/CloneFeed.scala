@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] gate-visible shallow clone ([[Catalog.cloneTable]]; CloneSpec
   * holds the file-level properties): version 1 loads an orders slice,
   * version 2 SHALLOW-CLONES it (zero copy — the clone references the
@@ -27,18 +29,16 @@ object CloneFeed {
 
   private val SliceMax = 3000L
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_clone_root"
+  private val Root = "graft_clone_root"
 
   private val prepared = new PreparedTables(
-    Seq("orders.parquet"), Seq("graft_clone_root"), write)
+    Seq("orders.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_clone_root (v${cat.version}) survived fixture prep")
     val src = Tables.orders(s, d).filter(col("o_orderkey") <= SliceMax)
@@ -70,7 +70,7 @@ object CloneFeed {
        |ORDER BY o_orderkey""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s)).read("orders_frozen")
+    new Catalog(s, storeRoot(s, Root)).read("orders_frozen")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .orderBy("o_orderkey")

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] selective small-file compaction made gate-visible (round 18,
   * [[graft.store.Catalog.Tx.compactSmall]] — the Delta bin-packing
   * `OPTIMIZE` / auto-compaction analogue): the fixture lands one large
@@ -34,18 +36,16 @@ object CompactSmallFeed {
   private val SliceMax = 1200L
   private val FlipId = 777L    // lives in small slice 2
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_csmall_root"
+  private val Root = "graft_csmall_root"
 
   private val prepared = new PreparedTables(
-    Seq("orders.parquet"), Seq("graft_csmall_root"), write)
+    Seq("orders.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_csmall_root (v${cat.version}) survived fixture prep")
     val src = Tables.orders(s, d)
@@ -94,7 +94,8 @@ object CompactSmallFeed {
        |FROM v1 ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s)).read("orders_ingest").orderBy("ingest_id")
+    new Catalog(s, storeRoot(s, Root)).read("orders_ingest")
+      .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
 
   val all: Seq[Q] = Seq(autocompactInvariance)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] dynamic-table DDL made gate-visible (round 15,
   * `Catalog.createTable`/`dropTable` + the SQL door): the fixture
   * lifecycle is PURE SQL text — `CREATE TABLE` (manifest identity,
@@ -26,22 +28,20 @@ object DdlFeed {
 
   private val CatName = "graftddl"
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_ddl_root"
+  private val Root = "graft_ddl_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_ddl_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit = {
     s.conf.set(s"spark.sql.catalog.$CatName",
       classOf[graft.store.sql.GraftTableCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$CatName.root", rootDir(s))
+    s.conf.set(s"spark.sql.catalog.$CatName.root", storeRoot(s, Root))
     prepared.ensurePrepared(s, d)
   }
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_ddl_root (v${cat.version}) survived fixture prep")
     Tables.events(s, d).filter(col("event_id") <= Slice)

@@ -22,7 +22,7 @@ import graft.core.Eager.EagerCheckpoint
   *
   * Execution note (round-3 measured fix): reused intermediates are
   * materialized with EAGER `localCheckpoint`, never lazy `.cache()`.
-  * Profiling (tools.ProfileDedup, sf0.1) attributed 186 of minhash's
+  * Profiling (sf0.1) attributed 186 of minhash's
   * 267 s to re-deriving the md5/shingle lineage: a lazy cache inside a
   * single action gives no ordering guarantee, so AQE's concurrently
   * launched shuffle-map stages each recomputed the unmaterialized

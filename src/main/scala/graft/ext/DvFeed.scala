@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] merge-on-read deletion vectors made gate-visible (round 15):
   * the reference's own hottest write shape is the one-row status flip
   * (`record_payment`, db.py:459-463) — under copy-on-write that
@@ -28,18 +30,16 @@ object DvFeed {
   private val FlipId = 500L
   private val DropId = 700L
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_dv_root"
+  private val Root = "graft_dv_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_dv_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_dv_root (v${cat.version}) survived fixture prep")
     cat.append("events_ingest",
@@ -52,9 +52,9 @@ object DvFeed {
     cat.delete("events_ingest", col("ingest_id") === DropId)
     require(cat.version == 3L,
       s"dv fixture ended at v${cat.version}, expected 3")
-    val cold = new Catalog(s, rootDir(s))
+    val cold = new Catalog(s, storeRoot(s, Root))
     val dvLs = java.nio.file.Files.list(
-      java.nio.file.Paths.get(rootDir(s), "_dv"))
+      java.nio.file.Paths.get(storeRoot(s, Root), "_dv"))
     val nDv = try dvLs.count() finally dvLs.close()
     require(nDv >= 2, "the point ops did not land as deletion vectors")
     // ingest ids are dense 1..maxId; exactly one row (DropId) is masked
@@ -84,7 +84,8 @@ object DvFeed {
        |FROM v1 WHERE ingest_id <> $DropId ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s)).read("events_ingest").orderBy("ingest_id")
+    new Catalog(s, storeRoot(s, Root)).read("events_ingest")
+      .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
 
   /** The v1→v2 changefeed across a DV-only commit: the file's PATH
@@ -104,7 +105,7 @@ object DvFeed {
        |ORDER BY ingest_id, _change_type""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .changesWithUpdates("events_ingest", 1L, 2L)
       .orderBy("ingest_id", "_change_type")
   }.copy(setup = Some(ensurePrepared _))

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] incremental index maintenance == rebuild — the 100 TB property
   * the whole index family (LSH buckets, IVF cells, postings) relies on
   * but previously only implied: an index kept up to date THROUGH the
@@ -62,9 +64,7 @@ object IndexMaintain {
   private[graft] val D1 = 299L
   private[graft] val OverlapLo = 200L
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_index_root"
+  private val Root = "graft_index_root"
 
   /** (idx_key, doc_id, band, band_key) rows for a (doc_id, text) batch —
     * the same shingle -> 16 seeded-md5 minhash -> 4 band keys pipeline
@@ -94,7 +94,7 @@ object IndexMaintain {
 
   /** Stage the two ingest ticks on a fresh root. */
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_index_root (v${cat.version}) survived fixture prep")
     val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -114,13 +114,13 @@ object IndexMaintain {
   }
 
   private val prepared = new PreparedTables(
-    Seq("documents.parquet"), Seq("graft_index_root"), write)
+    Seq("documents.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private[graft] def readIndex(s: SparkSession): DataFrame =
-    new Catalog(s, rootDir(s)).read("lsh_index")
+    new Catalog(s, storeRoot(s, Root)).read("lsh_index")
 
   /** Capped LSH candidate pairs from the incrementally-maintained index;
     * the oracle rebuilds the index from the raw fixture. */
@@ -175,9 +175,7 @@ object IndexMaintain {
   private[graft] val D1V = 299L
   private[graft] val OverlapLoV = 200L
 
-  private def ivfRootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_ivf_index_root"
+  private val IvfRoot = "graft_ivf_index_root"
 
   /** (vec_id, cell) under the seed quantizer of the TRUE vectors —
     * the rebuild truth ([[IvfSearch.assigned]] on raw embeddings). */
@@ -197,7 +195,7 @@ object IndexMaintain {
     * `(D1V, ..]` vectors, keyed by `vec_id` — matched keys rewrite
     * their cell in place, unmatched insert. */
   private def writeIvf(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, ivfRootDir(s))
+    val cat = new Catalog(s, storeRoot(s, IvfRoot))
     require(cat.version == 0L,
       s"stale graft_ivf_index_root (v${cat.version}) survived fixture prep")
     val v = Similarity.vecs(s, d)
@@ -221,13 +219,13 @@ object IndexMaintain {
   }
 
   private val preparedIvf = new PreparedTables(
-    Seq("embeddings.parquet"), Seq("graft_ivf_index_root"), writeIvf)
+    Seq("embeddings.parquet"), Seq(IvfRoot), writeIvf)
 
   def ensureIvfPrepared(s: SparkSession, d: String): Unit =
     preparedIvf.ensurePrepared(s, d)
 
   private[graft] def readIvfIndex(s: SparkSession): DataFrame =
-    new Catalog(s, ivfRootDir(s)).read("ivf_index")
+    new Catalog(s, storeRoot(s, IvfRoot)).read("ivf_index")
 
   /** The store-maintained IVF cell assignment vs the from-scratch
     * rebuild: the oracle recomputes every vector's max-cosine cell from

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] clustered compaction made gate-visible (round 15,
   * `Catalog.optimize` — the Delta/Iceberg `OPTIMIZE ... ZORDER BY`
   * analogue): version 4 of the fixture root is a LAYOUT-ONLY Z-order
@@ -29,18 +31,16 @@ object OptimizeFeed {
   private val SliceMax = 1200L
   private val FlipId = 77L
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_opt_root"
+  private val Root = "graft_opt_root"
 
   private val prepared = new PreparedTables(
-    Seq("orders.parquet"), Seq("graft_opt_root"), write)
+    Seq("orders.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_opt_root (v${cat.version}) survived fixture prep")
     val src = Tables.orders(s, d)
@@ -79,7 +79,8 @@ object OptimizeFeed {
        |FROM v1 ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s)).read("orders_ingest").orderBy("ingest_id")
+    new Catalog(s, storeRoot(s, Root)).read("orders_ingest")
+      .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
 
   val all: Seq[Q] = Seq(optimizeInvariance)

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
 
+import PreparedTables.warehousePath
+
 /** Shared prepare-once machinery for the layout-at-rest operators
   * ([[BucketedJoin]], [[PartitionedScan]], [[ZOrderLayout]]) and the
   * store-root fixtures: each rewrites fixture tables into a managed
@@ -76,21 +78,6 @@ private[graft] final class PreparedTables(
     }
     (s.conf.get("spark.sql.warehouse.dir") +: d +: version +: srcs)
       .mkString("|")
-  }
-
-  /** Local path of `spark.sql.warehouse.dir`. Parsed via Hadoop `Path`,
-    * not `new java.net.URI(raw)`: Spark populates this conf from
-    * `Path.toString`, which does NOT percent-encode, so a warehouse dir
-    * containing a space (or any RFC-3986-reserved char) would throw
-    * URISyntaxException at staging time; and a scheme-less value must
-    * resolve against the process CWD the same way Spark itself resolves
-    * it, not surprise the caller with a URI-relative path. */
-  private def warehousePath(s: SparkSession): Path = {
-    val raw = s.conf.get("spark.sql.warehouse.dir")
-    val u = new org.apache.hadoop.fs.Path(raw).toUri
-    require(u.getScheme == null || u.getScheme == "file",
-      s"fixture staging needs a local warehouse dir; got '$raw'")
-    Paths.get(u.getPath).toAbsolutePath
   }
 
   private def markerPath(wh: Path): Path =
@@ -222,6 +209,29 @@ private[graft] final class PreparedTables(
 }
 
 private[graft] object PreparedTables {
+
+  /** Local path of a `spark.sql.warehouse.dir` value. Parsed via Hadoop
+    * `Path`, not `new java.net.URI(raw)`: Spark populates this conf from
+    * `Path.toString`, which does NOT percent-encode, so a warehouse dir
+    * containing a space (or any RFC-3986-reserved char) would throw
+    * URISyntaxException; and a scheme-less value must resolve against
+    * the process CWD the same way Spark itself resolves it, not surprise
+    * the caller with a URI-relative path. */
+  def warehousePath(raw: String): Path = {
+    val u = new org.apache.hadoop.fs.Path(raw).toUri
+    require(u.getScheme == null || u.getScheme == "file",
+      s"fixture staging needs a local warehouse dir; got '$raw'")
+    Paths.get(u.getPath).toAbsolutePath
+  }
+
+  /** Local path of the session's warehouse dir. */
+  def warehousePath(s: SparkSession): Path =
+    warehousePath(s.conf.get("spark.sql.warehouse.dir"))
+
+  /** Root directory of the store-root fixture `name`: the managed
+    * directory `name` under the session's warehouse. */
+  def storeRoot(s: SparkSession, name: String): String =
+    warehousePath(s).resolve(name).toString
 
   /** Default adoption DDL: explicit-schema plain external
     * registration. Correct ONLY for unbucketed, unpartitioned

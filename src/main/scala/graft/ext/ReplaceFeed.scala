@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] gate-visible `replaceWhere` partition reload (the Delta
   * dynamic-range-overwrite shape; see [[Catalog.Tx.replaceWhere]] and
   * StoreSpec's file-level properties): version 1 loads an orders slice
@@ -29,18 +31,16 @@ object ReplaceFeed {
   private val RepLo = 1000L
   private val RepHi = 2000L
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_rw_root"
+  private val Root = "graft_rw_root"
 
   private val prepared = new PreparedTables(
-    Seq("orders.parquet"), Seq("graft_rw_root"), write)
+    Seq("orders.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_rw_root (v${cat.version}) survived fixture prep")
     val src = Tables.orders(s, d).filter(col("o_orderkey") <= SliceMax)
@@ -64,7 +64,7 @@ object ReplaceFeed {
        |ORDER BY o_orderkey""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s)).read("orders_ingest")
+    new Catalog(s, storeRoot(s, Root)).read("orders_ingest")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .orderBy("o_orderkey")

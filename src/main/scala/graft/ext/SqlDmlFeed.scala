@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] SQL DML made gate-visible (round 15,
   * [[graft.store.sql.GraftSqlDmlRule]]): the fixture store is mutated
   * ONLY through `spark.sql` text — a point `UPDATE` (merge-on-read
@@ -60,17 +62,15 @@ object SqlDmlFeed {
   /** Catalog name for the SQL-DML fixture root. */
   private val CatName = "graftdml"
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_sqldml_root"
+  private val Root = "graft_sqldml_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_sqldml_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit = {
     s.conf.set(s"spark.sql.catalog.$CatName",
       classOf[graft.store.sql.GraftTableCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$CatName.root", rootDir(s))
+    s.conf.set(s"spark.sql.catalog.$CatName.root", storeRoot(s, Root))
     prepared.ensurePrepared(s, d)
   }
 
@@ -113,7 +113,7 @@ object SqlDmlFeed {
   }
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_sqldml_root (v${cat.version}) survived fixture prep")
     cat.append("events_ingest",
@@ -152,7 +152,7 @@ object SqlDmlFeed {
     require(cat.version == 6L,
       s"sql-dml fixture ended at v${cat.version}, expected 6")
     val dvLs = java.nio.file.Files.list(
-      java.nio.file.Paths.get(rootDir(s), "_dv"))
+      java.nio.file.Paths.get(storeRoot(s, Root), "_dv"))
     val nDv = try dvLs.count() finally dvLs.close()
     require(nDv >= 1, "the SQL point update did not land as a DV")
   }
@@ -244,7 +244,7 @@ object SqlDmlFeed {
        |ORDER BY _change_type""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .changesWithUpdates("events_ingest", 1L, 2L)
       .orderBy("_change_type")
   }.copy(setup = Some(ensurePrepared _))

@@ -30,7 +30,8 @@ object SqlFront {
     StoreFeed.ensurePrepared(s, d)
     s.conf.set(s"spark.sql.catalog.$CatName",
       classOf[graft.store.sql.GraftTableCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$CatName.root", StoreFeed.rootDir(s))
+    s.conf.set(s"spark.sql.catalog.$CatName.root",
+      PreparedTables.storeRoot(s, StoreFeed.Root))
   }
 
   /** Current state through pure SQL — the [[StoreFeed.schemaEvolution]]

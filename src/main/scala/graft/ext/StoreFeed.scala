@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.core.{Q, Tables}
 import graft.store.Catalog
 
+import PreparedTables.storeRoot
+
 /** [EXT] gate-visible row-level changefeed over the COW store
   * ([[Catalog.changesBetween]] — the Delta CDF / Iceberg changelog
   * analogue).
@@ -42,12 +44,10 @@ object StoreFeed {
   private def ingestCols(df: DataFrame): DataFrame =
     df.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
-  private[ext] def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_cdc_root"
+  private[ext] val Root = "graft_cdc_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_cdc_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
@@ -61,7 +61,7 @@ object StoreFeed {
     * (layout-only); v5 = addColumn (metadata-only); v6 = an append
     * carrying the evolved column. */
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_cdc_root (v${cat.version}) survived fixture prep")
     val ev = ingestCols(Tables.events(s, d))
@@ -124,7 +124,7 @@ object StoreFeed {
        |ORDER BY _change_type, ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .changesBetween("events_ingest", 1L, 2L)
       .orderBy("_change_type", "ingest_id")
   }.copy(setup = Some(ensurePrepared _))
@@ -144,7 +144,7 @@ object StoreFeed {
        |FROM v1 ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .readAt("events_ingest", 1L)
       .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
@@ -178,7 +178,7 @@ object StoreFeed {
        |ORDER BY ingest_id, _change_type""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .changesWithUpdates("events_ingest", 2L, 3L)
       .orderBy("ingest_id", "_change_type")
   }.copy(setup = Some(ensurePrepared _))
@@ -199,7 +199,7 @@ object StoreFeed {
        |FROM v3 ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .readAt("events_ingest", 4L)
       .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
@@ -227,7 +227,7 @@ object StoreFeed {
        |ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .read("events_ingest")
       .orderBy("ingest_id")
   }.copy(setup = Some(ensurePrepared _))
@@ -255,7 +255,7 @@ object StoreFeed {
        |FROM v3 GROUP BY event_type ORDER BY event_type""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     def dec = col("value").cast("decimal(10,2)")
     val base = cat.readAt("events_ingest", 1L)
       .select(col("event_type"), lit(1L).as("w"), dec.as("v"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Q, Tables}
 import graft.store.Catalog
+
+import PreparedTables.storeRoot
 import graft.streaming.ChangefeedFollower
 
 /** [EXT] gate row for the changefeed FOLLOWER
@@ -26,18 +28,16 @@ import graft.streaming.ChangefeedFollower
   */
 object StoreFollow {
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_cdc_follow_root"
+  private val Root = "graft_cdc_follow_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_cdc_follow_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
 
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_cdc_follow_root (v${cat.version}) survived prep")
     val ev = Tables.events(s, d)
@@ -74,7 +74,7 @@ object StoreFollow {
        |FROM v3 GROUP BY event_type ORDER BY event_type""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    new Catalog(s, rootDir(s))
+    new Catalog(s, storeRoot(s, Root))
       .read("events_type_summary")
       .filter(col("n_rows") > 0)
       .select(col("event_type"), col("n_rows"),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Q
 import graft.store.Catalog
+
+import PreparedTables.storeRoot
 import graft.streaming.StreamIngest
 
 /** [EXT] the full streaming→store ingestion path as a GATE row: the
@@ -36,12 +38,10 @@ object StreamIngestFeed {
 
   private val QueryName = "gate_ingest"
 
-  private def rootDir(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_stream_ingest_root"
+  private val Root = "graft_stream_ingest_root"
 
   private val prepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_stream_ingest_root"), write)
+    Seq("events.parquet"), Seq(Root), write)
 
   def ensurePrepared(s: SparkSession, d: String): Unit =
     prepared.ensurePrepared(s, d)
@@ -52,7 +52,7 @@ object StreamIngestFeed {
     * ledger). Both outcomes are loud fixture failures, not weak gate
     * rows. */
   private def write(s: SparkSession, d: String): Unit = {
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     require(cat.version == 0L,
       s"stale graft_stream_ingest_root (v${cat.version}) survived prep")
     val ts = Seq("ts", "event_id")
@@ -73,7 +73,7 @@ object StreamIngestFeed {
       |FROM f ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     ensurePrepared(s, d)
-    val cat = new Catalog(s, rootDir(s))
+    val cat = new Catalog(s, storeRoot(s, Root))
     val ledger = cat.read("stream_offsets")
       .agg(count(lit(1)).cast("long").as("batches_committed"))
     cat.read("events_ingest")

@@ -4,9 +4,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, EqualTo, Expression, InterpretedOrdering, RowOrdering, SortOrder}
@@ -15,8 +12,10 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType, TimestampType}
 
-/** Copy-on-write table store over parquet with a single atomic manifest
-  * (SURVEY §7.3).
+import CommitLog.{Manifest, canonFiles}
+
+/** Copy-on-write table store over parquet with a log-structured
+  * manifest (SURVEY §7.3; on-disk format in [[CommitLog]]).
   *
   * The reference needs mutability (soft delete db.py:327, status flip
   * db.py:459-463) and a two-statement payment write whose intended
@@ -86,132 +85,17 @@ final class Catalog(val spark: SparkSession, val root: String,
         "log-structured layout (_log/vN.json). Migrate by re-ingesting, " +
         "or read it with the release that wrote it")
 
-  // ---- manifest (log-structured, round 14) -------------------------------
+  // ---- manifest ----------------------------------------------------------
   //
-  // The commit log lives under `_log/`:
-  //
-  //   v<N>.json             one DELTA per commit — only the tables the
-  //                         commit changed, and for each only the files it
-  //                         ADDED (full entries with stats) and REMOVED
-  //                         (paths), plus the small per-table metadata
-  //                         (maxId, schema, checks, idCol). The atomic
-  //                         rename of this file IS the commit.
-  //   v<N>.checkpoint.json  every [[Catalog.CheckpointInterval]]-th commit
-  //                         also writes the FULL manifest (the pre-round-14
-  //                         single-manifest format), so replay never walks
-  //                         more than one interval of deltas.
-  //
-  // This is the Delta-Lake `_delta_log` shape, and it exists for one
-  // reason: commit cost must be proportional to the COMMIT, not the
-  // table. The previous design serialized every file of every table into
-  // one root manifest inside the commit lock — at 100 TB file counts
-  // (millions of live files) that rewrite IS the commit bottleneck, and
-  // every snapshot read re-parsed it. Now a CDC tick writes a few hundred
-  // bytes under the lock regardless of table size; readers replay
-  // checkpoint + tail deltas once and then pay only per-commit deltas
-  // (version-keyed cache below). Time travel ([[readAt]]), the changefeed,
-  // vacuum, fsck, OCC and leases keep their exact external semantics.
-
-  /** One live parquet file: path relative to root + surrogate-id stats
-    * (minId > maxId encodes "no rows / no stats", never prunable) +
-    * optional per-column value stats for the table's designated
-    * [[Schemas.statsColumns]] (Delta-style data skipping: values are
-    * normalized to an orderable Long — epoch micros for timestamps, the
-    * value itself for integral columns). A column absent from the map
-    * has no stats and is never pruned on — correctness cannot depend on
-    * stats presence.
-    *
-    * `scols` (round 14) carries the same skipping metadata for STRING
-    * stats columns as BOUNDED min/max: the recorded pair is an OUTER
-    * bound of the file's true range — min is an exact value or a
-    * truncated prefix (<= every value), max is exact or a
-    * prefix-incremented upper bound (Delta's truncation trick, see
-    * [[Catalog.strStatHi]]) — compared in UTF-8 binary order (Spark's
-    * string order). Bounds being outer means pruning by them is always
-    * sound; a value whose bound cannot be represented records no stat. */
-  private[store] case class FileEntry(path: String, minId: Long,
-      maxId: Long, cols: Map[String, (Long, Long)] = Map.empty,
-      scols: Map[String, (String, String)] = Map.empty,
-      /** Deletion vector (round 15, merge-on-read): `Some((sidecar
-        * relative path, dead-row count))` marks rows of THIS file dead
-        * by surrogate id without rewriting it — the sidecar
-        * ([[DvIO]]) lists the dead ids. Readers mask
-        * ([[Catalog.readFiles]]); compaction and COW rewrites fold the
-        * mask in (their output carries no dv). Sidecars are immutable:
-        * a further delete on the same file writes a NEW sidecar with
-        * the union, so time travel reads each snapshot's own mask.
-        * Stats stay OUTER bounds (a dead row can only make them loose,
-        * never wrong). */
-      dv: Option[(String, Long)] = None,
-      /** Physical row count at stage time; -1 = unknown (pre-round-15
-        * file). The `rows >= 0` marker also scopes [[nulls]]: only
-        * files that recorded counts make null-pruning claims. */
-      rows: Long = -1L,
-      /** Per-column NULL counts for every column the file was staged
-        * WITH (zeros recorded explicitly — a column absent from this
-        * map did not exist at stage time, e.g. pre-evolution files, and
-        * is never pruned on). `nulls(c) == 0` lets `IS NULL` probes
-        * skip the file; `nulls(c) == rows` (all-null) lets
-        * `IS NOT NULL` probes skip it — both stay sound under deletion
-        * vectors, which can only shrink the visible subset. */
-      nulls: Map[String, Long] = Map.empty)
-
-  /** Per-table manifest state. `schema = None` means the registry schema
-    * ([[Schemas.registry]]); `Some` is an EVOLVED schema ([[Tx.addColumn]])
-    * that every manifest from that commit on carries — schema versioning
-    * rides the same atomic manifest swap as the data, so a snapshot's
-    * schema and its files are always consistent (and time travel reads
-    * an old snapshot through the schema it had THEN). */
-  private[store] case class TableState(maxId: Long, files: Vector[FileEntry],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      checks: Map[String, String] = Map.empty,
-      /** Surrogate-id column when the table is NOT in [[Schemas.registry]]
-        * (a shallow clone of a registered table carries its source's id
-        * column and effective schema in the manifest, so the clone is
-        * fully writable without registration). */
-      idCol: Option[String] = None,
-      /** Designated stats columns CARRIED IN THE MANIFEST (round 16):
-        * `None` falls back to the name-keyed [[Schemas.statsColumns]]
-        * registry (the fixture bootstrap); `Some` pins the list as
-        * table state — `CREATE TABLE`'d tables, clones (which inherit
-        * their source's effective list), and `setStatsColumns` DDL all
-        * ride it, so stage-time stats collection, `optimize ZORDER`,
-        * readRange/SQL-door file skipping, and merge OCC reconcile
-        * work on DYNAMIC tables exactly as on fixture tables. At
-        * 100 TB a dynamic table without value-column pruning is a
-        * full-scan trap; this is how it gets the same skipping. Like
-        * schema/idCol, the list versions with the manifest: time
-        * travel reads each snapshot's own list. `Some(Nil)` is
-        * "explicitly no stats" (overrides the registry). */
-      statsCols: Option[Seq[String]] = None,
-      /** Column-rename history (round 16, the Delta column-mapping
-        * analogue without file rewrites): current logical name -> the
-        * PRIOR names this column carried, newest first. Files written
-        * before a rename keep their bytes and their old header name;
-        * readers build a union read schema (current + prior twins,
-        * nullable) and COALESCE — parquet by-name resolution
-        * NULL-backfills whichever name a file lacks, so exactly the
-        * name the file carries supplies the value (a genuine NULL
-        * stays NULL through the coalesce). New files always write the
-        * CURRENT name, so compaction/OPTIMIZE naturally migrate the
-        * layout. Like schema/idCol, the map versions with the
-        * manifest: time travel reads each snapshot through its own
-        * names, and clones inherit it. The surrogate id is not
-        * renameable (DV masks, dense-id plumbing). */
-      renames: Map[String, Seq[String]] = Map.empty,
-      /** Directories (root-relative, = prior table names) this table's
-        * files lived under before a RENAME TABLE. File entries keep
-        * their old-name paths across a rename (zero-copy), so
-        * [[Catalog.vacuum]] on the NEW name must sweep the old
-        * directories too — without this record, dead pre-rename
-        * rewrites under the old path would be reclaimable only by
-        * vacuuming the OLD name, which no caller routes to after the
-        * rename (unbounded garbage). Chained renames accumulate;
-        * compaction never clears the list (cheap to re-sweep an empty
-        * dir, dangerous to forget a non-empty one). */
-      priorDirs: Seq[String] = Nil)
-
-  private type Manifest = Map[String, TableState]
+  // Every commit is one delta file in the commit log, and every
+  // [[Catalog.CheckpointInterval]]-th version also gets a full
+  // checkpoint; [[CommitLog]] owns every byte of that format. This
+  // class replays it: commit cost is proportional to the COMMIT, not
+  // the table (a CDC tick writes a few hundred bytes under the lock
+  // regardless of table size), and readers replay checkpoint + tail
+  // deltas once, then pay only per-commit deltas (version-keyed cache
+  // below). Time travel ([[readAt]]), the changefeed, vacuum, fsck, OCC
+  // and leases all read the same replayed states.
 
   /** Staged representation of DROP TABLE: maxId can never be negative
     * for a real state (dense ids start at 1), so this sentinel flows
@@ -219,8 +103,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * turns it into the delta-log tombstone. */
   private val DroppedSentinel = TableState(Long.MinValue, Vector.empty)
 
-  private val mapper = new ObjectMapper()
-  private val logDir: String = io.resolve(root, "_log")
+  private val commitLog = new CommitLog(io, io.resolve(root, "_log"))
+
   /** Merge-on-read switch (`spark.graft.store.mergeOnRead`): `on` /
     * `auto` / ABSENT = point updates, point deletes, and merge matched
     * rows land as deletion vectors + patch files; `off` = always
@@ -242,192 +126,6 @@ final class Catalog(val spark: SparkSession, val root: String,
   private val checkpointFailStreak =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def deltaPath(v: Long): String = io.resolve(logDir, s"v$v.json")
-  /** Where NEW checkpoints land (parquet, round 15 — see
-    * [[CheckpointIO]]); pre-round-15 JSON checkpoints remain readable
-    * via the extension dispatch in [[readCheckpointFile]]. */
-  private def checkpointPath(v: Long): String =
-    io.resolve(logDir, s"v$v.checkpoint.parquet")
-
-  /** Parse a checkpoint in whichever format it was written. */
-  private def readCheckpointFile(p: String): Manifest =
-    if (p.endsWith(".parquet"))
-      CheckpointIO.read(io, p, None).groupBy(_._1).flatMap {
-        case (tbl, rows) =>
-          CheckpointIO.decodeTable(rows).map(d => tbl -> stateFromDecoded(d))
-      }
-    else parseManifest(io.readAllBytes(p))
-
-  private def stateFromDecoded(d: (Long, Option[String],
-      Map[String, String], Option[String], Option[Seq[String]],
-      Map[String, Seq[String]], Seq[String],
-      Vector[(String, Long, Long, Map[String, (Long, Long)],
-        Map[String, (String, String)], Option[(String, Long)], Long,
-        Map[String, Long])])): TableState = {
-    val (maxId, schemaJson, checks, idCol, statsCols, renames, priorDirs,
-      files) = d
-    TableState(maxId,
-      canonFiles(files.map { case (p, mn, mx, cols, scols, dv, rows, nulls) =>
-        FileEntry(p, mn, mx, cols, scols, dv, rows, nulls)
-      }),
-      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]),
-      checks, idCol, statsCols, renames, priorDirs)
-  }
-
-  private def fileEntryNode(fs: ArrayNode, f: FileEntry): Unit = {
-    val fn = fs.addObject()
-    fn.put("path", f.path); fn.put("min", f.minId); fn.put("max", f.maxId)
-    if (f.cols.nonEmpty) {
-      val cn = fn.putObject("cols")
-      f.cols.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
-        val arr = cn.putArray(c); arr.add(mn); arr.add(mx)
-      }
-    }
-    if (f.scols.nonEmpty) {
-      val sn = fn.putObject("scols")
-      f.scols.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
-        val arr = sn.putArray(c); arr.add(mn); arr.add(mx)
-      }
-    }
-    f.dv.foreach { case (p, n) => fn.put("dv", p); fn.put("dvn", n) }
-    if (f.rows >= 0L) fn.put("rows", f.rows)
-    if (f.nulls.nonEmpty) {
-      val nn = fn.putObject("nulls")
-      f.nulls.toSeq.sortBy(_._1).foreach { case (c, n) => nn.put(c, n) }
-    }
-  }
-
-  private def parseFileEntry(f: com.fasterxml.jackson.databind.JsonNode)
-      : FileEntry = {
-    val cols = Option(f.get("cols")).map { cn =>
-      cn.properties().asScala.map { ce =>
-        ce.getKey -> (ce.getValue.get(0).asLong(),
-          ce.getValue.get(1).asLong())
-      }.toMap
-    }.getOrElse(Map.empty[String, (Long, Long)])
-    val scols = Option(f.get("scols")).map { sn =>
-      sn.properties().asScala.map { ce =>
-        ce.getKey -> (ce.getValue.get(0).asText(),
-          ce.getValue.get(1).asText())
-      }.toMap
-    }.getOrElse(Map.empty[String, (String, String)])
-    val nulls = Option(f.get("nulls")).map { nn =>
-      nn.properties().asScala
-        .map(ne => ne.getKey -> ne.getValue.asLong()).toMap
-    }.getOrElse(Map.empty[String, Long])
-    FileEntry(f.get("path").asText(), f.get("min").asLong(),
-      f.get("max").asLong(), cols, scols,
-      Option(f.get("dv")).map(d =>
-        (d.asText(), Option(f.get("dvn")).map(_.asLong()).getOrElse(0L))),
-      Option(f.get("rows")).map(_.asLong()).getOrElse(-1L), nulls)
-  }
-
-  private def parseTableMeta(t: com.fasterxml.jackson.databind.JsonNode)
-      : (Option[org.apache.spark.sql.types.StructType],
-         Map[String, String], Option[String], Option[Seq[String]],
-         Map[String, Seq[String]], Seq[String]) = {
-    val schema = Option(t.get("schema")).map(n =>
-      org.apache.spark.sql.types.DataType.fromJson(n.asText())
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val checks = Option(t.get("checks")).map { cn =>
-      cn.properties().asScala
-        .map(ce => ce.getKey -> ce.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val statsCols = Option(t.get("statscols")).map(
-      _.elements().asScala.map(_.asText()).toSeq)
-    val renames = Option(t.get("renames")).map { rn =>
-      rn.properties().asScala.map(e =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq)
-        .toMap
-    }.getOrElse(Map.empty[String, Seq[String]])
-    val priorDirs = Option(t.get("priordirs")).map(
-      _.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    (schema, checks, Option(t.get("idcol")).map(_.asText()), statsCols,
-      renames, priorDirs)
-  }
-
-  private def putTableMeta(t: ObjectNode, st: TableState): Unit = {
-    t.put("maxId", st.maxId)
-    st.schema.foreach(s => t.put("schema", s.json))
-    st.idCol.foreach(c => t.put("idcol", c))
-    if (st.checks.nonEmpty) {
-      val cn = t.putObject("checks")
-      st.checks.toSeq.sortBy(_._1).foreach { case (n, e) => cn.put(n, e) }
-    }
-    st.statsCols.foreach { sc =>
-      val a = t.putArray("statscols"); sc.foreach(a.add)
-    }
-    if (st.renames.nonEmpty) {
-      val rn = t.putObject("renames")
-      st.renames.toSeq.sortBy(_._1).foreach { case (cur, priors) =>
-        val a = rn.putArray(cur); priors.foreach(a.add)
-      }
-    }
-    if (st.priorDirs.nonEmpty) {
-      val a = t.putArray("priordirs"); st.priorDirs.foreach(a.add)
-    }
-  }
-
-  /** Checkpoint format = the full-manifest format (every table, every
-    * live file): top-level `_version`/`_committedAtMs` plus one object
-    * per table. */
-  private def parseManifest(bytes: Array[Byte]): Manifest = {
-    val tree = mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-    tree.properties().asScala
-      .filterNot(_.getKey.startsWith("_")) // reserved keys (_version)
-      .map { e =>
-        val t = e.getValue
-        val files = canonFiles(t.get("files").elements().asScala
-          .map(parseFileEntry).toVector)
-        val (schema, checks, idCol, statsCols, renames, priorDirs) =
-          parseTableMeta(t)
-        e.getKey -> TableState(t.get("maxId").asLong(), files, schema,
-          checks, idCol, statsCols, renames, priorDirs)
-      }.toMap
-  }
-
-  /** One commit's per-table delta: adds carry full entries (stats
-    * included), removes are paths; maxId/schema/checks/idCol are the
-    * table's ABSOLUTE post-commit values (small — bytes, not file
-    * lists). */
-  private case class TableDelta(maxId: Long, add: Vector[FileEntry],
-      remove: Vector[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      checks: Map[String, String], idCol: Option[String],
-      /** Absolute post-commit stats-column list (like schema/idCol). */
-      statsCols: Option[Seq[String]] = None,
-      /** Absolute post-commit rename history (like schema/idCol). */
-      renames: Map[String, Seq[String]] = Map.empty,
-      /** Absolute post-commit prior-directory list (like renames). */
-      priorDirs: Seq[String] = Nil,
-      /** DROP TABLE tombstone (round 15): the table's manifest key is
-        * removed by this commit. History below stays readable (time
-        * travel / restore replay OLD manifests); the files lose their
-        * last CURRENT reference and retire once vacuum retention
-        * passes the retained history that still names them. */
-      dropped: Boolean = false)
-
-  private def parseDelta(bytes: Array[Byte]): Map[String, TableDelta] = {
-    val tree = mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-    Option(tree.get("tables")).map(_.properties().asScala.map { e =>
-      val t = e.getValue
-      if (Option(t.get("dropped")).exists(_.asBoolean()))
-        e.getKey -> TableDelta(0L, Vector.empty, Vector.empty, None,
-          Map.empty, None, dropped = true)
-      else {
-        val add = Option(t.get("add")).map(_.elements().asScala
-          .map(parseFileEntry).toVector).getOrElse(Vector.empty)
-        val remove = Option(t.get("remove")).map(_.elements().asScala
-          .map(_.asText()).toVector).getOrElse(Vector.empty)
-        val (schema, checks, idCol, statsCols, renames, priorDirs) =
-          parseTableMeta(t)
-        e.getKey -> TableDelta(t.get("maxId").asLong(), add, remove,
-          schema, checks, idCol, statsCols, renames, priorDirs)
-      }
-    }.toMap).getOrElse(Map.empty)
-  }
-
   /** Replay one delta onto a manifest (the CANONICAL state derivation:
     * every reader — cache, time travel, fsck — goes through here, so
     * state equality used by OCC validation is instance-independent). */
@@ -438,15 +136,6 @@ final class Catalog(val spark: SparkSession, val root: String,
       tbl -> applyTableDelta(m.get(tbl), td)
     }) -- drops.keys
   }
-
-  /** Canonical file order (round 15): every reader-facing state sorts
-    * its file vector by path. Parquet checkpoints store entries sorted,
-    * while delta replay naturally appends changed entries at the tail —
-    * without one canonical order, two readers of the SAME state (one
-    * via checkpoint, one via replay) would disagree on Vector equality,
-    * breaking fsck's divergence audit and OCC's state comparisons. */
-  private def canonFiles(v: Vector[FileEntry]): Vector[FileEntry] =
-    v.sortBy(_.path)
 
   /** One table's slice of [[applyDelta]] — the targeted cold-read path
     * ([[tableState]]) replays a single table through this without
@@ -461,26 +150,10 @@ final class Catalog(val spark: SparkSession, val root: String,
       td.priorDirs)
   }
 
-  /** Every log file as (version, isCheckpoint, path); empty if no log. */
-  private def listLog(): Vector[(Long, Boolean, String)] =
-    io.list(logDir).flatMap { e =>
-      val n = e.name
-      if (n.matches("v\\d+\\.json"))
-        Some((n.stripPrefix("v").stripSuffix(".json").toLong, false,
-          e.path))
-      else if (n.matches("v\\d+\\.checkpoint\\.json"))
-        Some((n.stripPrefix("v").stripSuffix(".checkpoint.json").toLong,
-          true, e.path))
-      else if (n.matches("v\\d+\\.checkpoint\\.parquet"))
-        Some((n.stripPrefix("v")
-          .stripSuffix(".checkpoint.parquet").toLong, true, e.path))
-      else None
-    }
-
   /** Monotonic commit counter (0 = empty store). Every committed
     * transaction bumps it; the snapshot it produced is readable via
     * [[readAt]] until vacuum retires it. */
-  def version: Long = listLog().map(_._1).maxOption.getOrElse(0L)
+  def version: Long = commitLog.list().map(_._1).maxOption.getOrElse(0L)
 
   /** Manifest as of commit `v`, replayed from the nearest checkpoint at
     * or below `v` (empty store below the first checkpoint) through the
@@ -496,16 +169,16 @@ final class Catalog(val spark: SparkSession, val root: String,
     // vacuumed-past-retention condition and must surface as the clean
     // unavailable error, never a raw NoSuchFileException
     try {
-      val log = listLog()
+      val log = commitLog.list()
       if (!log.exists(_._1 == v)) unavailable()
       val ckpt = log.filter(e => e._2 && e._1 <= v).maxByOption(_._1)
       val base: Manifest = ckpt match {
-        case Some((_, _, p)) => readCheckpointFile(p)
+        case Some((_, _, p)) => commitLog.readCheckpoint(p)
         case None => Map.empty
       }
       ((ckpt.map(_._1).getOrElse(0L) + 1) to v).foldLeft(base) { (m, i) =>
-        if (!io.exists(deltaPath(i))) unavailable()
-        applyDelta(m, parseDelta(io.readAllBytes(deltaPath(i))))
+        if (!io.exists(commitLog.deltaPath(i))) unavailable()
+        applyDelta(m, commitLog.deltaAt(i))
       }
     } catch {
       case _: StoreIO.NoSuchPath => unavailable()
@@ -542,9 +215,10 @@ final class Catalog(val spark: SparkSession, val root: String,
       val (mv, m) =
         try {
           if (c._1 < v &&
-              ((c._1 + 1) to v).forall(i => io.exists(deltaPath(i))))
+              ((c._1 + 1) to v).forall(i =>
+                io.exists(commitLog.deltaPath(i))))
             (v, ((c._1 + 1) to v).foldLeft(c._2)((m, i) =>
-              applyDelta(m, parseDelta(io.readAllBytes(deltaPath(i))))))
+              applyDelta(m, commitLog.deltaAt(i))))
           else (v, manifestAt(v))
         } catch {
           case e @ (_: StoreIO.NoSuchPath |
@@ -565,15 +239,15 @@ final class Catalog(val spark: SparkSession, val root: String,
     String, (Long, Option[TableState])]()
 
   /** Current state of ONE table without materializing the whole
-    * manifest — the scaling half of the round-15 checkpoint work: on a
-    * cold instance this replays the nearest PARQUET checkpoint's rows
-    * for `table` only (a pushdown-filtered driver read ∝ the table's
-    * file count, not the store's — [[CheckpointIO.read]]) plus the
-    * table's slice of the tail deltas. At a million-file store root a
-    * single-table cold open touches kilobytes of metadata. Warm paths
-    * are unchanged (the whole-manifest cache wins when current); legacy
-    * JSON checkpoints, young stores' races, and vacuum races all fall
-    * back to [[readManifest]] — same answers, full-parse cost. */
+    * manifest: on a cold instance this replays the nearest checkpoint's
+    * rows for `table` only (a pushdown-filtered driver read ∝ the
+    * table's file count, not the store's —
+    * [[CommitLog.readCheckpointTable]]) plus the table's slice of the
+    * tail deltas. At a million-file store root a single-table cold open
+    * touches kilobytes of metadata. Warm paths are unchanged (the
+    * whole-manifest cache wins when current); young stores' races and
+    * vacuum races fall back to [[readManifest]] — same answers,
+    * full-parse cost. */
   private def tableState(table: String): Option[TableState] = {
     val v = version
     val c = cache
@@ -596,21 +270,16 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   private def targetedState(table: String, v: Long): Option[TableState] = {
     if (v == 0L) return None
-    val log = listLog()
+    val log = commitLog.list()
     if (!log.exists(_._1 == v)) return readManifest().get(table)
     val ckpt = log.filter(e => e._2 && e._1 <= v).maxByOption(_._1)
     val (baseV, base) = ckpt match {
-      case Some((cv, _, p)) if p.endsWith(".parquet") =>
-        (cv, CheckpointIO.decodeTable(CheckpointIO.read(io, p, Some(table)))
-          .map(stateFromDecoded))
-      case Some(_) =>
-        // legacy JSON checkpoint: no sub-file access — full parse
-        return readManifest().get(table)
+      case Some((cv, _, p)) => (cv, commitLog.readCheckpointTable(p, table))
       case None => (0L, None)
     }
     var st = base
     ((baseV + 1) to v).foreach { i =>
-      parseDelta(io.readAllBytes(deltaPath(i))).get(table)
+      commitLog.deltaAt(i).get(table)
         .foreach(td => st =
           if (td.dropped) None else Some(applyTableDelta(st, td)))
     }
@@ -636,20 +305,12 @@ final class Catalog(val spark: SparkSession, val root: String,
       : Option[() => Unit] = {
     val newVersion = version + 1
     val committedAtMs = System.currentTimeMillis()
-    val rootNode = mapper.createObjectNode()
-    rootNode.put("_version", newVersion)
-    rootNode.put("_committedAtMs", committedAtMs)
-    val tablesNode = rootNode.putObject("tables")
     val delta: Map[String, TableDelta] =
-      staged.toSeq.sortBy(_._1).flatMap { case (tbl, st) =>
+      staged.toSeq.flatMap { case (tbl, st) =>
         val p = prev.getOrElse(tbl, TableState(0L, Vector.empty))
         if (st == DroppedSentinel) {
           if (!prev.contains(tbl)) None // dropped a never-committed name
-          else {
-            tablesNode.putObject(tbl).put("dropped", true)
-            Some(tbl -> TableDelta(0L, Vector.empty, Vector.empty, None,
-              Map.empty, None, dropped = true))
-          }
+          else Some(tbl -> TableDelta.Dropped)
         }
         else if (p == st && prev.contains(tbl)) None
         else {
@@ -661,28 +322,17 @@ final class Catalog(val spark: SparkSession, val root: String,
           val nSet = st.files.toSet
           val add = st.files.filterNot(pSet.contains)
           val remove = p.files.filterNot(nSet.contains).map(_.path)
-          val t = tablesNode.putObject(tbl)
-          putTableMeta(t, st)
-          if (add.nonEmpty) {
-            val an: ArrayNode = t.putArray("add")
-            add.foreach(fileEntryNode(an, _))
-          }
-          if (remove.nonEmpty) {
-            val rn: ArrayNode = t.putArray("remove")
-            remove.foreach(rn.add)
-          }
           Some(tbl -> TableDelta(st.maxId, add, remove, st.schema,
             st.checks, st.idCol, st.statsCols, st.renames, st.priorDirs))
         }
       }.toMap
-    io.mkdirs(logDir)
+    io.mkdirs(commitLog.dir)
     // UUID-unique tmp: a paused-past-TTL lease holder and its stealer
     // can both be inside writeCommit for the SAME version — a shared
     // tmp name would let the loser overwrite the winner's staged bytes
     // between its write and its publish
-    val tmp = io.resolve(logDir, s"v$newVersion.json." +
-      java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-    io.write(tmp, mapper.writeValueAsBytes(rootNode))
+    val tmp = commitLog.deltaTmpPath(newVersion)
+    io.write(tmp, CommitLog.encodeDelta(newVersion, committedAtMs, delta))
     // fencing check (round 18): a lease-mode holder paused past the TTL
     // (GC pause, VM suspend) may have had its lease stolen — abort HERE,
     // before the irreversible rename, so the stealer's commits are never
@@ -698,7 +348,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     // pre-checked best-effort refusal (atomic only on HDFS's native
     // no-replace rename), with the residue serialized by the commit
     // lock + verifyStillHeld above.
-    if (!io.renameIfAbsent(tmp, deltaPath(newVersion))) {
+    if (!io.renameIfAbsent(tmp, commitLog.deltaPath(newVersion))) {
       io.deleteIfExists(tmp)
       throw new Catalog.ConcurrentWriteException(
         s"commit v$newVersion of '$root' already exists: another " +
@@ -711,23 +361,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     cache = (newVersion, next)
     if (newVersion % Catalog.CheckpointInterval != 0) None
     else Some(() => {
-      // parquet checkpoint (CheckpointIO): sorted-by-table rows, version
-      // + commit stamp in the footer. The stamp is the DELTA's commit
-      // stamp, not checkpoint-write time: once vacuum retires the delta,
-      // versionAsOf resolves TIMESTAMP AS OF through the checkpoint — a
-      // late maintenance stamp would skew it
-      CheckpointIO.write(io, checkpointPath(newVersion), newVersion,
-        committedAtMs,
-        next.toSeq.sortBy(_._1).map { case (tbl, st) =>
-          (tbl, st.maxId, st.schema.map(_.json), st.checks, st.idCol,
-            st.statsCols, st.renames, st.priorDirs,
-            st.files.map(f =>
-              (f.path, f.minId, f.maxId, f.cols, f.scols, f.dv, f.rows,
-                f.nulls)):
-              Seq[(String, Long, Long, Map[String, (Long, Long)],
-                Map[String, (String, String)], Option[(String, Long)],
-                Long, Map[String, Long])])
-        })
+      // the stamp is the DELTA's commit stamp, not checkpoint-write
+      // time: once vacuum retires the delta, versionAsOf resolves
+      // TIMESTAMP AS OF through the checkpoint — a late maintenance
+      // stamp would skew it
+      commitLog.writeCheckpoint(newVersion, committedAtMs, next)
     })
   }
 
@@ -739,22 +377,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     * if every snapshot old enough has been vacuumed past the retention
     * window — never silently resolves to a different point in time. */
   def versionAsOf(tsMillis: Long): Long = {
-    val log = listLog()
+    val log = commitLog.list()
     if (log.isEmpty)
       throw new IllegalArgumentException(
         s"no snapshot of '$root' existed at $tsMillis (empty store)")
-    val candidates = log.map { case (v, _, p) =>
-      val at =
-        if (p.endsWith(".parquet"))
-          // footer-only read; a half-written/corrupt checkpoint falls
-          // back to mtime rather than failing a timestamp resolution
-          (try Some(CheckpointIO.stamp(io, p)._2).filter(_ > 0L)
-          catch { case _: Exception => None })
-            .getOrElse(io.mtimeMs(p))
-        else Option(mapper.readTree(io.readAllBytes(p))
-            .get("_committedAtMs")).map(_.asLong())
-          .getOrElse(io.mtimeMs(p))
-      (v, at)
+    val candidates = log.map { case (v, isCkpt, p) =>
+      (v, commitLog.committedAtMs(isCkpt, p))
     }
     val eligible = candidates.filter(_._2 <= tsMillis)
     if (eligible.isEmpty)
@@ -763,6 +391,26 @@ final class Catalog(val spark: SparkSession, val root: String,
           s"available: ${candidates.map(_._2).minOption.getOrElse(-1L)}; " +
           "older snapshots may have been vacuumed)")
     eligible.maxBy(_._1)._1
+  }
+
+  /** `table`'s state as of committed version `v`; None at the
+    * empty-store baseline (`v = 0`) or when the table did not exist. */
+  private def stateAt(table: String, v: Long): Option[TableState] =
+    if (v == 0L) None else manifestAt(v).get(table)
+
+  /** The loud serving-window check of the snapshot readers: throws if
+    * any data file or deletion-vector sidecar of `files` is gone,
+    * naming `what` was read and the `history` a longer vacuum
+    * retention window would keep readable. */
+  private def requireRetained(files: Seq[FileEntry], what: String,
+      history: String): Unit = {
+    val gone = files.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
+      .filterNot(p => io.exists(io.resolve(root, p)))
+    if (gone.nonEmpty)
+      throw new IllegalStateException(
+        s"$what references ${gone.size} vacuumed file(s) (first: " +
+          s"${gone.head}); raise the vacuum retention window to keep " +
+          s"$history readable")
   }
 
   /** Time-travel read by wall-clock time (Delta `TIMESTAMP AS OF`
@@ -778,15 +426,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     * loudly, never a silently partial table (every referenced file is
     * existence-checked before the scan). */
   def readAt(table: String, version: Long): DataFrame = {
-    val st = manifestAt(version).get(table)
+    val st = stateAt(table, version)
     val files = st.map(_.files).getOrElse(Vector.empty)
-    val gone = files.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-      .filterNot(p => io.exists(io.resolve(root, p)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"snapshot v$version of '$table' references ${gone.size} " +
-          s"vacuumed file(s) (first: ${gone.head}); raise the " +
-          "vacuum retention window to keep older snapshots readable")
+    requireRetained(files, s"snapshot v$version of '$table'",
+      "older snapshots")
     // the snapshot's OWN schema: a table evolved after `version` still
     // time-travels to its pre-evolution shape
     readFiles(table, files, schemaOf(st, table), idColOf(st, table))
@@ -814,10 +457,9 @@ final class Catalog(val spark: SparkSession, val root: String,
       toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"changesBetween: fromVersion $fromVersion > toVersion $toVersion")
-    def stateAt(v: Long): Option[TableState] =
-      if (v == 0L) None else manifestAt(v).get(table)
-    val toState = stateAt(toVersion)
-    val from = stateAt(fromVersion).map(_.files).getOrElse(Vector.empty)
+    val toState = stateAt(table, toVersion)
+    val from =
+      stateAt(table, fromVersion).map(_.files).getOrElse(Vector.empty)
     val to = toState.map(_.files).getOrElse(Vector.empty)
     // entries diff by (path, dv): a merge-on-read tick changes a file's
     // DELETION VECTOR while the path stays — such an entry must appear
@@ -829,14 +471,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     val toKeys = to.map(f => (f.path, f.dv)).toSet
     val removed = from.filterNot(f => toKeys((f.path, f.dv)))
     val added = to.filterNot(f => fromKeys((f.path, f.dv)))
-    val gone = (removed ++ added)
-      .flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-      .filterNot(p => io.exists(io.resolve(root, p)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"changefeed v$fromVersion..v$toVersion of '$table' references " +
-          s"${gone.size} vacuumed file(s) (first: ${gone.head}); " +
-          "raise the vacuum retention window to keep older feeds readable")
+    requireRetained(removed ++ added,
+      s"changefeed v$fromVersion..v$toVersion of '$table'", "older feeds")
     // both sides read through the TO version's schema: a column added
     // between the versions appears NULL-backfilled on the old image,
     // which is the shape a CDC consumer of the evolved table expects
@@ -923,10 +559,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"readAppends: fromVersion $fromVersion > toVersion $toVersion")
-    def stateAt(v: Long): Option[TableState] =
-      if (v == 0L) None else manifestAt(v).get(table)
-    val fromState = stateAt(fromVersion)
-    val toState = stateAt(toVersion)
+    val fromState = stateAt(table, fromVersion)
+    val toState = stateAt(table, toVersion)
     val from = fromState.map(_.files).getOrElse(Vector.empty)
     val to = toState.map(_.files).getOrElse(Vector.empty)
     val fromKeys = from.map(f => (f.path, f.dv)).toSet
@@ -949,12 +583,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     // contract and skips the audit — see the method doc.
     if (fromVersion > 0L)
       ((fromVersion + 1) to toVersion).foreach { v =>
-        if (!io.exists(deltaPath(v)))
+        if (!io.exists(commitLog.deltaPath(v)))
           throw new IllegalStateException(
             s"readAppends v$fromVersion..v$toVersion of '$table': delta " +
               s"v$v has been vacuumed; raise the vacuum retention " +
               "window to keep the tail readable")
-        parseDelta(io.readAllBytes(deltaPath(v))).get(table)
+        commitLog.deltaAt(v).get(table)
           .foreach { td =>
             if (td.dropped)
               nonAppend(s"v$v drops the table")
@@ -979,13 +613,8 @@ final class Catalog(val spark: SparkSession, val root: String,
         s"readAppends v$fromVersion..v$toVersion of '$table': the " +
           "surrogate-id column changed inside the range")
     val added = to.filterNot(f => fromKeys((f.path, f.dv)))
-    val gone = added.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-      .filterNot(p => io.exists(io.resolve(root, p)))
-    if (gone.nonEmpty)
-      throw new IllegalStateException(
-        s"readAppends v$fromVersion..v$toVersion of '$table' references " +
-          s"${gone.size} vacuumed file(s) (first: ${gone.head}); " +
-          "raise the vacuum retention window to keep the tail readable")
+    requireRetained(added,
+      s"readAppends v$fromVersion..v$toVersion of '$table'", "the tail")
     readFiles(table, added, schemaOf(toState, table),
       idColOf(toState, table))
   }
@@ -1118,20 +747,13 @@ final class Catalog(val spark: SparkSession, val root: String,
           org.apache.spark.sql.types.StructType, String,
           Map[String, Seq[String]])] = {
     val st = version match {
-      case Some(v) => manifestAt(v).get(table)
+      case Some(v) => stateAt(table, v)
       case None => tableState(table)
     }
     if (st.isEmpty && !Schemas.registry.contains(table)) return None
     val files = st.map(_.files).getOrElse(Vector.empty)
-    if (version.isDefined) {
-      val gone = files.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
-        .filterNot(p => io.exists(io.resolve(root, p)))
-      if (gone.nonEmpty)
-        throw new IllegalStateException(
-          s"snapshot v${version.get} of '$table' references ${gone.size} " +
-            s"vacuumed file(s) (first: ${gone.head}); raise the " +
-            "vacuum retention window to keep older snapshots readable")
-    }
+    version.foreach(v => requireRetained(files,
+      s"snapshot v$v of '$table'", "older snapshots"))
     // Rename epochs (round 17, closing SURVEY §7.7.1): when live files
     // still carry a pre-rename column name, the SQL scan reads
     // prior-name twin columns and coalesces per row
@@ -1463,13 +1085,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     val referenced: Set[String] = {
       def abs(f: FileEntry) = io.canon(io.resolve(root, f.path))
       val cur = m.values.flatMap(_.files).map(abs)
-      val logged = listLog().flatMap { case (_, isCkpt, p) =>
+      val logged = commitLog.list().flatMap { case (_, isCkpt, p) =>
         try {
           if (isCkpt)
-            readCheckpointFile(p).values
+            commitLog.readCheckpoint(p).values
               .flatMap(_.files).map(abs)
           else
-            parseDelta(io.readAllBytes(p)).values
+            commitLog.readDelta(p).values
               .flatMap(_.add).map(abs)
         } catch { case _: Exception => Nil } // corrupt log: chain audit flags it
       }
@@ -1502,40 +1124,34 @@ final class Catalog(val spark: SparkSession, val root: String,
     * delta replay that should reproduce it. Driver-side metadata walk —
     * no data file is opened. */
   private def logChainProblems(): Seq[(String, Long, Boolean, String)] = {
-    if (!io.exists(logDir)) return Nil
+    if (!io.exists(commitLog.dir)) return Nil
     val probs = Vector.newBuilder[(String, Long, Boolean, String)]
     def rel(p: String): String = io.relativize(root, p)
     // stray files (tmp debris, foreign content)
-    io.list(logDir).filterNot(_.isDir).foreach { e =>
-      val n = e.name
-      if (!n.matches("v\\d+\\.json") &&
-          !n.matches("v\\d+\\.checkpoint\\.json") &&
-          !n.matches("v\\d+\\.checkpoint\\.parquet"))
-        probs += ((rel(e.path), 0L, false,
-          "unrecognized file in the commit log (crashed commit's tmp " +
-            "or foreign debris; on a live store possibly an in-flight " +
-            "commit — audit quiescent)"))
+    commitLog.strays().foreach { p =>
+      probs += ((rel(p), 0L, false,
+        "unrecognized file in the commit log (crashed commit's tmp " +
+          "or foreign debris; on a live store possibly an in-flight " +
+          "commit — audit quiescent)"))
     }
-    val log = listLog()
+    val log = commitLog.list()
     if (log.isEmpty) return probs.result()
-    // parseability (both checkpoint formats; a parquet checkpoint must
-    // also carry a version footer AGREEING with its filename)
+    // parseability (a checkpoint must also carry a version footer
+    // AGREEING with its filename)
     val parsedDeltas = scala.collection.mutable.Map[Long, Map[String, TableDelta]]()
     val parsedCkpts = scala.collection.mutable.Map[Long, Manifest]()
     val ckptPaths = scala.collection.mutable.Map[Long, String]()
     log.foreach { case (v, isCkpt, p) =>
       try {
         if (isCkpt) {
-          if (p.endsWith(".parquet")) {
-            val (fv, _) = CheckpointIO.stamp(io, p)
-            if (fv != v)
-              probs += ((rel(p), 0L, false,
-                s"checkpoint footer claims v$fv but the filename says " +
-                  s"v$v — renamed or corrupt"))
-          }
-          parsedCkpts(v) = readCheckpointFile(p); ckptPaths(v) = p
+          val (fv, _) = commitLog.stamp(p)
+          if (fv != v)
+            probs += ((rel(p), 0L, false,
+              s"checkpoint footer claims v$fv but the filename says " +
+                s"v$v — renamed or corrupt"))
+          parsedCkpts(v) = commitLog.readCheckpoint(p); ckptPaths(v) = p
         }
-        else parsedDeltas(v) = parseDelta(io.readAllBytes(p))
+        else parsedDeltas(v) = commitLog.readDelta(p)
       } catch {
         case e: Exception =>
           probs += ((rel(p), 0L, false,
@@ -1556,7 +1172,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     // look
     val newestCkpt = log.filter(_._2).map(_._1).maxOption.getOrElse(0L)
     if (cur - newestCkpt > 2 * Catalog.CheckpointInterval)
-      probs += ((rel(logDir), 0L, false,
+      probs += ((rel(commitLog.dir), 0L, false,
         s"checkpoint lag: current v$cur is ${cur - newestCkpt} commits " +
           s"past the newest checkpoint v$newestCkpt (interval " +
           s"${Catalog.CheckpointInterval}) — deferred checkpoint writes " +
@@ -1569,7 +1185,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       val bestBase = bases.head
       val firstMissing = ((bestBase + 1) to cur)
         .find(i => !parsedDeltas.contains(i)).getOrElse(cur)
-      probs += ((rel(logDir), 0L, false,
+      probs += ((rel(commitLog.dir), 0L, false,
         s"commit-log chain broken: current v$cur is not replayable " +
           s"from any retained checkpoint (first missing/corrupt delta " +
           s"after the newest basis v$bestBase: v$firstMissing)"))
@@ -1585,8 +1201,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           parsedCkpts.getOrElse(b, Map.empty: Manifest))(
           (m, i) => applyDelta(m, parsedDeltas(i)))
         if (replayed != ck)
-          probs += ((rel(ckptPaths.getOrElse(cv, checkpointPath(cv))), 0L,
-            false,
+          probs += ((rel(ckptPaths(cv)), 0L, false,
             s"checkpoint v$cv diverges from the delta replay v${b + 1}.." +
               s"v$cv that should reproduce it"))
       }
@@ -3739,7 +3354,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       // can go. With no checkpoint at or below F yet, nothing is
       // retired (the log only starts shrinking once checkpoints exist —
       // every CheckpointInterval commits).
-      val log = listLog()
+      val log = commitLog.list()
       if (log.nonEmpty) {
         val cur = log.map(_._1).max
         val retained = log.filter { case (v, _, p) =>
@@ -3839,10 +3454,10 @@ object Catalog {
     }
   }
 
-  /** Plain (non-path-dependent) per-file descriptor handed to the SQL
-    * front door: the pruning stats a scan needs and nothing else.
+  /** Per-file descriptor handed to the SQL front door: the pruning
+    * stats a scan needs and nothing else.
     * `minId`/`maxId` are the surrogate-id stats every file carries;
-    * `cols`/`scols` as on [[Catalog!.FileEntry]]. */
+    * `cols`/`scols` as on [[FileEntry]]. */
   private[store] final case class SqlFile(path: String, minId: Long,
       maxId: Long, cols: Map[String, (Long, Long)],
       scols: Map[String, (String, String)],
@@ -3853,7 +3468,7 @@ object Catalog {
       dv: Option[(String, Array[Long])] = None,
       /** Physical row count (-1 unknown) + per-column null counts, the
         * IS NULL / IS NOT NULL pruning stats (see
-        * [[Catalog!.FileEntry.nulls]] for the absent-column rule). */
+        * [[FileEntry.nulls]] for the absent-column rule). */
       rows: Long = -1L,
       nulls: Map[String, Long] = Map.empty)
 
@@ -3978,9 +3593,8 @@ object Catalog {
     * ruled out and stays a candidate; rows in pruned-away files are by
     * proof unmatched, so they survive by reference exactly like non-hit
     * candidates. Bounds are inclusive on both sides (stats are min/max
-    * of present values). Generic over the entry type ([[FileEntry]] is
-    * path-dependent on the Catalog instance) so the boundary logic is
-    * unit-testable as a pure function. */
+    * of present values). Generic over the entry type so the boundary
+    * logic is unit-testable as a pure function. */
   private[store] def pruneByDomain[F](files: Vector[F],
       colsOf: F => Map[String, (Long, Long)], keyCol: String,
       domain: Option[(Long, Long)]): Vector[F] =

@@ -115,7 +115,7 @@ private[graft] trait StoreIO {
   def fileKeyOf(root: String, rel: String): String
 
   /** Hadoop configuration for parquet metadata IO against this store's
-    * filesystem ([[CheckpointIO]]'s writer/reader). Pins
+    * filesystem ([[CommitLog]]'s checkpoint writer/reader). Pins
     * `RawLocalFileSystem` for `file:` paths so no `.crc` sidecars land
     * in `_log/` (fsck treats strays as problems). */
   def hadoopConf: Configuration

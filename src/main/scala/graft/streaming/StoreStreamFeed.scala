@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Q, Tables}
 import graft.ext.PreparedTables
+import graft.ext.PreparedTables.storeRoot
 import graft.store.Catalog
 
 /** [EXT] the store-as-a-streaming-source made gate-visible (round 15,
@@ -37,22 +38,18 @@ object StoreStreamFeed {
   private val CdfSlice = 600L
   private val FlipId = 123L
 
-  private def tailRoot(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_tailstream_root"
+  private val TailRoot = "graft_tailstream_root"
 
-  private def cdfRoot(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_cdfstream_root"
+  private val CdfRoot = "graft_cdfstream_root"
 
   private def ingestCols(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
 
   private val tailPrepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_tailstream_root"),
+    Seq("events.parquet"), Seq(TailRoot),
     (s, d) => {
-      val cat = new Catalog(s, tailRoot(s))
+      val cat = new Catalog(s, storeRoot(s, TailRoot))
       require(cat.version == 0L, "stale graft_tailstream_root")
       val ev = ingestCols(s, d)
       (1 to 3).foreach { i =>
@@ -65,9 +62,9 @@ object StoreStreamFeed {
     })
 
   private val cdfPrepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_cdfstream_root"),
+    Seq("events.parquet"), Seq(CdfRoot),
     (s, d) => {
-      val cat = new Catalog(s, cdfRoot(s))
+      val cat = new Catalog(s, storeRoot(s, CdfRoot))
       require(cat.version == 0L, "stale graft_cdfstream_root")
       cat.append("events_ingest",
         ingestCols(s, d).filter(col("event_id") <= CdfSlice),
@@ -111,7 +108,7 @@ object StoreStreamFeed {
        |ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     tailPrepared.ensurePrepared(s, d)
-    drainToTable(s, tailRoot(s), cdf = false).orderBy("ingest_id")
+    drainToTable(s, storeRoot(s, TailRoot), cdf = false).orderBy("ingest_id")
   }.copy(setup = Some(tailPrepared.ensurePrepared _))
 
   val cdfStream: Q = Q(
@@ -131,13 +128,11 @@ object StoreStreamFeed {
        |ORDER BY ingest_id, _change_type""".stripMargin
   ) { (s, d) =>
     cdfPrepared.ensurePrepared(s, d)
-    drainToTable(s, cdfRoot(s), cdf = true)
+    drainToTable(s, storeRoot(s, CdfRoot), cdf = true)
       .orderBy("ingest_id", "_change_type")
   }.copy(setup = Some(cdfPrepared.ensurePrepared _))
 
-  private def sinkRoot(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_sinkstream_root"
+  private val SinkRoot = "graft_sinkstream_root"
 
   /** Tail-root fixture piped through the streaming SINK twice: the
     * first drain lands three ledgered micro-batches; the second —
@@ -146,16 +141,17 @@ object StoreStreamFeed {
     * must reject each. Loud fixture requires, oracle-checked state. */
   private val sinkPrepared = new PreparedTables(
     Seq("events.parquet"),
-    Seq("graft_sinkstream_root"), // the tail root belongs to tailPrepared
+    Seq(SinkRoot), // the tail root belongs to tailPrepared
     (s, d) => {
       tailPrepared.ensurePrepared(s, d)
-      val dst = sinkRoot(s)
+      val dst = storeRoot(s, SinkRoot)
       require(new Catalog(s, dst).version == 0L,
         "stale graft_sinkstream_root survived fixture prep")
       def pipe(): Unit = {
         val q = s.readStream
           .format(classOf[GraftStreamProvider].getName)
-          .option("root", tailRoot(s)).option("table", "events_ingest")
+          .option("root", storeRoot(s, TailRoot))
+          .option("table", "events_ingest")
           .option("maxVersionsPerBatch", "1")
           .load()
           .drop("ingest_id") // the sink's table assigns its own ids
@@ -191,13 +187,11 @@ object StoreStreamFeed {
        |ORDER BY ingest_id""".stripMargin
   ) { (s, d) =>
     sinkPrepared.ensurePrepared(s, d)
-    new Catalog(s, sinkRoot(s)).read("events_ingest")
+    new Catalog(s, storeRoot(s, SinkRoot)).read("events_ingest")
       .orderBy("ingest_id")
   }.copy(setup = Some(sinkPrepared.ensurePrepared _))
 
-  private def upsertRoot(s: SparkSession): String =
-    new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-      .stripSuffix("/") + "/graft_upsertstream_root"
+  private val UpsertRoot = "graft_upsertstream_root"
 
   /** UPDATE-MODE AGGREGATE through the MERGE SINK (round 18): a real
     * `readStream` per-user rollup (count / decimal sum / max ts) over
@@ -211,9 +205,9 @@ object StoreStreamFeed {
     * visibly corrupts; the require + the oracle hash pin exactly
     * that. */
   private val upsertPrepared = new PreparedTables(
-    Seq("events.parquet"), Seq("graft_upsertstream_root"),
+    Seq("events.parquet"), Seq(UpsertRoot),
     (s, d) => {
-      val dst = upsertRoot(s)
+      val dst = storeRoot(s, UpsertRoot)
       val cat = new Catalog(s, dst)
       require(cat.version == 0L, "stale graft_upsertstream_root")
       cat.createTable("user_rollup",
@@ -284,7 +278,7 @@ object StoreStreamFeed {
     upsertPrepared.ensurePrepared(s, d)
     // exact decimal at rest; DOUBLE at the gate boundary (the money
     // convention — graft.core.Determinism)
-    new Catalog(s, upsertRoot(s)).read("user_rollup")
+    new Catalog(s, storeRoot(s, UpsertRoot)).read("user_rollup")
       .select(col("user_id"), col("n_events"),
         col("total_value").cast("double").as("total_value"),
         col("last_ts"))

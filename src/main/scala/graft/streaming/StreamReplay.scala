@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
 import scala.collection.concurrent.TrieMap
@@ -59,8 +59,8 @@ private[graft] object StreamReplay {
   val Batches = 3
 
   private def stagingDir(s: SparkSession, table: String): Path =
-    Paths.get(new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-      .getPath, s"stream_replay_$table")
+    graft.ext.PreparedTables.warehousePath(s)
+      .resolve(s"stream_replay_$table")
 
   private def stage(table: String, timeCols: Seq[String])(
       s: SparkSession, d: String): Unit = {

@@ -170,4 +170,20 @@ class PreparedTablesSpec extends SparkSuite {
     mkPrepared().ensurePrepared(spark, d)
     assert(writes.get() == 2, "stale marker adopted after content change")
   }
+
+  test("a warehouse path containing a space resolves to the same store " +
+    "root with and without the file: scheme") {
+    import graft.ext.PreparedTables.{storeRoot, warehousePath}
+    val dir = "/tmp/graft wh/with space"
+    // Spark does not percent-encode this conf, so a java.net.URI parse
+    // of the schemed form throws
+    intercept[java.net.URISyntaxException](new java.net.URI(s"file:$dir"))
+    val want = Paths.get(dir, "graft_dv_root")
+    Seq(dir, s"file:$dir", s"file://$dir").foreach { raw =>
+      assert(warehousePath(raw).resolve("graft_dv_root") == want, raw)
+    }
+    assert(storeRoot(spark, "graft_dv_root") ==
+      warehousePath(spark.conf.get("spark.sql.warehouse.dir"))
+        .resolve("graft_dv_root").toString)
+  }
 }

@@ -9,7 +9,7 @@ import graft.SparkSuite
   * replay, a missing tail delta, and a renamed checkpoint (footer
   * version disagreeing with the filename) are each flagged with the
   * right diagnosis. Lives in `graft.store` because the divergence
-  * tamper rewrites the checkpoint through [[CheckpointIO]] itself —
+  * tamper rewrites the checkpoint through [[CommitLog]] itself —
   * a valid parquet file with a consistent footer whose CONTENT lies,
   * the hardest case for the audit to catch. */
 class LogChainAuditSpec extends SparkSuite {
@@ -35,19 +35,13 @@ class LogChainAuditSpec extends SparkSuite {
     // (readers entering via the checkpoint would disagree with readers
     // replaying deltas)
     val ck = logDir.resolve("v10.checkpoint.parquet")
-    val (cv, stampMs) = CheckpointIO.stamp(new LocalStoreIO, ck.toString)
+    val log = new CommitLog(new LocalStoreIO, logDir.toString)
+    val (cv, stampMs) = log.stamp(ck.toString)
     assert(cv == 10L)
-    val tables = CheckpointIO.read(new LocalStoreIO, ck.toString, None).groupBy(_._1).toSeq
-      .map { case (tbl, rows) =>
-        val (maxId, schemaJson, checks, idCol, statsCols, renames,
-          priorDirs, files) = CheckpointIO.decodeTable(rows).get
-        (tbl, if (tbl == "users") 99L else maxId, schemaJson, checks,
-          idCol, statsCols, renames, priorDirs,
-          files: Seq[(String, Long, Long, Map[String, (Long, Long)],
-            Map[String, (String, String)], Option[(String, Long)], Long,
-            Map[String, Long])])
-      }
-    CheckpointIO.write(new LocalStoreIO, ck.toString, cv, stampMs, tables)
+    val tables = log.readCheckpoint(ck.toString).map { case (tbl, st) =>
+      tbl -> (if (tbl == "users") st.copy(maxId = 99L) else st)
+    }
+    log.writeCheckpoint(cv, stampMs, tables)
     val flagged1 = new Catalog(spark, cat.root).fsck("users").collect()
       .filter(!_.getBoolean(2))
     assert(flagged1.exists(_.getString(3).contains("diverges")),
