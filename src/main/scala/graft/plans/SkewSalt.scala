@@ -145,7 +145,10 @@ private[graft] object SkewSalt {
     * same query, as bench reruns and retried stages do, hits the
     * cache). The file-set signature in the key means a table that GREW
     * under the same path (new files appended) re-censuses instead of
-    * reusing a stale no-salt verdict forever; bounded at
+    * reusing a stale no-salt verdict forever. An in-memory side (a
+    * store snapshot served from driver memory) lists no files, but its
+    * rows are part of the analyzed plan and so of its semantic hash:
+    * new rows re-census the same way. Bounded at
     * [[CensusCacheMax]] entries — on overflow the whole cache drops
     * (salting is semantics-neutral, so eviction only costs a re-census
     * on next planning, never a wrong answer). */

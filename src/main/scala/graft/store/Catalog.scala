@@ -729,9 +729,40 @@ final class Catalog(val spark: SparkSession, val root: String,
     * vector. */
   private def fileKey(rel: String): String = io.fileKeyOf(root, rel)
 
+  /** Decoded small snapshots, the driver route of [[read]] and
+    * [[Tx.read]]. */
+  private val driverReads = new DriverReads(spark, io, root)
+
+  /** `files` of `table` as a frame: served from driver memory when
+    * [[DriverReads]] admits the snapshot, else scanned ([[readFiles]]).
+    * Either way the same rows and schema. */
+  private def readSnapshot(table: String, files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType,
+      idCol: String): DataFrame =
+    driverReads.serve(table, files, schema, idCol)
+      .getOrElse(readFiles(table, files, schema, idCol))
+
+  /** The current snapshot of `table`. */
   def read(table: String): DataFrame = {
     val st = tableState(table)
+    readSnapshot(table, st.map(_.files).getOrElse(Nil), schemaOf(st, table),
+      idColOf(st, table))
+  }
+
+  /** [[read]] through the scan route whatever the snapshot's size (test
+    * hook for driver-vs-scan parity). */
+  private[store] def scanRead(table: String): DataFrame = {
+    val st = tableState(table)
     readFiles(table, st.map(_.files).getOrElse(Nil), schemaOf(st, table),
+      idColOf(st, table))
+  }
+
+  /** [[read]] through the driver route of `reads` (test hook for the
+    * crossover measurement). */
+  private[store] def driverRead(table: String,
+      reads: DriverReads): Option[DataFrame] = {
+    val st = tableState(table)
+    reads.serve(table, st.map(_.files).getOrElse(Nil), schemaOf(st, table),
       idColOf(st, table))
   }
 
@@ -1628,7 +1659,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     def read(table: String): DataFrame = {
       readTables += table
       val st = curState(table)
-      readFiles(table, st.files, schemaOf(Some(st), table),
+      readSnapshot(table, st.files, schemaOf(Some(st), table),
         idColOf(Some(st), table))
     }
 
@@ -3423,6 +3454,20 @@ object Catalog {
       }
     })
 
+  /** The parquet read schema of a LOGICAL schema (prior names in field
+    * metadata): each field followed by nullable twins under its prior
+    * names, newest first; the logical schema itself when nothing was
+    * renamed. */
+  private[store] def physicalSchema(
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      stripPriorNames(schema).fields.flatMap { f =>
+        f +: priorsOf(schema(f.name)).map(p =>
+          org.apache.spark.sql.types.StructField(p, f.dataType,
+            nullable = true)).toArray
+      })
+
   /** Read parquet `paths` through a LOGICAL schema whose renamed
     * fields carry prior names in metadata (round 16): the physical
     * read schema unions each renamed field with nullable twins under
@@ -3439,13 +3484,7 @@ object Catalog {
     if (renamed.isEmpty)
       spark.read.schema(schema).parquet(paths: _*)
     else {
-      val physical = org.apache.spark.sql.types.StructType(
-        stripPriorNames(schema).fields.flatMap { f =>
-          f +: priorsOf(schema(f.name)).map(p =>
-            org.apache.spark.sql.types.StructField(p, f.dataType,
-              nullable = true)).toArray
-        })
-      spark.read.schema(physical).parquet(paths: _*)
+      spark.read.schema(physicalSchema(schema)).parquet(paths: _*)
         .select(schema.fields.map { f =>
           val priors = priorsOf(f)
           if (priors.isEmpty) col(f.name)

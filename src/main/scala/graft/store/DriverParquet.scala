@@ -1,22 +1,34 @@
 package graft.store
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
-/** One parquet file written on the driver through Spark's own parquet
-  * writer (`ParquetUtils.prepareWrite` -> `OutputWriterFactory` ->
-  * `OutputWriter`): the same format, codec, file naming and footer
-  * metadata a write task produces, for rows that are already in driver
-  * memory. The store stages in-memory batches this way
-  * ([[Catalog]]'s `stageFiles`) so a point write runs no Spark job.
+/** Parquet files written and read on the driver through Spark's own
+  * parquet code, for rows small enough to live in driver memory:
+  *  - [[write]] goes through `ParquetUtils.prepareWrite` ->
+  *    `OutputWriterFactory` -> `OutputWriter`: the same format, codec,
+  *    file naming and footer metadata a write task produces. The store
+  *    stages in-memory batches this way ([[Catalog]]'s `stageFiles`) so
+  *    a point write runs no Spark job.
+  *  - [[read]] runs the function a scan task runs
+  *    (`ParquetFileFormat.buildReaderWithPartitionValues`): the same
+  *    by-name column resolution, datetime rebasing and vectorized
+  *    decoding. The store serves small snapshots this way
+  *    ([[DriverReads]]) so a point read runs no Spark job.
   *
-  * This is the only place the store calls Spark's internal writer API. */
+  * This is the only place the store calls Spark's internal reader and
+  * writer API. */
 private[store] object DriverParquet {
 
   private val format = new ParquetFileFormat
@@ -42,5 +54,32 @@ private[store] object DriverParquet {
     val w = factory.newInstance(path, schema, ctx)
     try rows.foreach(w.write) finally w.close()
     path
+  }
+
+  /** Decode each of `paths` whole, with `schema` as the read schema, on
+    * the driver: a column a file lacks reads as NULL, exactly as in a
+    * scan of the same paths through `spark.read.schema(schema)`. The
+    * hadoop conf is the session's (`newHadoopConf`, as a file scan
+    * builds it) and the SQL conf is the session's. Returns each file's
+    * rows as copied `UnsafeRow`s, in file order. */
+  def read(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): Seq[Array[InternalRow]] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val reader = format.buildReaderWithPartitionValues(spark, schema,
+      new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
+    val toUnsafe = UnsafeProjection.create(schema)
+    paths.map { p =>
+      val path = new Path(p)
+      val st = path.getFileSystem(hadoopConf).getFileStatus(path)
+      val rows = reader(PartitionedFile(InternalRow.empty,
+        SparkPath.fromFileStatus(st), 0L, st.getLen, Array.empty,
+        st.getModificationTime, st.getLen))
+      try rows.map(r => toUnsafe(r).copy(): InternalRow).toArray
+      finally rows match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
   }
 }

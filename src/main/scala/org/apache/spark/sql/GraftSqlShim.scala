@@ -1,11 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge for graft's custom-plan tier (the usual
   * pattern for Spark extension libraries): wraps an already-analyzed
-  * custom [[LogicalPlan]] into a DataFrame. Nothing else from the sql
-  * package's private surface is touched.
+  * custom [[LogicalPlan]] into a DataFrame and exposes `asNullable`.
+  * Nothing else from the sql package's private surface is touched.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -29,4 +30,8 @@ object GraftSqlShim {
   def batchFrame(spark: SparkSession, streamed: DataFrame): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
       streamed.queryExecution.toRdd, streamed.schema, isStreaming = false)
+
+  /** `schema` with every field nullable, nested fields included: the
+    * schema a file scan reports for a user-given read schema. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

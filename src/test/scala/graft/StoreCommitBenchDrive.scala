@@ -102,11 +102,11 @@ object StoreCommitBenchDrive {
     }
 
     val catS = seed(small)
-    val filesS = catS.read("events_ingest").inputFiles.length
+    val filesS = catS.liveFiles("events_ingest").size
     val (tS, bS) = time(catS, 1000000L)
     val coldS = coldRead(catS)
     val catB = seed(big)
-    val filesB = catB.read("events_ingest").inputFiles.length
+    val filesB = catB.liveFiles("events_ingest").size
     val (tB, bB) = time(catB, 2000000L)
     val coldB = coldRead(catB)
     println(f"[commitbench] files=$filesS%d append=$tS%.3f s delta=$bS B | " +

@@ -1,0 +1,110 @@
+package graft.store
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Micro-benchmark: the scan-vs-driver crossover of the store's read
+  * routes ([[DriverReads]]), the measurement behind
+  * [[DriverReads.MaxRows]].
+  *
+  * Protocol: for each table size N, seed a `users`-shaped table of N
+  * rows in files of `rowsPerFile` rows, then time five calls on each
+  * route (median of `reps`):
+  *  - '''point''': `read(t).filter(email = x).limit(1).collect()` —
+  *    Portal's login shape;
+  *  - '''sorted''': `read(t).filter(..).orderBy(..).select(..)
+  *    .collect()` — Portal's event list shape;
+  *  - '''count''': `read(t).count()` — the stream ingest's read-back;
+  *  - '''cold''': the point call on a fresh `Catalog` (the driver route
+  *    decodes every file; the scan route lists and plans them);
+  *  - '''cold count''': the count on a fresh `Catalog`.
+  * The scan route is [[Catalog.scanRead]]; the driver route is a
+  * [[DriverReads]] per catalog instance with no cap, so it is measured
+  * on both sides of [[DriverReads.MaxRows]]. Both sorted calls plan
+  * through the session's rules: the driver route's sort folds on the
+  * driver under the cap ([[graft.plans.LocalSortFold]]) and runs
+  * `SortExec` above it.
+  *
+  * Usage: DriverReadBenchDrive [sizes,comma-separated] [rowsPerFile] [reps]
+  */
+object DriverReadBenchDrive {
+  def main(args: Array[String]): Unit = {
+    val sizes = args.headOption.map(_.split(',').map(_.toInt).toSeq)
+      .getOrElse(Seq(256, 1024, 2048, 4096, 8192, 16384))
+    val rowsPerFile = if (args.length > 1) args(1).toInt else 256
+    val reps = if (args.length > 2) args(2).toInt else 7
+    val spark = graft.core.Sessions.local()
+
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    def ms(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      body
+      (System.nanoTime() - t0) / 1e6
+    }
+
+    def seed(n: Int): Catalog = {
+      val cat = new Catalog(spark,
+        Files.createTempDirectory("graft_readbench").toString)
+      (0 until n by rowsPerFile).foreach { lo =>
+        val hi = math.min(n, lo + rowsPerFile)
+        cat.append("users", spark.range(lo, hi, 1, 1).select(
+          concat(lit("First"), col("id")).as("first_name"),
+          lit("Last").as("last_name"), lit("5550000000").as("phone"),
+          concat(col("id"), lit("@x.com")).as("email"),
+          sha2(col("id").cast("string"), 256).as("password_hash"),
+          lit("user").as("user_role"),
+          col("id").cast("timestamp").as("created_at")))
+      }
+      cat
+    }
+
+    def point(df: DataFrame, n: Int): Unit =
+      df.filter(col("email") === s"${n / 2}@x.com").limit(1).collect()
+    def sorted(df: DataFrame): Unit =
+      df.filter(col("user_role") === "user")
+        .orderBy(col("created_at").desc, col("user_id"))
+        .select(col("user_id"), col("email")).collect()
+
+    // warm the JIT and Spark's planner on a throwaway table
+    val warm = seed(512)
+    (1 to 5).foreach { _ =>
+      point(warm.read("users"), 512); sorted(warm.read("users"))
+      point(warm.scanRead("users"), 512); sorted(warm.scanRead("users"))
+    }
+
+    // one driver-route cache per catalog instance, as `read` keeps it
+    val drivers = scala.collection.mutable.Map.empty[Catalog, DriverReads]
+    println("[readbench] rows files route point_ms sorted_ms count_ms " +
+      "cold_ms cold_count_ms")
+    sizes.foreach { n =>
+      val cat = seed(n)
+      val files = cat.liveFiles("users").size
+      val routes: Seq[(String, Catalog => DataFrame)] = Seq(
+        "scan" -> (_.scanRead("users")),
+        "driver" -> { c =>
+          val reads = drivers.getOrElseUpdate(c,
+            new DriverReads(spark, c.io, c.root, Long.MaxValue))
+          c.driverRead("users", reads).get
+        })
+      routes.foreach { case (name, rd) =>
+        def cold(call: DataFrame => Unit): Double =
+          median((1 to reps).map { _ =>
+            val fresh = new Catalog(spark, cat.root)
+            ms(call(rd(fresh)))
+          })
+        def warm(call: DataFrame => Unit): Double =
+          median((1 to reps).map(_ => ms(call(rd(cat)))))
+        val p = warm(point(_, n))
+        val s = warm(sorted)
+        val c = warm(_.count())
+        val cp = cold(point(_, n))
+        val cc = cold(_.count())
+        println(f"[readbench] $n%6d $files%5d $name%-6s $p%8.1f $s%9.1f " +
+          f"$c%8.1f $cp%7.1f $cc%13.1f")
+      }
+    }
+    spark.stop()
+  }
+}

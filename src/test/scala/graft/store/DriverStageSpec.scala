@@ -2,11 +2,9 @@ package graft.store
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -68,34 +66,6 @@ class DriverStageSpec extends SparkSuite {
     if (!Files.exists(dir)) Nil
     else Files.walk(dir).iterator().asScala.map(_.toString)
       .filter(_.endsWith(".parquet")).toSeq
-  }
-
-  /** Spark jobs `body` starts on this thread: jobs carry the thread's
-    * job group; a marker job in another group, started after `body`,
-    * proves every earlier job event has reached the listener. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"dstage-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val n = new AtomicInteger(0)
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-          .foreach { g =>
-            if (g == group) n.incrementAndGet()
-            if (g == marker) seen.countDown()
-          }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "driver-stage job count")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      n.get
-    } finally sc.removeSparkListener(l)
   }
 
   test("stats parity: the driver route records the job route's stats " +
