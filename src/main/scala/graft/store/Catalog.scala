@@ -6,11 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, EqualTo, Expression, InterpretedOrdering, RowOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, EqualTo, Expression, InterpretedOrdering, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 
 import CommitLog.{Manifest, canonFiles}
 
@@ -723,15 +723,15 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** Driver-side twin of [[srcFileKey]] ([[StoreIO.fileKeyOf]]): the
     * same percent-encoded absolute path for a manifest-relative path.
-    * [[collectDeadByFile]] additionally fails LOUDLY when a scanned key
+    * [[Tx]]'s `hitPathOf` additionally fails LOUDLY when a scanned key
     * matches no manifest entry, so any residual encoding divergence
     * surfaces as an error — never as a silently-unmasked deletion
     * vector. */
   private def fileKey(rel: String): String = io.fileKeyOf(root, rel)
 
-  /** Decoded small snapshots, the driver route of [[read]] and
-    * [[Tx.read]]. */
-  private val driverReads = new DriverReads(spark, io, root)
+  /** Decoded small file sets, the driver route of [[read]],
+    * [[Tx.read]] and the pinned [[Tx.update]] and [[Tx.delete]]. */
+  private[store] val driverReads = new DriverReads(spark, io, root)
 
   /** `files` of `table` as a frame: served from driver memory when
     * [[DriverReads]] admits the snapshot, else scanned ([[readFiles]]).
@@ -1252,8 +1252,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     * conf):
     *  - '''driver''': `df` is an in-memory `LocalRelation` after
     *    optimization (`Seq(...).toDF`, `createDataFrame(List[Row], ..)`,
-    *    an append's id-assigned batch, a pinned update's collected
-    *    images). Its rows are already on the driver: ONE file is written
+    *    an append's id-assigned batch, a pinned update's new images).
+    *    Its rows are already on the driver: ONE file is written
     *    there through Spark's own parquet writer ([[DriverParquet]]) and
     *    the stats come from the same rows. No Spark job runs. An empty
     *    batch stages no file.
@@ -1449,15 +1449,13 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Extract `idCol = <literal>` pinned by the predicate (either operand
     * order, possibly under conjunctions) — the prunable reference shape
     * `WHERE <pk> = %s`. Anything else returns None → full rewrite. The
-    * Column is resolved by analyzing it against an empty relation with
-    * the table schema (the public Spark-4 route to the expression tree).
-    */
-  private def pinnedId(table: String, predicate: Column): Option[Long] = {
-    val st = readManifest().get(table)
-    val schema = schemaOf(st, table); val idCol = idColOf(st, table)
-    val probe = spark
-      .createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      .filter(predicate)
+    * Column is resolved by analyzing it against an empty in-memory
+    * relation of `schema`, the caller's view of the table (a
+    * transaction's own, staged DDL included). */
+  private def pinnedId(predicate: Column, schema: StructType,
+      idCol: String): Option[Long] = {
+    val probe = GraftSqlShim.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema))).filter(predicate)
     val cond = probe.queryExecution.analyzed.collectFirst {
       case f: LFilter => f.condition
     }
@@ -1484,6 +1482,10 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Multi-statement transaction (S7): stage every write, swap once. */
   final class Tx private[Catalog] (base: Manifest) {
     private[Catalog] var staged: Vector[Staged] = Vector.empty
+
+    /** Pinned updates and deletes take the scan route whatever the hit
+      * set's size ([[Catalog.scanPinned]]). */
+    private[Catalog] var scanPinned = false
 
     /** Tables this transaction READ through [[read]] — validated at
       * commit exactly like written tables (state equality), so a body
@@ -1879,8 +1881,10 @@ final class Catalog(val spark: SparkSession, val root: String,
       enforceChecks(table, withIds)
       val newFiles = stageFiles(table, withIds, idCol, effStatsCols(table))
       val n = newFiles.map(f => f.maxId).maxOption.getOrElse(baseId)
+      val files = prev.files ++ newFiles
+      seedStaged(table, files, newFiles, withIds, schema)
       staged :+= Staged(table, prev.copy(maxId = math.max(n, baseId),
-        files = prev.files ++ newFiles))
+        files = files))
       math.max(n, baseId)
     }
 
@@ -2039,51 +2043,45 @@ final class Catalog(val spark: SparkSession, val root: String,
       * id range cannot contain a predicate-pinned id survive by
       * reference.
       *
-      * Write strategy (round 15): an id-PINNED update (the reference's
-      * own `record_payment` status-flip shape, db.py:459-463) lands as
-      * MERGE-ON-READ — a deletion vector kills the old image in place
-      * and a small patch file carries the new one, so bytes written
-      * follow the CHANGED rows (at 100 TB: a one-row flip writes a
-      * sidecar + a 1-row patch, not a 128 MB file rewrite). Broad
-      * predicates keep copy-on-write (they touch file-sized row sets
-      * anyway, and COW folds any standing DVs in as it goes).
-      * `spark.graft.store.mergeOnRead=off` pins COW everywhere. */
+      * An id-pinned update (Portal's payment status flip) lands as
+      * merge-on-read while `spark.graft.store.mergeOnRead` is not
+      * `off`: a new deletion vector on each hit file kills the matched
+      * rows' old images and one patch file carries their new images
+      * under the same ids, so the bytes written follow the changed rows.
+      * The matched rows come from [[pinnedRows]]: from driver memory
+      * when [[DriverReads]] admits the hit set (no Spark job), else from
+      * one scan job. Any other update is copy-on-write: the hit files
+      * are rewritten whole, folding their deletion vectors away.
+      *
+      * Invariant: both read routes stage the same patch rows, the same
+      * dead ids per file and so the same snapshot. */
     def update(table: String, predicate: Column,
         assignments: Map[String, Column]): Unit = {
       ensureLease()
       val (schema, idCol) = schemaIdOf(table)
       val prev = curState(table)
       if (prev.files.isEmpty) return
-      val pinned = pinnedId(table, predicate)
+      val pinned = pinnedId(predicate, schema, idCol)
       val (hit, carried) = pinned match {
         case Some(id) =>
           prev.files.partition(f => f.minId <= id && id <= f.maxId)
         case None => (prev.files, Vector.empty[FileEntry])
       }
       if (hit.isEmpty) return // pinned id outside every file's range
-      val cur = readFiles(table, hit, schema, idCol)
       if (pinned.isDefined && mergeOnRead) {
-        val images = assignments.foldLeft(cur.filter(predicate)) {
-          case (df, (c, v)) => df.withColumn(c, v)
-        }
-        // ONE job: the changed rows' new images with the key of the file
-        // each came from; the dead-id map and the (driver-staged) patch
-        // both come from these rows
-        val rows = images.withColumn("__graft_src_file", srcFileKey)
-          .collect()
-        if (rows.isEmpty) return // predicate matched nothing
-        val width = images.schema.length
-        val deadByFile = attributeDead(
-          rows.map(r => (r.getString(width), r.getAs[Long](idCol))), hit)
-        val local = spark.createDataFrame(
-          rows.map(r => Row.fromSeq(r.toSeq.take(width))).toSeq.asJava,
-          images.schema)
+        val (local, dead) = pinnedRows(table, hit, schema, idCol,
+          df => assignments.foldLeft(df.filter(predicate)) {
+            case (d, (c, v)) => d.withColumn(c, v)
+          })
+        if (dead.isEmpty) return // predicate matched nothing
         enforceChecks(table, local)
         val patch = stageFiles(table, local, idCol, effStatsCols(table))
-        staged :+= Staged(table, prev.copy(files =
-          carried ++ dvMarked(hit, deadByFile) ++ patch))
+        val files = carried ++ dvMarked(hit, deadIds(dead)) ++ patch
+        seedStaged(table, files, patch, local, schema)
+        staged :+= Staged(table, prev.copy(files = files))
       } else {
-        val updated = assignments.foldLeft(cur) { case (df, (c, v)) =>
+        val updated = assignments.foldLeft(readFiles(table, hit, schema,
+            idCol)) { case (df, (c, v)) =>
           df.withColumn(c, when(predicate, v).otherwise(col(c)))
         }
         enforceChecks(table, updated)
@@ -2092,30 +2090,103 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     }
 
-    /** (manifest file path -> dead ids) of `matched` rows — collected
-      * to the driver, which is changed-rows-sized by the merge-on-read
-      * contract (the sidecar write needs the ids driver-side anyway).
-      * Attribution resolves each scanned row's encoded file key against
-      * the HIT entries and fails loudly on a miss — a path-encoding
-      * divergence must never become a silent no-op mask. */
-    private def collectDeadByFile(matched: DataFrame, idCol: String,
-        hit: Vector[FileEntry]): Map[String, Vector[Long]] =
-      attributeDead(matched.select(srcFileKey, col(idCol)).collect()
-        .map(r => (r.getString(0), r.getLong(1))), hit)
-
-    /** (manifest file path -> dead ids) of scanned (file key, id) pairs,
-      * failing loudly on a key that matches no hit entry. */
-    private def attributeDead(keyed: Seq[(String, Long)],
-        hit: Vector[FileEntry]): Map[String, Vector[Long]] = {
-      val byKey = hit.map(f => fileKey(f.path) -> f.path).toMap
-      keyed.map { case (key, id) =>
-        val rel = byKey.getOrElse(key, throw new IllegalStateException(
-          s"merge-on-read file attribution failed: scanned row of " +
-            s"'$key' matches no hit manifest entry " +
-            "(path-encoding divergence?)"))
-        (rel, id)
-      }.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
+    /** The rows of the id-pinned `hit` files (live rows only) that
+      * `select` keeps, after its assignments, as an in-memory frame, and
+      * the (manifest file path, id) of each. `select` may filter and
+      * reassign columns but keeps every column.
+      *  - '''driver''' route, when [[DriverReads]] admits `hit`: the
+      *    files' rows from driver memory as a `LocalRelation` with a
+      *    file-index column. `ConvertToLocalRelation` folds `select` on
+      *    the driver, so the optimized plan already holds the result and
+      *    no Spark job runs; a row's file is `hit(index)`.
+      *  - '''scan''' route, otherwise: one job over the scanned hit
+      *    files, each row keyed by `input_file_name()` and attributed by
+      *    [[hitPathOf]], which fails loudly on a key it cannot place. */
+    private def pinnedRows(table: String, hit: Vector[FileEntry],
+        schema: StructType, idCol: String, select: DataFrame => DataFrame)
+        : (DataFrame, Seq[(String, Long)]) = {
+      val fromDriver =
+        if (scanPinned) None
+        else driverReads.rowsOf(table, curState(table).files, hit, schema,
+          idCol)
+      val (images, src, pathOf) = fromDriver match {
+        case Some(perFile) =>
+          val withIdx = StructType(DriverReads.scanSchema(schema).fields :+
+            StructField("__graft_src_idx", IntegerType, nullable = false))
+          val toRow = UnsafeProjection.create(withIdx)
+          val data = perFile.zipWithIndex.flatMap { case (rs, i) =>
+            val idx = InternalRow(i)
+            rs.map(r => toRow(new JoinedRow(r, idx)).copy(): InternalRow)
+          }
+          (select(GraftSqlShim.ofRows(spark,
+              LocalRelation(DataTypeUtils.toAttributes(withIdx), data))),
+            "__graft_src_idx", (r: Row, at: Int) => hit(r.getInt(at)).path)
+        case None =>
+          val keyed = hitPathOf(hit)
+          (select(readFiles(table, hit, schema, idCol))
+              .withColumn("__graft_src_file", srcFileKey),
+            "__graft_src_file", (r: Row, at: Int) => keyed(r.getString(at)))
+      }
+      val at = images.schema.fieldIndex(src)
+      val id = images.schema.fieldIndex(idCol)
+      val out = StructType(images.schema.fields.patch(at, Nil, 1))
+      images.queryExecution.optimizedPlan match {
+        case l: LocalRelation if fromDriver.isDefined =>
+          val keep = UnsafeProjection.create(out.indices.map { i =>
+            BoundReference(if (i < at) i else i + 1, out(i).dataType,
+              nullable = true)
+          })
+          (GraftSqlShim.ofRows(spark, LocalRelation(
+              DataTypeUtils.toAttributes(out),
+              l.data.map(r => keep(r).copy(): InternalRow))),
+            l.data.map(r => (hit(r.getInt(at)).path, r.getLong(id))))
+        case _ =>
+          val rows = images.collect().toSeq
+          (spark.createDataFrame(
+              rows.map(r => Row.fromSeq(r.toSeq.patch(at, Nil, 1))).asJava,
+              out),
+            rows.map(r => (pathOf(r, at), r.getLong(id))))
+      }
     }
+
+    /** Scan-route attribution: the manifest path among `hit` of a
+      * scanned row's encoded file key ([[srcFileKey]]), failing loudly
+      * on a key that matches no hit entry — a path-encoding divergence
+      * must never become a silent no-op mask. */
+    private def hitPathOf(hit: Vector[FileEntry]): String => String = {
+      val byKey = hit.map(f => fileKey(f.path) -> f.path).toMap
+      key => byKey.getOrElse(key, throw new IllegalStateException(
+        s"merge-on-read file attribution failed: scanned row of " +
+          s"'$key' matches no hit manifest entry " +
+          "(path-encoding divergence?)"))
+    }
+
+    /** (manifest file path -> dead ids) of `matched` rows, attributed by
+      * [[hitPathOf]] — collected to the driver, which is
+      * changed-rows-sized by the merge-on-read contract (the sidecar
+      * write needs the ids driver-side anyway). */
+    private def collectDeadByFile(matched: DataFrame, idCol: String,
+        hit: Vector[FileEntry]): Map[String, Vector[Long]] = {
+      val pathOf = hitPathOf(hit)
+      deadIds(matched.select(srcFileKey, col(idCol)).collect().toSeq
+        .map(r => (pathOf(r.getString(0)), r.getLong(1))))
+    }
+
+    /** (manifest file path -> dead ids) of (path, id) pairs. */
+    private def deadIds(pairs: Seq[(String, Long)])
+        : Map[String, Vector[Long]] =
+      pairs.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
+
+    /** Put `df`'s rows, just staged on the driver as `added`'s one file,
+      * into [[DriverReads]]' cache for `table`, whose staged snapshot is
+      * `files` read through `schema`; a job-staged `df` puts nothing. */
+    private def seedStaged(table: String, files: Vector[FileEntry],
+        added: Vector[FileEntry], df: DataFrame, schema: StructType): Unit =
+      added match {
+        case Vector(f) => localRows(df).foreach(rows =>
+          driverReads.seed(table, files, f.path, schema, df.schema, rows))
+        case _ =>
+      }
 
     /** Hit entries with `deadByFile` folded into their deletion
       * vectors: a file gaining dead ids gets a NEW sidecar carrying the
@@ -2137,8 +2208,12 @@ final class Catalog(val spark: SparkSession, val root: String,
 
     /** Hard DELETE (the COW counterpart of the reference's soft-delete
       * UPDATE): files whose id range cannot contain a predicate-pinned id
-      * survive by reference; matching files are rewritten WITHOUT the
-      * matching rows, and a rewrite left empty contributes no file.
+      * survive by reference. An id-pinned delete is merge-on-read (see
+      * [[update]]): a new deletion vector on each hit file kills the
+      * matched rows in place and no file is written; the matched ids
+      * come from [[pinnedRows]], from driver memory when the hit set is
+      * admitted. Any other delete rewrites the matching files WITHOUT
+      * the matching rows, and a rewrite left empty contributes no file.
       * Returns the number of rows deleted. Deletes are observable in
       * [[Catalog.changesBetween]] as 'delete' rows with no paired
       * insert. */
@@ -2147,25 +2222,22 @@ final class Catalog(val spark: SparkSession, val root: String,
       val (schema, idCol) = schemaIdOf(table)
       val prev = curState(table)
       if (prev.files.isEmpty) return 0L
-      val pinned = pinnedId(table, predicate)
+      val pinned = pinnedId(predicate, schema, idCol)
       val (hit, carried) = pinned match {
         case Some(id) =>
           prev.files.partition(f => f.minId <= id && id <= f.maxId)
         case None => (prev.files, Vector.empty[FileEntry])
       }
       if (hit.isEmpty) return 0L
-      val cur = readFiles(table, hit, schema, idCol)
       if (pinned.isDefined && mergeOnRead) {
-        // merge-on-read point delete: a sidecar kills the matched rows
-        // in place — bytes written follow the deleted rows
-        val deadByFile = collectDeadByFile(
-          cur.filter(coalesce(predicate, lit(false))), idCol, hit)
-        val nDeleted = deadByFile.valuesIterator.map(_.size.toLong).sum
-        if (nDeleted == 0L) return 0L
+        val (_, dead) = pinnedRows(table, hit, schema, idCol,
+          _.filter(coalesce(predicate, lit(false))))
+        if (dead.isEmpty) return 0L
         staged :+= Staged(table,
-          prev.copy(files = carried ++ dvMarked(hit, deadByFile)))
-        return nDeleted
+          prev.copy(files = carried ++ dvMarked(hit, deadIds(dead))))
+        return dead.size.toLong
       }
+      val cur = readFiles(table, hit, schema, idCol)
       // one aggregate pass yields both counts (total and matching); the
       // only other read of the hit files is the rewrite itself
       val counts = cur.agg(
@@ -3177,6 +3249,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     }
     transaction(body)
   }
+
+  /** [[transaction]] whose pinned updates and deletes take the scan
+    * route whatever the hit set's size (test hook for driver-vs-scan
+    * parity, as [[scanRead]] is for reads). */
+  private[store] def scanPinned[A](body: Tx => A): A =
+    transaction { tx => tx.scanPinned = true; body(tx) }
 
   /** Single-statement conveniences (conflict-retried, see [[retried]]).
     * The id-returning ones ([[append]], [[replaceWhere]]) return the

@@ -27,6 +27,14 @@ import org.apache.spark.sql.functions._
   * driver under the cap ([[graft.plans.LocalSortFold]]) and runs
   * `SortExec` above it.
   *
+  * A second table times an id-pinned merge-on-read update (Portal's
+  * payment status flip) whose hit set is one file of 1, 1,024 and 4,095
+  * rows, on the driver route (`transaction`, the default cap) and the
+  * scan route ([[Catalog.scanPinned]]), median of `reps`, each on a
+  * fresh table: '''warm''' on the instance that has served the table
+  * (the hit file is cached) and '''cold''' on a fresh instance (the
+  * driver route decodes the hit file).
+  *
   * Usage: DriverReadBenchDrive [sizes,comma-separated] [rowsPerFile] [reps]
   */
 object DriverReadBenchDrive {
@@ -44,11 +52,11 @@ object DriverReadBenchDrive {
       (System.nanoTime() - t0) / 1e6
     }
 
-    def seed(n: Int): Catalog = {
+    def seed(n: Int, perFile: Int = rowsPerFile): Catalog = {
       val cat = new Catalog(spark,
         Files.createTempDirectory("graft_readbench").toString)
-      (0 until n by rowsPerFile).foreach { lo =>
-        val hi = math.min(n, lo + rowsPerFile)
+      (0 until n by perFile).foreach { lo =>
+        val hi = math.min(n, lo + perFile)
         cat.append("users", spark.range(lo, hi, 1, 1).select(
           concat(lit("First"), col("id")).as("first_name"),
           lit("Last").as("last_name"), lit("5550000000").as("phone"),
@@ -103,6 +111,33 @@ object DriverReadBenchDrive {
         val cc = cold(_.count())
         println(f"[readbench] $n%6d $files%5d $name%-6s $p%8.1f $s%9.1f " +
           f"$c%8.1f $cp%7.1f $cc%13.1f")
+      }
+    }
+    def flip(tx: Catalog#Tx, id: Long): Unit =
+      tx.update("users", col("user_id") === id,
+        Map("user_role" -> lit("admin")))
+    (1 to 5).foreach { i =>
+      val w = seed(64, perFile = 64)
+      w.scanPinned(flip(_, i.toLong))
+      w.transaction(flip(_, i + 10L))
+    }
+    println("[readbench] update hit_rows route warm_ms cold_ms")
+    Seq(1, 1024, DriverReads.MaxRows - 1).foreach { n =>
+      Seq[(String, Catalog => (Catalog#Tx => Unit) => Unit)](
+        "scan" -> (c => op => c.scanPinned(op)),
+        "driver" -> (c => op => c.transaction(op))).foreach {
+        case (name, run) =>
+          def timed(cold: Boolean): Double = median((1 to reps).map { _ =>
+            val cat = graft.core.Sessions.withShufflePartitions(spark, 1) {
+              seed(n, perFile = n)
+            }
+            cat.read("users").count()
+            val on = if (cold) new Catalog(spark, cat.root) else cat
+            ms(run(on)(flip(_, n / 2 + 1L)))
+          })
+          val w = timed(cold = false)
+          val c = timed(cold = true)
+          println(f"[readbench] update $n%5d $name%-6s $w%7.1f $c%7.1f")
       }
     }
     spark.stop()
