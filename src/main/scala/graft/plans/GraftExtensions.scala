@@ -1,9 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, Expression, IntegerLiteral, InterpretedOrdering, SortOrder, Unevaluable}
-import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalLimit, LocalRelation, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, Expression, IntegerLiteral}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalLimit, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
@@ -139,49 +138,13 @@ object AsOfJoinOptimizations extends Rule[LogicalPlan] {
   }
 }
 
-/** Folds a global `Sort` over a small in-memory relation into the
-  * relation itself: `Sort(order, global = true, LocalRelation)` becomes
-  * a `LocalRelation` holding the same rows sorted on the driver by
-  * Spark's own `InterpretedOrdering` (the comparison `SortExec` makes:
-  * NULLS FIRST/LAST, NaN greatest and equal to NaN, -0.0 = 0.0,
-  * collation-aware strings). Spark folds filters, projections and
-  * limits over a `LocalRelation` (`ConvertToLocalRelation`) but no
-  * sort, so without this an ordered read of a driver-served store
-  * snapshot ([[graft.store.DriverReads]]) plans a range exchange and
-  * runs jobs for a handful of rows.
-  *
-  * The sort's child is folded first with `ConvertToLocalRelation`
-  * (this rule runs with the operator rules, where column pruning can
-  * leave a fresh `Project` between the sort and the relation). Applies
-  * under the store's driver-route row cap
-  * ([[graft.store.DriverReads.MaxRows]]) and only when every order key
-  * is deterministic and evaluable on the driver; a per-partition sort
-  * and a streaming relation are left alone. */
-object LocalSortFold extends Rule[LogicalPlan] {
-
-  private def foldable(o: SortOrder): Boolean =
-    o.deterministic && !o.child.exists(e =>
-      e.isInstanceOf[Unevaluable] && !e.isInstanceOf[AttributeReference])
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case s @ Sort(order, true, child, _) if order.forall(foldable) &&
-        child.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
-      ConvertToLocalRelation(child) match {
-        case l: LocalRelation
-            if !l.isStreaming && l.data.size < graft.store.DriverReads.MaxRows =>
-          l.copy(data = l.data.sorted(new InterpretedOrdering(order, l.output)))
-        case _ => s
-      }
-  }
-}
-
 object GraftExtensions {
   /** Wire graft's planner strategy and optimizer rules into a session
     * being built (SparkSession.Builder.withExtensions callback). */
   def install(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => GraftStrategy)
     e.injectOptimizerRule(_ => AsOfJoinOptimizations)
-    e.injectOptimizerRule(_ => LocalSortFold)
+    e.injectOptimizerRule(_ => LocalPlanFold)
     // SQL DML (UPDATE/DELETE/MERGE) over the store's DSv2 catalog,
     // routed into the transactional Catalog — post-hoc: the commands
     // analyze fine against a read-only DSv2 table and must be swapped

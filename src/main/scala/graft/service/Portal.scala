@@ -5,8 +5,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.store.Catalog
+import graft.store.{Catalog, Schemas}
 
 /** Reference-parity service API — one method per db.py function
   * (db.py:200-468), with the §0.1 defects resolved:
@@ -25,6 +26,16 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
   import spark.implicits._
 
   private def now() = new Timestamp(System.currentTimeMillis())
+
+  /** One row of a table whose id column (`table`'s first field) the
+    * store assigns, as a frame analyzed once. Each value converts to
+    * its column's type as a cast to it would: a decimal rounds half-up
+    * to the column's scale, and one too wide for it fails under ANSI
+    * mode and is NULL without it. */
+  private def rowOf(table: StructType, values: Any*): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(values)),
+      StructType(table.fields.tail))
+
   private def sha256Hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -46,11 +57,8 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     require(validEmail(email), "invalid email")
     require(phone.isEmpty || validPhone(phone), "invalid phone")
     require(password.length >= 6, "password too short")
-    val row = Seq((firstName, lastName, phone, email,
-      sha256Hex(password), role.toLowerCase, now()))
-      .toDF("first_name", "last_name", "phone", "email", "password_hash",
-        "user_role", "created_at")
-    cat.append("users", row)
+    cat.append("users", rowOf(Schemas.users, firstName, lastName, phone,
+      email, sha256Hex(password), role.toLowerCase, now()))
   }
 
   /** get_user_by_email (db.py:219-231). */
@@ -84,13 +92,9 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
       timeSec: Int, location: String, eventType: String, organizerId: Long,
       price: BigDecimal, capacity: Int = 0): Long = {
     require(name.trim.nonEmpty && location.trim.nonEmpty, "missing fields")
-    val row = Seq((name, description, date, timeSec, location, eventType,
-      organizerId, price, capacity, true, now()))
-      .toDF("event_name", "event_description", "event_date",
-        "event_time_sec", "location", "event_type", "organizer_id", "price",
-        "capacity", "is_active", "created_at")
-      .withColumn("price", $"price".cast("decimal(8,2)"))
-    cat.append("events", row)
+    cat.append("events", rowOf(Schemas.events, name, description, date,
+      timeSec, location, eventType, organizerId, price, capacity, true,
+      now()))
   }
 
   /** list_events (db.py:267-293): is_active filter, date sort, renamed
@@ -118,9 +122,8 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** register_user_for_event (db.py:336-348). */
   def registerUserForEvent(userId: Long, eventId: Long): Long = {
-    val row = Seq((userId, eventId, "Pending", now()))
-      .toDF("user_id", "event_id", "payment_status", "created_at")
-    cat.append("registrations", row)
+    cat.append("registrations", rowOf(Schemas.registrations, userId, eventId,
+      "Pending", now()))
   }
 
   /** record_payment (db.py:450-468): INSERT payment + UPDATE registration
@@ -142,12 +145,8 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
       paymentType: String = "Free",
       paymentStatus: String = "Success"): Long =
     cat.retried { tx =>
-      val row = Seq((userId, registrationId, cardId.map(Long.box).orNull,
-        amount, paymentType, paymentStatus, now()))
-        .toDF("user_id", "registration_id", "card_id", "amount",
-          "payment_type", "payment_status", "payment_date")
-        .withColumn("card_id", $"card_id".cast("long"))
-        .withColumn("amount", $"amount".cast("decimal(8,2)"))
+      val row = rowOf(Schemas.payments, userId, registrationId,
+        cardId.map(Long.box).orNull, amount, paymentType, paymentStatus, now())
       val paymentId = tx.append("payments", row)
       if (paymentStatus == "Success")
         tx.update("registrations",
@@ -158,7 +157,11 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** event_stats for ALL events in one grouped plan (fixes J5's 1+2N
     * loop, app.py:154-166 / db.py:352-372): registrations count + revenue
-    * of successful payments per event. */
+    * of successful payments per event.
+    *
+    * While the three tables are served from driver memory, the joins
+    * and aggregates fold on the driver ([[graft.plans.LocalPlanFold]])
+    * and the frame collects with no Spark job. */
   def eventStats(): DataFrame = {
     val regs = cat.read("registrations")
     val pays = cat.read("payments").filter($"payment_status" === "Success")
@@ -179,7 +182,12 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** get_user_registrations (db.py:376-404): J3 latest payment status
     * (LEFT-preserving: unpaid -> NULL) + J4 latest registration per
-    * (user, event), ordered by event date (O1). */
+    * (user, event), ordered by event date (O1).
+    *
+    * While the three tables are served from driver memory, the joins,
+    * both `row_number` windows and the sort fold on the driver
+    * ([[graft.plans.LocalPlanFold]]) and the frame collects with no
+    * Spark job. */
   def getUserRegistrations(userId: Long): DataFrame = {
     val regs = cat.read("registrations").filter($"user_id" === userId)
     val events = cat.read("events")

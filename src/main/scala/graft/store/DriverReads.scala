@@ -13,11 +13,12 @@ import org.apache.spark.sql.types.StructType
   * enough to live in driver memory is served as an in-memory
   * `LocalRelation` instead of a parquet scan ([[serve]], for `read` and
   * `Tx.read`), and so are the files an id-pinned update or delete hits
-  * ([[rowsOf]]). Spark folds the filters, projections and limits above
-  * such a relation on the driver (`ConvertToLocalRelation`; sorts fold
-  * through [[graft.plans.LocalSortFold]]), so a point lookup or a
-  * pinned update collects with no Spark job, no file listing and no
-  * scan planning.
+  * ([[rowsOf]]). The filters, projections and limits above such a
+  * relation fold on the driver (`ConvertToLocalRelation`), and so do
+  * its joins, aggregates, windows and sorts
+  * ([[graft.plans.LocalPlanFold]]), so a point lookup, a pinned update
+  * or a whole Portal page collects with no Spark job, no file listing
+  * and no scan planning.
   *
   * A file set is admitted when every file's row count is known and
   * their sum is under [[DriverReads.MaxRows]]. Each file is decoded
@@ -183,14 +184,18 @@ private[graft] object DriverReads {
 
   /** Row cap of the driver route: a snapshot, or the hit set of a
     * pinned update or delete, whose known row count is under it is read
-    * from driver memory, any other is scanned. It
-    * sits at the crossover of the shape the driver route serves worst,
-    * a fresh instance's first whole-table aggregate (it decodes every
-    * file, then still runs a job over the in-memory rows): at parity up
-    * to ~3,000 rows, ~1.3x the scan's time at 4,096 and ~1.6x at
-    * 8,192, while point reads stay 3.5-6x faster than the scan on both
-    * sides of it (`DriverReadBenchDrive`, 4-vCPU VM, `local[4]`).
-    * [[graft.plans.LocalSortFold]] folds sorts under the same cap. */
+    * from driver memory, any other is scanned.
+    * [[graft.plans.LocalPlanFold]] folds the operators over in-memory
+    * relations under the same cap, so under it a whole-table `count()`
+    * runs no job: 17-28 ms warm and 52-112 ms on a fresh instance (which
+    * decodes every file first), against the scan's 112-141 and 103-181
+    * ms, at 1,024-3,072 rows. At and above the cap the count runs a job
+    * over the in-memory rows, and a fresh instance's first count, the
+    * shape the driver route serves worst, is at parity with the scan
+    * at 4,096 rows (169 vs 170 ms) and 1.45x its time at 8,192 (270 vs
+    * 186 ms), while point reads stay 4.8-7.8x faster than the scan on
+    * both sides of the cap (`DriverReadBenchDrive`, 4-vCPU VM,
+    * `local[4]`, 256-row files, median of 7). */
   val MaxRows = 4096
 
   /** The schema a scan of `schema` (prior names in field metadata)

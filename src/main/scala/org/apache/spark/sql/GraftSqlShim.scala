@@ -1,12 +1,15 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge for graft's custom-plan tier (the usual
   * pattern for Spark extension libraries): wraps an already-analyzed
-  * custom [[LogicalPlan]] into a DataFrame and exposes `asNullable`.
-  * Nothing else from the sql package's private surface is touched.
+  * custom [[LogicalPlan]] into a DataFrame and exposes `asNullable`
+  * and the float-key normalization of hash operators. Nothing else
+  * from the sql package's private surface is touched.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -34,4 +37,9 @@ object GraftSqlShim {
   /** `schema` with every field nullable, nested fields included: the
     * schema a file scan reports for a user-given read schema. */
   def asNullable(schema: StructType): StructType = schema.asNullable
+
+  /** `key` with float values normalized (NaN = NaN, -0.0 = 0.0), as
+    * Spark's hash joins, aggregates and window partitions compare keys. */
+  def normalizeFloats(key: Expression): Expression =
+    NormalizeFloatingNumbers.normalize(key)
 }

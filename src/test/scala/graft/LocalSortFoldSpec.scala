@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.plans.LocalSortFold
+import graft.plans.LocalPlanFold
 
-/** [[LocalSortFold]]: a global sort over a small in-memory relation is
-  * folded into a sorted `LocalRelation` on the driver. The folded
+/** [[LocalPlanFold]]'s sort case: a global sort over a small in-memory
+  * relation is folded into a sorted `LocalRelation` on the driver. The folded
   * result must equal `SortExec`'s over the same rows (read from an RDD,
   * which the rule does not touch) for every ordering Spark supports;
   * per-partition sorts, streaming relations, non-deterministic orders
@@ -111,12 +111,12 @@ class LocalSortFoldSpec extends SparkSuite {
       r.get(2), UTF8String.fromString(r.getString(3))))
     val streaming = Sort(Seq(SortOrder(attrs(1), Ascending)), global = true,
       LocalRelation(attrs, data, isStreaming = true))
-    assert(LocalSortFold(streaming) eq streaming)
+    assert(LocalPlanFold(streaming) eq streaming)
     val random = Sort(Seq(SortOrder(Rand(Literal(7L)), Ascending)),
       global = true, LocalRelation(attrs, data))
-    assert(LocalSortFold(random) eq random)
+    assert(LocalPlanFold(random) eq random)
     val fixed = Sort(Seq(SortOrder(attrs(0), Descending)), global = true,
       LocalRelation(attrs, data))
-    assert(LocalSortFold(fixed).isInstanceOf[LocalRelation])
+    assert(LocalPlanFold(fixed).isInstanceOf[LocalRelation])
   }
 }

@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.plans.{AsOf, IntervalJoin}
 
@@ -128,6 +135,82 @@ class PlansFuzzSpec extends SparkSuite {
             s"diff ${(got.toSet diff expect.toSet).take(3)}" +
             s" / ${(expect.toSet diff got.toSet).take(3)}")
       }
+    }
+  }
+
+  test("local plan fold equals the same random join -> aggregate/window " +
+    "-> filter tree run with the rule excluded") {
+    val rnd = new Random(sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong + 2)
+      .getOrElse(20261019L))
+    val doubles = Array(0.0, -0.0, Double.NaN, 1.5)
+    def schema(p: String) = StructType(Seq(
+      StructField(s"${p}id", IntegerType, nullable = false),
+      StructField(s"${p}k", IntegerType),
+      StructField(s"${p}d", DoubleType),
+      StructField(s"${p}m", DecimalType(8, 2))))
+    def rows(n: Int, base: Int): Seq[Row] = (0 until n).map(i => Row(
+      base + i,
+      if (rnd.nextInt(5) == 0) null else rnd.nextInt(4),
+      if (rnd.nextInt(6) == 0) null else doubles(rnd.nextInt(4)),
+      if (rnd.nextInt(6) == 0) null
+      else java.math.BigDecimal.valueOf(rnd.nextInt(2000) - 1000L, 2)))
+    val joinTypes = Array("inner", "left_outer", "left_semi", "left_anti")
+    for (c <- 1 to 2 * Cases) {
+      // non-empty inputs: Spark itself folds a join with an empty side
+      val lRows = rows(1 + rnd.nextInt(40), 0)
+      val rRows = rows(1 + rnd.nextInt(40), 1000)
+      val jt = joinTypes(rnd.nextInt(4))
+      val keyCase = rnd.nextInt(4)
+      val residual = rnd.nextBoolean()
+      val tail = rnd.nextInt(4)
+      val cut = rnd.nextInt(3)
+      val semi = jt == "left_semi" || jt == "left_anti"
+      def query(l: DataFrame, r: DataFrame): DataFrame = {
+        val keys = keyCase match {
+          case 0 => l("k") === r("rk")
+          case 1 => l("k") <=> r("rk")
+          case 2 => l("d") === r("rd")
+          case _ => l("k") === r("rk") && l("d") <=> r("rd")
+        }
+        val joined = l.join(r,
+          if (residual) keys && l("m") > r("rm") else keys, jt)
+        // every row's (id, rid) is unique, so row_number has no ties
+        val order = if (semi) Seq(col("id").desc)
+          else Seq(col("id").desc, col("rid").asc)
+        tail match {
+          case 0 => joined.groupBy("k").agg(count(lit(1)).as("n"),
+              sum("m").as("s"), max("d").as("x"), min("id").as("i"))
+            .filter(if (cut == 0) col("n") > 1 else lit(true))
+          case 1 => joined.groupBy("d").agg(count("m").as("n"),
+              min("m").as("s"))
+            .filter(if (cut == 0) col("s").isNotNull else lit(true))
+          case 2 => joined.withColumn("rn", row_number().over(
+              Window.partitionBy("k").orderBy(order: _*)))
+            .filter(if (cut < 2) col("rn") === 1 else lit(true))
+          case _ => joined.withColumn("rk2", rank().over(
+              Window.partitionBy("d").orderBy(col("m").desc)))
+            .withColumn("dr", dense_rank().over(
+              Window.partitionBy("d").orderBy(col("m").desc)))
+            .filter(if (cut == 0) col("dr") <= 2 else lit(true))
+        }
+      }
+      def run(): (DataFrame, Seq[String]) = {
+        val q = query(spark.createDataFrame(lRows.asJava, schema("")),
+          spark.createDataFrame(rRows.asJava, schema("r")))
+        (q, q.collect().map(_.toString).toSeq.sorted)
+      }
+      val (folded, got) = run()
+      val key = "spark.sql.optimizer.excludedRules"
+      spark.conf.set(key, graft.plans.LocalPlanFold.ruleName)
+      val (kept, want) = try run() finally spark.conf.unset(key)
+      val what = s"case $c ($jt keys=$keyCase residual=$residual " +
+        s"tail=$tail cut=$cut nl=${lRows.size} nr=${rRows.size})"
+      assert(folded.queryExecution.optimizedPlan
+        .isInstanceOf[LocalRelation], s"$what not folded")
+      assert(!kept.queryExecution.optimizedPlan
+        .isInstanceOf[LocalRelation], s"$what folded")
+      assert(got == want, s"$what: ${got.diff(want).take(3)} / " +
+        s"${want.diff(got).take(3)}")
     }
   }
 }

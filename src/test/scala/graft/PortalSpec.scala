@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.functions.col
+
 import graft.service.Portal
 
 /** End-to-end lifecycle scenarios E1-E3 (SURVEY §3) against golden
@@ -157,5 +162,58 @@ class PortalSpec extends SparkSuite {
     assert(stored.forall(s => !s.contains("4111111111111111")
       && !s.contains("5500005555555559")))
     assert(p.newestCardId(u).contains(c2))
+  }
+
+  test("payment amounts and event prices become decimal(8,2) as a cast " +
+    "makes them: half-up rounding, an overflow failing under ANSI and " +
+    "NULL without it; a missing card is NULL") {
+    import spark.implicits._
+    def outcome(v: => Any): Either[String, Any] = Try(v) match {
+      case Success(x) => Right(x)
+      case Failure(e: SparkThrowable) => Left(e.getCondition)
+      case Failure(e) => Left(e.getClass.getName)
+    }
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set(key, ansi)
+      val cat = new graft.store.Catalog(spark,
+        Files.createTempDirectory("graft_portal").toString)
+      val p = new Portal(cat)
+      val org = p.createUser("O", "O", "", "o@x.com", "s3cret1", "organizer")
+      val e = p.addEvent("Gala", "d", ts, 0, "Hall", "Music", org,
+        BigDecimal(10))
+      val u = p.createUser("A", "L", "", "a@x.com", "s3cret1")
+      val paid = Seq("12.345", "12.344", "-0.005", "0.1", "999999.994",
+          "999999.995", "-999999.995", "10000000").map { v =>
+        val amount = BigDecimal(v)
+        val cast = outcome(Seq(amount).toDF("a")
+          .select(col("a").cast("decimal(8,2)")).head().get(0))
+        val reg = p.registerUserForEvent(u, e)
+        val stored = outcome {
+          val id = p.recordPayment(u, reg, amount = amount,
+            paymentType = "OneTime")
+          cat.read("payments").filter(col("payment_id") === id)
+            .select("amount").head().get(0)
+        }
+        val priced = outcome {
+          val id = p.addEvent("Fair", "d", ts, 0, "Park", "Expo", org, amount)
+          cat.read("events").filter(col("event_id") === id)
+            .select("price").head().get(0)
+        }
+        assert(stored == cast, s"amount $v, ansi=$ansi")
+        assert(priced == cast, s"price $v, ansi=$ansi")
+        v -> stored
+      }.toMap
+      assert(paid("12.345") == Right(new java.math.BigDecimal("12.35")))
+      assert(paid("10000000").isLeft == (ansi == "true"))
+      val noCard = p.recordPayment(u, p.registerUserForEvent(u, e))
+      val card = p.recordPayment(u, p.registerUserForEvent(u, e),
+        cardId = Some(7L), amount = BigDecimal(10), paymentType = "Card")
+      val cards = cat.read("payments").filter(col("payment_id")
+        .isin(noCard, card)).orderBy("payment_id").select("card_id")
+        .collect().map(r => Option(r.get(0))).toSeq
+      assert(cards == Seq(None, Some(7L)))
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -1,9 +1,12 @@
 package graft.store
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.service.Portal
 
 /** Micro-benchmark: the scan-vs-driver crossover of the store's read
   * routes ([[DriverReads]]), the measurement behind
@@ -22,10 +25,10 @@ import org.apache.spark.sql.functions._
   *  - '''cold count''': the count on a fresh `Catalog`.
   * The scan route is [[Catalog.scanRead]]; the driver route is a
   * [[DriverReads]] per catalog instance with no cap, so it is measured
-  * on both sides of [[DriverReads.MaxRows]]. Both sorted calls plan
-  * through the session's rules: the driver route's sort folds on the
-  * driver under the cap ([[graft.plans.LocalSortFold]]) and runs
-  * `SortExec` above it.
+  * on both sides of [[DriverReads.MaxRows]]. Every call plans through
+  * the session's rules: under the cap the driver route's sort and
+  * count fold on the driver ([[graft.plans.LocalPlanFold]]), above it
+  * they run `SortExec` and an aggregate job.
   *
   * A second table times an id-pinned merge-on-read update (Portal's
   * payment status flip) whose hit set is one file of 1, 1,024 and 4,095
@@ -34,6 +37,16 @@ import org.apache.spark.sql.functions._
   * fresh table: '''warm''' on the instance that has served the table
   * (the hit file is cached) and '''cold''' on a fresh instance (the
   * driver route decodes the hit file).
+  *
+  * A Portal store of 12 users x 4 events (48 registrations: those of
+  * the 2 free events paid on registration, those of the 2 paid events
+  * paid by half the users, some after a failed attempt) times Portal's
+  * registrations page and admin dashboard, `getUserRegistrations(user).collect()` and
+  * `eventStats().collect()`, median of `reps` after 3 warm calls, with
+  * [[graft.plans.LocalPlanFold]] on ('''fold''') and excluded through
+  * `spark.sql.optimizer.excludedRules` ('''jobs''': the same
+  * driver-served relations, joined, aggregated and windowed by Spark
+  * jobs).
   *
   * Usage: DriverReadBenchDrive [sizes,comma-separated] [rowsPerFile] [reps]
   */
@@ -139,6 +152,40 @@ object DriverReadBenchDrive {
           val c = timed(cold = true)
           println(f"[readbench] update $n%5d $name%-6s $w%7.1f $c%7.1f")
       }
+    }
+    val portal = Portal(spark,
+      Files.createTempDirectory("graft_readbench").toString)
+    val org = portal.createUser("Org", "O", "", "o@x.com", "s3cret1",
+      "organizer")
+    val events = (1 to 4).map(i => portal.addEvent(s"Event $i", "d",
+      new Timestamp(1700000000000L + i * 86400000L), 64800, "Hall",
+      "Music", org, BigDecimal(if (i % 2 == 0) 0 else 25)))
+    val users = (1 to 12).map(i => portal.createUser(s"U$i", "L", "",
+      s"u$i@x.com", "s3cret1"))
+    for (u <- users; e <- events) {
+      val (reg, pay) = portal.registerAndPay(u, e)
+      if (pay.isEmpty && u % 3 == 0)
+        portal.recordPayment(u, reg, amount = BigDecimal(25),
+          paymentType = "OneTime", paymentStatus = "Failed")
+      if (pay.isEmpty && u % 2 == 0)
+        portal.recordPayment(u, reg, amount = BigDecimal(25),
+          paymentType = "OneTime")
+    }
+    println("[readbench] portal call fold_ms jobs_ms")
+    Seq[(String, () => Unit)](
+      "getUserRegistrations" ->
+        (() => portal.getUserRegistrations(users(5)).collect()),
+      "eventStats" -> (() => portal.eventStats().collect())).foreach {
+      case (name, call) =>
+        def timed(): Double = {
+          (1 to 3).foreach(_ => call())
+          median((1 to reps).map(_ => ms(call())))
+        }
+        val fold = timed()
+        val key = "spark.sql.optimizer.excludedRules"
+        spark.conf.set(key, graft.plans.LocalPlanFold.ruleName)
+        val jobs = try timed() finally spark.conf.unset(key)
+        println(f"[readbench] portal $name%-20s $fold%7.1f $jobs%7.1f")
     }
     spark.stop()
   }

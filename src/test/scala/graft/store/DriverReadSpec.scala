@@ -156,6 +156,36 @@ class DriverReadSpec extends SparkSuite {
     assert(list.map(_.getAs[Long]("id")) == evs.reverse)
   }
 
+  test("job counts: Portal's registrations page and admin dashboard run " +
+    "no job") {
+    val p = Portal(spark, Files.createTempDirectory("graft_dread").toString)
+    val org = p.createUser("Org", "O", "", "o@x.com", "s3cret1", "organizer")
+    val gala = p.addEvent("Gala", "d", new Timestamp(1700000000000L), 64800,
+      "Hall", "Music", org, BigDecimal(25))
+    val fair = p.addEvent("Fair", "d", new Timestamp(1600000000000L), 36000,
+      "Park", "Expo", org, BigDecimal(10))
+    val u = p.createUser("Ada", "L", "", "a@x.com", "s3cret1")
+    // J4: two registrations of one user for one event keep the newest
+    p.registerUserForEvent(u, gala)
+    val newest = p.registerUserForEvent(u, gala)
+    // J3: a registration paid twice shows its latest payment's status
+    val twice = p.registerUserForEvent(u, fair)
+    p.recordPayment(u, twice, amount = BigDecimal(10), paymentType = "OneTime",
+      paymentStatus = "Failed")
+    p.recordPayment(u, twice, amount = BigDecimal(10), paymentType = "OneTime")
+    var regs: Seq[Row] = Nil
+    var stats: Seq[Row] = Nil
+    assert(jobsIn { regs = p.getUserRegistrations(u).collect().toSeq } == 0)
+    assert(jobsIn { stats = p.eventStats().collect().toSeq } == 0)
+    assert(regs.map(r => (r.getAs[Long]("registration_id"),
+      r.getAs[String]("registration_status"),
+      r.getAs[String]("latest_payment_status"))) ==
+      Seq((twice, "Success", "Success"), (newest, "Pending", null)))
+    assert(stats.map(r => (r.getAs[Long]("event_id"),
+      r.getAs[Long]("registrations"), r.getAs[Double]("revenue"))).toSet ==
+      Set((gala, 2L, 0.0), (fair, 1L, 10.0)))
+  }
+
   test("an over-cap table plans a file scan") {
     val cat = freshCat()
     cat.createTable("big", StructType(Seq(
