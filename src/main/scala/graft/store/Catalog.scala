@@ -3,14 +3,18 @@ package graft.store
 import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, EqualTo, Expression, InterpretedOrdering, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, Cast, EqualTo, Expression, InterpretedOrdering, JoinedRow, Literal, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import CommitLog.{Manifest, canonFiles}
 
@@ -945,8 +949,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     * writer's debris) surfaced so an audit explains disk usage; a
     * concurrent in-flight writer's staged-but-uncommitted files also
     * appear, so audit a quiescent store or cross-check writer leases.
-    * Cost: one scan of the table grouped by input file — the same
-    * shape as stats collection at write time — plus a directory walk.
+    * Cost: one scan of the table grouped by input file plus a directory
+    * walk. The aggregate recomputes every stat independently of the
+    * write path's [[Catalog.FileStats]], so it also audits that
+    * builder.
     * Never throws on findings (an audit reports; callers decide).
     */
   def fsck(table: String): DataFrame = {
@@ -1242,27 +1248,31 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   // ---- writes ------------------------------------------------------------
 
-  /** Write df as a new file group under the table dir and return its file
-    * entries with per-file stats: id min/max, row count, value stats of
-    * the designated stats columns, bounded string stats, and a null
-    * count for every column. The group name carries a UUID — two writers
+  /** Write df as a new file group under the table dir and return one
+    * file entry per written file, with the stats of
+    * [[Catalog.FileStats]]. The group name carries a UUID — two writers
     * (even in different processes) must never collide on a directory.
+    *
+    * `checks` (name -> CHECK expression, sorted by name) are validated
+    * on the rows written: any violation fails the write with every
+    * check's violating-row count, and no staged file is left behind.
     *
     * Two routes, chosen by the shape of `df`'s plan (no threshold, no
     * conf):
     *  - '''driver''': `df` is an in-memory `LocalRelation` after
     *    optimization (`Seq(...).toDF`, `createDataFrame(List[Row], ..)`,
     *    an append's id-assigned batch, a pinned update's new images).
-    *    Its rows are already on the driver: ONE file is written
-    *    there through Spark's own parquet writer ([[DriverParquet]]) and
-    *    the stats come from the same rows. No Spark job runs. An empty
-    *    batch stages no file.
-    *  - '''job''': anything else. `df.write.parquet` writes one file per
-    *    partition, and one job re-reads the group to collect the stats
-    *    per file.
+    *    Its rows are already on the driver: the checks are evaluated and
+    *    ONE file is written there ([[stageRows]]). No Spark job runs. An
+    *    empty batch stages no file.
+    *  - '''job''': anything else, in ONE Spark job ([[stageByJob]]): each
+    *    task writes its partition as one file, builds that file's entry
+    *    and counts the check violations in the same pass over its rows.
     *
-    * Invariant: for the same rows both routes record identical
-    * [[FileEntry]] stats (every field but the path). */
+    * Invariant: on both routes a file's entry comes from one
+    * [[Catalog.FileStats]] fed exactly the rows written to it, by the
+    * same write loop ([[Catalog.writeFile]]), so the same rows record
+    * identical [[FileEntry]] stats (every field but the path). */
   private def stageFiles(table: String, df: DataFrame,
       idCol: String,
       /** The EFFECTIVE stats-column list for this write — callers
@@ -1272,13 +1282,16 @@ final class Catalog(val spark: SparkSession, val root: String,
         * right stats; the current manifest at commit-replay time).
         * Resolving here from the committed manifest would miss staged
         * DDL. */
-      statsCols: Seq[String]): Vector[FileEntry] = {
+      statsCols: Seq[String],
+      checks: Seq[(String, String)] = Nil): Vector[FileEntry] = {
     val snap = s"snap-${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val dir = s"$root/$table/$snap"
     localRows(df) match {
-      case Some(rows) => stageRows(dir, df.schema, rows, idCol, statsCols)
-      case None => stageByJob(dir, df, idCol, statsCols)
+      case Some(rows) =>
+        requireChecks(table, checks, violations(df, checks))
+        stageRows(dir, df.schema, rows, idCol, statsCols)
+      case None => stageByJob(table, dir, df, idCol, statsCols, checks)
     }
   }
 
@@ -1297,44 +1310,87 @@ final class Catalog(val spark: SparkSession, val root: String,
   }
 
   /** The driver route of [[stageFiles]]: one parquet file holding `rows`
-    * (laid out as `schema`); its entry's stats are computed from the
-    * same rows exactly as [[stageByJob]]'s aggregate computes them. */
+    * (laid out as `schema`), written by the loop a job-route task runs. */
   private def stageRows(dir: String, schema: StructType,
       rows: Seq[InternalRow], idCol: String,
       statsCols: Seq[String]): Vector[FileEntry] = {
-    if (rows.isEmpty) return Vector.empty
-    val file = DriverParquet.write(io.hadoopConf, spark.sessionState.conf,
-      dir, schema, rows.iterator)
-    val idx = schema.fieldNames.zipWithIndex.toMap
-    def present(i: Int): Seq[InternalRow] = rows.filterNot(_.isNullAt(i))
-    def range(i: Int, get: InternalRow => Long): Option[(Long, Long)] = {
-      val vs = present(i).map(get)
-      if (vs.isEmpty) None else Some((vs.min, vs.max))
-    }
-    val designated = statsCols.filter(idx.contains)
-    val cols = designated.flatMap { c =>
-      val i = idx(c)
-      (schema(c).dataType match {
-        case TimestampType | LongType => range(i, _.getLong(i))
-        case IntegerType => range(i, _.getInt(i).toLong)
-        case _ => None
-      }).map(c -> _)
-    }.toMap
-    val scols = designated.filter(c => schema(c).dataType == StringType)
-      .flatMap { c =>
-        val vs = present(idx(c)).map(_.getUTF8String(idx(c)))
-        if (vs.isEmpty) None
-        else Catalog.strStatBounds(vs.min.toString, vs.max.toString)
-          .map(c -> _)
-      }.toMap
-    val nulls = schema.fieldNames.toSeq
-      .map(c => c -> rows.count(_.isNullAt(idx(c))).toLong).toMap
-    val (mn, mx) = range(idx(idCol), _.getLong(idx(idCol))).getOrElse(
-      throw new IllegalStateException(
-        s"staged rows carry no '$idCol' surrogate id"))
-    Vector(FileEntry(io.relativize(root, file), mn, mx, cols, scols, None,
-      rows.size.toLong, nulls))
+    val writer = DriverParquet.writer(io.hadoopConf, spark.sessionState.conf,
+      schema)
+    Catalog.writeFile(writer, dir, schema, idCol, statsCols, 0)(0,
+      rows.iterator).map(w => w._1.copy(path = io.relativize(root,
+      w._1.path))).toVector
   }
+
+  /** The job route of [[stageFiles]]: ONE Spark job over `df`'s rows with
+    * a violation flag per check appended. Each task streams its
+    * partition through [[Catalog.writeFile]] with a [[DriverParquet]]
+    * writer prepared once here: one file per non-empty partition, its
+    * entry, and its flag counts. A failed job or a violated check
+    * removes `dir` (best effort: a file a straggling task writes after
+    * the job failed is an orphan, which [[fsck]] lists and [[vacuum]]
+    * sweeps). */
+  private def stageByJob(table: String, dir: String, df: DataFrame,
+      idCol: String, statsCols: Seq[String],
+      checks: Seq[(String, String)]): Vector[FileEntry] = {
+    val schema = df.schema
+    val plan =
+      if (checks.isEmpty) df else df.select(col("*") +: flagsOf(checks): _*)
+    val write = Catalog.writeFile(
+      DriverParquet.writer(io.hadoopConf, spark.sessionState.conf, schema),
+      dir, schema, idCol, statsCols, checks.size) _
+    val qe = plan.queryExecution
+    val written = try {
+      SQLExecution.withNewExecutionId(qe, Some(s"stage $table")) {
+        qe.toRdd.mapPartitionsWithIndex(write).collect()
+      }
+    } catch {
+      case e: Throwable => removeStaged(dir); throw e
+    }
+    val bad = checks.indices.map(k => written.map(_._2(k)).sum)
+    if (bad.exists(_ > 0L)) removeStaged(dir)
+    requireChecks(table, checks, bad)
+    written.map { case (f, _) =>
+      f.copy(path = io.relativize(root, f.path))
+    }.toVector
+  }
+
+  /** Delete a staged file group's directory and everything under it
+    * (best effort: what survives is an orphan). */
+  private def removeStaged(dir: String): Unit =
+    io.walk(dir).sortBy(-_.depth).foreach { e =>
+      try io.deleteIfExists(e.path)
+      catch { case NonFatal(_) => }
+    }
+
+  /** A violation flag per check: TRUE where the row fails it (NULL
+    * passes, SQL's CHECK semantics). */
+  private def flagsOf(checks: Seq[(String, String)]): Seq[Column] =
+    checks.map { case (_, e) => !coalesce(expr(e), lit(true)) }
+
+  /** Each check's violating-row count over `df`, in ONE pass: on the
+    * driver for an in-memory batch (the optimizer folds the projection
+    * into the `LocalRelation`), else one aggregate job. */
+  private def violations(df: DataFrame,
+      checks: Seq[(String, String)]): Seq[Long] =
+    if (checks.isEmpty) Nil
+    else localRows(df) match {
+      case Some(_) =>
+        val flags = df.select(flagsOf(checks): _*).collect()
+        checks.indices.map(i => flags.count(_.getBoolean(i)).toLong)
+      case None =>
+        val counts = flagsOf(checks).map(v => count(when(v, 1)))
+        val row = df.agg(counts.head, counts.tail: _*).collect()(0)
+        checks.indices.map(row.getLong)
+    }
+
+  /** Fail on the first check with violating rows (`bad`, one count per
+    * check), naming it, its expression and its count. */
+  private def requireChecks(table: String, checks: Seq[(String, String)],
+      bad: Seq[Long]): Unit =
+    checks.zip(bad).foreach { case ((n, e), k) =>
+      require(k == 0L,
+        s"check '$n' on '$table' violated by $k incoming rows ($e)")
+    }
 
   /** The driver route of [[Tx.append]]: `rows` as an in-memory batch of
     * the table's `schema`, sorted by `orderBy` with Spark's own
@@ -1365,68 +1421,63 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
       schema.fields.zipWithIndex.filterNot(_._1.nullable).foreach {
         case (f, j) => require(!out.exists(_.isNullAt(j)),
-          s"append to '$table' has NULL in non-nullable column '${f.name}'")
+          Catalog.nullInNonNullable(table, f.name))
       }
       Some(GraftSqlShim.ofRows(spark,
         LocalRelation(DataTypeUtils.toAttributes(schema), out)))
     }
   }
 
-  /** The job route of [[stageFiles]]: `df.write.parquet` into `dir`,
-    * then one metadata-light job groups the written rows by their file
-    * to collect every file's stats. */
-  private def stageByJob(dir: String, df: DataFrame, idCol: String,
-      statsCols: Seq[String]): Vector[FileEntry] = {
-    df.write.mode("overwrite").parquet(dir)
-    // stats re-read through df's own schema (the table's EFFECTIVE —
-    // possibly evolved — schema at this point in the transaction)
-    val written = spark.read.schema(df.schema).parquet(dir)
-    // value stats ride the SAME single job as the id stats: one extra
-    // min/max agg pair per designated column present in this schema
-    val statCols = statsCols
-      .filter(c => df.schema.fieldNames.contains(c))
-      .filter(c => statLong(df, c).isDefined)
-    val strCols = statsCols
-      .filter(c => df.schema.fieldNames.contains(c))
-      .filter(c => df.schema(c).dataType ==
-        org.apache.spark.sql.types.StringType)
-    // round 15: row count + per-column null counts ride the same job
-    // (zeros recorded explicitly — presence in the map is the "column
-    // existed at stage time" witness null pruning depends on)
-    val nullCols = df.schema.fieldNames.toSeq
-    val aggs =
-      min(col(idCol)).as("mn") +: max(col(idCol)).as("mx") +:
-        count(lit(1)).as("n_rows") +:
-        (statCols.flatMap { c =>
-          val lc = statLong(df, c).get
-          Seq(min(lc).as(s"mn_$c"), max(lc).as(s"mx_$c"))
-        } ++ strCols.flatMap { c =>
-          Seq(min(col(c)).as(s"smn_$c"), max(col(c)).as(s"smx_$c"))
-        } ++ nullCols.map { c =>
-          count(when(col(c).isNull, 1)).as(s"nc_$c")
-        })
-    val stats = written
-      .groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    stats.map { r =>
-      val rel = io.scannedToRel(root, r.getString(0))
-      val cols = statCols.flatMap { c =>
-        val (mnI, mxI) = (r.fieldIndex(s"mn_$c"), r.fieldIndex(s"mx_$c"))
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
-        else Some(c -> (r.getLong(mnI), r.getLong(mxI)))
-      }.toMap
-      val scols = strCols.flatMap { c =>
-        val (mnI, mxI) = (r.fieldIndex(s"smn_$c"), r.fieldIndex(s"smx_$c"))
-        if (r.isNullAt(mnI) || r.isNullAt(mxI)) None
-        else Catalog.strStatBounds(r.getString(mnI), r.getString(mxI))
-          .map(c -> _)
-      }.toMap
-      val nulls = nullCols
-        .map(c => c -> r.getLong(r.fieldIndex(s"nc_$c"))).toMap
-      FileEntry(rel, r.getLong(1), r.getLong(2), cols, scols, None,
-        r.getLong(r.fieldIndex("n_rows")), nulls)
-    }.toVector.sortBy(_.path)
+  /** The job route of [[Tx.append]]: `rows` sorted by `orderBy` (a
+    * range-partitioned sort, never a global single-partition window),
+    * numbered by `zipWithIndex` (one count job, none for a single
+    * partition) and laid out as the table's `schema` with ids from
+    * `baseId + 1` by one projection per task — the rows stay
+    * `InternalRow`s, with no encoder round trip. Returned as a frame
+    * over that RDD, so the write job computes it. A decimal column is
+    * cast to the table's precision and scale (overflow as the session's
+    * casts treat it); any other column the batch carries must have the
+    * table's type, up to nullability, or the append fails. A NULL in a
+    * non-nullable column fails the task that meets it, with the driver
+    * route's message. */
+  private def indexedByJob(table: String, rows: DataFrame,
+      orderBy: Seq[String], schema: StructType, idCol: String,
+      baseId: Long): DataFrame = {
+    val in = rows.schema
+    val pos = in.fieldNames.zipWithIndex.toMap
+    val cols = schema.fields.toSeq.map { f =>
+      if (f.name == idCol) BoundReference(in.length, LongType, false)
+      else pos.get(f.name) match {
+        case Some(i) =>
+          val v = BoundReference(i, in(i).dataType, in(i).nullable)
+          (in(i).dataType, f.dataType) match {
+            case (a, b) if DataTypeUtils.sameType(a, b) => v
+            case (_: DecimalType, _: DecimalType) => Cast(v, f.dataType)
+            case (a, b) => throw new IllegalArgumentException(
+              s"append to '$table': column '${f.name}' is " +
+                s"${a.simpleString}, the table's is ${b.simpleString}")
+          }
+        case None => Literal(null, f.dataType)
+      }
+    }
+    val required = schema.fields.indices
+      .filter(j => !schema(j).nullable && schema(j).name != idCol)
+      .map(j => j -> Catalog.nullInNonNullable(table, schema(j).name))
+    val numbered = rows.orderBy(orderBy.map(col): _*).queryExecution.toRdd
+      .zipWithIndex().mapPartitions { it =>
+        // the id is the input's last ordinal; the output row is reused
+        val project = UnsafeProjection.create(cols)
+        val id = new SpecificInternalRow(Seq(LongType))
+        val joined = new JoinedRow
+        it.map { case (r, i) =>
+          id.setLong(0, baseId + i + 1)
+          val out = project(joined(r, id))
+          required.foreach { case (j, msg) => require(!out.isNullAt(j), msg) }
+          out: InternalRow
+        }
+      }
+    GraftSqlShim.ofRows(spark, LogicalRDD(DataTypeUtils.toAttributes(schema),
+      numbered)(spark.asInstanceOf[classic.SparkSession]))
   }
 
   /** Orderable-Long normalization of a designated stats column: epoch
@@ -1703,30 +1754,18 @@ final class Catalog(val spark: SparkSession, val root: String,
         prev.copy(checks = prev.checks + (name -> constraint)))
     }
 
-    /** Validate `df` (rows about to be written) against the table's
-      * effective CHECK set in ONE pass computing every check's violation
-      * count together: on the driver for an in-memory batch (the
-      * optimizer folds the projection into the `LocalRelation`), else
-      * one aggregate job. */
+    /** The table's effective CHECK set, sorted by name. */
+    private def checksOf(table: String): Seq[(String, String)] =
+      curState(table).checks.toSeq.sortBy(_._1)
+
+    /** Validate `df`, rows that will land without passing through
+      * [[stageFiles]] as they are, against the table's effective CHECK
+      * set in ONE pass computing every check's violation count together
+      * (see [[violations]]). A frame about to be staged passes its checks
+      * to [[stageFiles]] instead. */
     private def enforceChecks(table: String, df: DataFrame): Unit = {
-      val checks = curState(table).checks.toSeq.sortBy(_._1)
-      if (checks.isEmpty) return
-      val violated = checks.map { case (_, e) =>
-        !coalesce(expr(e), lit(true))
-      }
-      val bad: Seq[Long] = localRows(df) match {
-        case Some(_) =>
-          val flags = df.select(violated: _*).collect()
-          checks.indices.map(i => flags.count(_.getBoolean(i)).toLong)
-        case None =>
-          val counts = violated.map(v => count(when(v, 1)))
-          val row = df.agg(counts.head, counts.tail: _*).collect()(0)
-          checks.indices.map(row.getLong)
-      }
-      checks.zip(bad).foreach { case ((n, e), k) =>
-        require(k == 0L,
-          s"check '$n' on '$table' violated by $k incoming rows ($e)")
-      }
+      val checks = checksOf(table)
+      requireChecks(table, checks, violations(df, checks))
     }
 
     def addColumn(table: String,
@@ -1851,9 +1890,11 @@ final class Catalog(val spark: SparkSession, val root: String,
       *    with Spark's own `InterpretedOrdering`, checked there, and
       *    staged by the driver route: the append runs no Spark job;
       *  - any other batch gets its ids from a parallel range-partitioned
-      *    sort + zipWithIndex (no global window) and takes the job
-      *    route.
-      * An empty batch stages no file and returns the current last id. */
+      *    sort + zipWithIndex (no global window) over `InternalRow`s
+      *    ([[indexedByJob]]) and takes the job route, whose one write job
+      *    also evaluates the CHECKs and the non-nullable columns.
+      * An empty batch (every partition empty included) stages no file
+      * and returns the current last id. */
     def append(table: String, rows: DataFrame,
         orderBy: Seq[String] = Nil): Long = {
       ensureLease()
@@ -1866,20 +1907,10 @@ final class Catalog(val spark: SparkSession, val root: String,
           s"append to '$table' is missing non-nullable column '${f.name}'"))
       val ordNames = if (orderBy.nonEmpty) orderBy else rows.columns.toSeq
       val withIds = localWithIds(table, rows, ordNames, schema, idCol,
-          baseId).getOrElse {
-        val fields = schema.fieldNames
-        val indexed = rows.orderBy(ordNames.map(col): _*).rdd
-          .zipWithIndex().map { case (r, i) =>
-            Row.fromSeq(fields.toIndexedSeq.map { f =>
-              if (f == idCol) baseId + i + 1
-              else if (!have(f)) null
-              else r.getAs[Any](f)
-            })
-          }
-        spark.createDataFrame(indexed, schema)
-      }
-      enforceChecks(table, withIds)
-      val newFiles = stageFiles(table, withIds, idCol, effStatsCols(table))
+        baseId).getOrElse(
+        indexedByJob(table, rows, ordNames, schema, idCol, baseId))
+      val newFiles = stageFiles(table, withIds, idCol, effStatsCols(table),
+        checksOf(table))
       val n = newFiles.map(f => f.maxId).maxOption.getOrElse(baseId)
       val files = prev.files ++ newFiles
       seedStaged(table, files, newFiles, withIds, schema)
@@ -2074,8 +2105,8 @@ final class Catalog(val spark: SparkSession, val root: String,
             case (d, (c, v)) => d.withColumn(c, v)
           })
         if (dead.isEmpty) return // predicate matched nothing
-        enforceChecks(table, local)
-        val patch = stageFiles(table, local, idCol, effStatsCols(table))
+        val patch = stageFiles(table, local, idCol, effStatsCols(table),
+          checksOf(table))
         val files = carried ++ dvMarked(hit, deadIds(dead)) ++ patch
         seedStaged(table, files, patch, local, schema)
         staged :+= Staged(table, prev.copy(files = files))
@@ -2084,8 +2115,8 @@ final class Catalog(val spark: SparkSession, val root: String,
             idCol)) { case (df, (c, v)) =>
           df.withColumn(c, when(predicate, v).otherwise(col(c)))
         }
-        enforceChecks(table, updated)
-        val newFiles = stageFiles(table, updated, idCol, effStatsCols(table))
+        val newFiles = stageFiles(table, updated, idCol,
+          effStatsCols(table), checksOf(table))
         staged :+= Staged(table, prev.copy(files = carried ++ newFiles))
       }
     }
@@ -2464,8 +2495,8 @@ final class Catalog(val spark: SparkSession, val root: String,
               // mixed post-images are validated directly (see the
               // matchedCols scaladoc); the star merge keeps the
               // cheaper source-only validation above
-              if (partialSet) enforceChecks(table, images)
-              val patch = stageFiles(table, images, idCol, effStatsCols(table))
+              val patch = stageFiles(table, images, idCol,
+                effStatsCols(table), if (partialSet) checksOf(table) else Nil)
               staged :+= Staged(table, prev.copy(files =
                 carried ++ dvMarked(hit, deadByFile) ++ patch))
             }
@@ -3689,6 +3720,142 @@ object Catalog {
       : Option[(String, String)] =
     if (!wellFormedUtf16(mn) || !wellFormedUtf16(mx)) None
     else strStatHi(mx).map(hi => (strStatLo(mn), hi))
+
+  /** The message of a NULL met in a non-nullable column by an append. */
+  private[store] def nullInNonNullable(table: String, column: String)
+      : String =
+    s"append to '$table' has NULL in non-nullable column '$column'"
+
+  /** A staged file's [[FileEntry]] stats, built one row at a time in
+    * constant memory: the surrogate id range, the row count, min/max of
+    * every designated long/int/timestamp column (timestamps as epoch
+    * micros), the bounded min/max ([[strStatBounds]]) of every
+    * designated string column in UTF-8 binary order, and a NULL count
+    * for every column of `schema` (zeros recorded: presence in the map
+    * is the "column existed at stage time" witness null pruning depends
+    * on). A column whose values are all NULL records no value stats.
+    * String bounds are copied when taken: write tasks reuse their row
+    * objects. */
+  private[store] final class FileStats(schema: StructType, idCol: String,
+      statsCols: Seq[String]) {
+    private val idIdx = schema.fieldIndex(idCol)
+    private val designated =
+      statsCols.distinct.filter(schema.fieldNames.contains)
+    /** (column, ordinal, is it an int) of the long-valued stats. */
+    private val longs = designated.flatMap { c =>
+      schema(c).dataType match {
+        case TimestampType | LongType => Some((c, schema.fieldIndex(c), false))
+        case IntegerType => Some((c, schema.fieldIndex(c), true))
+        case _ => None
+      }
+    }.toArray
+    private val strs = designated.filter(c => schema(c).dataType == StringType)
+      .map(c => (c, schema.fieldIndex(c))).toArray
+    private var rows = 0L
+    private var idMin = Long.MaxValue
+    private var idMax = Long.MinValue
+    private val lo = Array.fill(longs.length)(Long.MaxValue)
+    private val hi = Array.fill(longs.length)(Long.MinValue)
+    private val sLo = new Array[UTF8String](strs.length)
+    private val sHi = new Array[UTF8String](strs.length)
+    private val nulls = new Array[Long](schema.length)
+
+    def add(r: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < nulls.length) {
+        if (r.isNullAt(i)) nulls(i) += 1
+        i += 1
+      }
+      if (!r.isNullAt(idIdx)) {
+        val id = r.getLong(idIdx)
+        if (id < idMin) idMin = id
+        if (id > idMax) idMax = id
+      }
+      i = 0
+      while (i < longs.length) {
+        val (_, j, isInt) = longs(i)
+        if (!r.isNullAt(j)) {
+          val v = if (isInt) r.getInt(j).toLong else r.getLong(j)
+          if (v < lo(i)) lo(i) = v
+          if (v > hi(i)) hi(i) = v
+        }
+        i += 1
+      }
+      i = 0
+      while (i < strs.length) {
+        val j = strs(i)._2
+        if (!r.isNullAt(j)) {
+          val v = r.getUTF8String(j)
+          if (sLo(i) == null || v.compareTo(sLo(i)) < 0) sLo(i) = v.clone()
+          if (sHi(i) == null || v.compareTo(sHi(i)) > 0) sHi(i) = v.clone()
+        }
+        i += 1
+      }
+    }
+
+    /** The entry of the file at `path` holding the rows added so far. */
+    def entry(path: String): FileEntry = {
+      if (idMin > idMax) throw new IllegalStateException(
+        s"staged rows carry no '$idCol' surrogate id")
+      val cols = longs.indices.filter(i => lo(i) <= hi(i)).map(i =>
+        longs(i)._1 -> ((lo(i), hi(i)))).toMap
+      val scols = strs.indices.filter(sLo(_) != null).flatMap(i =>
+        strStatBounds(sLo(i).toString, sHi(i).toString)
+          .map(strs(i)._1 -> _)).toMap
+      FileEntry(path, idMin, idMax, cols, scols, None, rows,
+        schema.fieldNames.toSeq.zip(nulls).toMap)
+    }
+  }
+
+  /** The write loop of both staging routes (run by each task of the job
+    * route, and once on the driver): streams `rows` — the columns of
+    * `schema` followed by `nFlags` boolean CHECK violation flags — into
+    * ONE new file `part-<part>-...` in `dir`, writing only the `schema`
+    * columns, feeding each written row to a [[FileStats]] and counting
+    * each flag. Yields the file's entry (path absolute) with its flag
+    * counts, or nothing for an empty input, which writes no file. A
+    * write that fails, or a task killed meanwhile, deletes its file. */
+  private[store] def writeFile(writer: DriverParquet.Writer, dir: String,
+      schema: StructType, idCol: String, statsCols: Seq[String],
+      nFlags: Int)(part: Int, rows: Iterator[InternalRow])
+      : Iterator[(FileEntry, Array[Long])] =
+    if (!rows.hasNext) Iterator.empty
+    else {
+      val n = schema.length
+      val data: InternalRow => InternalRow =
+        if (nFlags == 0) identity
+        else {
+          val d = ProjectingInternalRow(schema, 0 until n)
+          r => { d.project(r); d }
+        }
+      val stats = new FileStats(schema, idCol, statsCols)
+      val flags = new Array[Long](nFlags)
+      val (path, out) = writer.open(dir, part)
+      var open = true
+      try {
+        rows.foreach { r =>
+          val row = data(r)
+          out.write(row)
+          stats.add(row)
+          var k = 0
+          while (k < nFlags) {
+            if (r.getBoolean(n + k)) flags(k) += 1
+            k += 1
+          }
+        }
+        open = false
+        out.close()
+        if (Option(TaskContext.get()).exists(_.isInterrupted()))
+          throw new TaskKilledException("staged file discarded")
+      } catch {
+        case e: Throwable =>
+          if (open) try out.close() catch { case NonFatal(_) => }
+          writer.discard(path)
+          throw e
+      }
+      Iterator.single((stats.entry(path), flags))
+    }
 
   /** String twin of [[pruneByDomain]]: keep a file iff its BOUNDED
     * string range can intersect the (exact) batch domain — provably

@@ -9,18 +9,20 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
-/** Parquet files written and read on the driver through Spark's own
-  * parquet code, for rows small enough to live in driver memory:
-  *  - [[write]] goes through `ParquetUtils.prepareWrite` ->
-  *    `OutputWriterFactory` -> `OutputWriter`: the same format, codec,
-  *    file naming and footer metadata a write task produces. The store
-  *    stages in-memory batches this way ([[Catalog]]'s `stageFiles`) so
-  *    a point write runs no Spark job.
+/** Parquet files written and read through Spark's own parquet code,
+  * outside Spark's file-source commands:
+  *  - [[writer]] runs `ParquetUtils.prepareWrite` once and hands back a
+  *    serializable [[Writer]] that opens `OutputWriter`s: the same
+  *    format, codec, file naming and footer metadata a write task
+  *    produces. The store stages every file this way ([[Catalog]]'s
+  *    `stageFiles`): an in-memory batch on the driver, so a point write
+  *    runs no Spark job, anything else inside the tasks of ONE job.
   *  - [[read]] runs the function a scan task runs
   *    (`ParquetFileFormat.buildReaderWithPartitionValues`): the same
   *    by-name column resolution, datetime rebasing and vectorized
@@ -37,23 +39,47 @@ private[store] object DriverParquet {
   def supports(schema: StructType): Boolean =
     schema.forall(f => format.supportDataType(f.dataType))
 
-  /** Write `rows` (laid out as `schema`) as ONE file in `dir`, named like
-    * a task's output (`part-00000-<uuid>-c000.<codec>.parquet`), through
-    * `hadoopConf`'s filesystem binding. Returns the file's path. */
-  def write(hadoopConf: Configuration, sqlConf: SQLConf, dir: String,
-      schema: StructType, rows: Iterator[InternalRow]): String = {
+  /** Files laid out as `schema`, opened with the writer factory and the
+    * job configuration `ParquetUtils.prepareWrite` set up on the driver.
+    * Serializable: a write task opens its file with exactly the driver's
+    * settings. */
+  final class Writer private[DriverParquet] (factory: OutputWriterFactory,
+      conf: SerializableConfiguration, schema: StructType)
+      extends Serializable {
+
+    /** Open a new file in `dir` named like a task's output,
+      * `part-<part>-<uuid>-c000.<codec>.parquet`, through the configured
+      * filesystem binding. The UUID is fresh for every call, so two
+      * attempts of one task never share a file. Returns the file's path
+      * and its writer. */
+    def open(dir: String, part: Int): (String, OutputWriter) = {
+      val uuid = java.util.UUID.randomUUID().toString
+      val attempt = new TaskAttemptID(
+        new TaskID(new JobID(uuid.replace("-", ""), 0), TaskType.MAP, part),
+        0)
+      val ctx = new TaskAttemptContextImpl(conf.value, attempt)
+      val path =
+        f"$dir/part-$part%05d-$uuid-c000${factory.getFileExtension(ctx)}"
+      (path, factory.newInstance(path, schema, ctx))
+    }
+
+    /** Delete the file at `path` if it exists (best effort). */
+    def discard(path: String): Unit =
+      try {
+        val p = new Path(path)
+        p.getFileSystem(conf.value).delete(p, false)
+      } catch { case scala.util.control.NonFatal(_) => }
+  }
+
+  /** A [[Writer]] for files laid out as `schema`, bound to `hadoopConf`'s
+    * filesystem and `sqlConf`'s parquet settings. */
+  def writer(hadoopConf: Configuration, sqlConf: SQLConf,
+      schema: StructType): Writer = {
     val job = Job.getInstance(new Configuration(hadoopConf))
     val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
       new ParquetOptions(Map.empty[String, String], sqlConf))
-    val uuid = java.util.UUID.randomUUID().toString
-    val attempt = new TaskAttemptID(
-      new TaskID(new JobID(uuid.replace("-", ""), 0), TaskType.MAP, 0), 0)
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration, attempt)
-    val path =
-      s"$dir/part-00000-$uuid-c000${factory.getFileExtension(ctx)}"
-    val w = factory.newInstance(path, schema, ctx)
-    try rows.foreach(w.write) finally w.close()
-    path
+    new Writer(factory, new SerializableConfiguration(job.getConfiguration),
+      schema)
   }
 
   /** Decode each of `paths` whole, with `schema` as the read schema, on

@@ -20,7 +20,10 @@ import graft.store.Catalog
   *
   * Scale shape: the admission check reads the offsets ledger (a few rows
   * per query, file-pruned), not the data table; the append itself is the
-  * store's parallel id-assignment path. At 100 TB/day this is the shape
+  * store's parallel id-assignment path: a range sort orders the batch
+  * (its sample and shuffle jobs), `zipWithIndex` numbers it, and ONE
+  * write job stages it, each write task building its file's manifest
+  * stats from the rows it writes. At 100 TB/day this is the shape
   * of every warehouse streaming sink: bounded ledger, append-only data,
   * idempotence from transactional co-commit rather than dedup scans.
   */

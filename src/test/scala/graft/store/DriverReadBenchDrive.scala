@@ -3,6 +3,10 @@ package graft.store
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,7 +52,15 @@ import graft.service.Portal
   * driver-served relations, joined, aggregated and windowed by Spark
   * jobs).
   *
+  * The job route of the store's staging ([[Catalog]]'s `stageFiles`)
+  * is timed on an `events_ingest` table: a '''micro-batch''' append
+  * of 3,333 rows over 4 partitions with ids in `event_id` order (the
+  * stream ingest's batch shape), on a warm instance, and a
+  * '''compactSmall''' folding 12 job-staged files of 278 rows, each on a
+  * fresh table: Spark jobs and ms per call, median of `reps`.
+  *
   * Usage: DriverReadBenchDrive [sizes,comma-separated] [rowsPerFile] [reps]
+  * (sbt: `Test/runMain graft.store.DriverReadBenchDrive 256 256 7`)
   */
 object DriverReadBenchDrive {
   def main(args: Array[String]): Unit = {
@@ -186,6 +198,62 @@ object DriverReadBenchDrive {
         spark.conf.set(key, graft.plans.LocalPlanFold.ruleName)
         val jobs = try timed() finally spark.conf.unset(key)
         println(f"[readbench] portal $name%-20s $fold%7.1f $jobs%7.1f")
+    }
+
+    // Spark jobs started under a job group, counted on the listener bus
+    val sc = spark.sparkContext
+    val started = new ConcurrentHashMap[String, AtomicInteger]
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id")))
+          .flatMap(g => Option(started.get(g))).foreach(_.incrementAndGet())
+    })
+    def inGroup(g: String)(body: => Unit): Unit = {
+      started.put(g, new AtomicInteger)
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    /** (jobs, ms) of `body`; a marker job started after it proves every
+      * earlier job event has reached the listener. */
+    def jobsMs(body: => Unit): (Int, Double) = {
+      val g = java.util.UUID.randomUUID().toString
+      var t = 0.0
+      inGroup(g) { t = ms(body) }
+      inGroup(s"$g-marker")(sc.parallelize(Seq(1), 1).count())
+      while (started.get(s"$g-marker").get == 0) Thread.sleep(5)
+      (started.get(g).get, t)
+    }
+    // event ids descend within each partition: the append's id sort
+    // shuffles, as a stream micro-batch's does
+    def batch(from: Long, n: Int, parts: Int): DataFrame =
+      spark.range(from, from + n, 1, parts).select(
+        (lit(2 * from + n - 1) - col("id")).as("event_id"),
+        timestamp_micros(lit(1700000000000000L) + col("id") * 1000000L)
+          .as("ts"),
+        (col("id") % 97).as("user_id"),
+        concat(lit("type"), col("id") % 5).as("event_type"),
+        (col("id") * 0.5).as("value"), lit("{}").as("props"))
+    def ingestStore(): Catalog = new Catalog(spark,
+      Files.createTempDirectory("graft_readbench").toString)
+    println("[readbench] jobroute call jobs ms")
+    val ingest = ingestStore()
+    (0 until 3).foreach(i => ingest.append("events_ingest",
+      batch(i * 3333L, 3333, 4), orderBy = Seq("event_id")))
+    val appends = (3 until 3 + reps).map(i => jobsMs(ingest.append(
+      "events_ingest", batch(i * 3333L, 3333, 4), orderBy = Seq("event_id"))))
+    val compacts = (0 until reps).map { _ =>
+      val c = ingestStore()
+      (0 until 12).foreach(i => c.append("events_ingest",
+        batch(i * 278L, 278, 1), orderBy = Seq("event_id")))
+      jobsMs(c.compactSmall("events_ingest", smallRows = 1000,
+        targetRows = 4000))
+    }
+    Seq("micro-batch" -> appends, "compactSmall" -> compacts).foreach {
+      case (name, runs) =>
+        val j = median(runs.map(_._1.toDouble)).toInt
+        val t = median(runs.map(_._2))
+        println(f"[readbench] jobroute $name%-12s $j%4d $t%7.1f")
     }
     spark.stop()
   }
