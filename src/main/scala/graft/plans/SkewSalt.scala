@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
+import graft.store.sql.GraftTable
+
 /** Hot-key rescue for the co-partitioned custom joins ([[AsOfJoinExec]],
   * [[IntervalJoinExec]]).
   *
@@ -192,10 +194,12 @@ private[graft] object SkewSalt {
     val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (sz >= 0 && sz < minBytes) return None
     // the file-set signature (order-independent hash of resolved input
-    // files) is driver-side metadata off the already-listed FileIndex —
+    // files: a file source's listed files, a store scan's manifest
+    // paths, which `inputFiles` does not see) is driver-side metadata —
     // cheap next to the census job it guards
-    val fileSig = scala.util.hashing.MurmurHash3
-      .unorderedHash(df.inputFiles.toSeq)
+    val fileSig = scala.util.hashing.MurmurHash3.unorderedHash(
+      df.inputFiles.toSeq ++
+        GraftTable.scannedFiles(df.queryExecution.optimizedPlan))
     val key = (df.queryExecution.analyzed.semanticHash(), keyCols, fileSig)
     if (censusCache.size() > CensusCacheMax) censusCache.clear()
     censusCache.computeIfAbsent(key, _ => new CensusCell(() => {

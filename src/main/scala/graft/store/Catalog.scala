@@ -12,11 +12,14 @@ import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, Bou
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import CommitLog.{Manifest, canonFiles}
+import graft.store.sql.GraftTable
 
 /** Copy-on-write table store over parquet with a log-structured
   * manifest (SURVEY §7.3; on-disk format in [[CommitLog]]).
@@ -50,8 +53,8 @@ import CommitLog.{Manifest, canonFiles}
   *    (SURVEY §7.4).
   *  - '''Multi-process safety, optimistic concurrency.''' A transaction
   *    body runs against a snapshot with NO lock held; the commit's
-  *    validate-and-swap alone runs under the [[CommitLock]] SPI
-  *    (round 17) — `file` = per-root JVM monitor + `FileChannel.lock`
+  *    validate-and-swap alone runs under the [[CommitLock]] SPI —
+  *    `file` = per-root JVM monitor + `FileChannel.lock`
   *    on `_manifest.lock` (default, single-host/POSIX), `lease` = a
   *    conditional-put lease (the object-store/multi-driver shape) —
   *    and checks that no staged table was committed concurrently
@@ -61,9 +64,9 @@ import CommitLog.{Manifest, canonFiles}
   *    lose a commit (the reference got this from MySQL, db.py:42-48).
   */
 final class Catalog(val spark: SparkSession, val root: String,
-    /** Filesystem SPI for everything the store touches on disk
-      * (round 18): manifests, deltas, checkpoints, DV sidecars, writer
-      * leases, vacuum sweeps. Resolved from `spark.graft.store.io`
+    /** Filesystem SPI for everything the store touches on disk:
+      * manifests, deltas, checkpoints, DV sidecars, writer leases,
+      * vacuum sweeps. Resolved from `spark.graft.store.io`
       * (`local` default, `hadoop` for HDFS-class roots) by the public
       * constructor; tests inject an impl directly to pin both under
       * one fuzz model. */
@@ -77,7 +80,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     * `spark.graft.store.commitLock` picks `file` (POSIX lock, default)
     * or `lease` (conditional-put lease — the object-store shape). */
   private val commitLock: CommitLock = CommitLock.forRoot(spark, root, io)
-  // legacy-layout guard: a pre-round-14 store (single root manifest +
+  // legacy-layout guard: a single-manifest store (single root manifest +
   // _history) would otherwise read back as EMPTY — and vacuum, seeing
   // no referenced files, could then delete its data. Fail loudly at
   // construction instead of silently serving zero rows.
@@ -85,7 +88,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       !io.exists(io.resolve(root, "_log")))
     throw new IllegalStateException(
       s"store root '$root' uses the legacy single-manifest layout " +
-        "(_manifest.json/_history); this build reads the round-14 " +
+        "(_manifest.json/_history); this build reads the " +
         "log-structured layout (_log/vN.json). Migrate by re-ingesting, " +
         "or read it with the release that wrote it")
 
@@ -337,14 +340,14 @@ final class Catalog(val spark: SparkSession, val root: String,
     // between its write and its publish
     val tmp = commitLog.deltaTmpPath(newVersion)
     io.write(tmp, CommitLog.encodeDelta(newVersion, committedAtMs, delta))
-    // fencing check (round 18): a lease-mode holder paused past the TTL
+    // fencing check: a lease-mode holder paused past the TTL
     // (GC pause, VM suspend) may have had its lease stolen — abort HERE,
     // before the irreversible rename, so the stealer's commits are never
     // clobbered. Throws ConcurrentWriteException; the retry machinery
     // re-runs the body against the winner's state. No-op for file mode.
     commitLock.verifyStillHeld()
-    // store-side fence (round 18; hardened round 19): the publish
-    // refuses an existing destination. Per-impl guarantee (ADVICE r18):
+    // store-side fence: the publish refuses an existing destination.
+    // Per-impl guarantee:
     // LocalStoreIO is genuinely ATOMIC (hard-link publish, link(2)
     // EEXIST); object-store ports are atomic via ONE conditional put —
     // the fencing token the lock scaladoc requires production
@@ -638,12 +641,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     * Pre-evolution parquet files read through a widened schema NULL-
     * backfill the added columns (parquet by-name resolution).
     *
-    * Renamed columns (round 16) carry their PRIOR names in the field
-    * metadata under [[Catalog.PriorNamesKey]] — the one annotation
-    * point every reader flows through, so [[readFiles]], fsck, and the
-    * pruning surfaces resolve old-named files without threading the
-    * rename map through every call site. [[readFiles]] strips the
-    * metadata from its output, so result frames stay clean. */
+    * Renamed columns carry their PRIOR names in the field metadata
+    * under [[Catalog.PriorNamesKey]] — the one annotation point every
+    * reader flows through, so the scan route, the driver route and the
+    * stat-key fallbacks resolve old-named files without threading the
+    * rename map through every call site. Both routes strip the
+    * metadata from their output, so result frames stay clean. */
   private def schemaOf(st: Option[TableState],
       table: String): org.apache.spark.sql.types.StructType = {
     val base = st.flatMap(_.schema).getOrElse(Schemas.registry(table)._1)
@@ -665,7 +668,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   private def idColOf(st: Option[TableState], table: String): String =
     st.flatMap(_.idCol).getOrElse(Schemas.registry(table)._2)
 
-  /** Effective stats-column list: the manifest's (round 16 — CREATE
+  /** Effective stats-column list: the manifest's (CREATE
     * TABLE'd tables, clones, setStatsColumns), else the name-keyed
     * [[Schemas.statsColumns]] registry. Same resolution shape as
     * schema/idCol — the registry is the fixture bootstrap, the
@@ -675,45 +678,22 @@ final class Catalog(val spark: SparkSession, val root: String,
     st.flatMap(_.statsCols)
       .getOrElse(Schemas.statsColumns.getOrElse(table, Nil))
 
-  /** Scan a file-entry list through `schema`, MASKING deletion vectors
-    * (round 15 merge-on-read): rows of a DV-carrying file whose id is in
-    * its sidecar are invisible. The mask is ONE broadcast anti-join on
-    * (id, source file) pairs — per-file pairing, not a global dead-id
-    * set, because an update's NEW image lives in a patch file under the
-    * SAME id and must stay visible (and a later-patched patch file can
-    * carry both live and dead ids). Dead pairs are changed-rows-sized by
-    * construction (compaction folds them away), so the broadcast is the
-    * size of the recent point-change churn, and files without DVs pay
-    * nothing — the common case keeps the exact pre-DV plan. */
+  /** Scan a file-entry list through `schema`: a DSv2 relation over the
+    * [[GraftTable]] of `files`, the relation the SQL door reads. Its
+    * scan masks deletion vectors, coalesces renamed columns and prunes
+    * files by any filter pushed onto it (manifest stats); its
+    * attributes are the scan schema ([[DriverReads.scanSchema]]). */
   private def readFiles(table: String, files: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
       idCol: String): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         Catalog.stripPriorNames(schema))
-    else {
-      val base = Catalog.readLogical(spark, schema,
-        files.map(f => s"$root/${f.path}"))
-      val dvd = files.filter(_.dv.isDefined)
-      if (dvd.isEmpty) base
-      else {
-        val pairs = dvd.flatMap { f =>
-          DvIO.read(io, root, f.dv.get._1)
-            .map(id => (id, fileKey(f.path)))
-        }
-        val sp = spark
-        import sp.implicits._
-        val dead = pairs.toDF("__dead_id", "__dead_file")
-        // input_file_name() is non-deterministic — project it below the
-        // join (a join CONDITION must be deterministic)
-        base.withColumn("__graft_src_file", srcFileKey)
-          .join(broadcast(dead),
-            col(idCol) === col("__dead_id") &&
-              col("__graft_src_file") === col("__dead_file"),
-            "left_anti")
-          .drop("__graft_src_file")
-      }
-    }
+    else
+      GraftSqlShim.ofRows(spark, DataSourceV2Relation(
+        graftTable(table, None, files.toVector, schema, idCol),
+        DataTypeUtils.toAttributes(DriverReads.scanSchema(schema)), None,
+        None, CaseInsensitiveStringMap.empty()))
 
   /** Executor-side file identity for a scanned row: `input_file_name()`
     * with the scheme (and, for non-`file:` URIs, the authority)
@@ -770,17 +750,15 @@ final class Catalog(val spark: SparkSession, val root: String,
       idColOf(st, table))
   }
 
-  /** Snapshot descriptor for the SQL front door
-    * ([[graft.store.sql.GraftTableCatalog]]): per-file pruning stats +
-    * effective schema + surrogate-id column of `table` at `version`
-    * (None = current). None when the table has neither manifest state
-    * nor a registry schema (the SQL catalog's "no such table"). Version
-    * reads get [[readAt]]'s loud vacuumed-file check — never a silently
-    * partial table. */
+  /** Snapshot of `table` at `version` (None = current) for the SQL
+    * front door ([[graft.store.sql.GraftTableCatalog]]): its files,
+    * effective schema and surrogate-id column. None when the table has
+    * neither manifest state nor a registry schema (the SQL catalog's
+    * "no such table"). Version reads get [[readAt]]'s loud
+    * vacuumed-file check — never a silently partial table. */
   private[store] def sqlSnapshot(table: String, version: Option[Long])
-      : Option[(Vector[Catalog.SqlFile],
-          org.apache.spark.sql.types.StructType, String,
-          Map[String, Seq[String]])] = {
+      : Option[(Vector[FileEntry], org.apache.spark.sql.types.StructType,
+          String)] = {
     val st = version match {
       case Some(v) => stateAt(table, v)
       case None => tableState(table)
@@ -789,29 +767,32 @@ final class Catalog(val spark: SparkSession, val root: String,
     val files = st.map(_.files).getOrElse(Vector.empty)
     version.foreach(v => requireRetained(files,
       s"snapshot v$v of '$table'", "older snapshots"))
-    // Rename epochs (round 17, closing SURVEY §7.7.1): when live files
-    // still carry a pre-rename column name, the SQL scan reads
-    // prior-name twin columns and coalesces per row
-    // ([[graft.store.sql.RenameCoalescingScan]] — the Scala readers'
-    // readLogical shape), so SELECT works IMMEDIATELY after a rename,
-    // no compaction required. The priors map is passed only while
-    // stale files exist: a file staged AFTER the rename records null
-    // counts for every current column (the stage-time contract), so a
-    // fully migrated layout drops back to the vectorized single-schema
-    // fast path. Pre-null-stats files (rows < 0) can't prove their
-    // epoch and conservatively keep the coalescing read on.
-    val schema = schemaOf(st, table)
+    Some((files, schemaOf(st, table), idColOf(st, table)))
+  }
+
+  /** The scan table of `files` read through `schema` (prior names in
+    * field metadata), each file's deletion vector loaded. While live
+    * files still carry a pre-rename column name, the scan reads
+    * prior-name twin columns and coalesces per row
+    * ([[graft.store.sql.RenameCoalescingScan]]). A file staged AFTER
+    * the rename records null counts for every current column (the
+    * stage-time contract), so a fully migrated layout drops back to the
+    * vectorized single-schema fast path; files without null stats
+    * (rows < 0) cannot prove their epoch and keep the coalescing read
+    * on. */
+  private[store] def graftTable(table: String, version: Option[Long],
+      files: Vector[FileEntry], schema: org.apache.spark.sql.types.StructType,
+      idCol: String): GraftTable = {
     val priorsMap: Map[String, Seq[String]] = schema.fields
       .map(f => f.name -> Catalog.priorsOf(f))
       .filter(_._2.nonEmpty).toMap
     val staleExists = priorsMap.nonEmpty && files.exists(f =>
       f.rows < 0L || !priorsMap.keys.forall(f.nulls.contains))
-    Some((files.map(f =>
-        Catalog.SqlFile(f.path, f.minId, f.maxId, f.cols, f.scols,
-          f.dv.map(d => (d._1, DvIO.read(io, root, d._1))), f.rows,
-          f.nulls)),
-      Catalog.stripPriorNames(schema), idColOf(st, table),
-      if (staleExists) priorsMap else Map.empty))
+    new GraftTable(spark, root, table, version, files,
+      files.flatMap(f => f.dv.map(d => f.path -> DvIO.read(io, root, d._1)))
+        .toMap,
+      Catalog.stripPriorNames(schema), idCol,
+      if (staleExists) priorsMap else Map.empty)
   }
 
   /** Tables the SQL catalog lists: everything with manifest state plus
@@ -823,27 +804,13 @@ final class Catalog(val spark: SparkSession, val root: String,
     tableState(table).map(_.maxId).getOrElse(0L)
 
   /** Data-skipping read: rows with `column` in [lo, hi] (inclusive; Long
-    * domain per [[statLong]] — epoch micros for timestamps). Files whose
-    * manifest min/max range provably misses [lo, hi] are never opened;
-    * files WITHOUT stats for the column are conservatively kept, and the
-    * exact predicate is re-applied to the surviving rows — so the result
-    * is correct whether or not any file could be skipped. The manifest
-    * overlap test is a driver-side walk of the (bounded) file list, the
-    * same metadata pass [[liveFiles]] pruning already does for ids. */
+    * domain per [[statLong]] — epoch micros for timestamps). The scan
+    * route skips files whose manifest min/max provably misses the range
+    * ([[graft.store.sql.StatsPrune]]); files WITHOUT stats for the
+    * column are kept, and the predicate applies to every surviving
+    * row, so the result is exact whether or not a file was skipped. */
   def readRange(table: String, column: String, lo: Long, hi: Long)
-      : DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    // renamed columns: a file's stats live under whatever the column
-    // was called at stage time — consult every historical name
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.statLookup(f.cols, keys)
-      .forall { case (mn, mx) => mx >= lo && mn <= hi })
-    val scanned = readFiles(table, kept, schema, idColOf(st, table))
-    val c = statLong(scanned, column).getOrElse(col(column).cast("long"))
-    scanned.filter(c >= lo && c <= hi)
-  }
+      : DataFrame = inRange(read(table), column, lo, hi)
 
   /** Timestamp-column overload (inclusive instant range). */
   def readRange(table: String, column: String,
@@ -854,79 +821,62 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** String-column overload (inclusive, UTF-8 binary order — the order
     * Spark's default string comparison uses): files whose BOUNDED string
-    * stats provably miss [lo, hi] are never opened (bounds are outer, so
-    * skipping is sound; see [[FileEntry.scols]]), and the exact
-    * predicate is re-applied to the surviving rows. */
+    * stats provably miss [lo, hi] are skipped (bounds are outer, so
+    * skipping is sound; see [[FileEntry.scols]]). */
   def readRange(table: String, column: String, lo: String, hi: String)
-      : DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.statLookup(f.scols, keys)
-      .forall { case (mn, mx) =>
-        Catalog.utf8Compare(mx, lo) >= 0 && Catalog.utf8Compare(mn, hi) <= 0
-      })
-    val scanned = readFiles(table, kept, schema,
-      idColOf(st, table))
-    scanned.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
-  }
+      : DataFrame = inRange(read(table), column, lo, hi)
 
-  /** Null-probe read (round 15): rows where `column IS NULL`
-    * (`isNull = true`) or `IS NOT NULL` — files whose recorded null
-    * counts prove they hold NO matching row are never opened (the J3
-    * left-join-probe shape: a miss scan over a mostly-matched join
-    * column reads only the files that ever saw a NULL). A file without
-    * null stats for the column — pre-round-15, or staged before the
-    * column existed — is conservatively kept, and the exact predicate
-    * re-applies to the survivors. */
+  /** Null-probe read: rows where `column IS NULL` (`isNull = true`) or
+    * `IS NOT NULL`. Files whose recorded null counts prove they hold NO
+    * matching row are skipped (the left-join-probe shape: a miss scan
+    * over a mostly-matched join column reads only the files that ever
+    * saw a NULL); a file without null stats for the column is kept. */
   def readWhereNull(table: String, column: String,
-      isNull: Boolean): DataFrame = {
-    val st = tableState(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val schema = schemaOf(st, table)
-    val keys = Catalog.statKeys(schema, column)
-    val kept = files.filter(f => Catalog.nullProbeKeeps(f.rows,
-      Catalog.statLookup(f.nulls, keys), isNull))
-    val scanned = readFiles(table, kept, schema,
-      idColOf(st, table))
-    scanned.filter(if (isNull) col(column).isNull else col(column).isNotNull)
+      isNull: Boolean): DataFrame = whereNull(read(table), column, isNull)
+
+  /** `df` filtered to `column` in [lo, hi] in the Long domain. The
+    * filter compares the column itself (timestamps against micros
+    * literals), so the scan's stats pruning sees it. */
+  private def inRange(df: DataFrame, column: String, lo: Long,
+      hi: Long): DataFrame = df.schema(column).dataType match {
+    case TimestampType =>
+      df.filter(col(column) >= timestamp_micros(lit(lo)) &&
+        col(column) <= timestamp_micros(lit(hi)))
+    case _ =>
+      df.filter(col(column).cast("long") >= lo &&
+        col(column).cast("long") <= hi)
   }
 
-  /** Files [[readWhereNull]] would open vs the live total (test hook). */
+  private def inRange(df: DataFrame, column: String, lo: String,
+      hi: String): DataFrame =
+    df.filter(col(column) >= lit(lo) && col(column) <= lit(hi))
+
+  private def whereNull(df: DataFrame, column: String,
+      isNull: Boolean): DataFrame =
+    df.filter(if (isNull) col(column).isNull else col(column).isNotNull)
+
+  /** Files the scan of [[readWhereNull]] keeps vs the live total (test
+    * hook). */
   private[graft] def nullProbeFiles(table: String, column: String,
-      isNull: Boolean): (Seq[String], Int) = {
-    val st = readManifest().get(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.nullProbeKeeps(f.rows,
-      Catalog.statLookup(f.nulls, keys), isNull))
-      .map(_.path), files.size)
-  }
+      isNull: Boolean): (Seq[String], Int) =
+    plannedFiles(table, whereNull(scanRead(table), column, isNull))
 
-  /** Files [[readRange]] would open for the given range vs the live
-    * total (test hook for the skipping behavior). */
+  /** Files the scan of [[readRange]] keeps for the given range vs the
+    * live total (test hook for the skipping behavior). */
   private[graft] def rangeFiles(table: String, column: String,
-      lo: Long, hi: Long): (Seq[String], Int) = {
-    val st = readManifest().get(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.statLookup(f.cols, keys)
-      .forall { case (mn, mx) => mx >= lo && mn <= hi }).map(_.path),
-      files.size)
-  }
+      lo: Long, hi: Long): (Seq[String], Int) =
+    plannedFiles(table, inRange(scanRead(table), column, lo, hi))
 
   /** String twin of [[rangeFiles]] (test hook). */
   private[graft] def rangeFilesStr(table: String, column: String,
-      lo: String, hi: String): (Seq[String], Int) = {
-    val st = readManifest().get(table)
-    val files = st.map(_.files).getOrElse(Vector.empty)
-    val keys = Catalog.statKeys(schemaOf(st, table), column)
-    (files.filter(f => Catalog.statLookup(f.scols, keys)
-      .forall { case (mn, mx) =>
-        Catalog.utf8Compare(mx, lo) >= 0 && Catalog.utf8Compare(mn, hi) <= 0
-      }).map(_.path), files.size)
-  }
+      lo: String, hi: String): (Seq[String], Int) =
+    plannedFiles(table, inRange(scanRead(table), column, lo, hi))
+
+  /** The files the planned scan of `df`, a read of `table`, keeps vs
+    * the table's live total. */
+  private def plannedFiles(table: String, df: DataFrame): (Seq[String], Int) =
+    (GraftTable.scannedFiles(df.queryExecution.optimizedPlan),
+      liveFiles(table).size)
 
   /** Live file list with id stats — the pruning metadata (test hook). */
   private[graft] def liveFiles(table: String): Seq[(String, Long, Long)] =
@@ -974,8 +924,10 @@ final class Catalog(val spark: SparkSession, val root: String,
         Map[String, Long])] =
       if (present.isEmpty) Nil
       else {
-        val df = Catalog.readLogical(spark, schema,
-          present.map(f => s"$root/${f.path}"))
+        // physical rows: the audit reads every file with its deletion
+        // vector left off
+        val df = readFiles(table, present.map(_.copy(dv = None)), schema,
+          idCol)
         val effStats = statsColsOf(st, table)
         val statCols = effStats
           .filter(c => schema.fieldNames.contains(c))
@@ -1068,7 +1020,7 @@ final class Catalog(val spark: SparkSession, val root: String,
               bad.orElse(badStr).orElse(badNull).getOrElse("")
             }
         }
-      // deletion-vector claims (round 15): the sidecar must exist,
+      // deletion-vector claims: the sidecar must exist,
       // parse (magic + strictly-ascending ids — DvIO.read validates),
       // agree with the recorded count, and every dead id must sit
       // inside the file's id range AND actually exist among the file's
@@ -1150,7 +1102,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       .toDF("file", "n_rows", "ok", "problem")
   }
 
-  /** Commit-log chain audit (round 14, part of [[fsck]]): verify the
+  /** Commit-log chain audit (part of [[fsck]]): verify the
     * `_log/` delta + checkpoint chain itself — the metadata every read
     * replays through. Emits PROBLEM rows only (a healthy log adds no
     * rows): unparseable log files, stray files in `_log/` (a crashed
@@ -1556,17 +1508,17 @@ final class Catalog(val spark: SparkSession, val root: String,
       * in between: their read set is the table's slice holding the
       * SOURCE BATCH'S KEY DOMAIN, so when that domain is provable from
       * manifest stats they record [[mergeKeyRanges]] instead and
-      * reconcile against commits that stayed outside it (round 13). */
+      * reconcile against commits that stayed outside it. */
     private[Catalog] var strictTables: Set[String] = Set.empty
     /** CHECKs this transaction declared, per table — the one DDL shape
-      * that can RECONCILE against a concurrent data commit (round 15):
+      * that can RECONCILE against a concurrent data commit:
       * the new constraint is re-validated against the concurrent
       * commit's added files at commit-replay time instead of failing
       * outright ([[Catalog.reconcile]]). */
     private[Catalog] var addedChecks: Map[String, Map[String, String]] =
       Map.empty
 
-    /** Keyed-upsert domains for OCC (round 13; string keys round 14):
+    /** Keyed-upsert domains for OCC (integral and string keys):
       * table -> (key column, provable domain) of the merge/SCD2 source
       * batch — Long-normalized for integral/timestamp keys, exact
       * strings (compared in UTF-8 binary order against the files'
@@ -1659,6 +1611,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     private[Catalog] var idShifts: Map[String, Long] = Map.empty
     def shiftOf(table: String): Long =
       idShifts.getOrElse(table, 0L)
+
+    /** Root-relative paths of the provisional files a commit-time id
+      * rebase rewrote: no manifest references them once the rebased
+      * commit lands (see [[Catalog!.transaction]]). */
+    private[Catalog] var superseded: Vector[String] = Vector.empty
 
     /** Writer lease: a marker file under `_leases/` created before the
       * FIRST byte this transaction stages, deleted when the transaction
@@ -1816,7 +1773,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           schema.fields.filterNot(_.name.equalsIgnoreCase(name)))))))
     }
 
-    /** RENAME COLUMN (round 16, closing SURVEY §7.7.2): a pure-metadata
+    /** RENAME COLUMN: a pure-metadata
       * commit — no file is rewritten. The manifest records the column's
       * PRIOR names (`TableState.renames`); readers union the current
       * name with nullable prior-name twins and COALESCE, so files from
@@ -1941,7 +1898,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       staged :+= Staged(table, prev.copy(files = newFiles))
     }
 
-    /** Selective small-file compaction (round 18 — Delta's bin-packing
+    /** Selective small-file compaction (Delta's bin-packing
       * `OPTIMIZE` / auto-compaction analogue): folds ONLY the live
       * files whose visible row count (physical rows minus DV-dead
       * rows) is below `smallRows` into ~`targetRows`-row id-sorted
@@ -1962,7 +1919,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       * no dv) and renamed columns migrate to current names, exactly as
       * [[compact]]; a small file whose rows are ALL dead folds to
       * nothing — auto-compaction doubles as DV garbage collection.
-      * Pre-round-15 entries with unknown row counts (`rows == -1`)
+      * Entries with unknown row counts (`rows == -1`)
       * are never classified small. OCC: the read set equals the
       * removed set, so the commit file-level reconciles against
       * concurrent appends/disjoint rewrites like any COW rewrite —
@@ -2310,7 +2267,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       * of the tx. */
     def merge(table: String, source: DataFrame,
         keyCol: String,
-        /** Partial-SET MERGE (round 16): `Some(map)` restricts the
+        /** Partial-SET MERGE: `Some(map)` restricts the
           * MATCHED branch to rewriting only the mapped TARGET columns,
           * each taking the named SOURCE column's value — every other
           * column of a matched row keeps its TARGET value (the `WHEN
@@ -2324,8 +2281,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           * directly (the star merge's source-only validation would
           * miss a cross-column constraint). */
         matchedCols: Option[Map[String, String]] = None,
-        /** Target-reading SET expressions (round 17, closing SURVEY
-          * §7.7.3): target column -> deterministic SQL over aliases
+        /** Target-reading SET expressions: target column -> deterministic SQL over aliases
           * `t` (the MATCHED target row) and `s` (its source row) —
           * `"total" -> "t.total + s.delta"` is THE incremental-
           * aggregate merge. Evaluated on the per-pair JOINED images
@@ -2475,7 +2431,7 @@ final class Catalog(val spark: SparkSession, val root: String,
             .map(r => io.scannedToRel(root, r.getString(0))).toSet
           val (hit, carried) = prev.files.partition(f => hitRel(f.path))
           if (hit.nonEmpty && mergeOnRead) {
-            // merge-on-read (round 15): kill the matched target rows by
+            // merge-on-read: kill the matched target rows by
             // deletion vector and write ONE patch file of source images
             // under the preserved target ids — bytes written follow the
             // BATCH, not the touched files (a 100-key CDC tick against
@@ -2715,7 +2671,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       * stops referencing them. [[Catalog.vacuum]] liveness is root-wide,
       * so vacuuming the source never reclaims files a clone still
       * references. */
-    /** CREATE TABLE (round 15): a DYNAMIC table whose whole identity —
+    /** CREATE TABLE: a DYNAMIC table whose whole identity —
       * schema, surrogate-id column, CHECK set — lives in the manifest,
       * exactly like a shallow clone's (the [[Schemas.registry]] is the
       * fixture bootstrap, not a closed world). `schema` must CONTAIN
@@ -2728,8 +2684,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     def createTable(table: String,
         schema: org.apache.spark.sql.types.StructType,
         idCol: String,
-        /** Columns to collect per-file min/max stats for (round 16 —
-          * the manifest-carried analogue of [[Schemas.statsColumns]]):
+        /** Columns to collect per-file min/max stats for (the
+          * manifest-carried analogue of [[Schemas.statsColumns]]):
           * every subsequent write stages value stats for these in the
           * same job as the id stats, enabling readRange/SQL-door file
           * skipping, `optimize ZORDER`, and provable merge key-domain
@@ -2767,8 +2723,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       strictTables += table
     }
 
-    /** Re-designate a table's stats-column list (ALTER-shaped DDL,
-      * round 16): FUTURE writes collect per-file stats for `cols`;
+    /** Re-designate a table's stats-column list (ALTER-shaped
+      * DDL): FUTURE writes collect per-file stats for `cols`;
       * existing files keep whatever stats they were staged with
       * (pruning on a stat-less file conservatively keeps it — never a
       * correctness difference, so no rewrite is forced; run
@@ -2813,7 +2769,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     }
 
-    /** DROP TABLE (round 15): removes the table's manifest key as a
+    /** DROP TABLE: removes the table's manifest key as a
       * tombstoned commit. History BELOW the drop stays readable (time
       * travel, restore, clones pinned at past versions) until vacuum
       * retention passes; the data files lose their last current
@@ -2834,7 +2790,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       strictTables += table
     }
 
-    /** RENAME TABLE (round 16, closing the last rename edge): ONE
+    /** RENAME TABLE: ONE
       * commit moves the manifest key — the new name takes the full
       * TableState (files by reference, maxId high-water, schema,
       * checks, stats designation, column-rename map) and the old key
@@ -2924,7 +2880,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       staged :+= Staged(dst, st.copy(
         schema = Some(Catalog.stripPriorNames(schemaOf(Some(st), src))),
         idCol = Some(idColOf(Some(st), src)),
-        // pin the source's EFFECTIVE stats list (round 16): a clone of
+        // pin the source's EFFECTIVE stats list: a clone of
         // a registry fixture keeps collecting the same value stats on
         // its own writes and stays optimize-able — without pinning,
         // the clone's name misses the registry and new files would
@@ -2946,7 +2902,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         // a clone's only schema source — and CHECK constraints, which
         // cloneTable documents as part of identity) must survive or the
         // table becomes unreadable / silently unvalidated (schema+idCol
-        // found by StoreFuzzSpec seed 31337; checks by round-12 review)
+        // found by StoreFuzzSpec seed 31337)
         val cur = curState(t)
         staged :+= Staged(t,
           TableState(0L, Vector.empty, cur.schema, cur.checks, cur.idCol,
@@ -2989,7 +2945,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** Run `body` against a transaction; all staged writes become visible
     * atomically at the end (or not at all if body throws).
     *
-    * '''Optimistic concurrency (round-10 lock scoping).''' `body` runs
+    * '''Optimistic concurrency.''' `body` runs
     * against a SNAPSHOT manifest with NO lock held — every Spark job a
     * [[Tx.merge]] runs (duplicate-key precondition, broadcast semi-join
     * over the live table, pruned-file rewrite, insert append) stages
@@ -3010,11 +2966,11 @@ final class Catalog(val spark: SparkSession, val root: String,
     * (re-running an arbitrary body is theirs to reason about): a body
     * its caller knows to be safe to re-run goes through [[retried]].
     *
-    * Conflict detection is FILE-level (round 11): a concurrent commit
+    * Conflict detection is FILE-level: a concurrent commit
     * to a staged table aborts only when the two commits fail to
     * commute — overlapping file rewrites, schema/CHECK changes, ops
     * whose staged bytes depend on the whole live table, a commit
-    * inside a merge/SCD2's key domain (round 13: keyed upserts record
+    * inside a merge/SCD2's key domain (keyed upserts record
     * their source key range and reconcile against commits whose file
     * stats prove disjointness — many-writer dimension loads), or
     * concurrent id allocation inside a multi-table body. Commuting
@@ -3059,6 +3015,7 @@ final class Catalog(val spark: SparkSession, val root: String,
           }
           writeCommit(cur, merged)
         }
+        if (tx.superseded.nonEmpty) removeSuperseded(tx.superseded)
         // the O(live-files) checkpoint (every CheckpointInterval-th
         // commit) writes OUTSIDE the lock — no other writer serializes
         // behind it; see writeCommit. The COMMIT (the delta rename) is
@@ -3094,6 +3051,19 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
       out
     } finally tx.releaseLease()
+  }
+
+  /** Remove the provisional files a commit-time id rebase rewrote, and
+    * the staging directories they emptied, once the rebased commit is
+    * durable: no manifest references them. Best effort — a leftover is
+    * an ordinary orphan for vacuum, and a directory still holding a
+    * file is not removed. */
+  private def removeSuperseded(paths: Vector[String]): Unit = {
+    val dirs = paths.map(p => p.take(p.lastIndexOf('/')))
+      .filter(_.split('/').last.startsWith("snap-")).distinct
+    (paths ++ dirs).foreach(p =>
+      try io.deleteIfExists(io.resolve(root, p))
+      catch { case NonFatal(_) => })
   }
 
   /** File-level OCC reconciliation (Delta-style commit rebase): called
@@ -3148,7 +3118,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       conflict("the table was DROPPED concurrently")
     val b = baseOpt.getOrElse(TableState(0L, Vector.empty))
     val c = curOpt.getOrElse(TableState(0L, Vector.empty))
-    // addCheck vs concurrent data commit (round 15): the constraint was
+    // addCheck vs concurrent data commit: the constraint was
     // validated against THIS tx's snapshot; a concurrent commit only
     // invalidates that proof through the files it ADDED — re-validate
     // exactly those at replay time. A violating concurrent append makes
@@ -3201,7 +3171,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val curRemoved = b.files.filterNot(curFiles.contains).toSet
     if (removed.exists(curRemoved.contains))
       conflict("overlapping file rewrites")
-    // keyed-upsert domain check (round 13): a merge/SCD2 read exactly
+    // keyed-upsert domain check: a merge/SCD2 read exactly
     // the table slice holding its source keys, so it reconciles iff the
     // concurrent commit's whole file delta is provably OUTSIDE that
     // domain — stats ranges in the manifest are the proof. A delta file
@@ -3252,6 +3222,12 @@ final class Catalog(val spark: SparkSession, val root: String,
             col(idCol) + lit(curAlloc)).otherwise(col(idCol)))
         val rebased = stageFiles(table, shifted, idCol,
           statsColsOf(Some(c), table))
+        // what this transaction wrote itself: data files and sidecars no
+        // committed snapshot references
+        val committed = (b.files ++ c.files)
+          .flatMap(f => f.path +: f.dv.map(_._1).toSeq).toSet
+        tx.superseded ++= added.flatMap(f => f.path +: f.dv.map(_._1).toSeq)
+          .filterNot(committed)
         tx.idShifts += table -> curAlloc
         (rebased, c.maxId + alloc)
       } else (added, math.max(c.maxId, st.maxId))
@@ -3374,9 +3350,8 @@ final class Catalog(val spark: SparkSession, val root: String,
 
   /** Run `f` holding the COMMIT locks (per-root monitor + OS file
     * lock) without committing anything — for maintenance that must be
-    * atomic against concurrent commits. Since the round-10 OCC change,
-    * a `transaction {}` BODY holds no lock (only its commit phase
-    * does), so maintenance code needing mutual exclusion with commits
+    * atomic against concurrent commits. A `transaction {}` BODY holds
+    * no lock (only its commit phase does), so maintenance code needing mutual exclusion with commits
     * must take the locks explicitly. */
   private def withCommitLock[A](f: => A): A = commitLock.withLock(f)
 
@@ -3523,8 +3498,8 @@ object Catalog {
     extends RuntimeException(msg)
 
   /** Field-metadata key carrying a renamed column's PRIOR names (set
-    * by `schemaOf`, consumed by [[readLogical]] and the stat-key
-    * fallbacks; see `TableState.renames`). */
+    * by `schemaOf`, consumed by the scan's rename coalescing and the
+    * stat-key fallbacks; see `TableState.renames`). */
   private[store] val PriorNamesKey = "graft.priorNames"
 
   /** Prior names of a (possibly renamed) column, newest first. */
@@ -3577,49 +3552,6 @@ object Catalog {
             nullable = true)).toArray
       })
 
-  /** Read parquet `paths` through a LOGICAL schema whose renamed
-    * fields carry prior names in metadata (round 16): the physical
-    * read schema unions each renamed field with nullable twins under
-    * its prior names — parquet by-name resolution NULL-backfills
-    * whichever names a file lacks, so exactly the name each file
-    * carries supplies the value — and a COALESCE projects them back to
-    * the logical name (a genuine NULL stays NULL: every other twin is
-    * NULL-backfilled by construction). Tables that never renamed read
-    * exactly as before. */
-  private[store] def readLogical(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      paths: Seq[String]): DataFrame = {
-    val renamed = schema.fields.filter(f => priorsOf(f).nonEmpty)
-    if (renamed.isEmpty)
-      spark.read.schema(schema).parquet(paths: _*)
-    else {
-      spark.read.schema(physicalSchema(schema)).parquet(paths: _*)
-        .select(schema.fields.map { f =>
-          val priors = priorsOf(f)
-          if (priors.isEmpty) col(f.name)
-          else coalesce((f.name +: priors).map(col): _*).as(f.name)
-        }.toIndexedSeq: _*)
-    }
-  }
-
-  /** Per-file descriptor handed to the SQL front door: the pruning
-    * stats a scan needs and nothing else.
-    * `minId`/`maxId` are the surrogate-id stats every file carries;
-    * `cols`/`scols` as on [[FileEntry]]. */
-  private[store] final case class SqlFile(path: String, minId: Long,
-      maxId: Long, cols: Map[String, (Long, Long)],
-      scols: Map[String, (String, String)],
-      /** Deletion vector materialized for the scan: (sidecar path for
-        * diagnostics, dead ids ascending). Loaded at snapshot time —
-        * changed-rows-sized; the SQL scan masks rows of THIS file whose
-        * id is in the array ([[graft.store.sql.GraftScanBuilder]]). */
-      dv: Option[(String, Array[Long])] = None,
-      /** Physical row count (-1 unknown) + per-column null counts, the
-        * IS NULL / IS NOT NULL pruning stats (see
-        * [[FileEntry.nulls]] for the absent-column rule). */
-      rows: Long = -1L,
-      nulls: Map[String, Long] = Map.empty)
-
   /** A keyed upsert's provable source-key domain ([[Tx.mergeKeyRanges]]):
     * Long-normalized for integral/timestamp keys, bounded-binary-order
     * for string keys. */
@@ -3634,8 +3566,8 @@ object Catalog {
     * million-file manifest's string stats stay megabytes. */
   private[store] val StringStatMaxLen = 32
 
-  /** Null-probe keep rule (shared by the Scala read path and the SQL
-    * catalog's [[graft.store.sql.StatsPrune]]): a file is skippable for
+  /** Null-probe keep rule of [[graft.store.sql.StatsPrune]]: a file is
+    * skippable for
     * an `IS NULL` probe when it recorded ZERO nulls in the column, and
     * for an `IS NOT NULL` probe when every physical row is null. Both
     * claims stay sound under deletion vectors (masking only shrinks the

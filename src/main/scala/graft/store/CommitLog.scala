@@ -40,7 +40,8 @@ private[store] case class FileEntry(path: String, minId: Long,
     /** Deletion vector (merge-on-read): `Some((sidecar relative path,
       * dead-row count))` marks rows of THIS file dead by surrogate id
       * without rewriting it — the sidecar ([[DvIO]]) lists the dead
-      * ids. Readers mask ([[Catalog.readFiles]]); compaction and COW
+      * ids. Readers mask ([[sql.DvMaskedScan]] on the scan route,
+      * [[DriverReads]] on the driver); compaction and COW
       * rewrites fold the mask in (their output carries no dv).
       * Sidecars are immutable: a further delete on the same file
       * writes a NEW sidecar with the union, so time travel reads each

@@ -23,10 +23,11 @@ import org.apache.spark.sql.types.StructType
   * A file set is admitted when every file's row count is known and
   * their sum is under [[DriverReads.MaxRows]]. Each file is decoded
   * once ([[DriverParquet.read]], with the scan's physical schema and
-  * prior-name coalescing, [[Catalog.readLogical]]'s layout) and kept
-  * in a per-instance cache keyed by (file path, read schema); deletion
-  * vectors mask rows per file on the driver, as the scan's
-  * (id, source file) anti-join does. A file the store has just staged
+  * prior-name coalescing, as the scan route's
+  * [[graft.store.sql.RenameCoalescingScan]] reads it) and kept in a
+  * per-instance cache keyed by (file path, read schema); deletion
+  * vectors mask rows per file on the driver, as the scan route's
+  * [[graft.store.sql.DvMaskedScan]] masks them per file. A file the store has just staged
   * on the driver is put into the cache from the rows it wrote
   * ([[seed]]), so its first read decodes nothing.
   *
@@ -150,7 +151,7 @@ private[store] final class DriverReads(spark: SparkSession, io: StoreIO,
 
   /** Decode `paths` (root-relative) through `schema`'s physical read
     * schema and coalesce each renamed column's prior-name twins into
-    * it, as [[Catalog.readLogical]] projects a scan. */
+    * it, as the scan route's rename coalescing does. */
   private def decode(schema: StructType,
       paths: Seq[String]): Seq[Array[InternalRow]] =
     if (paths.isEmpty) Nil

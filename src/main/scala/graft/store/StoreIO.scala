@@ -110,8 +110,9 @@ private[graft] trait StoreIO {
   /** Driver-side twin of the executor's scheme-stripped
     * `input_file_name()` key (see [[Catalog]]'s `srcFileKey`): the
     * percent-encoded absolute path of a root-relative file, scheme and
-    * authority removed. Deletion-vector attribution compares in this
-    * space and fails loudly on a miss. */
+    * authority removed. Merge-on-read hit attribution (the file a
+    * matched row was scanned from) compares in this space and fails
+    * loudly on a miss. */
   def fileKeyOf(root: String, rel: String): String
 
   /** Hadoop configuration for parquet metadata IO against this store's

@@ -5,9 +5,7 @@ import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Zero-copy [[ColumnVector]] views that keep the store's merge-on-read
-  * and rename-epoch scans VECTORIZED (round 18, closing the round-17
-  * "stale-epoch and DV-masked scans run row-based end to end"
-  * residual):
+  * and rename-epoch scans VECTORIZED:
   *
   *  - [[SelectedColumnVector]] — a selection-vector view: logical row
   *    `i` reads the underlying vector's row `sel(i)`. The DV mask

@@ -1,14 +1,14 @@
 package graft.store.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Merge-on-read masking for the SQL front door: wraps the parquet scan
-  * so rows a deletion vector marked dead never surface through
-  * `spark.sql`, Delta-DV-style.
+/** Merge-on-read masking for the store's scan route: wraps the parquet
+  * scan so rows a deletion vector marked dead never surface, through
+  * `spark.sql` or a [[graft.store.Catalog]] read, Delta-DV-style.
   *
   * Mechanics: input partitions are re-planned ONE FILE PER PARTITION
   * whenever the snapshot carries any DV (per-row file attribution is
@@ -17,7 +17,7 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * file has a DV reads through a filter on the surrogate-id column
   * (binary search in the sorted dead-id array).
   *
-  * The scan stays VECTORIZED (round 18): when the inner parquet
+  * The scan stays VECTORIZED: when the inner parquet
   * factory reads columnar, the mask computes one selection array per
   * [[ColumnarBatch]] (survivor row ordinals) and serves the batch
   * through zero-copy [[SelectedColumnVector]] views — the positional-
@@ -29,15 +29,14 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * Spark's projection above the scan restores the user's column
   * list. */
 private[store] final class DvMaskedScan(
-    private[store] val inner: Scan,
+    val inner: SupportsReportStatistics,
     dvByAbsPath: Map[String, Array[Long]], idCol: String)
-    extends Scan with Batch {
+    extends WrappingScan {
 
   override def readSchema(): StructType = inner.readSchema()
   override def description(): String =
     s"${inner.description()} [graft: ${dvByAbsPath.size} deletion-" +
       "vector-masked file(s)]"
-  override def toBatch: Batch = this
 
   private def innerBatch: Batch = inner.toBatch
 

@@ -6,14 +6,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation, FileScan, FileScanBuilder}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.Catalog
+import graft.store.{Catalog, FileEntry}
 
 /** SQL front door to the COW store (Spark DataSourceV2 `TableCatalog`):
   * every consumer of the reference speaks SQL text (db.py:223-463 — all
@@ -39,14 +40,17 @@ import graft.store.Catalog
   *    resolves through [[Catalog.versionAsOf]] (micros from Spark →
   *    the store's millis domain). Vacuumed snapshots fail loudly, never
   *    partially (the [[Catalog.readAt]] contract).
-  *  - '''Scan machinery is Spark's own''': the scan builder wraps the
-  *    built-in DSv2 parquet source over the snapshot's exact file list,
-  *    so vectorized reading, nested-column pruning, and parquet
-  *    row-group/footer pushdown all apply unchanged — the graft layer
-  *    adds MANIFEST-STATS file skipping on top (files whose recorded
-  *    min/max provably miss the predicate are never even listed into
-  *    the scan; [[GraftScanBuilder]]), the readRange pruning surface
-  *    re-expressed in the planner's pushdown hook.
+  *  - '''One scan route''': the same [[GraftTable]] relation serves
+  *    `spark.sql` and every over-the-cap [[Catalog]] read (`read`,
+  *    `readAt`, the changefeeds, DML, compaction). Its scan builder
+  *    wraps the built-in DSv2 parquet source over the snapshot's exact
+  *    file list, so vectorized reading, nested-column pruning, and
+  *    parquet row-group/footer pushdown all apply unchanged; the graft
+  *    layer adds manifest-stats file skipping on top (files whose
+  *    recorded min/max or null counts provably miss the predicate are
+  *    never listed into the scan; [[StatsPrune]]), deletion-vector
+  *    masking ([[DvMaskedScan]]) and rename-epoch coalescing
+  *    ([[RenameCoalescingScan]]).
   *  - '''Writes route through the engine, or not at all''': `INSERT
   *    INTO` lands as a [[Catalog.append]] (dense engine-assigned ids,
   *    CHECK validation, OCC — the V1 write fallback, see
@@ -112,9 +116,8 @@ final class GraftTableCatalog extends TableCatalog {
     requireNs(ident.namespace())
     val c = cat
     c.sqlSnapshot(ident.name(), version) match {
-      case Some((files, schema, idCol, renamedPriors)) =>
-        new GraftTable(c.spark, storeRoot, ident.name(), version,
-          files, schema, idCol, renamedPriors)
+      case Some((files, schema, idCol)) =>
+        c.graftTable(ident.name(), version, files, schema, idCol)
       case None =>
         throw new NoSuchTableException(
           ident.namespace().toSeq :+ ident.name())
@@ -127,12 +130,11 @@ final class GraftTableCatalog extends TableCatalog {
     * column list as a non-nullable BIGINT; without the property a
     * leading `row_id BIGINT NOT NULL` is added (engine-assigned either
     * way — INSERT carries NULL for it).
-    * `TBLPROPERTIES('stats_columns'='c1,c2')` (round 16) designates the
+    * `TBLPROPERTIES('stats_columns'='c1,c2')` designates the
     * manifest-carried stats columns: every write collects per-file
     * min/max for them, so the SQL door's file skipping
-    * ([[GraftScanBuilder]]), `OPTIMIZE ... ZORDER BY`, and readRange
-    * pruning work on SQL-created tables exactly as on fixtures —
-    * without it a dynamic table is a full-scan trap at 100 TB.
+    * ([[StatsPrune]]) and `OPTIMIZE ... ZORDER BY` work on SQL-created
+    * tables exactly as on fixtures — without it a dynamic table is a full-scan trap at 100 TB.
     * Partitioning clauses are rejected: layout is the engine's job
     * (compact / optimize). */
   override def createTable(ident: Identifier, schema: StructType,
@@ -194,9 +196,8 @@ final class GraftTableCatalog extends TableCatalog {
             unsupported("nested column drops are not supported")
           tx.dropColumn(ident.name(), d.fieldNames()(0))
         case r: TableChange.RenameColumn =>
-          // round 16: metadata-only rename (manifest prior-name map);
-          // Scala reads coalesce across epochs, SQL reads require the
-          // layout migrated (compact/OPTIMIZE) — see Catalog.renameColumn
+          // metadata-only rename (manifest prior-name map); scans
+          // coalesce across epochs — see Catalog.renameColumn
           if (r.fieldNames().length != 1)
             unsupported("nested column renames are not supported")
           tx.renameColumn(ident.name(), r.fieldNames()(0), r.newName())
@@ -222,10 +223,10 @@ final class GraftTableCatalog extends TableCatalog {
     }
   }
 
-  /** SQL `ALTER TABLE <cat>.<t> RENAME TO <u>` → [[Catalog.renameTable]]
-    * (round 16): one atomic manifest-key move — files by reference,
-    * history below the rename readable under the old name. Registry
-    * tables stay loud (identity lives in code). */
+  /** SQL `ALTER TABLE <cat>.<t> RENAME TO <u>` → [[Catalog.renameTable]]:
+    * one atomic manifest-key move — files by reference, history below
+    * the rename readable under the old name. Registry tables stay loud
+    * (identity lives in code). */
   override def renameTable(oldIdent: Identifier,
       newIdent: Identifier): Unit = {
     requireNs(oldIdent.namespace()); requireNs(newIdent.namespace())
@@ -233,10 +234,18 @@ final class GraftTableCatalog extends TableCatalog {
   }
 }
 
-/** One store table pinned at one snapshot: the file list and schema are
-  * captured at `loadTable` time (snapshot isolation across the whole
-  * query, time travel = an older manifest's list + THAT version's
-  * schema).
+/** One store table pinned at one snapshot: the file list (each file's
+  * deletion vector loaded) and schema are captured when the table is
+  * built, so the whole query, AQE re-optimization included, reads that
+  * snapshot; time travel is an older manifest's list read through THAT
+  * version's schema. The SQL door resolves it by name; [[Catalog]]'s
+  * scan route builds its relation over it directly, with the scan's
+  * own output attributes (every column nullable).
+  *
+  * Two tables are equal when they read the same files through the same
+  * schema, as two file-source relations over the same paths are, so a
+  * plan fingerprint (the skew census cache, the cache manager)
+  * recognizes a re-read of an unchanged snapshot.
   *
   * Writes: `INSERT INTO` is supported through the V1 write fallback and
   * routes into [[Catalog.append]] — the TRANSACTIONAL append, so SQL
@@ -246,11 +255,13 @@ final class GraftTableCatalog extends TableCatalog {
   * a caller-supplied id would be silently reassigned, so it fails
   * loudly instead). Time-travel handles and
   * `INSERT OVERWRITE` are rejected. */
-private[sql] final class GraftTable(spark: SparkSession,
+private[store] final class GraftTable(private[sql] val spark: SparkSession,
     private[sql] val root: String,
     private[sql] val tableName: String,
     private[sql] val travelVersion: Option[Long],
-    files: Vector[Catalog.SqlFile],
+    private[sql] val files: Vector[FileEntry],
+    /** Dead ids (ascending) of each DV-carrying file, by manifest path. */
+    private[sql] val dead: Map[String, Array[Long]],
     tableSchema: StructType,
     private[sql] val idCol: String,
     /** Current name -> prior names (newest first) for columns whose
@@ -258,12 +269,20 @@ private[sql] final class GraftTable(spark: SparkSession,
       * prior-name twins and coalesce across epochs
       * ([[RenameCoalescingScan]]); empty for clean layouts (the
       * vectorized fast path). */
-    renamedPriors: Map[String, Seq[String]] = Map.empty) extends Table
+    private[sql] val renamedPriors: Map[String, Seq[String]]) extends Table
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
 
   override def name(): String =
     travelVersion.map(v => s"$tableName@v$v").getOrElse(tableName)
+
+  override def equals(o: Any): Boolean = o match {
+    case t: GraftTable => t.root == root && t.tableName == tableName &&
+      t.files == files && t.exposedSchema == exposedSchema
+    case _ => false
+  }
+  override lazy val hashCode: Int =
+    (root, tableName, files, exposedSchema).hashCode()
 
   /** The surrogate id is exposed NULLABLE: reads never produce a null
     * (the engine assigns every id), but `INSERT INTO` rows must carry
@@ -278,9 +297,42 @@ private[sql] final class GraftTable(spark: SparkSession,
       TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new GraftScanBuilder(spark, root, tableName, files, exposedSchema,
-      idCol, options, renamedPriors)
+      : ScanBuilder = new GraftScanBuilder(this, options)
+
+  /** The parquet schema of a scan: [[schema]] plus a nullable twin
+    * under each prior name of a renamed column, so by-name resolution
+    * binds whichever name each file carries (a file lacking a name
+    * NULL-backfills it) — the [[RenameCoalescingScan]] read shape. */
+  private val parquetSchema = StructType(exposedSchema.fields ++
+    renamedPriors.toSeq.flatMap { case (cur, priors) =>
+      priors.map(p => org.apache.spark.sql.types.StructField(p,
+        exposedSchema(cur).dataType, nullable = true))
+    })
+
+  /** Spark's parquet table over a kept file set, built once per set and
+    * options: every query planned over this table reuses its file
+    * listing, as a file-source relation does. */
+  private val parquetTables =
+    new java.util.concurrent.ConcurrentHashMap[(Vector[String],
+      CaseInsensitiveStringMap), ParquetTable]()
+
+  private[sql] def parquetTable(kept: Vector[FileEntry],
+      options: CaseInsensitiveStringMap): ParquetTable =
+    parquetTables.computeIfAbsent((kept.map(_.path), options), _ =>
+      ParquetTable(s"graft:$tableName", spark, options,
+        kept.map(f => s"$root/${f.path}").toList, Some(parquetSchema),
+        classOf[ParquetFileFormat]))
+
+  /** The key a scan partition reports for the file at manifest path
+    * `rel`: its DECODED absolute path (`PartitionedFile.toPath.toUri
+    * .getPath` drops scheme and authority). Scheme-less roots resolve
+    * via java.nio (local dev/CI), URI roots via Hadoop Path; both land
+    * in the same decoded-path space. */
+  private[sql] def keyOf(rel: String): String =
+    if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*"))
+      new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
+    else java.nio.file.Paths.get(root).resolve(rel)
+      .toAbsolutePath.normalize.toString
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -318,18 +370,32 @@ private[sql] final class GraftTable(spark: SparkSession,
     }
 }
 
+private[graft] object GraftTable {
+
+  /** Manifest paths of the files the planned store scans in `plan` read,
+    * after manifest-stats pruning. */
+  def scannedFiles(plan: LogicalPlan): Seq[String] = plan.collect {
+    case DataSourceV2ScanRelation(
+        DataSourceV2Relation(t: GraftTable, _, _, _, _, _), scan, _, _, _) =>
+      val byKey = t.files.map(f => t.keyOf(f.path) -> f.path).toMap
+      fileScanOf(scan).toSeq
+        .flatMap(_.fileIndex.rootPaths.map(p => byKey(p.toUri.getPath)))
+  }.flatten
+
+  private def fileScanOf(s: Scan): Option[FileScan] = s match {
+    case w: WrappingScan => fileScanOf(w.inner)
+    case f: FileScan => Some(f)
+    case _ => None
+  }
+}
+
 /** Scan builder: manifest-stats file pruning + full delegation to
   * Spark's parquet DSv2 builder over the surviving files.
   *
   * Pushdown flow: the planner hands catalyst filters here ONCE
   * ([[graft.store.sql.Dsv2Bridge]] exposes the hook); we
-  *  1. prune the snapshot's file list by the manifest stats — id-column
-  *     constraints against every file's (minId, maxId), designated
-  *     stats columns against the Long-normalized `cols` ranges
-  *     (epoch micros for timestamps), string stats against the BOUNDED
-  *     `scols` ranges in UTF-8 binary order (bounds are outer, so
-  *     skipping is sound; files without a stat are kept) — the
-  *     [[Catalog.readRange]] rules verbatim;
+  *  1. prune the snapshot's file list by the manifest stats
+  *     ([[StatsPrune]]);
   *  2. forward the same filters into the parquet builder, so footer
   *     min/max row-group skipping and the `PushedFilters` the plan
   *     displays are Spark's own;
@@ -338,44 +404,23 @@ private[sql] final class GraftTable(spark: SparkSession,
   *     can never change results, only skip provably-dead IO.
   * Column pruning ([[SupportsPushDownRequiredColumns]]) delegates
   * likewise, so `ReadSchema` is minimal. */
-private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
-    tableName: String, files: Vector[Catalog.SqlFile],
-    tableSchema: StructType, idCol: String,
-    options: CaseInsensitiveStringMap,
-    /** Current name -> prior names for columns with pre-rename bytes
-      * still live; empty keeps the vectorized single-schema fast path. */
-    renamedPriors: Map[String, Seq[String]] = Map.empty)
+private[sql] final class GraftScanBuilder(table: GraftTable,
+    options: CaseInsensitiveStringMap)
     extends Dsv2Bridge with SupportsPushDownRequiredColumns {
 
-  private var inner: Option[FileScanBuilder] = None
-  /** Files surviving stats pruning vs total (spec observability). */
-  private[sql] var prunedCount: (Int, Int) = (files.size, files.size)
-  private var kept: Vector[Catalog.SqlFile] = files
+  import table.{files, idCol, renamedPriors}
+  private val tableSchema = table.schema()
 
-  /** Nullable prior-name twin fields: included in the parquet table
-    * schema so by-name resolution binds whichever name each file
-    * carries (a file lacking a name NULL-backfills it) — the
-    * [[RenameCoalescingScan]] read shape. */
-  private val twinFields: Seq[org.apache.spark.sql.types.StructField] =
-    renamedPriors.toSeq.flatMap { case (cur, priors) =>
-      val dt = tableSchema(cur).dataType
-      priors.map(p =>
-        org.apache.spark.sql.types.StructField(p, dt, nullable = true))
-    }
-  private val innerTableSchema: StructType =
-    if (twinFields.isEmpty) tableSchema
-    else StructType(tableSchema.fields ++ twinFields)
+  private var inner: Option[FileScanBuilder] = None
+  private var kept: Vector[FileEntry] = files
 
   /** What this scan OUTPUTS (pruned schema + DV-forced id; never the
     * twins) — the coalescing wrapper projects down to it. */
   private var outSchema: StructType = tableSchema
 
-  private def mkInner(keptNow: Vector[Catalog.SqlFile]): FileScanBuilder = {
+  private def mkInner(keptNow: Vector[FileEntry]): FileScanBuilder = {
     kept = keptNow
-    val pt = ParquetTable(s"graft:$tableName", spark, options,
-      keptNow.map(f => s"$root/${f.path}").toList, Some(innerTableSchema),
-      classOf[ParquetFileFormat])
-    val b = pt.newScanBuilder(options)
+    val b = table.parquetTable(keptNow, options).newScanBuilder(options)
     inner = Some(b)
     b
   }
@@ -389,7 +434,6 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
     // manifest-stats pruning sees EVERY filter (prior-name stats keep
     // renamed columns prunable across epochs)...
     val keptNow = StatsPrune.prune(files, idCol, filters, renamedPriors)
-    prunedCount = (keptNow.size, files.size)
     // ...but filters touching a renamed column must NOT reach parquet
     // while stale files live: record-level filtering treats an absent
     // column as all-NULL and would silently drop every pre-rename row.
@@ -425,22 +469,13 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
   }
 
   override def build(): Scan = {
-    val scan = innerOrAll().build()
+    // a file scan reports its size, which the wrappers pass on
+    val scan = innerOrAll().build().asInstanceOf[SupportsReportStatistics]
     val dvd = kept.filter(_.dv.isDefined)
-    // DV attribution key = the partition file's DECODED absolute path
-    // ([[DvMaskedReaderFactory.deadFor]] reads `toPath.toUri.getPath`,
-    // which drops scheme + authority): scheme-less roots resolve via
-    // java.nio (local dev/CI), URI roots via Hadoop Path — both land in
-    // the same decoded-path comparison space
-    def dvKey(rel: String): String =
-      if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*"))
-        new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
-      else java.nio.file.Paths.get(root).resolve(rel)
-        .toAbsolutePath.normalize.toString
     val masked =
       if (dvd.isEmpty) scan
       else new DvMaskedScan(scan,
-        dvd.map(f => dvKey(f.path) -> f.dv.get._2).toMap, idCol)
+        dvd.map(f => table.keyOf(f.path) -> table.dead(f.path)).toMap, idCol)
     if (renamedPriors.isEmpty) masked
     else {
       val innerRead = masked.readSchema()
@@ -453,4 +488,15 @@ private[sql] final class GraftScanBuilder(spark: SparkSession, root: String,
         innerRead.fields.map(_.dataType))
     }
   }
+}
+
+/** A scan wrapping the store's parquet scan ([[DvMaskedScan]],
+  * [[RenameCoalescingScan]]). It passes the inner scan's size estimate
+  * on: a scan without one is sized at `spark.sql.defaultSizeInBytes`
+  * and never broadcast. */
+private[store] trait WrappingScan extends Scan with Batch
+    with SupportsReportStatistics {
+  def inner: SupportsReportStatistics
+  override def toBatch: Batch = this
+  override def estimateStatistics(): Statistics = inner.estimateStatistics()
 }

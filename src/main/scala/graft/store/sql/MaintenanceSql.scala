@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 
 import graft.store.Catalog
 
-/** Maintenance statements as SQL (round 15) — the Delta-SQL surface for
+/** Maintenance statements as SQL — the Delta-SQL surface for
   * the engine's layout/retention ops, via a DELEGATING parser
   * (`SparkSessionExtensions.injectParser`, the DeltaSqlParser pattern):
   *

@@ -2,46 +2,43 @@ package graft.store.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, SupportsReportStatistics}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
-/** Cross-rename-epoch reads for the SQL front door (round 17, closing
-  * SURVEY §7.7.1): after `RENAME COLUMN a -> b`, live files written
-  * before the rename still carry their bytes under `a`. A single-schema
-  * parquet scan asked for `b` would silently NULL those files' values —
-  * which is why the SQL door used to REFUSE until compaction migrated
-  * the layout. This wrapper serves the scan immediately instead, the
-  * same way the Scala readers do ([[graft.store.Catalog]] readLogical):
-  * the inner parquet scan reads the CURRENT name plus nullable
-  * prior-name twin columns (parquet by-name resolution NULL-backfills
-  * whichever name a file lacks), and each row lands the first non-null
-  * across (current, priors newest-first) in the current column's slot.
-  * No epoch attribution is needed: a post-rename file has NULL twins, a
-  * pre-rename file has a NULL current column, and a genuine NULL stays
-  * NULL through the coalesce (the rename guards forbid a file carrying
-  * both names).
+/** Cross-rename-epoch reads of the store's scan route: after `RENAME
+  * COLUMN a -> b`, live files written before the rename still carry
+  * their bytes under `a`. A single-schema parquet scan asked for `b`
+  * would silently NULL those files' values. This wrapper serves the
+  * scan immediately instead: the inner parquet scan reads the CURRENT
+  * name plus nullable prior-name twin columns (parquet by-name
+  * resolution NULL-backfills whichever name a file lacks), and each row
+  * lands the first non-null across (current, priors newest-first) in
+  * the current column's slot. No epoch attribution is needed: a
+  * post-rename file has NULL twins, a pre-rename file has a NULL
+  * current column, and a genuine NULL stays NULL through the coalesce
+  * (the rename guards forbid a file carrying both names).
   *
   * The wrapper PROJECTS the twins away: `readSchema` is exactly the
   * pruned schema Spark asked for (plus the DV-forced surrogate id when
   * merge-on-read masking is active — the proven-extra case), so the
   * plan above sees only logical columns.
   *
-  * The scan stays VECTORIZED (round 18): when the inner factory reads
-  * columnar, each renamed output column is served through a zero-copy
+  * The scan stays VECTORIZED: when the inner factory reads columnar,
+  * each renamed output column is served through a zero-copy
   * [[CoalescedColumnVector]] view over its candidate vectors (one
   * per-batch pick pass resolves which name supplies each row; plain
   * columns pass through untouched), and composition with the DV mask's
   * selection vectors is transparent — both speak the ColumnVector API.
-  * Row-based inners copy into a fresh [[GenericInternalRow]] as
-  * before. Filters on renamed columns are NOT pushed into parquet
-  * while stale files live ([[GraftScanBuilder]]): parquet record-level
-  * filtering treats an absent column as all-NULL and would silently
-  * drop every pre-rename row; they stay in Spark's Filter node above
-  * and still prune files through the manifest stats (which
-  * [[StatsPrune]] consults under prior names too). */
+  * Row-based inners copy into a fresh [[GenericInternalRow]]. Filters
+  * on renamed columns are NOT pushed into parquet while stale files
+  * live ([[GraftScanBuilder]]): parquet record-level filtering treats
+  * an absent column as all-NULL and would silently drop every
+  * pre-rename row; they stay in Spark's Filter node above and still
+  * prune files through the manifest stats (which [[StatsPrune]]
+  * consults under prior names too). */
 private[store] final class RenameCoalescingScan(
-    private[store] val inner: Scan,
+    val inner: SupportsReportStatistics,
     /** Output schema (twins projected away). */
     outSchema: StructType,
     /** Per OUTPUT ordinal: candidate ordinals in the INNER read schema,
@@ -49,13 +46,12 @@ private[store] final class RenameCoalescingScan(
       * first; plain columns carry a single candidate). */
     candidates: Array[Array[Int]],
     /** Inner read schema field types, for [[InternalRow.get]]. */
-    innerTypes: Array[DataType]) extends Scan with Batch {
+    innerTypes: Array[DataType]) extends WrappingScan {
 
   override def readSchema(): StructType = outSchema
   override def description(): String =
     s"${inner.description()} [graft: rename-epoch coalesce over " +
       s"${candidates.count(_.length > 1)} renamed column(s)]"
-  override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
     inner.toBatch.planInputPartitions()

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.store.Catalog
 
-/** SQL DML routed into the transactional store (round 15): `UPDATE`,
+/** SQL DML routed into the transactional store: `UPDATE`,
   * `DELETE FROM`, and `MERGE INTO` as pure SQL text against the
   * [[GraftTableCatalog]], executed by the SAME engine paths the Scala
   * API uses — [[Catalog.update]] / [[Catalog.delete]] /
@@ -45,10 +45,10 @@ import graft.store.Catalog
   *  - MERGE shapes beyond the keyed upsert [[Catalog.merge]] implements:
   *    the matched branch takes a full star, any SUBSET (un-SET columns
   *    keep their target values), deterministic SET EXPRESSIONS over
-  *    SOURCE columns (round 16 — evaluated on the source batch as
-  *    synthetic columns), or TARGET-reading expressions like
-  *    `SET total = t.total + s.delta` (round 17 — evaluated on the
-  *    engine's per-pair joined images, the incremental-aggregate
+  *    SOURCE columns (evaluated on the source batch as synthetic
+  *    columns), or TARGET-reading expressions like
+  *    `SET total = t.total + s.delta` (evaluated on the engine's
+  *    per-pair joined images, the incremental-aggregate
   *    merge); conditional actions and NOT MATCHED BY SOURCE still
   *    have no engine analogue and throw pointed errors.
   *
@@ -119,8 +119,8 @@ final case class GraftSqlDmlRule(session: SparkSession)
                 "unconditional WHEN NOT MATCHED THEN INSERT clause")
           }
           // the MATCHED branch may SET a SUBSET of columns and use
-          // deterministic expressions over SOURCE columns (round 16,
-          // partial-SET merge): un-SET columns keep their target
+          // deterministic expressions over SOURCE columns (partial-SET
+          // merge): un-SET columns keep their target
           // values; INSERT must still cover every column with
           // same-named pass-throughs
           val matchedSet = upsertShape(upSets, "WHEN MATCHED THEN UPDATE",
@@ -219,12 +219,12 @@ private[sql] object GraftSqlDml {
   sealed trait SetValue extends Serializable
   /** The source's same-named column (the star/pass-through shape). */
   case object SrcSame extends SetValue
-  /** A deterministic expression over SOURCE columns only (round 16) —
+  /** A deterministic expression over SOURCE columns only —
     * evaluated into a synthetic `__set_<col>` source column before the
     * merge, so the engine still sees a plain column mapping. */
   final case class SrcExpr(sql: String) extends SetValue
-  /** A deterministic expression reading TARGET columns (round 17,
-    * closing SURVEY §7.7.3 — `SET total = t.total + s.delta`): SQL over
+  /** A deterministic expression reading TARGET columns
+    * (`SET total = t.total + s.delta`): SQL over
     * aliases `t`/`s`, handed to [[graft.store.Catalog]]'s
     * `merge(matchedExprs)` which evaluates it on the per-pair joined
     * images of the touched files (change-proportional — see the engine
@@ -257,9 +257,9 @@ private[sql] object GraftSqlDml {
     * and return the assigned non-id, non-key columns (lowercase) with
     * each one's [[SetValue]] shape: [[SrcSame]] = the source's
     * same-named column, [[SrcExpr]] = a deterministic EXPRESSION over
-    * source columns (round 16 — evaluated into a synthetic source
+    * source columns (evaluated into a synthetic source
     * column at run time), [[PairExpr]] = a deterministic expression
-    * also reading TARGET columns (round 17 — evaluated on the engine's
+    * also reading TARGET columns (evaluated on the engine's
     * per-pair joined images; MATCHED branch only). The surrogate id may
     * appear only as a pass-through of a source column named like it —
     * enforced all-NULL at run time (ids are engine-assigned) — or a
@@ -304,7 +304,7 @@ private[sql] object GraftSqlDml {
             Some(name.toLowerCase -> (SrcExpr(
               exprSql(v, s"MERGE $branch SET $name =")): SetValue))
           else if (v.references.subsetOf(sourceOut ++ targetOut))
-            // target-reading (round 17): evaluated on the engine's
+            // target-reading: evaluated on the engine's
             // per-pair joined images — `SET total = t.total + s.delta`
             Some(name.toLowerCase -> (PairExpr(
               pairExprSql(v, targetOut, sourceOut,
@@ -380,7 +380,7 @@ final case class GraftUpdateCommand(root: String, table: String,
 final case class GraftMergeCommand(root: String, table: String,
     keyCol: String, idCol: String,
     source: LogicalPlan,
-    /** Partial-SET assignments (rounds 16/17): target column -> its
+    /** Partial-SET assignments: target column -> its
       * [[GraftSqlDml.SetValue]] shape — same-named pass-through,
       * source-only expression (evaluated into a synthetic `__set_<col>`
       * source column before the merge), or a target-reading `t`/`s`

@@ -4,13 +4,14 @@ import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expre
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.store.Catalog
+import graft.store.{Catalog, FileEntry}
 
-/** Manifest-stats file pruning for the SQL front door: turns the
-  * planner's catalyst filters into per-column [lo, hi] windows and drops
-  * files whose recorded stats provably miss them — the
-  * [[Catalog.readRange]] skipping rules applied to arbitrary SQL
-  * predicates.
+/** Manifest-stats file pruning for the store's scan route: turns the
+  * planner's catalyst filters into per-column [lo, hi] windows and null
+  * probes, and drops files whose recorded stats provably miss them —
+  * for a `spark.sql` predicate, a DataFrame filter over
+  * [[Catalog.read]], and [[Catalog.readRange]] /
+  * [[Catalog.readWhereNull]] alike.
   *
   * Soundness rules (each makes pruning conservative, never lossy):
   *  - only top-level conjuncts constrain (an `OR` arm never prunes);
@@ -173,10 +174,10 @@ private[sql] object StatsPrune {
     * with, and those stats describe the SAME logical column, so
     * falling back per file keeps renamed columns prunable across
     * epochs (a file recording neither name is kept — conservative). */
-  def prune(files: Vector[Catalog.SqlFile], idCol: String,
+  def prune(files: Vector[FileEntry], idCol: String,
       filters: Seq[Expression],
       priors: Map[String, Seq[String]] = Map.empty)
-      : Vector[Catalog.SqlFile] = {
+      : Vector[FileEntry] = {
     val w = windows(filters)
     val probes = nullProbes(filters)
     if (w.longs.isEmpty && w.strs.isEmpty && probes.isEmpty) return files

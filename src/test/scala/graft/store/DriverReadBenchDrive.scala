@@ -8,6 +8,10 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.functions._
 
 import graft.service.Portal
@@ -58,6 +62,12 @@ import graft.service.Portal
   * stream ingest's batch shape), on a warm instance, and a
   * '''compactSmall''' folding 12 job-staged files of 278 rows, each on a
   * fresh table: Spark jobs and ms per call, median of `reps`.
+  *
+  * The scan route over the cap is timed on a `users` table of 64 files
+  * of 256 rows: `read(t).count()` '''unfiltered''' and filtered to one
+  * file's id range ('''one-file-ids''', which manifest-stats pruning
+  * narrows to that file): files scanned, Spark jobs and ms per call,
+  * median of `reps` after 3 warm calls.
   *
   * Usage: DriverReadBenchDrive [sizes,comma-separated] [rowsPerFile] [reps]
   * (sbt: `Test/runMain graft.store.DriverReadBenchDrive 256 256 7`)
@@ -255,6 +265,46 @@ object DriverReadBenchDrive {
         val t = median(runs.map(_._2))
         println(f"[readbench] jobroute $name%-12s $j%4d $t%7.1f")
     }
+
+    // the scan route over the cap: 64 files of 256 rows, counted whole
+    // and filtered to one file's id range (manifest-stats pruning)
+    println("[readbench] scan64 call files jobs ms")
+    val big = seed(64 * 256, perFile = 256)
+    val (lo, hi) = big.liveFiles("users").map(f => (f._2, f._3)).minBy(_._1)
+    def scanned(df: DataFrame): Int = deepScans(
+      df.queryExecution.executedPlan).sum
+    Seq[(String, () => DataFrame)](
+      "unfiltered" -> (() => big.read("users")),
+      "one-file-ids" -> (() => big.read("users")
+        .filter(col("user_id").between(lo, hi)))).foreach {
+      case (name, frame) =>
+        (1 to 3).foreach(_ => frame().count())
+        val runs = (1 to reps).map(_ => jobsMs(frame().count()))
+        val j = median(runs.map(_._1.toDouble)).toInt
+        val t = median(runs.map(_._2))
+        println(f"[readbench] scan64 $name%-12s ${scanned(frame())}%5d " +
+          f"$j%4d $t%7.1f")
+    }
     spark.stop()
+  }
+
+  /** Files each store scan in `p` reads (AQE stages unwrapped). */
+  private def deepScans(p: SparkPlan): Seq[Int] = {
+    def files(s: Scan): Int = s match {
+      case w: graft.store.sql.WrappingScan => files(w.inner)
+      case f: FileScan => f.fileIndex.inputFiles.length
+      case _ => 0
+    }
+    val here = p match {
+      case b: BatchScanExec => Seq(files(b.scan))
+      case f: FileSourceScanExec => Seq(f.relation.location.inputFiles.length)
+      case _ => Nil
+    }
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }
+    here ++ kids.flatMap(deepScans)
   }
 }

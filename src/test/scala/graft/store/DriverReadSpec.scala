@@ -7,12 +7,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
 import graft.service.Portal
+import graft.store.sql.GraftTable
 
 /** The two read routes of the store: a snapshot whose known row count
   * is under [[DriverReads.MaxRows]] is served from driver memory as a
@@ -58,8 +59,9 @@ class DriverReadSpec extends SparkSuite {
     df.queryExecution.analyzed.isInstanceOf[LocalRelation]
 
   private def scanned(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l }
-      .nonEmpty
+    df.queryExecution.analyzed.collectFirst {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] => r
+    }.nonEmpty
 
   /** The driver-served read equals the scan of the same snapshot: same
     * schema (field order, types, nullability, metadata) and the same
@@ -196,7 +198,8 @@ class DriverReadSpec extends SparkSuite {
     assert(served(cat.read("big")))
     cat.append("big", spark.range(0, 1, 1, 1).toDF("v"))
     val df = cat.read("big")
-    assert(scanned(df) && df.inputFiles.nonEmpty)
+    assert(scanned(df) &&
+      GraftTable.scannedFiles(df.queryExecution.optimizedPlan).nonEmpty)
     assert(df.count() == DriverReads.MaxRows.toLong)
   }
 

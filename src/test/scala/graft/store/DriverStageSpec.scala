@@ -58,7 +58,7 @@ class DriverStageSpec extends SparkSuite {
   private def local(rs: Seq[Row], schema: StructType = dataSchema)
       : DataFrame = spark.createDataFrame(rs.asJava, schema)
 
-  private def files(cat: Catalog, table: String): Vector[Catalog.SqlFile] =
+  private def files(cat: Catalog, table: String): Vector[FileEntry] =
     cat.sqlSnapshot(table, None).get._1
 
   private def parquetUnder(cat: Catalog, table: String): Seq[String] = {
@@ -185,7 +185,8 @@ class DriverStageSpec extends SparkSuite {
     assert(r2.length == 1 && r2.head.getAs[String]("name") == "renamed" &&
       r2.head.getAs[Int]("n") == 42)
     val fs = files(cat, "parity")
-    assert(fs.size == 2 && fs.exists(_.dv.exists(_._2.toSeq == Seq(2L))))
+    assert(fs.size == 2 && fs.exists(_.dv.exists(d =>
+      DvIO.read(cat.io, cat.root, d._1).toSeq == Seq(2L))))
     val ch = cat.changesBetween("parity", v0, v1).collect()
     assert(ch.length == 2)
     // ids follow `big` ascending, NULL first: id 2 is big = -5

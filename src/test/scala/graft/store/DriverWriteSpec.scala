@@ -65,7 +65,8 @@ class DriverWriteSpec extends SparkSuite {
     * value and string stats, row and null counts, the DV's dead ids. */
   private def shapes(cat: Catalog, table: String) =
     cat.sqlSnapshot(table, None).get._1.map(f => (f.minId, f.maxId, f.cols,
-      f.scols, f.dv.map(_._2.toSeq), f.rows, f.nulls))
+      f.scols, f.dv.map(d => DvIO.read(cat.io, cat.root, d._1).toSeq), f.rows,
+      f.nulls))
 
   private def contents(df: DataFrame, idCol: String): Seq[Row] =
     df.orderBy(idCol).collect().toSeq
@@ -124,7 +125,8 @@ class DriverWriteSpec extends SparkSuite {
     assert(cat.read("parity").count() == 4L)
     // all three landed as merge-on-read: one DV'd file and two patches
     val fs = cat.sqlSnapshot("parity", None).get._1
-    assert(fs.size == 3 && fs.flatMap(_.dv).map(_._2.toSeq.sorted) ==
+    assert(fs.size == 3 && fs.flatMap(_.dv)
+      .map(d => DvIO.read(cat.io, cat.root, d._1).toSeq.sorted) ==
       Seq(Seq(2L, nullName, 5L).sorted))
   }
 
@@ -159,7 +161,8 @@ class DriverWriteSpec extends SparkSuite {
     assert(r2.map(_.getAs[Int]("n")).toSeq == Seq(2))
     // both hit files now mask id 2; only the newest patch holds it
     val fs = cat.sqlSnapshot("parity", None).get._1
-    assert(fs.count(_.dv.exists(_._2.contains(2L))) == 2 && fs.size == 4)
+    assert(fs.count(_.dv.exists(d =>
+      DvIO.read(cat.io, cat.root, d._1).contains(2L))) == 2 && fs.size == 4)
     val (gone, _, _) = routesAgree(build, "parity", "row_id")(
       _.delete("parity", col("row_id") === 2L))
     assert(gone.read("parity").filter(col("row_id") === 2L).isEmpty)

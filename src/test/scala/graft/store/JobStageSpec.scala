@@ -90,7 +90,7 @@ class JobStageSpec extends SparkSuite {
     spark.createDataFrame(rs.asJava, dataSchema)
 
   private def entries(cat: Catalog, table: String = "t")
-      : Vector[Catalog.SqlFile] = cat.sqlSnapshot(table, None).get._1
+      : Vector[FileEntry] = cat.sqlSnapshot(table, None).get._1
 
   /** Every path under the table's directory. */
   private def tree(cat: Catalog, table: String = "t"): Set[String] = {
@@ -170,7 +170,7 @@ class JobStageSpec extends SparkSuite {
     assertFsckClean(cat)
     // rebase: a commit lands on the table mid-transaction, so the
     // transaction's staged job-route file is rewritten with shifted ids
-    // (the provisional file stays behind as an orphan)
+    // and the provisional file is removed once the commit lands
     val before = cat.maxId("t")
     cat.transaction { tx =>
       tx.append("t", nonLocal(rows(8, 2000)), orderBy = Seq("k"))
@@ -179,7 +179,7 @@ class JobStageSpec extends SparkSuite {
     assert(cat.maxId("t") == before + 10)
     val ids = cat.read("t").select("row_id").collect().map(_.getLong(0))
     assert(ids.sorted.toSeq == (1L to cat.maxId("t")).toSeq)
-    assertFsckClean(cat, orphans = true)
+    assertFsckClean(cat)
   }
 
   test("a violated CHECK on a multi-partition job-route append lands " +
