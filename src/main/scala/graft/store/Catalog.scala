@@ -8,7 +8,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, BoundReference, Cast, EqualTo, Expression, InterpretedOrdering, JoinedRow, Literal, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThanOrEqual, InterpretedOrdering, JoinedRow, LessThanOrEqual, Literal, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
@@ -19,7 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import CommitLog.{Manifest, canonFiles}
-import graft.store.sql.GraftTable
+import graft.store.sql.{GraftTable, StatsPrune}
 
 /** Copy-on-write table store over parquet with a log-structured
   * manifest (SURVEY §7.3; on-disk format in [[CommitLog]]).
@@ -695,24 +695,6 @@ final class Catalog(val spark: SparkSession, val root: String,
         DataTypeUtils.toAttributes(DriverReads.scanSchema(schema)), None,
         None, CaseInsensitiveStringMap.empty()))
 
-  /** Executor-side file identity for a scanned row: `input_file_name()`
-    * with the scheme (and, for non-`file:` URIs, the authority)
-    * stripped — a PERCENT-ENCODED absolute path (input_file_name
-    * reports the URL-encoded URI, so '/my store/' appears as
-    * '/my%20store/'; comparisons must stay in encoded space). */
-  private def srcFileKey: org.apache.spark.sql.Column =
-    regexp_replace(
-      regexp_replace(input_file_name(), "^file:/+", "/"),
-      "^[A-Za-z][A-Za-z0-9+.-]*://[^/]*", "")
-
-  /** Driver-side twin of [[srcFileKey]] ([[StoreIO.fileKeyOf]]): the
-    * same percent-encoded absolute path for a manifest-relative path.
-    * [[Tx]]'s `hitPathOf` additionally fails LOUDLY when a scanned key
-    * matches no manifest entry, so any residual encoding divergence
-    * surfaces as an error — never as a silently-unmasked deletion
-    * vector. */
-  private def fileKey(rel: String): String = io.fileKeyOf(root, rel)
-
   /** Decoded small file sets, the driver route of [[read]],
     * [[Tx.read]] and the pinned [[Tx.update]] and [[Tx.delete]]. */
   private[store] val driverReads = new DriverReads(spark, io, root)
@@ -783,9 +765,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   private[store] def graftTable(table: String, version: Option[Long],
       files: Vector[FileEntry], schema: org.apache.spark.sql.types.StructType,
       idCol: String): GraftTable = {
-    val priorsMap: Map[String, Seq[String]] = schema.fields
-      .map(f => f.name -> Catalog.priorsOf(f))
-      .filter(_._2.nonEmpty).toMap
+    val priorsMap = Catalog.priorNames(schema)
     val staleExists = priorsMap.nonEmpty && files.exists(f =>
       f.rows < 0L || !priorsMap.keys.forall(f.nulls.contains))
     new GraftTable(spark, root, table, version, files,
@@ -891,7 +871,9 @@ final class Catalog(val spark: SparkSession, val root: String,
     * them), so after a migration, a restore, or any out-of-band copy
     * this is the audit a 100 TB deployment runs before trusting reads.
     *
-    * Returns one row per live file: (file, n_rows, ok, problem), plus
+    * Returns one row per live file: (file, n_rows, ok, problem), one
+    * row per scanned file that matches no live entry (named by its
+    * scanned URI; [[GraftTable.manifestPathOf]]), plus
     * one diagnosis row per ORPHANED data file — a parquet under the
     * table's directory that NO manifest (current or retained history)
     * references. Orphans are unreachable by any read — they are
@@ -919,7 +901,7 @@ final class Catalog(val spark: SparkSession, val root: String,
     val missing = entries.filterNot(f =>
       io.exists(io.resolve(root, f.path)))
     val present = entries.filterNot(missing.contains)
-    val observedRows: Seq[(String, Long, Long, Long,
+    val observedRows: Seq[(Either[(String, String), String], Long, Long, Long,
         Map[String, (Long, Long)], Map[String, (String, String)],
         Map[String, Long])] =
       if (present.isEmpty) Nil
@@ -946,9 +928,14 @@ final class Catalog(val spark: SparkSession, val root: String,
           } ++ schema.fieldNames.toSeq.map { c =>
             count(when(col(c).isNull, 1)).as(s"nc_$c")
           })
+        val pathOf = GraftTable.manifestPathOf(root, present)
         df.groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
           .collect().toSeq.map { r =>
-            val rel = io.scannedToRel(root, r.getString(0))
+            // a scanned file no entry names is reported, not thrown
+            val rel = try Right(pathOf(r.getString(0))) catch {
+              case e: IllegalStateException =>
+                Left((r.getString(0), e.getMessage))
+            }
             val cols = statCols.flatMap { c =>
               val (i, j) = (r.fieldIndex(s"mn_$c"), r.fieldIndex(s"mx_$c"))
               if (r.isNullAt(i) || r.isNullAt(j)) None
@@ -965,7 +952,10 @@ final class Catalog(val spark: SparkSession, val root: String,
               oNulls)
           }
       }
-    val observed = observedRows.map(o => o._1 -> o).toMap
+    val observed = observedRows.flatMap(o => o._1.toOption.map(_ -> o)).toMap
+    val unplaced = observedRows.flatMap(o => o._1.left.toOption.map {
+      case (name, problem) => (name, o._2, false, problem)
+    })
     // columns the CURRENT schema makes observable: a manifest claim for
     // one of these that reads back without a range (all-NULL column) is
     // unverifiable and must be flagged, not silently passed — it could
@@ -1098,7 +1088,7 @@ final class Catalog(val spark: SparkSession, val root: String,
             "an in-flight transaction's staged-but-uncommitted file; let " +
             "vacuum reclaim it, never delete by hand)"))
       }
-    (verdicts ++ orphans ++ logChainProblems())
+    (verdicts ++ unplaced ++ orphans ++ logChainProblems())
       .toDF("file", "n_rows", "ok", "problem")
   }
 
@@ -1582,24 +1572,19 @@ final class Catalog(val spark: SparkSession, val root: String,
       range
     }
 
-    private def pruneByDomain(table: String, files: Vector[FileEntry],
-        keyCol: String,
-        domain: Option[Catalog.KeyDomain]): Vector[FileEntry] = {
-      // a renamed merge key's stats live under historical names on
-      // pre-rename files — remap each entry's maps to the logical key
-      val keys = Catalog.statKeys(schemaIdOf(table)._1, keyCol)
-      def remap[A](m: Map[String, A]): Map[String, A] =
-        Catalog.statLookup(m, keys).map(v => Map(keyCol -> v))
-          .getOrElse(Map.empty)
-      domain match {
-        case Some(Catalog.LongDomain(lo, hi)) =>
-          Catalog.pruneByDomain[FileEntry](files, f => remap(f.cols),
-            keyCol, Some((lo, hi)))
-        case Some(Catalog.StrDomain(lo, hi)) =>
-          Catalog.pruneByDomainStr[FileEntry](files, f => remap(f.scols),
-            keyCol, lo, hi)
-        case None => files
-      }
+    /** Manifest paths of the files among `files` holding a row of
+      * `rows` (a frame over exactly `files`) whose `keyCol` is among
+      * `keys`: one broadcast semi-join, each row's file named by
+      * `input_file_name()` and mapped back by
+      * [[GraftTable.manifestPathOf]]. Merge and SCD2 rewrite only these
+      * files. */
+    private def hitPaths(rows: DataFrame, files: Vector[FileEntry],
+        keys: DataFrame, keyCol: String): Set[String] = {
+      val pathOf = GraftTable.manifestPathOf(root, files)
+      rows.withColumn("__file", input_file_name())
+        .join(broadcast(keys), Seq(keyCol), "left_semi")
+        .select("__file").distinct().collect()
+        .map(r => pathOf(r.getString(0))).toSet
     }
 
     /** Per-table id shift applied by a commit-time rebase (see
@@ -1955,10 +1940,10 @@ final class Catalog(val spark: SparkSession, val root: String,
     /** Clustered compaction — `OPTIMIZE ... ZORDER BY` (Delta/Iceberg
       * analogue): a LAYOUT-ONLY commit that rewrites the live file set
       * clustered on one or two designated columns, so every file's
-      * min/max stats window is tight on THOSE columns and the stats
-      * pruning surfaces ([[Catalog.readRange]], the SQL door's
-      * file skipping, [[pruneByDomain]] merge pre-pruning) skip files
-      * a conjunctive box predicate provably misses. [[compact]] is the
+      * min/max stats window is tight on THOSE columns and the one stats
+      * test ([[graft.store.sql.StatsPrune]]: [[Catalog.readRange]], the
+      * SQL door's file skipping, merge candidates) skips files a
+      * conjunctive box predicate provably misses. [[compact]] is the
       * id-clustered special case; this is what the merge scaladoc's
       * "pair the table with a key-clustered layout" refers to — after
       * `optimize(t, Seq(keyCol))`, a CDC tick's key batch hits the few
@@ -2088,8 +2073,9 @@ final class Catalog(val spark: SparkSession, val root: String,
       *    the driver, so the optimized plan already holds the result and
       *    no Spark job runs; a row's file is `hit(index)`.
       *  - '''scan''' route, otherwise: one job over the scanned hit
-      *    files, each row keyed by `input_file_name()` and attributed by
-      *    [[hitPathOf]], which fails loudly on a key it cannot place. */
+      *    files, each row's file named by `input_file_name()` and mapped
+      *    back by [[GraftTable.manifestPathOf]], which fails loudly on a
+      *    name it cannot place. */
     private def pinnedRows(table: String, hit: Vector[FileEntry],
         schema: StructType, idCol: String, select: DataFrame => DataFrame)
         : (DataFrame, Seq[(String, Long)]) = {
@@ -2110,9 +2096,9 @@ final class Catalog(val spark: SparkSession, val root: String,
               LocalRelation(DataTypeUtils.toAttributes(withIdx), data))),
             "__graft_src_idx", (r: Row, at: Int) => hit(r.getInt(at)).path)
         case None =>
-          val keyed = hitPathOf(hit)
+          val keyed = GraftTable.manifestPathOf(root, hit)
           (select(readFiles(table, hit, schema, idCol))
-              .withColumn("__graft_src_file", srcFileKey),
+              .withColumn("__graft_src_file", input_file_name()),
             "__graft_src_file", (r: Row, at: Int) => keyed(r.getString(at)))
       }
       val at = images.schema.fieldIndex(src)
@@ -2137,26 +2123,14 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     }
 
-    /** Scan-route attribution: the manifest path among `hit` of a
-      * scanned row's encoded file key ([[srcFileKey]]), failing loudly
-      * on a key that matches no hit entry — a path-encoding divergence
-      * must never become a silent no-op mask. */
-    private def hitPathOf(hit: Vector[FileEntry]): String => String = {
-      val byKey = hit.map(f => fileKey(f.path) -> f.path).toMap
-      key => byKey.getOrElse(key, throw new IllegalStateException(
-        s"merge-on-read file attribution failed: scanned row of " +
-          s"'$key' matches no hit manifest entry " +
-          "(path-encoding divergence?)"))
-    }
-
-    /** (manifest file path -> dead ids) of `matched` rows, attributed by
-      * [[hitPathOf]] — collected to the driver, which is
-      * changed-rows-sized by the merge-on-read contract (the sidecar
-      * write needs the ids driver-side anyway). */
+    /** (manifest file path -> dead ids) of `matched` rows, a frame over
+      * `hit`, attributed by [[GraftTable.manifestPathOf]] — collected to
+      * the driver, which is changed-rows-sized by the merge-on-read
+      * contract (the sidecar write needs the ids driver-side anyway). */
     private def collectDeadByFile(matched: DataFrame, idCol: String,
         hit: Vector[FileEntry]): Map[String, Vector[Long]] = {
-      val pathOf = hitPathOf(hit)
-      deadIds(matched.select(srcFileKey, col(idCol)).collect().toSeq
+      val pathOf = GraftTable.manifestPathOf(root, hit)
+      deadIds(matched.select(input_file_name(), col(idCol)).collect().toSeq
         .map(r => (pathOf(r.getString(0)), r.getLong(1))))
     }
 
@@ -2250,11 +2224,12 @@ final class Catalog(val spark: SparkSession, val root: String,
       * `coalesce`) or, when no target row has the key, appends with a
       * fresh dense id. Returns (matched target rows, inserted rows).
       *
-      * File pruning is by CONTENT, not id range: one distributed
-      * semi-join of the live table against the broadcast source keys
-      * collects the set of files that actually hold a matched key
-      * (`input_file_name`), and only those are rewritten — every other
-      * file survives by reference. At 100 TB the source batch is the
+      * File pruning is by stats, then by CONTENT: the candidates are
+      * the files whose key stats can hold a batch key
+      * ([[Catalog.inKeyDomain]]), and one distributed semi-join of them
+      * against the broadcast source keys collects the files that
+      * actually hold a matched key ([[hitPaths]]); only those are
+      * rewritten — every other file survives by reference. At 100 TB the source batch is the
       * small side (a CDC tick), the key semi-join is map-side against
       * the broadcast keys, and the rewrite cost is proportional to the
       * TOUCHED file set; pairing the table with a key-clustered layout
@@ -2419,16 +2394,14 @@ final class Catalog(val spark: SparkSession, val root: String,
       val prev = curState(table)
       val keys = src.select(keyCol)
       // stats pre-prune: the hit-file semi-join reads only files whose
-      // key range can intersect the batch domain (see pruneByDomain)
-      val cand = pruneByDomain(table, prev.files, keyCol, domain)
+      // key range can intersect the batch domain
+      val cand = domain.fold(prev.files)(
+        Catalog.inKeyDomain(prev.files, schema, idCol, keyCol, _))
       val (nUpd, inserted) =
         if (cand.isEmpty) (0L, src)
         else {
-          val live = readFiles(table, cand, schema, idCol)
-          val hitRel = live.withColumn("__file", input_file_name())
-            .join(broadcast(keys), Seq(keyCol), "left_semi")
-            .select("__file").distinct().collect()
-            .map(r => io.scannedToRel(root, r.getString(0))).toSet
+          val hitRel = hitPaths(readFiles(table, cand, schema, idCol), cand,
+            keys, keyCol)
           val (hit, carried) = prev.files.partition(f => hitRel(f.path))
           if (hit.nonEmpty && mergeOnRead) {
             // merge-on-read: kill the matched target rows by
@@ -2520,8 +2493,9 @@ final class Catalog(val spark: SparkSession, val root: String,
       *
       * Scale shape is [[merge]]'s: the batch is the broadcast-small side
       * (a dimension CDC tick), and the close-out rewrites ONLY the files
-      * holding a changed key's CURRENT row — content pruning via
-      * `input_file_name` + a broadcast semi-join on the changed keys.
+      * holding a changed key's CURRENT row: stats pruning
+      * ([[Catalog.inKeyDomain]]), then content pruning by a broadcast
+      * semi-join on the changed keys ([[hitPaths]]).
       * Pairing the dimension with a key-clustered layout keeps the
       * touched file set small; a [[compact]] pass additionally migrates
       * settled history out of the hot files over time. The dimension's
@@ -2553,13 +2527,14 @@ final class Catalog(val spark: SparkSession, val root: String,
       require(src.groupBy(keyCol).count().filter(col("count") > 1).isEmpty,
         s"ambiguous SCD2 batch: duplicate '$keyCol' values")
       val prev = curState(table)
-      // stats pre-prune (see pruneByDomain): a batch key's current row
-      // can only live in a file whose key range covers it, so both the
-      // change detection and the new-key anti-join read the touched
-      // range, never the whole dimension
-      val live = readFiles(table,
-        pruneByDomain(table, prev.files, keyCol, domain), schema, idCol)
-      val cur = live.filter(col("is_current"))
+      // stats pre-prune: a batch key's current row can only live in a
+      // file whose key range covers it, so both the change detection
+      // and the new-key anti-join read the touched range, never the
+      // whole dimension
+      val cand = domain.fold(prev.files)(
+        Catalog.inKeyDomain(prev.files, schema, idCol, keyCol, _))
+      val cur = readFiles(table, cand, schema, idCol)
+        .filter(col("is_current"))
       // keys whose current tracked values differ from the batch's
       // (null-safe difference on any tracked column)
       val differs = tracked.map(a => !(col(s"t.$a") <=> col(s"s.$a")))
@@ -2575,10 +2550,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         .eagerCheckpoint()
       val nClosed = changedKeys.count()
       if (nClosed > 0) {
-        val hitRel = cur.withColumn("__file", input_file_name())
-          .join(broadcast(changedKeys), Seq(keyCol), "left_semi")
-          .select("__file").distinct().collect()
-          .map(r => io.scannedToRel(root, r.getString(0))).toSet
+        val hitRel = hitPaths(cur, cand, changedKeys, keyCol)
         val (hit, carried) = prev.files.partition(f => hitRel(f.path))
         val marked = changedKeys.withColumn("__m", lit(true))
         val closed = readFiles(table, hit, schema, idCol)
@@ -2613,9 +2585,9 @@ final class Catalog(val spark: SparkSession, val root: String,
       * the inclusive normalized range [lo, hi] with `rows`, in one
       * commit. Delta's contract is enforced: every incoming row must
       * land inside the range (a reload cannot smuggle rows into other
-      * partitions). File pruning is the same stats skipping
-      * [[readRange]] uses — a file whose [min,max] window misses the
-      * range survives by reference (never read, never rewritten), so
+      * partitions). File pruning is the stats test [[readRange]] uses
+      * ([[Catalog.inKeyDomain]]) — a file whose [min,max] window misses
+      * the range survives by reference (never read, never rewritten), so
       * reloading one day of a year-partitioned fact costs one day's
       * files + the new data, not the table. Rows with NULL in `column`
       * are outside every range: kept on the target side, rejected on
@@ -2640,8 +2612,9 @@ final class Catalog(val spark: SparkSession, val root: String,
       val bad = src.filter(rc.isNull || rc < lo || rc > hi).count()
       require(bad == 0,
         s"replaceWhere: $bad source row(s) outside [$lo, $hi] on '$column'")
-      val (hit, carried) = prev.files.partition(_.cols.get(column)
-        .forall { case (mn, mx) => mx >= lo && mn <= hi })
+      val hit = Catalog.inKeyDomain(prev.files, schema, idCol, column,
+        Catalog.LongDomain(lo, hi))
+      val carried = prev.files.filterNot(hit.toSet)
       val nDeleted = if (hit.isEmpty) 0L else {
         val cur = readFiles(table, hit, schema, idCol)
         val c = statLong(cur, column).get
@@ -3171,41 +3144,17 @@ final class Catalog(val spark: SparkSession, val root: String,
     val curRemoved = b.files.filterNot(curFiles.contains).toSet
     if (removed.exists(curRemoved.contains))
       conflict("overlapping file rewrites")
-    // keyed-upsert domain check: a merge/SCD2 read exactly
-    // the table slice holding its source keys, so it reconciles iff the
-    // concurrent commit's whole file delta is provably OUTSIDE that
-    // domain — stats ranges in the manifest are the proof. A delta file
-    // with no keyCol stats cannot be proven disjoint (e.g. an all-NULL-
-    // key insert or a pre-stats file): conservative conflict.
+    // keyed-upsert domain check: a merge/SCD2 read exactly the table
+    // slice holding its source keys, so it reconciles iff no file of the
+    // concurrent commit's delta can hold a key of that domain — a file
+    // the stats cannot rule out (one without key stats, e.g. an
+    // all-NULL-key insert or a pre-stats file) is a conflict
     tx.mergeKeyRanges.get(table).foreach { case (keyCol, dom) =>
-      val curAdded = c.files.filterNot(bFiles.contains)
-      (curRemoved.toVector ++ curAdded).foreach { f =>
-        dom match {
-          case Catalog.LongDomain(lo, hi) => f.cols.get(keyCol) match {
-            case Some((mn, mx)) =>
-              if (mn <= hi && lo <= mx)
-                conflict(s"concurrent commit touched this merge's " +
-                  s"'$keyCol' domain [$lo, $hi] (file ${f.path} " +
-                  s"covers [$mn, $mx])")
-            case None =>
-              conflict(s"cannot prove '$keyCol' disjointness for " +
-                s"concurrently-written file ${f.path} (no stats)")
-          }
-          case Catalog.StrDomain(lo, hi) => f.scols.get(keyCol) match {
-            // the file's stats are OUTER bounds, so intersection of the
-            // bounds is the conservative (sound) conflict test
-            case Some((mn, mx)) =>
-              if (Catalog.utf8Compare(mn, hi) <= 0 &&
-                  Catalog.utf8Compare(lo, mx) <= 0)
-                conflict(s"concurrent commit touched this merge's " +
-                  s"'$keyCol' domain ['$lo', '$hi'] (file ${f.path} " +
-                  s"bounds ['$mn', '$mx'])")
-            case None =>
-              conflict(s"cannot prove '$keyCol' disjointness for " +
-                s"concurrently-written file ${f.path} (no string stats)")
-          }
-        }
-      }
+      val delta = curRemoved.toVector ++ c.files.filterNot(bFiles.contains)
+      Catalog.inKeyDomain(delta, schemaOf(Some(c), table),
+        idColOf(Some(c), table), keyCol, dom).headOption.foreach(f =>
+        conflict(s"concurrent commit touched this merge's '$keyCol' " +
+          s"domain $dom: the stats of file ${f.path} cannot rule it out"))
     }
     val alloc = st.maxId - b.maxId
     val curAlloc = c.maxId - b.maxId
@@ -3509,21 +3458,14 @@ object Catalog {
       f.metadata.getStringArray(PriorNamesKey).toSeq
     else Nil
 
-  /** Every name stats/nulls for `column` may be recorded under in a
-    * file entry: the current name plus prior names (a file carries
-    * stats under whatever the column was called when it was staged). */
-  private[store] def statKeys(
-      schema: org.apache.spark.sql.types.StructType,
-      column: String): Seq[String] =
-    schema.fields.find(_.name == column) match {
-      case Some(f) => column +: priorsOf(f)
-      case None => Seq(column)
-    }
-
-  /** First recorded value among a column's stat keys (at most one name
-    * matches per file — a file was staged under exactly one epoch). */
-  private[store] def statLookup[A](m: Map[String, A],
-      keys: Seq[String]): Option[A] = keys.flatMap(m.get).headOption
+  /** Current name -> prior names (newest first) of every renamed
+    * column of `schema`: a file carries stats under whatever its column
+    * was called when it was staged. */
+  private[store] def priorNames(
+      schema: org.apache.spark.sql.types.StructType)
+      : Map[String, Seq[String]] =
+    schema.fields.map(f => f.name -> priorsOf(f)).filter(_._2.nonEmpty)
+      .toMap
 
   private[store] def stripPriorNames(
       schema: org.apache.spark.sql.types.StructType)
@@ -3789,37 +3731,25 @@ object Catalog {
       Iterator.single((stats.entry(path), flags))
     }
 
-  /** String twin of [[pruneByDomain]]: keep a file iff its BOUNDED
-    * string range can intersect the (exact) batch domain — provably
-    * disjoint means boundedMax < lo or hi < boundedMin in UTF-8 binary
-    * order. Files without stats for the column always stay. */
-  private[store] def pruneByDomainStr[F](files: Vector[F],
-      scolsOf: F => Map[String, (String, String)], keyCol: String,
-      lo: String, hi: String): Vector[F] =
-    files.filter(f => scolsOf(f).get(keyCol).forall { case (mn, mx) =>
-      utf8Compare(mx, lo) >= 0 && utf8Compare(mn, hi) <= 0
-    })
-
-  /** Stats pre-prune for a keyed upsert's candidate scan: only files
-    * whose `keyCol` range can intersect the batch domain can hold a
-    * matched key, so merge/SCD2's hit-file semi-join reads the touched
-    * range, not the table (at 100 TB with a key-clustered layout this
-    * is the difference between a full-table scan per CDC tick and a
-    * range-proportional one). A file with no `keyCol` stats cannot be
-    * ruled out and stays a candidate; rows in pruned-away files are by
-    * proof unmatched, so they survive by reference exactly like non-hit
-    * candidates. Bounds are inclusive on both sides (stats are min/max
-    * of present values). Generic over the entry type so the boundary
-    * logic is unit-testable as a pure function. */
-  private[store] def pruneByDomain[F](files: Vector[F],
-      colsOf: F => Map[String, (Long, Long)], keyCol: String,
-      domain: Option[(Long, Long)]): Vector[F] =
-    domain match {
-      case Some((lo, hi)) =>
-        files.filter(f =>
-          colsOf(f).get(keyCol).forall(r => r._1 <= hi && lo <= r._2))
-      case None => files
+  /** The files of `files` whose stats can hold a `keyCol` value inside
+    * `domain` (inclusive ends): [[StatsPrune.prune]] over the conjunct
+    * `keyCol >= lo AND keyCol <= hi`, with the prior names of a renamed
+    * key from `schema`. A file without stats for the key is kept, so a
+    * dropped file provably holds no key of the domain. Merge and SCD2
+    * read only these as candidates, replaceWhere rewrites only these,
+    * and OCC counts a concurrent file among these as a conflict. */
+  private[store] def inKeyDomain(files: Vector[FileEntry],
+      schema: org.apache.spark.sql.types.StructType, idCol: String,
+      keyCol: String, domain: KeyDomain): Vector[FileEntry] = {
+    val (lo, hi) = domain match {
+      case LongDomain(l, h) => (Literal(l), Literal(h))
+      case StrDomain(l, h) => (Literal(l), Literal(h))
     }
+    val k = AttributeReference(keyCol, lo.dataType)()
+    StatsPrune.prune(files, idCol,
+      Seq(And(GreaterThanOrEqual(k, lo), LessThanOrEqual(k, hi))),
+      priorNames(schema))
+  }
 
   /** Checkpoint cadence of the commit log: every N-th commit also
     * writes a full-manifest checkpoint beside its delta, bounding any

@@ -8,8 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem SPI for the store's DATA PATH (round 18 — the
-  * [[CommitLock]] move applied to everything else): every manifest,
+/** Filesystem SPI for the store's DATA PATH (the [[CommitLock]] SPI's
+  * counterpart for everything else): every manifest,
   * delta-log, checkpoint, deletion-vector, lease and vacuum operation
   * the [[Catalog]] performs goes through this trait, so deploying the
   * store on HDFS or an object store is an implementation swap — the
@@ -45,6 +45,10 @@ import org.apache.spark.sql.SparkSession
   * URI-qualified — whatever the root was opened with); [[canon]] maps
   * any spelling to one canonical absolute form so identity comparisons
   * (vacuum liveness, fsck orphan detection) are well-defined per impl.
+  * Data files are read by Spark's scan, not through this SPI: a scanned
+  * row names its file in the key space of
+  * [[graft.store.sql.GraftTable.manifestPathOf]], which is the same
+  * under every binding.
   */
 private[graft] trait StoreIO {
   /** `base + "/" + child` in this FS's path syntax. */
@@ -79,7 +83,7 @@ private[graft] trait StoreIO {
   def rename(src: String, dst: String): Unit
 
   /** Atomic publish that REFUSES an existing destination — the commit
-    * fence at the storage layer (round 18): the delta-log publish uses
+    * fence at the storage layer: the delta-log publish uses
     * this, so a writer that lost its lease mid-commit and slipped past
     * the client-side fencing read can still never clobber the
     * stealer's landed commit; it collides on the version file instead.
@@ -102,18 +106,6 @@ private[graft] trait StoreIO {
     * subdirectory entry (empty when absent) — the vacuum/fsck sweep
     * shape. Paths come back canonical. */
   def walk(dir: String): Vector[StoreIO.Entry]
-
-  /** Root-relative path of a file reported by `input_file_name()`
-    * (a percent-encoded URI like `file:///...` or `hdfs://nn/...`). */
-  def scannedToRel(root: String, scannedUri: String): String
-
-  /** Driver-side twin of the executor's scheme-stripped
-    * `input_file_name()` key (see [[Catalog]]'s `srcFileKey`): the
-    * percent-encoded absolute path of a root-relative file, scheme and
-    * authority removed. Merge-on-read hit attribution (the file a
-    * matched row was scanned from) compares in this space and fails
-    * loudly on a miss. */
-  def fileKeyOf(root: String, rel: String): String
 
   /** Hadoop configuration for parquet metadata IO against this store's
     * filesystem ([[CommitLog]]'s checkpoint writer/reader). Pins
@@ -177,9 +169,8 @@ private[graft] object StoreIO {
   }
 }
 
-/** `java.nio.file` implementation — the default for local/POSIX roots;
-  * behavior (including path canonicalization and the percent-encoded
-  * file-key space) is exactly the pre-SPI store's. Non-final so specs
+/** `java.nio.file` implementation — the default for local/POSIX roots.
+  * Non-final so specs
   * can interpose fault injection on single operations (the
   * publish-fence race test overrides [[renameIfAbsent]]). */
 private[graft] class LocalStoreIO extends StoreIO {
@@ -224,22 +215,20 @@ private[graft] class LocalStoreIO extends StoreIO {
     ()
   }
 
-  // ATOMIC conditional publish (round 19, ADVICE r18): link(2) fails
-  // with EEXIST atomically when the destination exists, so
-  // createLink + delete-src is a genuinely conditional rename on every
-  // POSIX filesystem — no check-then-move window at all (ATOMIC_MOVE
-  // alone maps to rename(2), which REPLACES silently; the old explicit
-  // exists-check left a nanosecond race). Filesystems without hard
+  // ATOMIC conditional publish: link(2) fails with EEXIST atomically
+  // when the destination exists, so createLink + delete-src is a
+  // genuinely conditional rename on every POSIX filesystem — no
+  // check-then-move window at all (ATOMIC_MOVE alone maps to
+  // rename(2), which REPLACES silently). Filesystems without hard
   // links fall back to the narrow check-then-move the commit lock
   // serializes; object-store ports get the primitive perfectly atomic
   // via the conditional put (see the trait scaladoc).
   override def renameIfAbsent(src: String, dst: String): Boolean = {
-    // The try/catch covers ONLY createLink (round 20, ADVICE r19): if
-    // the link lands but the source delete threw, falling through to
-    // the fallback would see dst existing and report false for a
-    // publish that SUCCEEDED — Catalog would then retry and
-    // double-apply a committed delta. A leftover src tmp is harmless;
-    // a wrong false is not.
+    // The try/catch covers ONLY createLink: if the link lands but the
+    // source delete threw, falling through to the fallback would see
+    // dst existing and report false for a publish that SUCCEEDED —
+    // Catalog would then retry and double-apply a committed delta. A
+    // leftover src tmp is harmless; a wrong false is not.
     val linked: Option[Boolean] =
       try { Files.createLink(p(dst), p(src)); Some(true) }
       catch {
@@ -294,17 +283,6 @@ private[graft] class LocalStoreIO extends StoreIO {
       finally it.close()
     }
 
-  override def scannedToRel(root: String, scannedUri: String): String = {
-    val abs = scannedUri.stripPrefix("file://")
-    relativize(root, abs)
-  }
-
-  override def fileKeyOf(root: String, rel: String): String = {
-    val u = p(root).resolve(rel).toAbsolutePath.normalize
-      .toUri.toASCIIString
-    "/" + u.stripPrefix("file:").dropWhile(_ == '/')
-  }
-
   override val hadoopConf: Configuration = {
     val c = new Configuration(false)
     c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
@@ -313,7 +291,7 @@ private[graft] class LocalStoreIO extends StoreIO {
   }
 }
 
-/** Object-store SEMANTICS binding (round 18): a [[LocalStoreIO]] that
+/** Object-store SEMANTICS binding: a [[LocalStoreIO]] that
   * FORBIDS atomic rename — every publish maps to the primitives an
   * S3/GCS port actually has, so the fuzz suites prove the commit
   * protocol correct WITHOUT rename(2):
@@ -442,14 +420,14 @@ private[graft] final class HadoopStoreIO(conf: Configuration)
   override def renameIfAbsent(src: String, dst: String): Boolean = {
     val (fs, s) = fsOf(src)
     val d = new HPath(dst)
-    // Pre-check exists() (round 19, ADVICE r18 high): HDFS rename
+    // Pre-check exists(): HDFS rename
     // natively refuses an existing destination (returns false), but
     // RawLocalFileSystem.rename delegates to File.renameTo — POSIX
     // rename(2), which REPLACES the destination silently and returns
     // true. Without the check, every local-path HadoopStoreIO
     // deployment (the only reachable kind while CommitLock.forRoot
     // requires local roots) had a publish that could clobber a landed
-    // commit, making the round-18 store-side fence a no-op there.
+    // commit, making the store-side fence a no-op there.
     // Check-then-rename is not atomic, but the commit lock serializes
     // writers and the fence narrows the residue; genuinely atomic
     // publish needs HDFS's native refusal or a conditional-create port.
@@ -497,34 +475,6 @@ private[graft] final class HadoopStoreIO(conf: Configuration)
       out.result()
     }
   }
-
-  override def scannedToRel(root: String, scannedUri: String): String = {
-    // input_file_name() reports a percent-encoded URI; for local-FS
-    // roots (the CI case) decode via the same nio route the local impl
-    // uses so both impls hand the manifest identical relative paths
-    val abs = scannedUri.stripPrefix("file://")
-    StoreIO.localPathOf(root) match {
-      case Some(rp) =>
-        rp.toAbsolutePath.normalize
-          .relativize(Paths.get(abs).toAbsolutePath.normalize).toString
-      case None =>
-        val b = canon(root)
-        val c = scannedUri
-        if (c.startsWith(b + "/")) c.substring(b.length + 1)
-        else throw new IllegalStateException(
-          s"scanned file '$scannedUri' is not under store root '$b'")
-    }
-  }
-
-  override def fileKeyOf(root: String, rel: String): String =
-    StoreIO.localPathOf(root) match {
-      case Some(rp) =>
-        val u = rp.resolve(rel).toAbsolutePath.normalize.toUri.toASCIIString
-        "/" + u.stripPrefix("file:").dropWhile(_ == '/')
-      case None =>
-        val u = new java.net.URI(canon(resolve(root, rel)))
-        Option(u.getRawPath).getOrElse("/" + rel)
-    }
 
   override val hadoopConf: Configuration = conf
 }

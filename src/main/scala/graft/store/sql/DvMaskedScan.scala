@@ -30,6 +30,8 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * list. */
 private[store] final class DvMaskedScan(
     val inner: SupportsReportStatistics,
+    /** Dead ids of each DV-carrying file by its key, the decoded
+      * absolute path ([[GraftTable.manifestPathOf]]). */
     dvByAbsPath: Map[String, Array[Long]], idCol: String)
     extends WrappingScan {
 

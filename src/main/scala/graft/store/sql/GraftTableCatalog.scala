@@ -323,17 +323,6 @@ private[store] final class GraftTable(private[sql] val spark: SparkSession,
         kept.map(f => s"$root/${f.path}").toList, Some(parquetSchema),
         classOf[ParquetFileFormat]))
 
-  /** The key a scan partition reports for the file at manifest path
-    * `rel`: its DECODED absolute path (`PartitionedFile.toPath.toUri
-    * .getPath` drops scheme and authority). Scheme-less roots resolve
-    * via java.nio (local dev/CI), URI roots via Hadoop Path; both land
-    * in the same decoded-path space. */
-  private[sql] def keyOf(rel: String): String =
-    if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*"))
-      new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
-    else java.nio.file.Paths.get(root).resolve(rel)
-      .toAbsolutePath.normalize.toString
-
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -372,14 +361,46 @@ private[store] final class GraftTable(private[sql] val spark: SparkSession,
 
 private[graft] object GraftTable {
 
+  /** The key of the file at manifest path `rel` under `root`
+    * ([[manifestPathOf]]). Scheme-less roots resolve via java.nio (local
+    * dev/CI), URI roots via Hadoop Path; both give the decoded path. */
+  private[sql] def keyOf(root: String, rel: String): String =
+    if (root.matches("^[A-Za-z][A-Za-z0-9+.-]*://.*"))
+      new org.apache.hadoop.fs.Path(s"$root/$rel").toUri.getPath
+    else java.nio.file.Paths.get(root).resolve(rel)
+      .toAbsolutePath.normalize.toString
+
+  /** The manifest path, among the entries `files` a frame read, of a
+    * file the frame's scan names by URI (`input_file_name()`, a listing
+    * root path).
+    *
+    * Invariant: one key names a store file everywhere — its DECODED
+    * absolute path, scheme and authority dropped: [[keyOf]] for a
+    * manifest entry, `new URI(name).getPath` for a scanned URI, and
+    * `toUri.getPath` of the Hadoop path for [[DvMaskedScan]]'s masks.
+    * So a root whose name a URI must percent-encode (`my store %41`)
+    * maps exactly as a plain one, under every [[graft.store.StoreIO]]
+    * binding. A name that matches none of `files` throws: a row
+    * attributed to no file would leave a deletion vector unwritten or a
+    * hit file carried unrewritten. */
+  private[store] def manifestPathOf(root: String,
+      files: Seq[FileEntry]): String => String = {
+    val byKey = files.iterator.map(f => keyOf(root, f.path) -> f.path).toMap
+    scanned => {
+      val key = new java.net.URI(scanned).getPath
+      byKey.getOrElse(key, throw new IllegalStateException(
+        s"scanned file '$key' matches no manifest entry of the read"))
+    }
+  }
+
   /** Manifest paths of the files the planned store scans in `plan` read,
     * after manifest-stats pruning. */
   def scannedFiles(plan: LogicalPlan): Seq[String] = plan.collect {
     case DataSourceV2ScanRelation(
         DataSourceV2Relation(t: GraftTable, _, _, _, _, _), scan, _, _, _) =>
-      val byKey = t.files.map(f => t.keyOf(f.path) -> f.path).toMap
+      val pathOf = manifestPathOf(t.root, t.files)
       fileScanOf(scan).toSeq
-        .flatMap(_.fileIndex.rootPaths.map(p => byKey(p.toUri.getPath)))
+        .flatMap(_.fileIndex.rootPaths.map(p => pathOf(p.toUri.toString)))
   }.flatten
 
   private def fileScanOf(s: Scan): Option[FileScan] = s match {
@@ -474,8 +495,9 @@ private[sql] final class GraftScanBuilder(table: GraftTable,
     val dvd = kept.filter(_.dv.isDefined)
     val masked =
       if (dvd.isEmpty) scan
-      else new DvMaskedScan(scan,
-        dvd.map(f => table.keyOf(f.path) -> table.dead(f.path)).toMap, idCol)
+      else new DvMaskedScan(scan, dvd.map(f =>
+        GraftTable.keyOf(table.root, f.path) -> table.dead(f.path)).toMap,
+        idCol)
     if (renamedPriors.isEmpty) masked
     else {
       val innerRead = masked.readSchema()

@@ -1,17 +1,19 @@
 package graft.store.sql
 
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.store.{Catalog, FileEntry}
 
-/** Manifest-stats file pruning for the store's scan route: turns the
-  * planner's catalyst filters into per-column [lo, hi] windows and null
-  * probes, and drops files whose recorded stats provably miss them —
-  * for a `spark.sql` predicate, a DataFrame filter over
-  * [[Catalog.read]], and [[Catalog.readRange]] /
-  * [[Catalog.readWhereNull]] alike.
+/** The store's one test of a file's manifest stats: turns catalyst
+  * filters into per-column [lo, hi] windows and null probes, and drops
+  * files whose recorded stats provably miss them — for a `spark.sql`
+  * predicate, a DataFrame filter over [[Catalog.read]],
+  * [[Catalog.readRange]] / [[Catalog.readWhereNull]], and the key
+  * windows of the store's DML ([[Catalog.inKeyDomain]]: merge and SCD2
+  * candidates, replaceWhere's rewritten files, the OCC domain check)
+  * alike.
   *
   * Soundness rules (each makes pruning conservative, never lossy):
   *  - only top-level conjuncts constrain (an `OR` arm never prunes);
@@ -23,7 +25,7 @@ import graft.store.{Catalog, FileEntry}
   *  - every filter stays in the plan anyway (the scan builder reports
   *    parquet's residuals upward), so pruning can only skip IO, never
   *    change results. */
-private[sql] object StatsPrune {
+private[store] object StatsPrune {
 
   /** Per-column inclusive windows extracted from `filters`:
     * Long-normalized (epoch micros for timestamps) and raw-string. */
@@ -31,100 +33,48 @@ private[sql] object StatsPrune {
       longs: Map[String, (Long, Long)],
       strs: Map[String, (String, String)])
 
-  private def asLong(v: Any, dt: DataType): Option[Long] = dt match {
-    case LongType | IntegerType | ShortType | ByteType | TimestampType =>
-      v match {
-        case n: java.lang.Number => Some(n.longValue())
-        case _ => None
-      }
+  private def asLong(l: Literal): Option[Long] = (l.value, l.dataType) match {
+    case (n: java.lang.Number,
+        LongType | IntegerType | ShortType | ByteType | TimestampType) =>
+      Some(n.longValue())
     case _ => None
   }
 
-  private def asStr(v: Any, dt: DataType): Option[String] = dt match {
-    case StringType => v match {
-      case u: UTF8String => Some(u.toString)
-      case s: String => Some(s)
-      case _ => None
-    }
+  private def asStr(l: Literal): Option[String] = (l.value, l.dataType) match {
+    case (u: UTF8String, StringType) => Some(u.toString)
+    case (s: String, StringType) => Some(s)
     case _ => None
   }
 
-  /** (column, lo, hi) in the Long domain, or None. Literal null bounds
-    * are dropped (a null comparison matches nothing; Spark's own Filter
-    * node settles it). */
-  private def longBound(e: Expression): Option[(String, Option[Long], Option[Long])] = {
-    def lit(l: Literal): Option[Long] =
-      Option(l.value).flatMap(asLong(_, l.dataType))
-    e match {
-      case EqualTo(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => Option(l.value).flatMap(asLong(_, l.dataType)).isDefined
-          case _ => false
-        } =>
-        val longs = vs.map { case l: Literal => asLong(l.value, l.dataType).get }
-        Some((a.name, Some(longs.min), Some(longs.max)))
-      case _ => None
-    }
-  }
+  /** UTF-8 binary order, the order the file stats are compared in
+    * (String's UTF-16 code-unit order diverges for supplementary
+    * characters and would invert a window: unsound pruning). */
+  private val Utf8Order: Ordering[String] =
+    Ordering.fromLessThan((x, y) => Catalog.utf8Compare(x, y) < 0)
 
-  /** String twin of [[longBound]]. */
-  private def strBound(e: Expression): Option[(String, Option[String], Option[String])] = {
-    def lit(l: Literal): Option[String] =
-      Option(l.value).flatMap(asStr(_, l.dataType))
+  /** (column, lo, hi) of one conjunct, its literals decoded by `dec`
+    * and an `IN` list spanned in `ord`, or None. A literal `dec` cannot
+    * decode (a null, another type) gives None: a null comparison
+    * matches nothing, and Spark's own Filter node settles it. */
+  private def bound[A](e: Expression, dec: Literal => Option[A],
+      ord: Ordering[A]): Option[(String, Option[A], Option[A])] = {
+    def win(a: Attribute, l: Literal, lo: Boolean, hi: Boolean) =
+      dec(l).map(v => (a.name, Option.when(lo)(v), Option.when(hi)(v)))
     e match {
-      case EqualTo(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).map(v => (a.name, Some(v), None))
-      case In(a: Attribute, vs) if vs.nonEmpty && vs.forall {
-          case l: Literal => Option(l.value).flatMap(asStr(_, l.dataType)).isDefined
-          case _ => false
-        } =>
-        // min/max in UTF-8 BINARY order (utf8Compare), matching the
-        // order the file stats are compared in — String's UTF-16
-        // code-unit order diverges for supplementary characters and
-        // would invert the window (unsound pruning)
-        val ss = vs.map { case l: Literal => asStr(l.value, l.dataType).get }
-        Some((a.name,
-          Some(ss.reduce((x, y) =>
-            if (Catalog.utf8Compare(x, y) <= 0) x else y)),
-          Some(ss.reduce((x, y) =>
-            if (Catalog.utf8Compare(x, y) >= 0) x else y))))
+      case EqualTo(a: Attribute, l: Literal) => win(a, l, true, true)
+      case EqualTo(l: Literal, a: Attribute) => win(a, l, true, true)
+      case GreaterThan(a: Attribute, l: Literal) => win(a, l, true, false)
+      case GreaterThanOrEqual(a: Attribute, l: Literal) => win(a, l, true, false)
+      case LessThan(a: Attribute, l: Literal) => win(a, l, false, true)
+      case LessThanOrEqual(a: Attribute, l: Literal) => win(a, l, false, true)
+      case GreaterThan(l: Literal, a: Attribute) => win(a, l, false, true)
+      case GreaterThanOrEqual(l: Literal, a: Attribute) => win(a, l, false, true)
+      case LessThan(l: Literal, a: Attribute) => win(a, l, true, false)
+      case LessThanOrEqual(l: Literal, a: Attribute) => win(a, l, true, false)
+      case In(a: Attribute, vs) if vs.nonEmpty =>
+        val xs = vs.collect { case l: Literal => dec(l) }.flatten
+        if (xs.length < vs.length) None
+        else Some((a.name, Some(xs.min(ord)), Some(xs.max(ord))))
       case _ => None
     }
   }
@@ -139,20 +89,15 @@ private[sql] object StatsPrune {
     var longs = Map.empty[String, (Long, Long)]
     var strs = Map.empty[String, (String, String)]
     conjuncts.foreach { c =>
-      longBound(c).foreach { case (col, lo, hi) =>
+      bound(c, asLong, Ordering.Long).foreach { case (col, lo, hi) =>
         val (clo, chi) = longs.getOrElse(col, (Long.MinValue, Long.MaxValue))
         longs += col -> (math.max(clo, lo.getOrElse(Long.MinValue)),
           math.min(chi, hi.getOrElse(Long.MaxValue)))
       }
-      strBound(c).foreach { case (col, lo, hi) =>
+      bound(c, asStr, Utf8Order).foreach { case (col, lo, hi) =>
         val (clo, chi) = strs.getOrElse(col, (null: String, null: String))
-        val nlo = (Option(clo) ++ lo)
-          .reduceOption((a, b) => if (Catalog.utf8Compare(a, b) >= 0) a else b)
-          .orNull
-        val nhi = (Option(chi) ++ hi)
-          .reduceOption((a, b) => if (Catalog.utf8Compare(a, b) <= 0) a else b)
-          .orNull
-        strs += col -> (nlo, nhi)
+        strs += col -> ((Option(clo) ++ lo).maxOption(Utf8Order).orNull,
+          (Option(chi) ++ hi).minOption(Utf8Order).orNull)
       }
     }
     Windows(longs, strs)

@@ -334,6 +334,23 @@ class CloneSpec extends SparkSuite {
       r.getString(3).contains("missing")), after.mkString(", "))
   }
 
+  test("fsck reports a scanned file that matches no manifest entry as a " +
+    "problem row naming its key, and does not throw") {
+    val cat = freshCat()
+    cat.append("users", user("a", "a@x.c"))
+    assert(cat.fsck("users").collect().forall(_.getBoolean(2)))
+    // tamper: a leading slash still names the same file on disk, but
+    // the entry's key is no longer the path the scan reads
+    tamperLog(cat, "\"path\":\"users/", "\"path\":\"/users/")
+    val rows = new Catalog(spark, cat.root).fsck("users").collect()
+    val unmatched = rows.filter(_.getString(3).contains(
+      "matches no manifest entry"))
+    assert(unmatched.length == 1 && !unmatched.head.getBoolean(2) &&
+      unmatched.head.getString(3).contains(cat.root + "/users/"),
+      rows.mkString(", "))
+    assert(unmatched.head.getLong(1) == 1L, rows.mkString(", "))
+  }
+
   test("fsck column stats: a stats-bearing table verifies clean and a " +
     "narrowed stat range is flagged as an escape") {
     val cat = freshCat()

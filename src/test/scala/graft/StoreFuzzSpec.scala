@@ -37,11 +37,15 @@ class StoreFuzzSpec extends SparkSuite {
   // Hadoop binding must derive exactly the states the java.nio binding
   // does, and the OBJECT-STORE-SEMANTICS binding (no atomic rename —
   // publishes are conditional creates + copies, the S3 primitive set)
-  // proves the commit protocol never actually needs rename(2)
-  for (ioMode <- Seq("local", "hadoop", "object"))
+  // proves the commit protocol never actually needs rename(2). The
+  // encoded-root run puts the store under a directory whose name a URI
+  // must percent-encode, so every op maps scanned file names back to
+  // manifest entries across that encoding.
+  for ((ioMode, encodedRoot) <- Seq(("local", false), ("hadoop", false),
+      ("object", false), ("local", true)))
   test("random op sequences: store state equals the reference model " +
     "after every step; clones freeze; history replays; vacuum(0) safe " +
-    s"[io=$ioMode]") {
+    s"[io=$ioMode${if (encodedRoot) ", root=encoded" else ""}]") {
     def mkCat(root: String): Catalog = ioMode match {
       case "hadoop" => new Catalog(spark, root, StoreIO.hadoop(spark))
       case "object" =>
@@ -49,7 +53,12 @@ class StoreFuzzSpec extends SparkSuite {
       case _ => new Catalog(spark, root)
     }
     val rnd = new Random(sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong + 2).getOrElse(42424242L))
-    val root = Files.createTempDirectory("graft_fuzz").toString
+    val root = {
+      val dir = Files.createTempDirectory("graft_fuzz")
+      if (encodedRoot)
+        Files.createDirectory(dir.resolve("my store %41")).toString
+      else dir.toString
+    }
     // var: the REOPEN op below swaps in a fresh instance (cold manifest
     // cache), fuzzing the log-structured checkpoint + delta replay path
     var cat = mkCat(root)

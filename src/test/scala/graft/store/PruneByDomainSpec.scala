@@ -1,16 +1,22 @@
 package graft.store
 
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Boundary conditions of the keyed-upsert stats pre-prune
-  * ([[Catalog.pruneByDomain]]) — the filter merge/SCD2 use to turn the
-  * hit-file scan from table-sized to touched-range-sized. Wrong
+import graft.store.sql.StatsPrune
+
+/** Boundary conditions of the stats test on a key window
+  * ([[StatsPrune.prune]] over `k >= lo AND k <= hi`), the test merge and
+  * SCD2 use to turn the hit-file scan from table-sized to
+  * touched-range-sized, replaceWhere uses to pick the files it rewrites
+  * and OCC uses to find a conflicting concurrent file. Wrong
   * exclusivity here silently drops matched rows, so the inclusive
   * bounds and the no-stats conservatism are pinned as a pure unit. */
 class PruneByDomainSpec extends AnyFunSuite {
-  private case class E(path: String, cols: Map[String, (Long, Long)])
   private def fe(path: String, range: Option[(Long, Long)]) =
-    E(path, range.map(r => Map("k" -> r)).getOrElse(Map.empty))
+    FileEntry(path, 0L, 0L, cols = range.map(r => Map("k" -> r))
+      .getOrElse(Map.empty))
 
   private val files = Vector(
     fe("low", Some((1L, 10L))),
@@ -19,9 +25,17 @@ class PruneByDomainSpec extends AnyFunSuite {
     fe("point", Some((15L, 15L))),
     fe("nostats", None))           // cannot be ruled out
 
-  private def prune(lo: Long, hi: Long): Set[String] =
-    Catalog.pruneByDomain[E](files, _.cols, "k", Some((lo, hi)))
+  /** The files `k` in [lo, hi] keeps, `k` typed by the literals. */
+  private def kept(fs: Vector[FileEntry], lo: Literal, hi: Literal,
+      priors: Map[String, Seq[String]] = Map.empty): Set[String] = {
+    val k = AttributeReference("k", lo.dataType)()
+    StatsPrune.prune(fs, "id",
+      Seq(And(GreaterThanOrEqual(k, lo), LessThanOrEqual(k, hi))), priors)
       .map(_.path).toSet
+  }
+
+  private def prune(lo: Long, hi: Long): Set[String] =
+    kept(files, Literal(lo), Literal(hi))
 
   test("inclusive on both ends: a file touching the domain boundary " +
     "stays; disjoint ranges go; no-stats files always stay") {
@@ -34,27 +48,61 @@ class PruneByDomainSpec extends AnyFunSuite {
   }
 
   test("no domain = no pruning (strict/non-stats merges scan everything)") {
-    assert(Catalog.pruneByDomain[E](files, _.cols, "k", None) == files)
+    assert(StatsPrune.prune(files, "id", Nil) == files)
   }
 
   test("a stats entry for a DIFFERENT column never prunes") {
-    val other = Vector(E("o", Map("j" -> (1L, 2L))))
-    assert(Catalog.pruneByDomain[E](other, _.cols, "k",
-      Some((100L, 200L))) == other)
+    val other = Vector(FileEntry("o", 0L, 0L, cols = Map("j" -> (1L, 2L))))
+    assert(kept(other, Literal(100L), Literal(200L)) == Set("o"))
   }
 
-  // ---- string stats (round 14) -------------------------------------------
+  test("a renamed key's stats under a prior name prune its pre-rename " +
+    "files; a file recording neither name stays") {
+    val fs = Vector(
+      FileEntry("old", 0L, 0L, cols = Map("k_v1" -> (1L, 10L))),
+      FileEntry("older", 0L, 0L, cols = Map("k_v0" -> (11L, 20L))),
+      FileEntry("new", 0L, 0L, cols = Map("k" -> (21L, 30L))),
+      FileEntry("neither", 0L, 0L, cols = Map("j" -> (1L, 2L))))
+    val priors = Map("k" -> Seq("k_v1", "k_v0"))
+    assert(kept(fs, Literal(5L), Literal(12L), priors) ==
+      Set("old", "older", "neither"))
+    assert(kept(fs, Literal(25L), Literal(40L), priors) ==
+      Set("new", "neither"))
+    // without the prior names the pre-rename files cannot be ruled out
+    assert(kept(fs, Literal(25L), Literal(40L)) ==
+      Set("old", "older", "new", "neither"))
+    // the same through the merge/OCC entry point, priors from the schema
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("k", LongType, nullable = true, new MetadataBuilder()
+        .putStringArray(Catalog.PriorNamesKey, Array("k_v1", "k_v0"))
+        .build())))
+    assert(Catalog.inKeyDomain(fs, schema, "id", "k",
+      Catalog.LongDomain(25L, 40L)).map(_.path).toSet == Set("new", "neither"))
+  }
 
-  private case class S(path: String, scols: Map[String, (String, String)])
+  test("timestamp window: epoch-micros literals against micros stats, " +
+    "inclusive ends") {
+    val day = 86400L * 1000000L
+    val fs = Vector(
+      FileEntry("d1", 0L, 0L, cols = Map("k" -> (day, 2 * day - 1))),
+      FileEntry("d2", 0L, 0L, cols = Map("k" -> (2 * day, 3 * day - 1))),
+      FileEntry("nostats", 0L, 0L))
+    def ts(micros: Long) = Literal(micros, TimestampType)
+    assert(kept(fs, ts(2 * day - 1), ts(2 * day)) == Set("d1", "d2", "nostats"))
+    assert(kept(fs, ts(2 * day), ts(3 * day)) == Set("d2", "nostats"))
+    assert(kept(fs, ts(3 * day), ts(4 * day)) == Set("nostats"))
+  }
+
+  // ---- string stats ------------------------------------------------------
+
   private val sfiles = Vector(
-    S("ae", Map("k" -> ("alpha", "echo"))),
-    S("mp", Map("k" -> ("mike", "papa"))),
-    S("rz", Map("k" -> ("romeo", "zulu"))),
-    S("nostats", Map.empty))
+    FileEntry("ae", 0L, 0L, scols = Map("k" -> ("alpha", "echo"))),
+    FileEntry("mp", 0L, 0L, scols = Map("k" -> ("mike", "papa"))),
+    FileEntry("rz", 0L, 0L, scols = Map("k" -> ("romeo", "zulu"))),
+    FileEntry("nostats", 0L, 0L))
 
   private def sprune(lo: String, hi: String): Set[String] =
-    Catalog.pruneByDomainStr[S](sfiles, _.scols, "k", lo, hi)
-      .map(_.path).toSet
+    kept(sfiles, Literal(lo), Literal(hi))
 
   test("string pruning: inclusive boundary semantics in binary order; " +
     "no-stats files always stay") {
