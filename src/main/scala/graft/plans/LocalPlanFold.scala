@@ -67,7 +67,11 @@ object LocalPlanFold extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  private def evaluable(e: Expression): Boolean =
+  /** Whether `e` evaluates on the driver with Spark's interpreted
+    * evaluators: deterministic, and nothing in it is `Unevaluable` (a
+    * subquery, say). A `RuntimeReplaceable` passes and does not
+    * evaluate: replace it first, as the optimizer does. */
+  private[graft] def evaluable(e: Expression): Boolean =
     e.deterministic && !e.exists(x =>
       x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])
 

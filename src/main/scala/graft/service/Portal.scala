@@ -2,11 +2,16 @@ package graft.service
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
+import graft.service.Prepared.param
 import graft.store.{Catalog, Schemas}
 
 /** Reference-parity service API — one method per db.py function
@@ -20,6 +25,14 @@ import graft.store.{Catalog, Schemas}
   *
   * Card crypto: aes_encrypt/aes_decrypt (GCM, random IV) — semantic parity
   * with the reference's Fernet tokens (db.py:412-423), not byte-compatible.
+  *
+  * Every read is a [[Prepared]] read: its plan is built and analyzed
+  * once per Portal as a template over the tables it reads and its typed
+  * parameters, bound per call to the tables' current snapshots and the
+  * call's values, and rebuilt when a table's schema changes
+  * (`addColumn`, `renameColumn`). The templates are immutable, so one
+  * Portal serves concurrent clients. Point writes hand the store their
+  * rows as an in-memory batch.
   */
 final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
   private val spark = cat.spark
@@ -28,13 +41,22 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
   private def now() = new Timestamp(System.currentTimeMillis())
 
   /** One row of a table whose id column (`table`'s first field) the
-    * store assigns, as a frame analyzed once. Each value converts to
-    * its column's type as a cast to it would: a decimal rounds half-up
-    * to the column's scale, and one too wide for it fails under ANSI
-    * mode and is NULL without it. */
-  private def rowOf(table: StructType, values: Any*): DataFrame =
-    spark.createDataFrame(java.util.List.of(Row.fromSeq(values)),
-      StructType(table.fields.tail))
+    * store assigns, as a frame over an in-memory relation. Each value
+    * converts to its column's type as a cast to it would: a decimal
+    * rounds half-up to the column's scale, and one too wide for it fails
+    * under ANSI mode and is NULL without it. */
+  private def rowOf(table: StructType, values: Any*): DataFrame = {
+    val fields = table.fields.toSeq.tail
+    val conf = spark.sessionState.conf
+    val row = InternalRow.fromSeq(fields.zip(values).map { case (f, v) =>
+      val value = Literal(v)
+      if (value.dataType == f.dataType) value.value
+      else Cast(value, f.dataType, Some(conf.sessionLocalTimeZone),
+        EvalMode.fromSQLConf(conf)).eval()
+    })
+    GraftSqlShim.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(StructType(fields)), Seq(row)))
+  }
 
   private def sha256Hex(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -63,8 +85,11 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** get_user_by_email (db.py:219-231). */
   def getUserByEmail(email: String): Option[Row] =
-    cat.read("users").filter($"email" === email)
-      .orderBy($"user_id".desc).limit(1).collect().headOption
+    userByEmail("email" -> email).collect().headOption
+
+  private val userByEmail = new Prepared(cat, "users")(t =>
+    t("users").filter($"email" === param("email", StringType))
+      .orderBy($"user_id".desc).limit(1))
 
   /** authenticate_user (db.py:234-247): the hash compare is pushed into
     * the plan (P6) instead of fetched-then-compared in the client. The
@@ -72,12 +97,16 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * deliberately strips password_hash from the authenticated-user dict,
     * so callers never receive the credential digest. */
   def authenticateUser(email: String, password: String): Option[Row] =
-    cat.read("users")
-      .filter($"email" === email
-        && $"password_hash" === sha2(lit(password), 256))
+    authenticated("email" -> email, "password" -> password)
+      .collect().headOption
+
+  private val authenticated = new Prepared(cat, "users")(t =>
+    t("users")
+      .filter($"email" === param("email", StringType)
+        && $"password_hash" === sha2(param("password", StringType), 256))
       .select($"user_id", $"first_name", $"last_name", $"email", $"phone",
         $"user_role")
-      .limit(1).collect().headOption
+      .limit(1))
 
   /** §0.1.4 decision: dashboard gate accepts {admin, organizer}, any case. */
   def isAdmin(user: Row): Boolean =
@@ -99,19 +128,23 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** list_events (db.py:267-293): is_active filter, date sort, renamed
     * projection with double-cast price (P2). */
-  def listEvents(): DataFrame =
-    cat.read("events")
+  def listEvents(): DataFrame = activeEvents()
+
+  private val activeEvents = new Prepared(cat, "events")(t =>
+    t("events")
       .filter($"is_active")
       .orderBy($"event_date".asc, $"event_id".asc)
       .select($"event_id".as("id"), $"event_name".as("title"),
         $"event_description".as("description"), $"event_date",
         $"event_time_sec", $"location", $"event_type",
-        $"price".cast("double").as("price"))
+        $"price".cast("double").as("price")))
 
   /** get_event point lookup (db.py:296-319). */
   def getEvent(eventId: Long): Option[Row] =
-    cat.read("events").filter($"event_id" === eventId)
-      .limit(1).collect().headOption
+    eventById("event_id" -> eventId).collect().headOption
+
+  private val eventById = new Prepared(cat, "events")(t =>
+    t("events").filter($"event_id" === param("event_id", LongType)).limit(1))
 
   /** delete_event = soft delete (db.py:322-333). */
   def deleteEvent(eventId: Long): Unit =
@@ -162,23 +195,26 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * While the three tables are served from driver memory, the joins
     * and aggregates fold on the driver ([[graft.plans.LocalPlanFold]])
     * and the frame collects with no Spark job. */
-  def eventStats(): DataFrame = {
-    val regs = cat.read("registrations")
-    val pays = cat.read("payments").filter($"payment_status" === "Success")
-    val revenue = pays.join(regs.select("registration_id", "event_id"),
-        Seq("registration_id"))
-      .groupBy($"event_id")
-      .agg(coalesce(sum($"amount"), lit(0).cast("decimal(18,2)"))
-        .as("revenue"))
-    val counts = regs.groupBy($"event_id")
-      .agg(count(lit(1)).as("registrations"))
-    cat.read("events").select($"event_id")
-      .join(counts, Seq("event_id"), "left")
-      .join(revenue, Seq("event_id"), "left")
-      .select($"event_id",
-        coalesce($"registrations", lit(0L)).as("registrations"),
-        coalesce($"revenue".cast("double"), lit(0.0)).as("revenue"))
-  }
+  def eventStats(): DataFrame = stats()
+
+  private val stats =
+    new Prepared(cat, "events", "registrations", "payments")({ t =>
+      val regs = t("registrations")
+      val pays = t("payments").filter($"payment_status" === "Success")
+      val revenue = pays.join(regs.select("registration_id", "event_id"),
+          Seq("registration_id"))
+        .groupBy($"event_id")
+        .agg(coalesce(sum($"amount"), lit(0).cast("decimal(18,2)"))
+          .as("revenue"))
+      val counts = regs.groupBy($"event_id")
+        .agg(count(lit(1)).as("registrations"))
+      t("events").select($"event_id")
+        .join(counts, Seq("event_id"), "left")
+        .join(revenue, Seq("event_id"), "left")
+        .select($"event_id",
+          coalesce($"registrations", lit(0L)).as("registrations"),
+          coalesce($"revenue".cast("double"), lit(0.0)).as("revenue"))
+    })
 
   /** get_user_registrations (db.py:376-404): J3 latest payment status
     * (LEFT-preserving: unpaid -> NULL) + J4 latest registration per
@@ -188,36 +224,42 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * both `row_number` windows and the sort fold on the driver
     * ([[graft.plans.LocalPlanFold]]) and the frame collects with no
     * Spark job. */
-  def getUserRegistrations(userId: Long): DataFrame = {
-    val regs = cat.read("registrations").filter($"user_id" === userId)
-    val events = cat.read("events")
-    // the user filter can't push through the J3 window on its own, so
-    // prune payments to this user's registrations BEFORE the window —
-    // otherwise a point query windows over the entire payments table
-    val pays = cat.read("payments")
-      .join(regs.select("registration_id"), Seq("registration_id"),
-        "left_semi")
-    // J3: latest payment per registration (payment_date DESC LIMIT 1)
-    val wPay = Window.partitionBy("registration_id")
-      .orderBy($"payment_date".desc, $"payment_id".desc)
-    val latestPay = pays
-      .withColumn("rn", row_number().over(wPay)).filter($"rn" === 1)
-      .select($"registration_id", $"payment_status".as("latest_payment_status"))
-    // J4: newest registration per (user_id, event_id)
-    val wReg = Window.partitionBy("user_id", "event_id")
-      .orderBy($"registration_id".desc)
-    val dedup = regs.withColumn("rn", row_number().over(wReg))
-      .filter($"rn" === 1).drop("rn")
-    dedup
-      .join(events, Seq("event_id"))
-      .join(latestPay, Seq("registration_id"), "left")
-      .select($"registration_id", $"event_id",
-        $"event_name".as("title"), $"event_description".as("description"),
-        $"event_date", $"event_time_sec",
-        $"payment_status".as("registration_status"),
-        $"latest_payment_status")
-      .orderBy($"event_date".asc, $"registration_id".asc)
-  }
+  def getUserRegistrations(userId: Long): DataFrame =
+    userRegistrations("user_id" -> userId)
+
+  private val userRegistrations =
+    new Prepared(cat, "events", "registrations", "payments")({ t =>
+      val regs = t("registrations")
+        .filter($"user_id" === param("user_id", LongType))
+      val events = t("events")
+      // the user filter can't push through the J3 window on its own, so
+      // prune payments to this user's registrations BEFORE the window —
+      // otherwise a point query windows over the entire payments table
+      val pays = t("payments")
+        .join(regs.select("registration_id"), Seq("registration_id"),
+          "left_semi")
+      // J3: latest payment per registration (payment_date DESC LIMIT 1)
+      val wPay = Window.partitionBy("registration_id")
+        .orderBy($"payment_date".desc, $"payment_id".desc)
+      val latestPay = pays
+        .withColumn("rn", row_number().over(wPay)).filter($"rn" === 1)
+        .select($"registration_id",
+          $"payment_status".as("latest_payment_status"))
+      // J4: newest registration per (user_id, event_id)
+      val wReg = Window.partitionBy("user_id", "event_id")
+        .orderBy($"registration_id".desc)
+      val dedup = regs.withColumn("rn", row_number().over(wReg))
+        .filter($"rn" === 1).drop("rn")
+      dedup
+        .join(events, Seq("event_id"))
+        .join(latestPay, Seq("registration_id"), "left")
+        .select($"registration_id", $"event_id",
+          $"event_name".as("title"), $"event_description".as("description"),
+          $"event_date", $"event_time_sec",
+          $"payment_status".as("registration_status"),
+          $"latest_payment_status")
+        .orderBy($"event_date".asc, $"registration_id".asc)
+    })
 
   // ---- saved cards (db.py:407-447) ----
 
@@ -240,19 +282,24 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** get_saved_cards (db.py:425-434) with per-row decrypt (F3) and the
     * display last-4 (F9) computed in the plan. */
-  def getSavedCards(userId: Long): DataFrame =
-    cat.read("saved_cards").filter($"user_id" === userId)
+  def getSavedCards(userId: Long): DataFrame = savedCards("user_id" -> userId)
+
+  private val savedCards = new Prepared(cat, "saved_cards")(t =>
+    t("saved_cards").filter($"user_id" === param("user_id", LongType))
       .withColumn("card_number", dec($"card_number_encrypted"))
       .withColumn("last4", substring($"card_number", -4, 4))
       .select($"card_id", $"user_id", $"card_holder_name", $"card_number",
-        $"last4", $"expiry_date")
+        $"last4", $"expiry_date"))
 
   /** the reference's `[-1]` newest card (app.py:290) — defined
     * deterministically as max(card_id) (O4 decision). */
   def newestCardId(userId: Long): Option[Long] =
-    cat.read("saved_cards").filter($"user_id" === userId)
-      .agg(max($"card_id")).collect().headOption
+    newestCard("user_id" -> userId).collect().headOption
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+
+  private val newestCard = new Prepared(cat, "saved_cards")(t =>
+    t("saved_cards").filter($"user_id" === param("user_id", LongType))
+      .agg(max($"card_id")))
 
   /** E3 composite: register + route by price (app.py:236-252): free events
     * pay immediately (Free/Success); paid events leave Pending until

@@ -2,23 +2,24 @@ package graft.store
 
 import java.nio.charset.StandardCharsets
 
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.spark.{TaskContext, TaskKilledException}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession, classic}
-import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThanOrEqual, InterpretedOrdering, JoinedRow, LessThanOrEqual, Literal, RowOrdering, SortOrder, SpecificInternalRow, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftSqlShim, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeReference, BindReferences, BoundReference, Cast, EqualTo, ExprId, Expression, GreaterThanOrEqual, InterpretedOrdering, InterpretedUnsafeProjection, JoinedRow, LessThanOrEqual, Literal, NamedExpression, Predicate, RowOrdering, RuntimeReplaceable, SortOrder, SpecificInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, DecimalType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import Catalog.{Batch, ResolvedDml}
 import CommitLog.{Manifest, canonFiles}
+import graft.plans.LocalPlanFold
 import graft.store.sql.{GraftTable, StatsPrune}
 
 /** Copy-on-write table store over parquet with a log-structured
@@ -157,10 +158,34 @@ final class Catalog(val spark: SparkSession, val root: String,
       td.priorDirs)
   }
 
+  /** The newest version this instance has seen (0 = none yet). */
+  private val seenVersion = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Monotonic commit counter (0 = empty store). Every committed
     * transaction bumps it; the snapshot it produced is readable via
-    * [[readAt]] until vacuum retires it. */
-  def version: Long = commitLog.list().map(_._1).maxOption.getOrElse(0L)
+    * [[readAt]] until vacuum retires it.
+    *
+    * A warm instance probes forward from the newest version it has seen
+    * instead of listing `_log/`: versions are published contiguously
+    * (each commit is `renameIfAbsent` of the next delta), and vacuum
+    * retires deltas in ascending version order, so while the delta of
+    * the version found is still present after the probe missed the next
+    * one, that next one had not been published. A cold instance, or one
+    * whose seen delta vacuum has retired, lists the log. */
+  def version: Long = {
+    val seen = seenVersion.get
+    val probed =
+      if (seen == 0L || !io.exists(commitLog.deltaPath(seen))) None
+      else {
+        var v = seen
+        while (io.exists(commitLog.deltaPath(v + 1))) v += 1
+        Some(v).filter(v => io.exists(commitLog.deltaPath(v)))
+      }
+    val v = probed.getOrElse(
+      commitLog.list().map(_._1).maxOption.getOrElse(0L))
+    seenVersion.accumulateAndGet(v, math.max)
+    v
+  }
 
   /** Manifest as of commit `v`, replayed from the nearest checkpoint at
     * or below `v` (empty store below the first checkpoint) through the
@@ -689,31 +714,44 @@ final class Catalog(val spark: SparkSession, val root: String,
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         Catalog.stripPriorNames(schema))
-    else
-      GraftSqlShim.ofRows(spark, DataSourceV2Relation(
-        graftTable(table, None, files.toVector, schema, idCol),
-        DataTypeUtils.toAttributes(DriverReads.scanSchema(schema)), None,
-        None, CaseInsensitiveStringMap.empty()))
+    else GraftSqlShim.ofRows(spark, scanRelation(table, files, schema, idCol))
+
+  /** The DSv2 relation [[readFiles]] scans (`files` non-empty). */
+  private def scanRelation(table: String, files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType,
+      idCol: String): LogicalPlan =
+    DataSourceV2Relation(
+      graftTable(table, None, files.toVector, schema, idCol),
+      DataTypeUtils.toAttributes(DriverReads.scanSchema(schema)), None,
+      None, CaseInsensitiveStringMap.empty())
 
   /** Decoded small file sets, the driver route of [[read]],
     * [[Tx.read]] and the pinned [[Tx.update]] and [[Tx.delete]]. */
   private[store] val driverReads = new DriverReads(spark, io, root)
 
-  /** `files` of `table` as a frame: served from driver memory when
-    * [[DriverReads]] admits the snapshot, else scanned ([[readFiles]]).
-    * Either way the same rows and schema. */
-  private def readSnapshot(table: String, files: Seq[FileEntry],
+  /** `files` of `table` as an unanalyzed relation: the driver's
+    * in-memory `LocalRelation` when [[DriverReads]] admits the snapshot
+    * (an empty one always is), else the scan relation
+    * ([[scanRelation]]). Either way the same rows and output schema,
+    * [[DriverReads.scanSchema]]. */
+  private def snapshotRelation(table: String, files: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
-      idCol: String): DataFrame =
+      idCol: String): LogicalPlan =
     driverReads.serve(table, files, schema, idCol)
-      .getOrElse(readFiles(table, files, schema, idCol))
+      .getOrElse(scanRelation(table, files, schema, idCol))
+
+  /** The current snapshot of `table` as an unanalyzed relation, the leaf
+    * [[read]] analyzes; a caller that builds its plan once and binds it
+    * per call ([[graft.service.Portal]]) puts it under its own plan. */
+  private[graft] def relation(table: String): LogicalPlan = {
+    val st = tableState(table)
+    snapshotRelation(table, st.map(_.files).getOrElse(Nil),
+      schemaOf(st, table), idColOf(st, table))
+  }
 
   /** The current snapshot of `table`. */
-  def read(table: String): DataFrame = {
-    val st = tableState(table)
-    readSnapshot(table, st.map(_.files).getOrElse(Nil), schemaOf(st, table),
-      idColOf(st, table))
-  }
+  def read(table: String): DataFrame =
+    GraftSqlShim.ofRows(spark, relation(table))
 
   /** [[read]] through the scan route whatever the snapshot's size (test
     * hook for driver-vs-scan parity). */
@@ -729,7 +767,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       reads: DriverReads): Option[DataFrame] = {
     val st = tableState(table)
     reads.serve(table, st.map(_.files).getOrElse(Nil), schemaOf(st, table),
-      idColOf(st, table))
+      idColOf(st, table)).map(GraftSqlShim.ofRows(spark, _))
   }
 
   /** Snapshot of `table` at `version` (None = current) for the SQL
@@ -1202,11 +1240,12 @@ final class Catalog(val spark: SparkSession, val root: String,
     * Two routes, chosen by the shape of `df`'s plan (no threshold, no
     * conf):
     *  - '''driver''': `df` is an in-memory `LocalRelation` after
-    *    optimization (`Seq(...).toDF`, `createDataFrame(List[Row], ..)`,
-    *    an append's id-assigned batch, a pinned update's new images).
-    *    Its rows are already on the driver: the checks are evaluated and
-    *    ONE file is written there ([[stageRows]]). No Spark job runs. An
-    *    empty batch stages no file.
+    *    optimization (`Seq(...).toDF`, `createDataFrame(List[Row], ..)`),
+    *    or the caller already holds the rows as a [[Batch]]
+    *    ([[stageBatch]]: an append's id-assigned batch, a pinned update's
+    *    new images). The rows are already on the driver: the checks are
+    *    evaluated and ONE file is written there ([[stageRows]]). No
+    *    Spark job runs. An empty batch stages no file.
     *  - '''job''': anything else, in ONE Spark job ([[stageByJob]]): each
     *    task writes its partition as one file, builds that file's entry
     *    and counts the check violations in the same pass over its rows.
@@ -1225,30 +1264,45 @@ final class Catalog(val spark: SparkSession, val root: String,
         * Resolving here from the committed manifest would miss staged
         * DDL. */
       statsCols: Seq[String],
-      checks: Seq[(String, String)] = Nil): Vector[FileEntry] = {
-    val snap = s"snap-${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val dir = s"$root/$table/$snap"
+      checks: Seq[(String, String)] = Nil): Vector[FileEntry] =
     localRows(df) match {
-      case Some(rows) =>
-        requireChecks(table, checks, violations(df, checks))
-        stageRows(dir, df.schema, rows, idCol, statsCols)
-      case None => stageByJob(table, dir, df, idCol, statsCols, checks)
+      case Some(batch) => stageBatch(table, batch, idCol, statsCols, checks)
+      case None =>
+        stageByJob(table, snapDir(table), df, idCol, statsCols, checks)
     }
-  }
 
-  /** `df`'s rows when its plan is an in-memory `LocalRelation` after
-    * optimization and every column is parquet-writable; None routes the
-    * write through a Spark job. A plan with any other leaf is refused
-    * from the analyzed plan, without an optimizer pass. */
-  private def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
-    val qe = df.queryExecution
-    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]) ||
-        !DriverParquet.supports(df.schema)) None
-    else qe.optimizedPlan match {
-      case l: LocalRelation => Some(l.data)
-      case _ => None
+  /** The driver route of [[stageFiles]] for rows the caller holds. */
+  private def stageBatch(table: String, batch: Batch, idCol: String,
+      statsCols: Seq[String], checks: Seq[(String, String)])
+      : Vector[FileEntry] =
+    if (!DriverParquet.supports(batch.schema))
+      stageByJob(table, snapDir(table), batch.frame(spark), idCol, statsCols,
+        checks)
+    else {
+      requireChecks(table, checks, violations(batch, checks))
+      stageRows(snapDir(table), batch.schema, batch.rows, idCol, statsCols)
     }
+
+  /** A new, uniquely named file-group directory of `table`. */
+  private def snapDir(table: String): String =
+    s"$root/$table/snap-${System.currentTimeMillis()}-" +
+      java.util.UUID.randomUUID().toString.take(8)
+
+  /** `df`'s rows when its plan is an in-memory `LocalRelation` and every
+    * column is parquet-writable; None routes the write through a Spark
+    * job. A bare `LocalRelation` hands its rows over as analyzed; any
+    * other plan whose leaves are all `LocalRelation`s must optimize to
+    * one, and a plan with any other leaf is refused without an
+    * optimizer pass. */
+  private def localRows(df: DataFrame): Option[Batch] = {
+    val qe = df.queryExecution
+    if (!DriverParquet.supports(df.schema)) None
+    else (qe.analyzed match {
+      case l: LocalRelation => Some(l)
+      case a if a.collectLeaves().forall(_.isInstanceOf[LocalRelation]) =>
+        Some(qe.optimizedPlan).collect { case l: LocalRelation => l }
+      case _ => None
+    }).map(l => Batch(df.schema, l.data))
   }
 
   /** The driver route of [[stageFiles]]: one parquet file holding `rows`
@@ -1310,19 +1364,26 @@ final class Catalog(val spark: SparkSession, val root: String,
     checks.map { case (_, e) => !coalesce(expr(e), lit(true)) }
 
   /** Each check's violating-row count over `df`, in ONE pass: on the
-    * driver for an in-memory batch (the optimizer folds the projection
-    * into the `LocalRelation`), else one aggregate job. */
+    * driver for an in-memory batch, else one aggregate job. */
   private def violations(df: DataFrame,
       checks: Seq[(String, String)]): Seq[Long] =
     if (checks.isEmpty) Nil
     else localRows(df) match {
-      case Some(_) =>
-        val flags = df.select(flagsOf(checks): _*).collect()
-        checks.indices.map(i => flags.count(_.getBoolean(i)).toLong)
+      case Some(batch) => violations(batch, checks)
       case None =>
         val counts = flagsOf(checks).map(v => count(when(v, 1)))
         val row = df.agg(counts.head, counts.tail: _*).collect()(0)
         checks.indices.map(row.getLong)
+    }
+
+  /** [[violations]] of an in-memory batch, counted on the driver (the
+    * optimizer folds the projection into the `LocalRelation`). */
+  private def violations(batch: Batch,
+      checks: Seq[(String, String)]): Seq[Long] =
+    if (checks.isEmpty) Nil
+    else {
+      val flags = batch.frame(spark).select(flagsOf(checks): _*).collect()
+      checks.indices.map(i => flags.count(_.getBoolean(i)).toLong)
     }
 
   /** Fail on the first check with violating rows (`bad`, one count per
@@ -1334,16 +1395,17 @@ final class Catalog(val spark: SparkSession, val root: String,
         s"check '$n' on '$table' violated by $k incoming rows ($e)")
     }
 
-  /** The driver route of [[Tx.append]]: `rows` as an in-memory batch of
-    * the table's `schema`, sorted by `orderBy` with Spark's own
+  /** The driver route of [[Tx.append]]: the in-memory batch `rows` laid
+    * out as the table's `schema`, sorted by `orderBy` with Spark's own
     * `InterpretedOrdering` (ascending, NULLs first — `orderBy`'s
     * default) and given dense ids from `baseId + 1`. None when `rows`
-    * is not an in-memory batch, carries a column of another type than
-    * the table's, or cannot be ordered by `orderBy` on the driver. */
-  private def localWithIds(table: String, rows: DataFrame,
+    * carries a column of another type than the table's, or cannot be
+    * ordered by `orderBy` on the driver. */
+  private def localWithIds(table: String, rows: Batch,
       orderBy: Seq[String], schema: StructType, idCol: String,
-      baseId: Long): Option[DataFrame] = localRows(rows).flatMap { data =>
+      baseId: Long): Option[Batch] = {
     val in = rows.schema
+    val data = rows.rows
     val pos = in.fieldNames.zipWithIndex.toMap
     val ordPos =
       orderBy.map(n => in.fieldNames.indexWhere(_.equalsIgnoreCase(n)))
@@ -1365,8 +1427,7 @@ final class Catalog(val spark: SparkSession, val root: String,
         case (f, j) => require(!out.exists(_.isNullAt(j)),
           Catalog.nullInNonNullable(table, f.name))
       }
-      Some(GraftSqlShim.ofRows(spark,
-        LocalRelation(DataTypeUtils.toAttributes(schema), out)))
+      Some(Batch(schema, out))
     }
   }
 
@@ -1439,19 +1500,57 @@ final class Catalog(val spark: SparkSession, val root: String,
   /** One staged table state: new full file list, not yet visible. */
   private case class Staged(table: String, state: TableState)
 
-  /** Extract `idCol = <literal>` pinned by the predicate (either operand
-    * order, possibly under conjunctions) — the prunable reference shape
-    * `WHERE <pk> = %s`. Anything else returns None → full rewrite. The
-    * Column is resolved by analyzing it against an empty in-memory
-    * relation of `schema`, the caller's view of the table (a
-    * transaction's own, staged DDL included). */
-  private def pinnedId(predicate: Column, schema: StructType,
-      idCol: String): Option[Long] = {
-    val probe = GraftSqlShim.ofRows(spark,
-      LocalRelation(DataTypeUtils.toAttributes(schema))).filter(predicate)
-    val cond = probe.queryExecution.analyzed.collectFirst {
-      case f: LFilter => f.condition
+  /** `predicate` and `assignments` of a DML statement on a table of
+    * `schema`, resolved in ONE analysis of a projection over an empty
+    * relation of the scan attributes. A predicate or assignment that
+    * does not analyze there falls back to the predicate alone, analyzed
+    * as a filter (which fails as `filter(predicate)` would). */
+  private def resolveDml(schema: StructType, idCol: String,
+      predicate: Column, assignments: Seq[(String, Column)]): ResolvedDml = {
+    val attrs = DataTypeUtils.toAttributes(DriverReads.scanSchema(schema))
+    val probe = GraftSqlShim.ofRows(spark, LocalRelation(attrs))
+    val resolver = spark.sessionState.conf.resolver
+    val analyzed =
+      try Some(probe.select(predicate.as("cond") +:
+        assignments.map { case (c, v) => v.as(c) }: _*).queryExecution.analyzed)
+      catch { case _: AnalysisException => None }
+    analyzed match {
+      case Some(Project(Alias(cond, _) +: sets, _: LocalRelation))
+          if cond.dataType == BooleanType =>
+        // (target column, value, name) per assignment, in order
+        val targets = sets.map {
+          case Alias(v, c) => attrs.find(a => resolver(a.name, c))
+            .filterNot(a => resolver(a.name, idCol)).map(a => (a, v, c))
+          case _ => None
+        }
+        val driver =
+          if (targets.exists(_.isEmpty)) None
+          else {
+            val values = targets.flatten.foldLeft(Map.empty[ExprId, Alias]) {
+              case (m, (a, v, c)) => m + (a.exprId -> Alias(v.transformUp {
+                case r: AttributeReference =>
+                  m.get(r.exprId).fold(r: Expression)(_.child)
+              }, c)())
+            }
+            val keep = Catalog.replaced(cond)
+            val images = attrs.map(a => Catalog.replaced(
+              values.getOrElse(a.exprId, a)).asInstanceOf[NamedExpression])
+            Some((keep, images))
+              .filter(_ => (keep +: images).forall(LocalPlanFold.evaluable))
+          }
+        ResolvedDml(attrs, Some(cond), driver)
+      case _ =>
+        ResolvedDml(attrs, probe.filter(predicate).queryExecution.analyzed
+          .collectFirst { case f: LFilter => f.condition }, None)
     }
+  }
+
+  /** The `idCol = <literal>` a resolved DML condition pins (either
+    * operand order, possibly under conjunctions) — the prunable
+    * reference shape `WHERE <pk> = %s`. Anything else returns None →
+    * full rewrite. */
+  private def pinnedId(cond: Option[Expression], idCol: String)
+      : Option[Long] = {
     def attrIs(e: Expression): Boolean = e match {
       case a: Attribute => a.name.equalsIgnoreCase(idCol)
       case _ => false
@@ -1654,8 +1753,8 @@ final class Catalog(val spark: SparkSession, val root: String,
     def read(table: String): DataFrame = {
       readTables += table
       val st = curState(table)
-      readSnapshot(table, st.files, schemaOf(Some(st), table),
-        idColOf(Some(st), table))
+      GraftSqlShim.ofRows(spark, snapshotRelation(table, st.files,
+        schemaOf(Some(st), table), idColOf(Some(st), table)))
     }
 
     /** DDL evolution: add a nullable column to the table's schema. Pure
@@ -1848,14 +1947,17 @@ final class Catalog(val spark: SparkSession, val root: String,
         .foreach(f => require(f.nullable,
           s"append to '$table' is missing non-nullable column '${f.name}'"))
       val ordNames = if (orderBy.nonEmpty) orderBy else rows.columns.toSeq
-      val withIds = localWithIds(table, rows, ordNames, schema, idCol,
-        baseId).getOrElse(
-        indexedByJob(table, rows, ordNames, schema, idCol, baseId))
-      val newFiles = stageFiles(table, withIds, idCol, effStatsCols(table),
-        checksOf(table))
+      val local = localRows(rows).flatMap(localWithIds(table, _, ordNames,
+        schema, idCol, baseId))
+      val newFiles = local match {
+        case Some(batch) => stageBatch(table, batch, idCol,
+          effStatsCols(table), checksOf(table))
+        case None => stageFiles(table, indexedByJob(table, rows, ordNames,
+          schema, idCol, baseId), idCol, effStatsCols(table), checksOf(table))
+      }
       val n = newFiles.map(f => f.maxId).maxOption.getOrElse(baseId)
       val files = prev.files ++ newFiles
-      seedStaged(table, files, newFiles, withIds, schema)
+      local.foreach(seedStaged(table, files, newFiles, _, schema))
       staged :+= Staged(table, prev.copy(maxId = math.max(n, baseId),
         files = files))
       math.max(n, baseId)
@@ -2034,7 +2136,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       val (schema, idCol) = schemaIdOf(table)
       val prev = curState(table)
       if (prev.files.isEmpty) return
-      val pinned = pinnedId(predicate, schema, idCol)
+      val dml = resolveDml(schema, idCol, predicate, assignments.toSeq)
+      val pinned = pinnedId(dml.cond, idCol)
       val (hit, carried) = pinned match {
         case Some(id) =>
           prev.files.partition(f => f.minId <= id && id <= f.maxId)
@@ -2042,15 +2145,15 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
       if (hit.isEmpty) return // pinned id outside every file's range
       if (pinned.isDefined && mergeOnRead) {
-        val (local, dead) = pinnedRows(table, hit, schema, idCol,
+        val (images, dead) = pinnedRows(table, hit, schema, idCol, dml,
           df => assignments.foldLeft(df.filter(predicate)) {
             case (d, (c, v)) => d.withColumn(c, v)
           })
         if (dead.isEmpty) return // predicate matched nothing
-        val patch = stageFiles(table, local, idCol, effStatsCols(table),
+        val patch = stageBatch(table, images, idCol, effStatsCols(table),
           checksOf(table))
         val files = carried ++ dvMarked(hit, deadIds(dead)) ++ patch
-        seedStaged(table, files, patch, local, schema)
+        seedStaged(table, files, patch, images, schema)
         staged :+= Staged(table, prev.copy(files = files))
       } else {
         val updated = assignments.foldLeft(readFiles(table, hit, schema,
@@ -2063,63 +2166,52 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
     }
 
-    /** The rows of the id-pinned `hit` files (live rows only) that
-      * `select` keeps, after its assignments, as an in-memory frame, and
-      * the (manifest file path, id) of each. `select` may filter and
-      * reassign columns but keeps every column.
-      *  - '''driver''' route, when [[DriverReads]] admits `hit`: the
-      *    files' rows from driver memory as a `LocalRelation` with a
-      *    file-index column. `ConvertToLocalRelation` folds `select` on
-      *    the driver, so the optimized plan already holds the result and
-      *    no Spark job runs; a row's file is `hit(index)`.
-      *  - '''scan''' route, otherwise: one job over the scanned hit
-      *    files, each row's file named by `input_file_name()` and mapped
-      *    back by [[GraftTable.manifestPathOf]], which fails loudly on a
-      *    name it cannot place. */
+    /** The new images of the rows of the id-pinned `hit` files (live
+      * rows only) that the statement `dml` keeps, and the (manifest file
+      * path, id) of each.
+      *  - '''driver''' route, when [[DriverReads]] admits `hit` and
+      *    `dml`'s images evaluate on the driver: the files' rows from
+      *    driver memory, kept by the resolved condition and projected to
+      *    their images with Spark's interpreted evaluators, with no plan
+      *    and no Spark job; a row's file is the file it was read from.
+      *  - '''scan''' route, otherwise: one job running `select` (the
+      *    statement as frame operations; it may filter and reassign
+      *    columns but keeps every column) over the scanned hit files, each
+      *    row's file named by `input_file_name()` and mapped back by
+      *    [[GraftTable.manifestPathOf]], which fails loudly on a name it
+      *    cannot place. */
     private def pinnedRows(table: String, hit: Vector[FileEntry],
-        schema: StructType, idCol: String, select: DataFrame => DataFrame)
-        : (DataFrame, Seq[(String, Long)]) = {
+        schema: StructType, idCol: String, dml: ResolvedDml,
+        select: DataFrame => DataFrame): (Batch, Seq[(String, Long)]) = {
       val fromDriver =
-        if (scanPinned) None
+        if (scanPinned || dml.driver.isEmpty) None
         else driverReads.rowsOf(table, curState(table).files, hit, schema,
           idCol)
-      val (images, src, pathOf) = fromDriver match {
-        case Some(perFile) =>
-          val withIdx = StructType(DriverReads.scanSchema(schema).fields :+
-            StructField("__graft_src_idx", IntegerType, nullable = false))
-          val toRow = UnsafeProjection.create(withIdx)
-          val data = perFile.zipWithIndex.flatMap { case (rs, i) =>
-            val idx = InternalRow(i)
-            rs.map(r => toRow(new JoinedRow(r, idx)).copy(): InternalRow)
+      (fromDriver, dml.driver) match {
+        case (Some(perFile), Some((cond, images))) =>
+          val keep = Predicate.createInterpreted(
+            BindReferences.bindReference(cond, dml.attrs))
+          val image = InterpretedUnsafeProjection.createProjection(
+            BindReferences.bindReferences(images, dml.attrs))
+          val id = dml.attrs.indexWhere(_.name == idCol)
+          val kept = perFile.zip(hit).flatMap { case (rows, f) =>
+            rows.filter(keep.eval).map(r =>
+              (image(r).copy(): InternalRow, (f.path, r.getLong(id))))
           }
-          (select(GraftSqlShim.ofRows(spark,
-              LocalRelation(DataTypeUtils.toAttributes(withIdx), data))),
-            "__graft_src_idx", (r: Row, at: Int) => hit(r.getInt(at)).path)
-        case None =>
-          val keyed = GraftTable.manifestPathOf(root, hit)
-          (select(readFiles(table, hit, schema, idCol))
-              .withColumn("__graft_src_file", input_file_name()),
-            "__graft_src_file", (r: Row, at: Int) => keyed(r.getString(at)))
-      }
-      val at = images.schema.fieldIndex(src)
-      val id = images.schema.fieldIndex(idCol)
-      val out = StructType(images.schema.fields.patch(at, Nil, 1))
-      images.queryExecution.optimizedPlan match {
-        case l: LocalRelation if fromDriver.isDefined =>
-          val keep = UnsafeProjection.create(out.indices.map { i =>
-            BoundReference(if (i < at) i else i + 1, out(i).dataType,
-              nullable = true)
-          })
-          (GraftSqlShim.ofRows(spark, LocalRelation(
-              DataTypeUtils.toAttributes(out),
-              l.data.map(r => keep(r).copy(): InternalRow))),
-            l.data.map(r => (hit(r.getInt(at)).path, r.getLong(id))))
+          (Batch(DataTypeUtils.fromAttributes(images.map(_.toAttribute)),
+            kept.map(_._1)), kept.map(_._2))
         case _ =>
+          val keyed = GraftTable.manifestPathOf(root, hit)
+          val images = select(readFiles(table, hit, schema, idCol))
+            .withColumn("__graft_src_file", input_file_name())
+          val at = images.schema.fieldIndex("__graft_src_file")
+          val id = images.schema.fieldIndex(idCol)
+          val out = StructType(images.schema.fields.patch(at, Nil, 1))
+          val toRow = CatalystTypeConverters.createToCatalystConverter(out)
           val rows = images.collect().toSeq
-          (spark.createDataFrame(
-              rows.map(r => Row.fromSeq(r.toSeq.patch(at, Nil, 1))).asJava,
-              out),
-            rows.map(r => (pathOf(r, at), r.getLong(id))))
+          (Batch(out, rows.map(r => toRow(Row.fromSeq(
+              r.toSeq.patch(at, Nil, 1))).asInstanceOf[InternalRow])),
+            rows.map(r => (keyed(r.getString(at)), r.getLong(id))))
       }
     }
 
@@ -2139,14 +2231,14 @@ final class Catalog(val spark: SparkSession, val root: String,
         : Map[String, Vector[Long]] =
       pairs.groupBy(_._1).map { case (f, xs) => f -> xs.map(_._2).toVector }
 
-    /** Put `df`'s rows, just staged on the driver as `added`'s one file,
+    /** Put `batch`, just staged on the driver as `added`'s one file,
       * into [[DriverReads]]' cache for `table`, whose staged snapshot is
-      * `files` read through `schema`; a job-staged `df` puts nothing. */
+      * `files` read through `schema`. */
     private def seedStaged(table: String, files: Vector[FileEntry],
-        added: Vector[FileEntry], df: DataFrame, schema: StructType): Unit =
+        added: Vector[FileEntry], batch: Batch, schema: StructType): Unit =
       added match {
-        case Vector(f) => localRows(df).foreach(rows =>
-          driverReads.seed(table, files, f.path, schema, df.schema, rows))
+        case Vector(f) => driverReads.seed(table, files, f.path, schema,
+          batch.schema, batch.rows)
         case _ =>
       }
 
@@ -2184,7 +2276,8 @@ final class Catalog(val spark: SparkSession, val root: String,
       val (schema, idCol) = schemaIdOf(table)
       val prev = curState(table)
       if (prev.files.isEmpty) return 0L
-      val pinned = pinnedId(predicate, schema, idCol)
+      val dml = resolveDml(schema, idCol, predicate, Nil)
+      val pinned = pinnedId(dml.cond, idCol)
       val (hit, carried) = pinned match {
         case Some(id) =>
           prev.files.partition(f => f.minId <= id && id <= f.maxId)
@@ -2192,7 +2285,7 @@ final class Catalog(val spark: SparkSession, val root: String,
       }
       if (hit.isEmpty) return 0L
       if (pinned.isDefined && mergeOnRead) {
-        val (_, dead) = pinnedRows(table, hit, schema, idCol,
+        val (_, dead) = pinnedRows(table, hit, schema, idCol, dml,
           _.filter(coalesce(predicate, lit(false))))
         if (dead.isEmpty) return 0L
         staged :+= Staged(table,
@@ -3427,7 +3520,8 @@ final class Catalog(val spark: SparkSession, val root: String,
         val floor = retained.minOption.getOrElse(cur)
         log.filter(e => e._2 && e._1 <= floor).map(_._1).maxOption
           .foreach { ckptFloor =>
-            log.foreach { case (v, isCkpt, p) =>
+            // ascending, as [[version]]'s forward probe relies on
+            log.sortBy(_._1).foreach { case (v, isCkpt, p) =>
               if (v < ckptFloor || (!isCkpt && v == ckptFloor))
                 io.deleteIfExists(p)
             }
@@ -3439,6 +3533,36 @@ final class Catalog(val spark: SparkSession, val root: String,
 }
 
 object Catalog {
+
+  /** In-memory rows laid out as `schema`: the unit the driver route
+    * stages and seeds into [[DriverReads]]. */
+  private final case class Batch(schema: StructType, rows: Seq[InternalRow]) {
+    def frame(spark: SparkSession): DataFrame = GraftSqlShim.ofRows(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
+
+  /** A DML statement resolved once against its table's scan attributes
+    * `attrs` ([[DriverReads.scanSchema]]): the predicate `cond` (None
+    * when it does not analyze to a filter), and `driver`, the statement
+    * as Spark's interpreted evaluators run it over one row: the
+    * condition that keeps the row, and its new image, one expression per
+    * scan column (the assignments applied in order, each seeing the ones
+    * before it, as chained `withColumn`s apply them). `driver` is None
+    * when the statement cannot be evaluated on the driver: an assignment
+    * to the id column or to a column the table lacks, or an expression
+    * that is not deterministic or needs the optimizer (a subquery). */
+  private final case class ResolvedDml(attrs: Seq[Attribute],
+      cond: Option[Expression],
+      driver: Option[(Expression, Seq[NamedExpression])])
+
+  /** `e` with every `RuntimeReplaceable` expression replaced by its
+    * replacement, as the optimizer's `ReplaceExpressions` replaces them:
+    * the form Spark's evaluators run. */
+  private[store] def replaced(e: Expression): Expression = e match {
+    case r: RuntimeReplaceable => replaced(r.replacement)
+    case _ => e.mapChildren(replaced)
+  }
+
   /** Thrown by [[Catalog!.transaction]] when a table this transaction
     * staged was committed concurrently since its snapshot (OCC conflict).
     * The transaction's staged files are unreferenced; re-run the body

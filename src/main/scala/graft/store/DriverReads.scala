@@ -2,9 +2,9 @@ package graft.store
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
@@ -61,17 +61,17 @@ private[store] final class DriverReads(spark: SparkSession, io: StoreIO,
     files.forall(_.rows >= 0L) && files.iterator.map(_.rows).sum < maxRows
 
   /** `files` of `table` read through `schema` (prior names in field
-    * metadata, as `Catalog.schemaOf` yields it) as an in-memory frame,
+    * metadata, as `Catalog.schemaOf` yields it) as an in-memory relation,
     * or None when the snapshot is not admitted. */
   def serve(table: String, files: Seq[FileEntry], schema: StructType,
-      idCol: String): Option[DataFrame] =
+      idCol: String): Option[LocalRelation] =
     if (!admits(files)) {
       cache.remove(table)
       None
     } else {
       val rows = masked(table, files, files, schema, idCol)
-      Some(GraftSqlShim.ofRows(spark, LocalRelation(
-        DataTypeUtils.toAttributes(scanSchema(schema)), rows.flatten)))
+      Some(LocalRelation(DataTypeUtils.toAttributes(scanSchema(schema)),
+        rows.flatten))
     }
 
   /** The live (DV-masked) rows of each of `hit`, a subset of `table`'s
@@ -97,7 +97,10 @@ private[store] final class DriverReads(spark: SparkSession, io: StoreIO,
       val out = scanSchema(schema)
       if (layout.map(f => (f.name, f.dataType)) ==
           out.map(f => (f.name, f.dataType))) {
-        val toUnsafe = UnsafeProjection.create(out)
+        val toUnsafe = InterpretedUnsafeProjection.createProjection(
+          out.fields.toSeq.zipWithIndex.map { case (f, i) =>
+            BoundReference(i, f.dataType, f.nullable)
+          })
         keep(table, files, schema, Cached(Map((path, schema) ->
           rows.map(r => toUnsafe(r).copy(): InternalRow).toArray), Map.empty))
       }

@@ -108,9 +108,10 @@ private[graft] trait StoreIO {
   def walk(dir: String): Vector[StoreIO.Entry]
 
   /** Hadoop configuration for parquet metadata IO against this store's
-    * filesystem ([[CommitLog]]'s checkpoint writer/reader). Pins
-    * `RawLocalFileSystem` for `file:` paths so no `.crc` sidecars land
-    * in `_log/` (fsck treats strays as problems). */
+    * filesystem ([[CommitLog]]'s checkpoint writer/reader, the staged
+    * data files). Pins a `RawLocalFileSystem` for `file:` paths, so no
+    * `.crc` sidecars land in `_log/` (fsck treats strays as problems),
+    * and sets permissions without forking ([[PosixLocalFileSystem]]). */
   def hadoopConf: Configuration
 }
 
@@ -163,7 +164,7 @@ private[graft] object StoreIO {
     * hook + the [[forRoot]] resolution target). */
   def hadoop(spark: SparkSession): HadoopStoreIO = {
     val c = new Configuration(spark.sparkContext.hadoopConfiguration)
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+    c.set("fs.file.impl", classOf[PosixLocalFileSystem].getName)
     c.setBoolean("fs.file.impl.disable.cache", true)
     new HadoopStoreIO(c)
   }
@@ -285,7 +286,7 @@ private[graft] class LocalStoreIO extends StoreIO {
 
   override val hadoopConf: Configuration = {
     val c = new Configuration(false)
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+    c.set("fs.file.impl", classOf[PosixLocalFileSystem].getName)
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
   }

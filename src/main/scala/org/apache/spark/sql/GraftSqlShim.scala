@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.StructType
 
 /** Minimal `private[sql]` bridge for graft's custom-plan tier (the usual
   * pattern for Spark extension libraries): wraps an already-analyzed
-  * custom [[LogicalPlan]] into a DataFrame and exposes `asNullable`
+  * custom [[LogicalPlan]] into a DataFrame (and marks a plan analyzed),
+  * wraps a catalyst expression as a column, and exposes `asNullable`
   * and the float-key normalization of hash operators. Nothing else
   * from the sql package's private surface is touched.
   */
@@ -15,6 +16,21 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over `plan`, which the caller guarantees is resolved
+    * and checked (an analyzed plan with resolved leaves and literals put
+    * in place of its own resolved leaves): it is marked analyzed, so the
+    * analyzer does not run over it again. */
+  def ofAnalyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
+
+  /** A column over the catalyst expression `e`, as is. */
+  def column(e: Expression): Column = {
+    import classic.ClassicConversions._
+    Column(e)
+  }
 
   /** Re-wrap a batch DataFrame as an `isStreaming = true` frame (the V1
     * streaming `Source.getBatch` contract — MicroBatchExecution asserts

@@ -137,6 +137,15 @@ class DriverWriteSpec extends SparkSuite {
         Map("name" -> lit("patched"), "n" -> lit(42))))
     assert(nameOf(cat, 2L) == Seq("patched"))
     assert(cat.read("parity").count() == 7L)
+    // assignments that read columns apply in order, each seeing the
+    // ones before it: ratio takes the already incremented n
+    val (chained, _, _) = routesAgree(twoFiles, "parity", "row_id")(
+      _.update("parity", col("row_id") === 2L,
+        Map("name" -> concat(col("name"), lit("!")), "n" -> (col("n") + 1),
+          "ratio" -> col("n").cast("double"))))
+    assert(chained.read("parity").filter(col("row_id") === 2L)
+      .select("name", "n", "ratio").collect().toSeq ==
+      Seq(Row("ü" * 40 + "!", 1, 1.0)))
     val (_, d, s) = routesAgree(twoFiles, "parity", "row_id")(
       _.delete("parity", col("row_id") === 7L))
     assert(d == 1L && s == 1L)
