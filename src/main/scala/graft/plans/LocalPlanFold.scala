@@ -33,7 +33,9 @@ import graft.store.DriverReads.MaxRows
   * driver-route row cap ([[graft.store.DriverReads.MaxRows]]), its
   * output stays under the cap, and every expression it evaluates is
   * deterministic and evaluable on the driver (no subquery). It folds:
-  *  - projections, filters and limits, as `ConvertToLocalRelation`;
+  *  - projections and limits, as `ConvertToLocalRelation`;
+  *  - a `Filter`, by an interpreted `Predicate` (no generated code per
+  *    call; a NULL condition drops the row, as `FilterExec` does);
   *  - a global `Sort`, by `InterpretedOrdering` (`SortExec`'s
   *    comparison: NULLS FIRST/LAST, NaN greatest, -0.0 = 0.0,
   *    collation-aware strings);
@@ -79,7 +81,12 @@ object LocalPlanFold extends Rule[LogicalPlan] {
     keys.forall(k => UnsafeRowUtils.isBinaryStable(k.dataType))
 
   private def fold(p: LogicalPlan): Option[LogicalPlan] = p match {
-    case _: Project | _: Filter => Some(ConvertToLocalRelation(p))
+    case Filter(condition, l: LocalRelation) if evaluable(condition) =>
+      val keep = Predicate.createInterpreted(
+        BindReferences.bindReference(condition, l.output))
+      keep.initialize(0)
+      Some(l.copy(data = l.data.filter(keep.eval)))
+    case _: Project => Some(ConvertToLocalRelation(p))
     case GlobalLimit(IntegerLiteral(n), l: LocalRelation) =>
       Some(l.copy(data = l.data.take(n)))
     case LocalLimit(IntegerLiteral(n), l: LocalRelation) =>

@@ -26,13 +26,18 @@ import graft.store.{Catalog, Schemas}
   * Card crypto: aes_encrypt/aes_decrypt (GCM, random IV) — semantic parity
   * with the reference's Fernet tokens (db.py:412-423), not byte-compatible.
   *
-  * Every read is a [[Prepared]] read: its plan is built and analyzed
-  * once per Portal as a template over the tables it reads and its typed
-  * parameters, bound per call to the tables' current snapshots and the
-  * call's values, and rebuilt when a table's schema changes
-  * (`addColumn`, `renameColumn`). The templates are immutable, so one
-  * Portal serves concurrent clients. Point writes hand the store their
-  * rows as an in-memory batch.
+  * Every read is a [[Prepared]] read: its plan is built, analyzed and
+  * optimized once per Portal as a template over the tables it reads and
+  * its typed parameters, bound per call to the tables' current
+  * snapshots (all of one version) and the call's values, and rebuilt
+  * when a table's schema changes (`addColumn`, `renameColumn`). While
+  * the tables are served from driver memory, a call folds its bound
+  * template into one in-memory relation on the driver and runs no Spark
+  * query: the point reads (`authenticateUser`, `getUserByEmail`,
+  * `getEvent`, `newestCardId`) convert its rows directly, and the
+  * frame-returning reads hand out a frame over it. The templates are
+  * immutable, so one Portal serves concurrent clients. Point writes
+  * hand the store their rows as an in-memory batch.
   */
 final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
   private val spark = cat.spark
@@ -85,9 +90,9 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** get_user_by_email (db.py:219-231). */
   def getUserByEmail(email: String): Option[Row] =
-    userByEmail("email" -> email).collect().headOption
+    userByEmail.first("email" -> email)
 
-  private val userByEmail = new Prepared(cat, "users")(t =>
+  private[service] val userByEmail = new Prepared(cat, "users")(t =>
     t("users").filter($"email" === param("email", StringType))
       .orderBy($"user_id".desc).limit(1))
 
@@ -97,10 +102,9 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * deliberately strips password_hash from the authenticated-user dict,
     * so callers never receive the credential digest. */
   def authenticateUser(email: String, password: String): Option[Row] =
-    authenticated("email" -> email, "password" -> password)
-      .collect().headOption
+    authenticated.first("email" -> email, "password" -> password)
 
-  private val authenticated = new Prepared(cat, "users")(t =>
+  private[service] val authenticated = new Prepared(cat, "users")(t =>
     t("users")
       .filter($"email" === param("email", StringType)
         && $"password_hash" === sha2(param("password", StringType), 256))
@@ -130,7 +134,7 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * projection with double-cast price (P2). */
   def listEvents(): DataFrame = activeEvents()
 
-  private val activeEvents = new Prepared(cat, "events")(t =>
+  private[service] val activeEvents = new Prepared(cat, "events")(t =>
     t("events")
       .filter($"is_active")
       .orderBy($"event_date".asc, $"event_id".asc)
@@ -141,9 +145,9 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
 
   /** get_event point lookup (db.py:296-319). */
   def getEvent(eventId: Long): Option[Row] =
-    eventById("event_id" -> eventId).collect().headOption
+    eventById.first("event_id" -> eventId)
 
-  private val eventById = new Prepared(cat, "events")(t =>
+  private[service] val eventById = new Prepared(cat, "events")(t =>
     t("events").filter($"event_id" === param("event_id", LongType)).limit(1))
 
   /** delete_event = soft delete (db.py:322-333). */
@@ -192,12 +196,14 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * loop, app.py:154-166 / db.py:352-372): registrations count + revenue
     * of successful payments per event.
     *
-    * While the three tables are served from driver memory, the joins
-    * and aggregates fold on the driver ([[graft.plans.LocalPlanFold]])
-    * and the frame collects with no Spark job. */
+    * While the three tables are served from driver memory, the bound
+    * template's joins and aggregates fold on the driver
+    * ([[graft.plans.LocalPlanFold]]) when the call is made, and the
+    * returned frame is over the folded rows: its `collect` optimizes
+    * and plans a single in-memory relation and runs no Spark job. */
   def eventStats(): DataFrame = stats()
 
-  private val stats =
+  private[service] val stats =
     new Prepared(cat, "events", "registrations", "payments")({ t =>
       val regs = t("registrations")
       val pays = t("payments").filter($"payment_status" === "Success")
@@ -220,14 +226,16 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * (LEFT-preserving: unpaid -> NULL) + J4 latest registration per
     * (user, event), ordered by event date (O1).
     *
-    * While the three tables are served from driver memory, the joins,
-    * both `row_number` windows and the sort fold on the driver
-    * ([[graft.plans.LocalPlanFold]]) and the frame collects with no
-    * Spark job. */
+    * While the three tables are served from driver memory, the bound
+    * template's joins, both `row_number` windows and the sort fold on
+    * the driver ([[graft.plans.LocalPlanFold]]) when the call is made,
+    * and the returned frame is over the folded rows: its `collect`
+    * optimizes and plans a single in-memory relation and runs no Spark
+    * job. */
   def getUserRegistrations(userId: Long): DataFrame =
     userRegistrations("user_id" -> userId)
 
-  private val userRegistrations =
+  private[service] val userRegistrations =
     new Prepared(cat, "events", "registrations", "payments")({ t =>
       val regs = t("registrations")
         .filter($"user_id" === param("user_id", LongType))
@@ -284,7 +292,7 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
     * display last-4 (F9) computed in the plan. */
   def getSavedCards(userId: Long): DataFrame = savedCards("user_id" -> userId)
 
-  private val savedCards = new Prepared(cat, "saved_cards")(t =>
+  private[service] val savedCards = new Prepared(cat, "saved_cards")(t =>
     t("saved_cards").filter($"user_id" === param("user_id", LongType))
       .withColumn("card_number", dec($"card_number_encrypted"))
       .withColumn("last4", substring($"card_number", -4, 4))
@@ -294,10 +302,10 @@ final class Portal(cat: Catalog, aesKey: String = Portal.defaultKey) {
   /** the reference's `[-1]` newest card (app.py:290) — defined
     * deterministically as max(card_id) (O4 decision). */
   def newestCardId(userId: Long): Option[Long] =
-    newestCard("user_id" -> userId).collect().headOption
+    newestCard.first("user_id" -> userId)
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
 
-  private val newestCard = new Prepared(cat, "saved_cards")(t =>
+  private[service] val newestCard = new Prepared(cat, "saved_cards")(t =>
     t("saved_cards").filter($"user_id" === param("user_id", LongType))
       .agg(max($"card_id")))
 

@@ -280,22 +280,35 @@ final class Catalog(val spark: SparkSession, val root: String,
     * whole-manifest cache wins when current); young stores' races and
     * vacuum races fall back to [[readManifest]] — same answers,
     * full-parse cost. */
-  private def tableState(table: String): Option[TableState] = {
+  private def tableState(table: String): Option[TableState] =
+    tableStates(Seq(table))(table)
+
+  /** The current states of `tables`, all of ONE committed version:
+    * [[version]] is resolved once, so a commit landing while the tables
+    * are read shows in none of them or (on the fallback) in all. */
+  private def tableStates(tables: Seq[String])
+      : Map[String, Option[TableState]] = {
     val v = version
+    try tables.map(t => t -> tableStateAt(t, v)).toMap
+    catch {
+      // a vacuum racing the targeted replay (file retired between the
+      // listing and the read): the whole manifest re-resolves the
+      // version and retries once — same protocol as readManifest
+      case _: StoreIO.NoSuchPath |
+           _: IllegalArgumentException =>
+        val m = readManifest()
+        tables.map(t => t -> m.get(t)).toMap
+    }
+  }
+
+  /** `table`'s state at the committed version `v`, from the caches when
+    * they hold `v`; throws as [[manifestAt]] when `v` is gone. */
+  private def tableStateAt(table: String, v: Long): Option[TableState] = {
     val c = cache
     if (c._1 == v) return c._2.get(table)
     val tc = tableCache.get(table)
     if (tc != null && tc._1 == v) return tc._2
-    val st =
-      try targetedState(table, v)
-      catch {
-        // a vacuum racing the targeted replay (file retired between the
-        // listing and the read): the full path re-resolves the version
-        // and retries once — same protocol as readManifest
-        case _: StoreIO.NoSuchPath |
-             _: IllegalArgumentException =>
-          readManifest().get(table)
-      }
+    val st = targetedState(table, v)
     tableCache.put(table, (v, st))
     st
   }
@@ -303,7 +316,7 @@ final class Catalog(val spark: SparkSession, val root: String,
   private def targetedState(table: String, v: Long): Option[TableState] = {
     if (v == 0L) return None
     val log = commitLog.list()
-    if (!log.exists(_._1 == v)) return readManifest().get(table)
+    if (!log.exists(_._1 == v)) return manifestAt(v).get(table)
     val ckpt = log.filter(e => e._2 && e._1 <= v).maxByOption(_._1)
     val (baseV, base) = ckpt match {
       case Some((cv, _, p)) => (cv, commitLog.readCheckpointTable(p, table))
@@ -740,18 +753,21 @@ final class Catalog(val spark: SparkSession, val root: String,
     driverReads.serve(table, files, schema, idCol)
       .getOrElse(scanRelation(table, files, schema, idCol))
 
-  /** The current snapshot of `table` as an unanalyzed relation, the leaf
-    * [[read]] analyzes; a caller that builds its plan once and binds it
-    * per call ([[graft.service.Portal]]) puts it under its own plan. */
-  private[graft] def relation(table: String): LogicalPlan = {
-    val st = tableState(table)
-    snapshotRelation(table, st.map(_.files).getOrElse(Nil),
-      schemaOf(st, table), idColOf(st, table))
-  }
+  /** The current snapshots of `tables` as unanalyzed relations, all of
+    * one committed version: a caller that builds its plan once and binds
+    * it per call ([[graft.service.Prepared]]) puts them under its own
+    * plan, and a commit landing meanwhile never shows in one table
+    * without the others. */
+  private[graft] def relations(tables: Seq[String])
+      : Map[String, LogicalPlan] =
+    tableStates(tables).map { case (t, st) =>
+      t -> snapshotRelation(t, st.map(_.files).getOrElse(Nil),
+        schemaOf(st, t), idColOf(st, t))
+    }
 
   /** The current snapshot of `table`. */
   def read(table: String): DataFrame =
-    GraftSqlShim.ofRows(spark, relation(table))
+    GraftSqlShim.ofRows(spark, relations(Seq(table))(table))
 
   /** [[read]] through the scan route whatever the snapshot's size (test
     * hook for driver-vs-scan parity). */

@@ -4,10 +4,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, CurrentRow, DenseRank, EqualTo, GreaterThan, Literal, Rand, Rank, RowFrame, RowNumber, ScalarSubquery, SortOrder, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Sum}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LocalRelation, LogicalPlan, Project, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LocalRelation, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
@@ -223,6 +224,52 @@ class LocalPlanFoldSpec extends SparkSuite {
     var rows: Seq[Row] = Nil
     assert(jobsIn { rows = q.collect().toSeq } == 0)
     assert(rows.map(_.get(0)) == Seq(1, 2, 3, null))
+  }
+
+  /** `q`'s filter over the in-memory input, folded by the rule alone
+    * (Spark's own `ConvertToLocalRelation` never sees it), as rows. */
+  private def foldedFilter(q: DataFrame => DataFrame): LogicalPlan =
+    LocalPlanFold(q(inMemory(lRows, lSchema)).queryExecution.analyzed)
+
+  test("a filter folds by its interpreted predicate: NULL conditions drop " +
+    "the row under three-valued logic, as the job route does") {
+    val conditions = Seq(
+      col("k") > 1,
+      !(col("k") > 1),
+      col("k") > 1 || col("s") === "a",
+      col("k") > 1 && col("s") === "a",
+      !(col("k") > 1 && col("s") === "a"),
+      (col("k") > 1).isNull,
+      col("k").isin(1, 3) || col("d") === 0.0,
+      coalesce(col("k") === 2, lit(true)),
+      col("s") === lit(null).cast("string"))
+    for (c <- conditions) {
+      val folded = foldedFilter(_.filter(c))
+      assert(folded.isInstanceOf[LocalRelation], folded)
+      val toRow = CatalystTypeConverters.createToScalaConverter(
+        folded.schema)
+      val got = folded.asInstanceOf[LocalRelation].data
+        .map(r => toRow(r).asInstanceOf[Row])
+      assert(sorted(got.toArray) ==
+        sorted(fromRdd(lRows, lSchema).filter(c).collect()), c)
+    }
+  }
+
+  test("a filter whose predicate raises an ANSI error keeps its node, and " +
+    "the job route raises the error") {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try {
+      val c = col("s").cast("int") === 1
+      val kept = foldedFilter(_.filter(c))
+      assert(kept.isInstanceOf[Filter], kept)
+      val e = intercept[Exception](fromRdd(lRows, lSchema).filter(c).collect())
+      val condition = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .collectFirst { case t: SparkThrowable => t.getCondition }
+      assert(condition.contains("CAST_INVALID_INPUT"), e)
+    } finally spark.conf.set(key, prev)
   }
 
   test("collated join keys, other join types and non-equi joins keep " +

@@ -2,11 +2,16 @@ package graft.service
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -18,7 +23,9 @@ import graft.store.{Catalog, DriverReads, Schemas}
   * builders they replaced, kept here as the oracle: over seeded random
   * stores every read returns the oracle's rows in the oracle's order
   * with its schema, and every write leaves the snapshot the oracle's
-  * write leaves. */
+  * write leaves. Under the driver-route cap every read is folded when
+  * the call is made: its frame is one `LocalRelation`, and a point read
+  * starts no SQL execution at all. */
 class PreparedPortalSpec extends SparkSuite {
   import spark.implicits._
 
@@ -165,22 +172,86 @@ class PreparedPortalSpec extends SparkSuite {
   private def rows(df: DataFrame): (StructType, Seq[Row]) =
     (df.schema, df.collect().toSeq)
 
+  /** SQL executions `body` starts on this thread: each carries the
+    * thread's job description; a marker query under another one, started
+    * after `body`, proves every earlier start event has reached the
+    * listener. */
+  private def queriesIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = s"sqlcount-${UUID.randomUUID()}"
+    val marker = s"$tag-marker"
+    val n = new AtomicInteger(0)
+    val seen = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          if (s.description == tag) n.incrementAndGet()
+          if (s.description == marker) seen.countDown()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobDescription(tag)
+      try body finally sc.setJobDescription(null)
+      sc.setJobDescription(marker)
+      try spark.range(1).collect() finally sc.setJobDescription(null)
+      assert(seen.await(60, TimeUnit.SECONDS))
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** `got` equals `want`, and by name every field's value and value
+    * class is the same. */
+  private def samePoint(got: Option[Row], want: Option[Row],
+      clue: Any): Unit = {
+    assert(got == want, clue)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.schema == w.schema, clue)
+      g.schema.fieldNames.foreach { n =>
+        val (a, b) = (g.getAs[Any](n), w.getAs[Any](n))
+        assert(a == b, s"$clue: $n")
+        assert(Option(a).map(_.getClass) == Option(b).map(_.getClass),
+          s"$clue: $n")
+      }
+    }
+  }
+
   /** Every read of `p` equals the oracle's over `cat`'s current state,
-    * for the users, events and emails given. */
+    * for the users, events and emails given. A read of no table in
+    * `over` (grown past the driver-route cap) is folded: its frame is a
+    * `LocalRelation` and, for a point read, no SQL execution starts; a
+    * read of one in `over` is not folded. */
   private def sameReads(p: Portal, o: Oracle, users: Seq[Long],
-      events: Seq[Long], probes: Seq[(String, String)]): Unit = {
-    assert(rows(p.listEvents()) == rows(o.listEvents()))
-    assert(rows(p.eventStats()) == rows(o.eventStats()))
-    (events :+ -1L).foreach(e => assert(p.getEvent(e) == o.getEvent(e)))
+      events: Seq[Long], probes: Seq[(String, String)],
+      over: Set[String] = Set.empty): Unit = {
+    def frame(df: DataFrame, tables: String*): DataFrame = {
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation] ==
+        !tables.exists(over), df.queryExecution.analyzed)
+      df
+    }
+    def point[A](tables: String*)(read: => A): A = {
+      var got: Option[A] = None
+      val n = queriesIn { got = Some(read) }
+      if (!tables.exists(over)) assert(n == 0, "a folded point read")
+      got.get
+    }
+    val stats = Seq("events", "registrations", "payments")
+    assert(rows(frame(p.listEvents(), "events")) == rows(o.listEvents()))
+    assert(rows(frame(p.eventStats(), stats: _*)) == rows(o.eventStats()))
+    (events :+ -1L).foreach(e =>
+      samePoint(point("events")(p.getEvent(e)), o.getEvent(e), e))
     (users :+ -1L).foreach { u =>
-      assert(rows(p.getUserRegistrations(u)) ==
+      assert(rows(frame(p.getUserRegistrations(u), stats: _*)) ==
         rows(o.getUserRegistrations(u)), s"user $u")
-      assert(rows(p.getSavedCards(u)) == rows(o.getSavedCards(u)))
-      assert(p.newestCardId(u) == o.newestCardId(u))
+      assert(rows(frame(p.getSavedCards(u), "saved_cards")) ==
+        rows(o.getSavedCards(u)))
+      assert(point("saved_cards")(p.newestCardId(u)) == o.newestCardId(u))
     }
     probes.foreach { case (e, pw) =>
-      assert(p.getUserByEmail(e) == o.getUserByEmail(e), e)
-      assert(p.authenticateUser(e, pw) == o.authenticateUser(e, pw), e)
+      samePoint(point("users")(p.getUserByEmail(e)), o.getUserByEmail(e), e)
+      samePoint(point("users")(p.authenticateUser(e, pw)),
+        o.authenticateUser(e, pw), e)
     }
   }
 
@@ -223,14 +294,46 @@ class PreparedPortalSpec extends SparkSuite {
     (org +: users.map(_._1), events, probes)
   }
 
+  // each store is read with the java8 datetime API off and on: a point
+  // read converts its row on the driver as `collect` would under either
   test("every prepared read returns the oracle's rows, in its order and " +
     "with its schema, over seeded random stores") {
-    for (seed <- 1 to 3) {
-      val cat = new Catalog(spark, freshRoot())
-      val p = new Portal(cat)
-      val (users, events, probes) = populate(p, new Random(seed))
-      sameReads(p, new Oracle(cat), users, events, probes)
+    val key = "spark.sql.datetime.java8API.enabled"
+    val prev = spark.conf.get(key)
+    try {
+      for (seed <- 1 to 3) {
+        val cat = new Catalog(spark, freshRoot())
+        val p = new Portal(cat)
+        val (users, events, probes) = populate(p, new Random(seed))
+        for ((java8, time) <- Seq("false" -> classOf[Timestamp],
+            "true" -> classOf[java.time.Instant])) {
+          spark.conf.set(key, java8)
+          sameReads(p, new Oracle(cat), users, events, probes)
+          assert(p.getUserByEmail(probes.head._1).get
+            .getAs[Any]("created_at").getClass == time)
+        }
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("a read holding current_timestamp() or rand() gives a new value on " +
+    "each call: such a template is not optimized once") {
+    val cat = new Catalog(spark, freshRoot())
+    val p = new Portal(cat)
+    p.createUser("U", "L", "", "u@x.com", "s3cret1")
+    val clock = new Prepared(cat, "users")(t =>
+      t("users").select(current_timestamp().as("now")))
+    val random = new Prepared(cat, "users")(t =>
+      t("users").select(rand().as("r")))
+    val times = (1 to 3).map { _ =>
+      Thread.sleep(5)
+      clock().collect().head.getTimestamp(0)
     }
+    assert(times.distinct.size == times.size, times)
+    val draws = (1 to 3).flatMap(_ =>
+      Seq(random().collect().head.getDouble(0),
+        random.first().get.getDouble(0)))
+    assert(draws.distinct.size == draws.size, draws)
   }
 
   test("a schema change between calls rebuilds the templates; reads " +
@@ -268,12 +371,14 @@ class PreparedPortalSpec extends SparkSuite {
     assert(cat.read("registrations").count() >= n.toLong)
     assert(jobsIn(p.getUserRegistrations(users(1)).collect()) > 0,
       "over the cap the bind must take the scan route")
-    sameReads(p, new Oracle(cat), users, events, probes)
+    sameReads(p, new Oracle(cat), users, events, probes,
+      over = Set("registrations"))
     // a pinned payment over the cap, then the reads again
     val reg = p.registerUserForEvent(users(2), events(0))
     p.recordPayment(users(2), reg, amount = BigDecimal(1),
       paymentType = "OneTime")
-    sameReads(p, new Oracle(cat), users, events, probes)
+    sameReads(p, new Oracle(cat), users, events, probes,
+      over = Set("registrations"))
   }
 
   test("every write leaves the snapshot the oracle's write leaves") {
